@@ -51,19 +51,6 @@ object Config {
 
   val empty: AppConfig = AppConfig(Map.empty)
 
-  /** Storage binding for the CORPUS-SIZED session artifacts
-    * (SharedGrams.grams/word8/termPositions/postingPair — one row per
-    * token/gram occurrence; see SCALE.md "storage-backed seam").
-    * None (the default, and the only binding exercised in-process)
-    * keeps them as localCheckpoint blocks; a deployment sets
-    * `spark.graft.artifact.dir` to a durable path and the artifact
-    * layer writes each index once per corpus version
-    * (`write.partitionBy/bucketBy(key).parquet(dir)`) and serves
-    * consumers from the stored table — same dataflow cut, durable
-    * persistence, no executor-local pinning of corpus-sized frames. */
-  def artifactStorageDir(s: org.apache.spark.sql.SparkSession): Option[String] =
-    s.conf.getOption("spark.graft.artifact.dir")
-
   /** Parse an INI file; absent file ⇒ empty config (all defaults).
     * Tolerates comments (#/;), blank lines, keys outside a section
     * (collected under ""), and malformed lines (skipped). */

@@ -658,8 +658,7 @@ object ScaleBench {
       // (the r12 read path) vs the full per-invocation re-tokenize.
       // The index build is timed separately — it is the once-per-
       // corpus-version cost the stored path amortizes away.
-      val snipWanted = want("snippet_index_build",
-        "search_snippets_stored", "search_snippets_retokenize")
+      val snipWanted = want("snippet_index_build", "search_snippets_stored")
       val (snipPost, snipLens) = if (snipWanted) {
         def build() = (
           graft.operators.TrainPrep.termDocs(docs).localCheckpoint(),

@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Focused pins for the r13 bench-accounting seam: ArtifactTimer wraps
-  * every Shared* cache getter's build expression, so it must (a) pass
-  * the build value through unchanged, (b) accumulate repeated builds
-  * under one name (parameterised getters), and (c) reset on clear —
-  * the properties Bench.scala's "artifacts" JSON field relies on. */
+  * every Shared* getter's build expression, so it must (a) pass the
+  * build value through unchanged, (b) accumulate repeated builds under
+  * one name (parameterised getters), (c) reset on clear and (d) charge
+  * a parent only its own seconds, not its child builds' — the
+  * properties Bench.scala's "artifacts" JSON field relies on. */
 class ArtifactTimerSpec extends AnyFunSuite {
 
   test("timed passes the build value through and records a duration") {
@@ -41,5 +42,20 @@ class ArtifactTimerSpec extends AnyFunSuite {
       }
     }
     assert(!ArtifactTimer.snapshot.contains("spec.boom"))
+  }
+
+  test("a parent's entry excludes the child builds it triggers") {
+    ArtifactTimer.clear()
+    val r = ArtifactTimer.timed("spec.parent") {
+      val c = ArtifactTimer.timed("spec.child") { Thread.sleep(500); 1 }
+      Thread.sleep(20)
+      c + 1
+    }
+    assert(r == 2)
+    val snap = ArtifactTimer.snapshot
+    assert(snap("spec.child") >= 0.5)
+    assert(snap("spec.parent") >= 0.02)
+    assert(snap("spec.parent") < 0.4,
+      s"parent charged its child's build: ${snap("spec.parent")} s")
   }
 }
