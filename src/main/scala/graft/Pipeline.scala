@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Enrich, LogParse, Report}
@@ -43,20 +43,22 @@ object Pipeline {
   }
 
   /** Incremental batch run: offset-tailed read → extract → CSV append →
-    * offset persisted (the reference's main-loop contract: state written
-    * only after a successful extraction, bin/maillogsentinel.py:714-746 —
-    * here the offset write happens inside incrementalRead *before* the
-    * append; crash between the two re-reads nothing but loses the batch,
-    * i.e. at-most-once. Streaming mode (graft.streaming.LogStream) gives
-    * the at-least-once + idempotent-sink upgrade.) */
+    * offset committed, evaluating the plan once (the row count is observed
+    * on the append). The offset is written only after the append returns,
+    * as the reference writes state only after a successful extraction
+    * (bin/maillogsentinel.py:714-746): a crash in between re-reads the
+    * batch, i.e. at-least-once. Streaming mode (graft.streaming.LogStream)
+    * adds the idempotent sink. */
   def runIncremental(spark: SparkSession, logFile: java.nio.file.Path,
                      stateFile: java.nio.file.Path, csvOut: String,
                      year: Int, geo: Option[GeoDims] = None,
                      resolver: Option[Enrich.Resolver] = None): Long = {
-    val lines = LogSource.incrementalRead(spark, logFile, stateFile)
-    val events = extract(lines, year, geo, resolver)
-    EventsCsv.append(events, csvOut)
-    events.count()
+    val (lines, newOffset) = LogSource.read(spark, logFile, stateFile)
+    val rows = Observation()
+    EventsCsv.append(extract(lines, year, geo, resolver)
+      .observe(rows, count(lit(1)).as("n")), csvOut)
+    LogSource.writeOffset(stateFile, newOffset)
+    rows.get("n").asInstanceOf[Long]
   }
 
   /** One-line per-run summary — the reference's end-of-run log lines

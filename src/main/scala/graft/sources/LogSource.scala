@@ -1,41 +1,35 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader, RandomAccessFile}
+import java.io.ByteArrayOutputStream
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
-import java.util.zip.GZIPInputStream
+import java.nio.file.{Files, Path, StandardCopyOption}
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Log-file sources.
+/** The live log's byte-offset tail, mirroring the reference's ingestion
+  * (`lib/maillogsentinel/parser.py:38-217`).
   *
-  * Two modes, mirroring the reference's ingestion
-  * (`/root/reference/lib/maillogsentinel/parser.py:38-217`):
+  * A run reads from the committed offset to the last `'\n'` of the live
+  * log (parser.py:166-196: seek at :174, tell at :193) and decodes the
+  * complete lines as permissive UTF-8 (bad bytes become U+FFFD,
+  * parser.py:153's errors="ignore"). A half-written last line stays
+  * unread until its `'\n'` arrives. Truncation/rotation (size < offset)
+  * resets to 0 (parser.py:141-145). The first run — no state file yet —
+  * also reads the rotated siblings, gzip-transparent through Spark's text
+  * source. The offset is committed only after the caller's sink succeeds
+  * (see `Pipeline.runIncremental`), so a crash in between re-reads the
+  * batch: at-least-once, as the reference's state write after success.
   *
-  *  - [[readAll]]: batch glob read — Spark's text source handles `.gz`
-  *    transparently (parser.py:148-164's gzip branch is free) and tolerates
-  *    bad bytes (permissive UTF-8, parser.py:153's errors="ignore").
-  *
-  *  - [[readNewBytes]]: strict byte-offset parity for the *live* log —
-  *    seek to the saved offset, read only the appended tail, return the
-  *    new offset (parser.py:166-196: seek at :174, tell at :193).
-  *    Truncation/rotation (size < offset) resets to 0 (parser.py:141-145).
-  *    The tail delta of a single live file is inherently a small,
-  *    driver-local read (the reference reads it on one host too); the
-  *    resulting lines are parallelized into a DataFrame so everything
-  *    downstream is distributed. At scale the preferred mode is
-  *    Structured Streaming (graft.streaming.LogStream), where the
-  *    checkpoint plays the role of state.offset (SURVEY §2.8).
+  * The tail is read on the driver and parallelized into a DataFrame, so
+  * everything downstream is distributed. The streaming mode is
+  * graft.streaming.LogStream, where the checkpoint plays the role of the
+  * state file (SURVEY §2.8).
   */
 object LogSource {
-
-  /** Batch: main log + rotated siblings (`name.*`), gzip-transparent
-    * (utils.py:273-294's enumeration collapses to a glob). */
-  def readAll(spark: SparkSession, glob: String): DataFrame =
-    spark.read.text(glob)
 
   /** Offset state file: single long, as the reference's state.offset
     * (utils.py:214-270). Invalid/absent → 0. */
@@ -46,67 +40,63 @@ object LogSource {
       catch { case _: NumberFormatException => 0L }
     else 0L
 
+  /** temp-write + atomic replace: a crash never leaves a truncated offset. */
   def writeOffset(stateFile: Path, offset: Long): Unit = {
     Files.createDirectories(stateFile.getParent)
-    Files.write(stateFile, offset.toString.getBytes(StandardCharsets.UTF_8))
+    val tmp = stateFile.getParent.resolve(s".${stateFile.getFileName}.tmp")
+    Files.write(tmp, offset.toString.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, stateFile, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Read lines appended since `offset`; returns (lines DF, new offset).
-    * Rotation: size < offset ⇒ reset to 0 and read from the start. */
-  def readNewBytes(spark: SparkSession, logFile: Path,
-                   offset: Long): (DataFrame, Long) = {
-    import spark.implicits._
-    if (!Files.exists(logFile)) return (spark.emptyDataset[String].toDF(), 0L)
-    val size = Files.size(logFile)
-    val from = if (size < offset) 0L else offset // rotation/truncation reset
-    val raf = new RandomAccessFile(logFile.toFile, "r")
-    val lines = ArrayBuffer.empty[String]
+  /** Complete lines after `offset` (`'\r'` before `'\n'` dropped) and the
+    * offset after the last `'\n'`, in one buffered read. */
+  private def readTail(logFile: Path, offset: Long): (Seq[String], Long) = {
+    if (!Files.exists(logFile)) return (Nil, 0L)
+    val ch = FileChannel.open(logFile)
     try {
-      raf.seek(from)
-      var line = raf.readLine()
-      while (line != null) {
-        // RandomAccessFile.readLine is latin-1; re-decode as permissive UTF-8
-        lines += new String(
-          line.getBytes(StandardCharsets.ISO_8859_1), StandardCharsets.UTF_8)
-        line = raf.readLine()
+      val from = if (ch.size() < offset) 0L else offset
+      val tail = new ByteArrayOutputStream()
+      val buf = ByteBuffer.allocate(1 << 16)
+      ch.position(from)
+      while (ch.read(buf) > 0) {
+        tail.write(buf.array, 0, buf.position())
+        buf.clear()
       }
-      val newOffset = raf.getFilePointer
-      (spark.createDataset(lines.toSeq).toDF("value"), newOffset)
-    } finally raf.close()
+      val bytes = tail.toByteArray
+      val end = bytes.lastIndexOf('\n'.toByte) + 1
+      val lines = new String(bytes, 0, end, StandardCharsets.UTF_8)
+        .split("\r?\n", -1).toSeq.dropRight(1)
+      (lines, from + end)
+    } finally ch.close()
   }
 
-  /** First-run semantics (bin/maillogsentinel.py:643): offset==0 ⇒ process
-    * rotated files too (oldest first, gzip-transparent), else only the
-    * live log's tail. */
+  /** The lines one run extracts and the offset to commit after its sink:
+    * the live log's tail, plus every rotated sibling on the first run
+    * (bin/maillogsentinel.py:643). */
+  private[graft] def read(spark: SparkSession, logFile: Path,
+                          stateFile: Path): (DataFrame, Long) = {
+    import spark.implicits._
+    val (lines, newOffset) = readTail(logFile, readOffset(stateFile))
+    val tail = spark.createDataset(lines).toDF("value")
+    val rotated =
+      if (Files.exists(stateFile) || !Files.exists(logFile.getParent)) Nil
+      else Files.list(logFile.getParent).iterator().asScala
+        .filter(p => p.getFileName.toString
+          .startsWith(logFile.getFileName.toString + "."))
+        .filter(Files.isRegularFile(_))
+        .toSeq.sortBy(_.getFileName.toString)
+    val df =
+      if (rotated.isEmpty) tail
+      else spark.read.text(rotated.map(_.toString): _*).union(tail)
+    (df, newOffset)
+  }
+
+  /** [[read]], then commit its offset at once (no sink in between). */
   def incrementalRead(spark: SparkSession, logFile: Path,
                       stateFile: Path): DataFrame = {
-    val off = readOffset(stateFile)
-    val (tail, newOff) = readNewBytes(spark, logFile, off)
-    val df =
-      if (off == 0L && Files.exists(logFile.getParent)) {
-        val rotated = Files.list(logFile.getParent).iterator().asScala
-          .filter(p => p.getFileName.toString
-            .startsWith(logFile.getFileName.toString + "."))
-          .filter(Files.isRegularFile(_))
-          .toSeq.sortBy(_.getFileName.toString)
-        if (rotated.nonEmpty)
-          spark.read.text(rotated.map(_.toString): _*).union(tail)
-        else tail
-      } else tail
-    writeOffset(stateFile, newOff)
+    val (df, newOffset) = read(spark, logFile, stateFile)
+    writeOffset(stateFile, newOffset)
     df
-  }
-
-  /** Gzip check by suffix (utils.py:297-307) — used by tests; Spark's
-    * text source dispatches on the same suffix internally. */
-  def isGzip(p: Path): Boolean = p.getFileName.toString.endsWith(".gz")
-
-  /** Driver-side gzip line reader for non-Spark consumers (setup
-    * tooling); bad bytes replaced, not thrown (parser.py:153). */
-  def readGzipLines(p: Path): Seq[String] = {
-    val r = new BufferedReader(new InputStreamReader(
-      new GZIPInputStream(Files.newInputStream(p)), StandardCharsets.UTF_8))
-    try Iterator.continually(r.readLine()).takeWhile(_ != null).toSeq
-    finally r.close()
   }
 }

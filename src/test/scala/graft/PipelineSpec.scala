@@ -2,8 +2,11 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.sources.EventsCsv
 
@@ -52,6 +55,41 @@ class PipelineSpec extends SparkSpec {
       2025, Some(geo))
     assert(n2 == 1)
     assert(EventsCsv.read(spark, csv).count() == 4)
+  }
+
+  test("incremental run evaluates its plan once: the append, no count after it") {
+    val d = Files.createTempDirectory("graft-once")
+    val log = d.resolve("mail.log")
+    Files.write(log, (logLines.mkString("\n") + "\n")
+      .getBytes(StandardCharsets.UTF_8))
+    // a session of its own, so the listener sees only this test's queries
+    val s = spark.newSession()
+    val sGeo = Pipeline.GeoDims(
+      s.createDataFrame(Seq((167772160L, 184549375L, "US")))
+        .toDF("lo", "hi", "country_code"),
+      s.createDataFrame(Seq((167772160L, 184549375L, 64500L, "EX-NET")))
+        .toDF("lo", "hi", "asn", "aso"))
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.put(funcName)
+    }
+    s.listenerManager.register(listener)
+    try {
+      val n = Pipeline.runIncremental(s, log, d.resolve("offset"),
+        d.resolve("events").toString, 2025, Some(sGeo))
+      // listener events arrive in order: the marker's comes after the run's
+      s.range(1).collect()
+      val runs = Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .takeWhile(f => f != null && f != "collect").toList
+      assert(n == 4)
+      assert(runs == List("command"), s"executions of one run: $runs")
+      // no new lines: the observed count of an empty append is 0
+      assert(Pipeline.runIncremental(s, log, d.resolve("offset"),
+        d.resolve("events").toString, 2025, Some(sGeo)) == 0)
+    } finally s.listenerManager.unregister(listener)
   }
 
   test("report aggregates match hand-computed values on the day filter") {
