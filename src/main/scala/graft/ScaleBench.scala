@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{BloomDedup, Curation, Dedup}
 
-/** Dev micro-bench (NOT part of the driver contract, like
-  * RangeJoinBench): drives the dedup/curation scale path on a SYNTHETIC
-  * 1M-document corpus — 200× the sf0.1 test corpus — to give the 100 TB
-  * claims a measured data point beyond toy scale and to surface
-  * anything that only breaks past test size.
+/** Dev micro-bench (NOT part of the Verify/Bench contract): drives the
+  * dedup/curation scale path on a SYNTHETIC 1M-document corpus — 200×
+  * the sf0.1 test corpus — to give the 100 TB claims a measured data
+  * point beyond toy scale and to surface anything that only breaks past
+  * test size.
   *
   * The corpus is generated distributed (spark.range + column
   * expressions, no driver materialization): ~60-word docs from md5-

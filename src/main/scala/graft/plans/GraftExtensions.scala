@@ -5,18 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension registration — the config-driven alternative to the
-  * runtime hooks (`RangeLookup.register` / `IpToIntExpr.register`):
+  * runtime hook `IpToIntExpr.register`:
   *
   *   spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions
   *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
   *
-  * Injects the range-lookup planner strategy, the ip_to_int /
-  * nfc_normalize / dot_double / sqdist_fixed SQL functions, and the
-  * HOF-dot-product rewrite rule into every session built with it.
+  * Injects the ip_to_int / nfc_normalize / dot_double / sqdist_fixed SQL
+  * functions and the two HOF-rewrite optimizer rules (`DotDoubleRule`,
+  * `SqDistFixedRule`) into every session built with it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => RangeLookup.Strategy)
     e.injectOptimizerRule(_ => DotDoubleRule)
     e.injectOptimizerRule(_ => SqDistFixedRule)
     e.injectFunction((

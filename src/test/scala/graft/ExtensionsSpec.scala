@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * one — extensions bind at session construction). */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("withExtensions injects strategy + ip_to_int SQL function") {
+  test("withExtensions injects ip_to_int SQL function") {
     // getOrCreate() returns any active session (ignoring extensions), so
     // clear active/default first; the SparkContext is shared with the
     // other suites, so do NOT stop() it — just restore the sessions.
@@ -23,16 +23,10 @@ class ExtensionsSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new graft.plans.GraftExtensions)
         .getOrCreate()
-      import spark.implicits._
       assert(spark.sql("SELECT ip_to_int('1.2.3.4') AS v")
         .collect().head.getLong(0) == 16909060L)
       assert(spark.sql("SELECT nfc_normalize('cafe\u0301') AS v")
         .collect().head.getString(0) == "caf\u00e9")
-      // strategy available without runtime registration
-      val probes = Seq(5L, 150L).toDF("k")
-      val dim = Seq((0L, 99L, "a")).toDF("lo", "hi", "tag")
-      val out = graft.plans.RangeLookup.join(probes, dim, "k", "lo", "hi")
-      assert(out.count() == 2)
       // dot_double function + the HOF-rewrite optimizer rule (input
       // must come from a real relation — literal arrays constant-fold
       // before the rewrite can be observed)

@@ -34,14 +34,26 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("boundary values are inclusive on both ends") {
-    val out = RangeJoin.bucketed(
-        Seq(0L, 99L, 200L, 299L, 300L, 100L).toDF("k"),
-        dim, "k", "lo", "hi", shift = 4)
-      .select(col("k"), col("tag"))
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    assert(out(0L).contains("a") && out(99L).contains("a"))
-    assert(out(200L).contains("b") && out(299L).contains("b"))
-    assert(out(300L).contains("c"))
-    assert(out(100L).isEmpty)
+    // a range ending at the top of the IPv4 space, probed at its upper
+    // end and just below its lower bound
+    val top = 4294967295L
+    val withTop = dim.union(Seq((4294901760L, top, "z")).toDF("lo", "hi", "tag"))
+    // shift 16 is Enrich.withGeo's: every range above but "z" shares
+    // bucket 0, so only the residual lo/hi filter tells them apart
+    for (shift <- Seq(4, 16)) withClue(s"shift = $shift: ") {
+      val rows = RangeJoin.bucketed(
+          Seq(0L, 99L, 200L, 299L, 300L, 100L, top, 4294901759L).toDF("k"),
+          withTop, "k", "lo", "hi", shift = shift)
+        .select(col("k"), col("tag"))
+        .collect()
+      assert(rows.length == 8) // one row per probe: none matches twice
+      val out = rows.map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      assert(out(0L).contains("a") && out(99L).contains("a"))
+      assert(out(200L).contains("b") && out(299L).contains("b"))
+      assert(out(300L).contains("c"))
+      assert(out(100L).isEmpty)
+      assert(out(top).contains("z"))
+      assert(out(4294901759L).isEmpty)
+    }
   }
 }
