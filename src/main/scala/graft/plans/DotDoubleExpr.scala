@@ -23,9 +23,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * mismatched lengths or a null element yield null (zip_with pads the
   * shorter side with nulls / passes element nulls through, and the sum
   * then poisons to null); null ARRAY input → null via the standard
-  * null-safe path. That exact parity is what licenses
-  * [[DotDoubleRule]], the optimizer rule that rewrites the HOF pattern
-  * into this expression wherever a user wrote the idiomatic form.
+  * null-safe path. It enters a plan through the Column helper
+  * [[DotDoubleExpr.dotDouble]] (or `dot_double` in SQL after
+  * [[DotDoubleExpr.register]]).
   */
 case class DotDoubleExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -109,55 +109,4 @@ object DotDoubleExpr {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dot_double", fromExprs, "built-in")
-}
-
-/** Optimizer rule: rewrite the idiomatic higher-order-function dot
-  * product — `aggregate(zip_with(a, b, (x, y) -> x * y), 0d,
-  * (acc, v) -> acc + v)` — into [[DotDoubleExpr]]. Users (and SQL
-  * authors) writing the natural declarative form then get the fused
-  * codegen'd loop without knowing the native function exists; the
-  * rewrite is semantics-preserving because DotDoubleExpr reproduces
-  * the HOF null contract exactly (length mismatch / null element /
-  * null array → null) and both fold left-to-right (double + and × are
-  * commutative bit-for-bit, so argument order inside the lambdas is
-  * free). Guards are structural: double arrays, literal 0.0 zero, a
-  * two-distinct-variable product (zip_with(a, a, x*x)-style
-  * same-variable lambdas do NOT match), an identity finish lambda.
-  * Registered via GraftExtensions.injectOptimizerRule. */
-object DotDoubleRule
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-
-  import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, LambdaFunction, Literal, Multiply, NamedLambdaVariable, ZipWith}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  private def isArrDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case ArrayAggregate(
-            ZipWith(l, r, LambdaFunction(
-              Multiply(ma: NamedLambdaVariable, mb: NamedLambdaVariable, _),
-              Seq(zx: NamedLambdaVariable, zy: NamedLambdaVariable), _)),
-            Literal(zero, DoubleType),
-            LambdaFunction(
-              Add(aa: NamedLambdaVariable, ab: NamedLambdaVariable, _),
-              Seq(mc: NamedLambdaVariable, me: NamedLambdaVariable), _),
-            LambdaFunction(fin: NamedLambdaVariable,
-              Seq(fa: NamedLambdaVariable), _))
-          // raw-bits zero test: Scala's == calls -0.0 equal to 0.0,
-          // but a -0.0 seed is observable (empty arrays return the
-          // seed) and the native fold starts from +0.0
-          if (zero match {
-            case d: Double => java.lang.Double.doubleToRawLongBits(d) == 0L
-            case _ => false
-          }) && isArrDouble(l) && isArrDouble(r) &&
-            Set(ma.exprId, mb.exprId) == Set(zx.exprId, zy.exprId) &&
-            Set(aa.exprId, ab.exprId) == Set(mc.exprId, me.exprId) &&
-            fin.exprId == fa.exprId =>
-        DotDoubleExpr(l, r)
-    }
 }

@@ -113,75 +113,3 @@ object SqDistFixedExpr {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "sqdist_fixed", fromExprs, "built-in")
 }
-
-/** Optimizer rule: rewrite the idiomatic HOF fixed-point distance —
-  * `aggregate(zip_with(a, b, (x, c) -> floor(((x−c)·(x−c))·1e10)
-  * :: bigint), 0L, (acc, d) -> acc + d)` — into [[SqDistFixedExpr]],
-  * the [[DotDoubleRule]] treatment applied to the distance kernel: a
-  * user (or SQL author) writing the declarative form gets the fused
-  * codegen'd loop without knowing the native function exists. The
-  * rewrite is semantics-preserving under ANSI mode (the Spark 4
-  * default): identical per-element IEEE op order, identical null
-  * contract, overflow throws on both sides (Math.addExact vs ANSI
-  * Add), and integer addition makes the fold order immaterial — in a
-  * non-ANSI session the HOF wraps on overflow where the kernel
-  * throws, a strictly-louder failure. Guards are structural — double arrays, both
-  * squared-difference legs the SAME ordered (x, c) variable pair
-  * drawn from the zip_with variables, the exact 1e10 scale and 0L
-  * seed (raw-bits tests), an identity finish lambda; a no-op
-  * LONG→LONG cast over the floor (present until SimplifyCasts runs)
-  * is accepted and ignored. */
-object SqDistFixedRule
-    extends org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-
-  import org.apache.spark.sql.catalyst.expressions.{Add, ArrayAggregate, Cast, Expression, Floor, LambdaFunction, Literal, Multiply, NamedLambdaVariable, Subtract, ZipWith}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  private def isArrDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  /** Strip a redundant LONG→LONG cast (floor already returns BIGINT;
-    * the Column form writes `.cast("long")` anyway). */
-  private def uncast(e: Expression): Expression = e match {
-    case Cast(inner, LongType, _, _) if inner.dataType == LongType => inner
-    case other => other
-  }
-
-  private def isTenTo10(l: Expression): Boolean = l match {
-    case Literal(d: Double, DoubleType) =>
-      java.lang.Double.doubleToRawLongBits(d) ==
-        java.lang.Double.doubleToRawLongBits(1.0e10)
-    case _ => false
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case ArrayAggregate(
-            ZipWith(l, r, LambdaFunction(body,
-              Seq(zx: NamedLambdaVariable, zy: NamedLambdaVariable), _)),
-            Literal(0L, LongType),
-            LambdaFunction(
-              Add(aa: NamedLambdaVariable, ab: NamedLambdaVariable, _),
-              Seq(mc: NamedLambdaVariable, me: NamedLambdaVariable), _),
-            LambdaFunction(fin: NamedLambdaVariable,
-              Seq(fa: NamedLambdaVariable), _))
-          if isArrDouble(l) && isArrDouble(r) &&
-            Set(aa.exprId, ab.exprId) == Set(mc.exprId, me.exprId) &&
-            fin.exprId == fa.exprId &&
-            (uncast(body) match {
-              case Floor(Multiply(
-                    Multiply(
-                      Subtract(x1: NamedLambdaVariable, c1: NamedLambdaVariable, _),
-                      Subtract(x2: NamedLambdaVariable, c2: NamedLambdaVariable, _), _),
-                    scale, _)) =>
-                isTenTo10(scale) &&
-                  x1.exprId == x2.exprId && c1.exprId == c2.exprId &&
-                  Set(x1.exprId, c1.exprId) == Set(zx.exprId, zy.exprId)
-              case _ => false
-            }) =>
-        SqDistFixedExpr(l, r)
-    }
-}

@@ -32,11 +32,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object LogSource {
 
   /** Offset state file: single long, as the reference's state.offset
-    * (utils.py:214-270). Invalid/absent → 0. */
+    * (utils.py:214-270). Invalid (non-numeric or negative)/absent → 0. */
   def readOffset(stateFile: Path): Long =
     if (Files.exists(stateFile))
       try new String(Files.readAllBytes(stateFile),
-        StandardCharsets.UTF_8).trim.toLong
+        StandardCharsets.UTF_8).trim.toLong.max(0L)
       catch { case _: NumberFormatException => 0L }
     else 0L
 

@@ -54,9 +54,9 @@ object SqlExport {
     coalesce(rendered, lit("NULL"))
   }
 
-  /** INSERT statement column + a NOT-NULL-violation flag column. */
-  def statements(df: DataFrame, table: String,
-                 specs: Seq[ColumnSpec]): DataFrame = {
+  /** The INSERT statement column and the NOT-NULL-violation flag column. */
+  private def insertColumns(table: String,
+                            specs: Seq[ColumnSpec]): (Column, Column) = {
     val cols = specs.map(s => literal(col(s.csvName), s.kind))
     val violated = specs.filter(_.notNull)
       .map { s =>
@@ -69,6 +69,13 @@ object SqlExport {
     val stmt = concat(
       lit(s"INSERT INTO $table (${specs.map(_.sqlName).mkString(", ")}) VALUES ("),
       concat_ws(", ", cols: _*), lit(");"))
+    (stmt, violated)
+  }
+
+  /** INSERT statement column + a NOT-NULL-violation flag column. */
+  def statements(df: DataFrame, table: String,
+                 specs: Seq[ColumnSpec]): DataFrame = {
+    val (stmt, violated) = insertColumns(table, specs)
     df.select(stmt.as("stmt"), violated.as("violation"))
   }
 
@@ -102,7 +109,10 @@ object SqlExport {
   def exportWithQuarantine(df: DataFrame, table: String,
                            specs: Seq[ColumnSpec]): Quarantined = {
     import df.sparkSession.implicits._
-    val rendered = statementsWithSource(df, table, specs).cache()
+    // the original source columns ride along for the quarantine frame
+    val (stmt, violated) = insertColumns(table, specs)
+    val rendered = df.withColumn("stmt", stmt)
+      .withColumn("violation", violated).cache()
     val violations = rendered.filter(col("violation")).count()
     val good = rendered.filter(!col("violation")).select(col("stmt")).as[String]
     val quarantine = rendered.filter(col("violation"))
@@ -110,24 +120,6 @@ object SqlExport {
     val begin = df.sparkSession.createDataset(Seq("BEGIN TRANSACTION;"))
     val commit = df.sparkSession.createDataset(Seq("COMMIT;"))
     Quarantined(begin.union(good).union(commit), quarantine, violations)
-  }
-
-  /** statements() plus the original source columns (for quarantine). */
-  private def statementsWithSource(df: DataFrame, table: String,
-                                   specs: Seq[ColumnSpec]): DataFrame = {
-    val cols = specs.map(s => literal(col(s.csvName), s.kind))
-    val violated = specs.filter(_.notNull)
-      .map { s =>
-        val base = nullified(col(s.csvName)).isNull
-        if (s.kind == IntKind)
-          base || nullified(col(s.csvName)).try_cast("long").isNull
-        else base
-      }
-      .reduceOption(_ || _).getOrElse(lit(false))
-    val stmt = concat(
-      lit(s"INSERT INTO $table (${specs.map(_.sqlName).mkString(", ")}) VALUES ("),
-      concat_ws(", ", cols: _*), lit(");"))
-    df.withColumn("stmt", stmt).withColumn("violation", violated)
   }
 
   /** Schema-to-DDL with enum→CHECK downgrade

@@ -40,47 +40,6 @@ class DotDoubleExprSpec extends SparkSpec {
         "the native expression must agree")
   }
 
-  private def countDots(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
-    plan.expressions.map(_.collect { case d: DotDoubleExpr => d }.size).sum +
-      plan.children.map(countDots).sum
-
-  test("optimizer rule rewrites the HOF pattern into the native expression") {
-    val df = vecs(9, 50, 8).toDF("a", "b")
-      .select(Similarity.dotDoubleHof(col("a"), col("b")).as("d"))
-    val analyzed = org.apache.spark.sql.GraftSqlBridge.logicalPlan(df)
-    assert(countDots(analyzed) == 0, "fixture must start as the HOF form")
-    val rewritten = graft.plans.DotDoubleRule(analyzed)
-    assert(countDots(rewritten) == 1, s"rule must fire:\n$rewritten")
-    // the rewritten plan computes identical values
-    val a = org.apache.spark.sql.GraftSqlBridge.dataset(spark, rewritten)
-      .collect().map(_.getDouble(0)).toSeq
-    val b = df.collect().map(_.getDouble(0)).toSeq
-    assert(a == b)
-  }
-
-  test("rule guards: same-variable product and non-zero seed do not match") {
-    // zip_with(a, a, x*x): the product reuses ONE lambda variable —
-    // not a dot product of two arrays; must not rewrite
-    val sq = vecs(10, 5, 4).toDF("a", "b").select(
-      aggregate(zip_with(col("a"), col("a"), (x, _) => x * x),
-        lit(0.0), (acc, x) => acc + x).as("d"))
-    assert(countDots(graft.plans.DotDoubleRule(
-      org.apache.spark.sql.GraftSqlBridge.logicalPlan(sq))) == 0)
-    // non-zero seed changes the result; must not rewrite
-    val seeded = vecs(11, 5, 4).toDF("a", "b").select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(1.0), (acc, x) => acc + x).as("d"))
-    assert(countDots(graft.plans.DotDoubleRule(
-      org.apache.spark.sql.GraftSqlBridge.logicalPlan(seeded))) == 0)
-    // -0.0 seed is observable (empty arrays return the seed; the
-    // native fold starts from +0.0) — raw-bits guard must not match
-    val negZero = vecs(12, 5, 4).toDF("a", "b").select(
-      aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(-0.0), (acc, x) => acc + x).as("d"))
-    assert(countDots(graft.plans.DotDoubleRule(
-      org.apache.spark.sql.GraftSqlBridge.logicalPlan(negZero))) == 0)
-  }
-
   test("SQL registration works") {
     DotDoubleExpr.register(spark)
     val r = spark.sql(

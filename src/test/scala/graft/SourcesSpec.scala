@@ -52,10 +52,16 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("invalid state file treated as offset 0 (utils.py:214-248)") {
-    val d = tmpDir()
-    val f = d.resolve("offset")
-    write(f, "not-a-number")
-    assert(LogSource.readOffset(f) == 0L)
+    for (bad <- Seq("not-a-number", "-5")) {
+      val d = tmpDir()
+      val log = d.resolve("mail.log")
+      val f = d.resolve("offset")
+      write(log, "line1\nline2\n")
+      write(f, bad)
+      assert(LogSource.readOffset(f) == 0L, bad)
+      assert(LogSource.incrementalRead(spark, log, f).as[String].collect()
+        .toSeq == Seq("line1", "line2"), bad)
+    }
   }
 
   test("events csv roundtrip with ; delimiter; malformed rows dropped") {
