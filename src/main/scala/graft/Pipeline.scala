@@ -10,11 +10,14 @@ import graft.sources.{EventsCsv, LogSource}
   * (`/root/reference/bin/maillogsentinel.py:93-760`, traced SURVEY §3.1)
   * as one declarative plan:
   *
-  *   text lines → regex parse/filter → rDNS enrich → geo range joins →
+  *   text lines → regex parse/filter → rDNS enrich → geo range lookups →
   *   "N/A"/"null" defaults → 9-column events frame → CSV append
   *
-  * Zero shuffles end-to-end: narrow ops + broadcast joins only, so the
-  * plan scales linearly with input bytes on any number of executors.
+  * Narrow ops apart from one small shuffle of the distinct IPs rDNS
+  * resolves, whose results come back by broadcast join. The geo dims are
+  * broadcast sorted tables probed per row, built once per session and
+  * file identity. The plan scales linearly with input bytes on any
+  * number of executors.
   */
 object Pipeline {
 

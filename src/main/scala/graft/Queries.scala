@@ -154,7 +154,7 @@ object Queries {
       GROUP BY 1, 2 ORDER BY username, ip"""))
 
   /** §2.3 IP range-join enrichment (ipinfo.py:217-238,309-339 analog):
-    * ip→int, bucketed broadcast range join against non-overlapping
+    * ip→int, broadcast sorted-table lookup against non-overlapping
     * intervals, miss → "N/A", then country top-k. Zero shuffles on the
     * probe side before the final agg. */
   private val q06 = Q(
@@ -173,7 +173,7 @@ object Queries {
         (col("n_nationkey").cast("long") * 171798692L).as("lo"),
         (col("n_nationkey").cast("long") * 171798692L + 120000000L).as("hi"),
         col("n_name"))
-      RangeJoin.bucketed(probe, dim, "ip_int", "lo", "hi", 24)
+      RangeJoin.lookup(probe, col("ip_int"), dim)
         .select(coalesce(col("n_name"), lit("N/A")).as("country"))
         .groupBy(col("country")).agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), col("country"))

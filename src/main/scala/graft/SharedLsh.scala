@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -50,12 +51,13 @@ object ArtifactTimer {
   * is one [[memo]] call around its build expression, which runs once
   * per key and is timed under the ledger name. Values are whatever the
   * build returns — a checkpointed frame, a pair of frames
-  * (SharedGrams.postingPair), a driver-side Seq (SharedBpe.merges) or
-  * a scalar (SharedWinnow.adaptiveCap).
+  * (SharedGrams.postingPair), a driver-side Seq (SharedBpe.merges), a
+  * broadcast (RangeJoin.table) or a scalar (SharedWinnow.adaptiveCap).
   *
-  * Lifecycle: checkpointed blocks live until [[clear]] of their session
-  * or the SparkContext's end. Entries are keyed by the session object,
-  * so one session's clear never touches another's frames. */
+  * Lifecycle: checkpointed blocks and broadcasts live until [[clear]] of
+  * their session, a newer [[memoVersion]] or the SparkContext's end.
+  * Entries are keyed by the session object, so one session's clear never
+  * touches another's frames. */
 object SessionArtifacts {
   private val entries = TrieMap.empty[(SparkSession, String, Any), Any]
 
@@ -63,10 +65,29 @@ object SessionArtifacts {
     entries.getOrElseUpdate((s, name, key),
       ArtifactTimer.timed(name)(build)).asInstanceOf[T]
 
-  /** Drop `s`'s entries and free the blocks of every checkpointed frame
-    * among them. `Dataset.unpersist` does not reach a `localCheckpoint`
-    * frame's blocks (they belong to the checkpointed RDD under the
-    * plan's `LogicalRDD` leaf), so the RDD itself is unpersisted.
+  /** [[memo]] for an artifact of inputs that change in place: `version`
+    * names their current state (RangeJoin.table passes its files'
+    * identity). The first call at a new version evicts and releases the
+    * entries of `key`'s other versions, so a refresh leaves no stale
+    * artifact behind. */
+  def memoVersion[T](s: SparkSession, name: String, key: Any, version: Any)(
+      build: => T): T =
+    entries.get((s, name, (key, version))) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        entries.keys.foreach {
+          case k @ (`s`, `name`, (`key`, v)) if v != version =>
+            entries.remove(k).foreach(release)
+          case _ => ()
+        }
+        memo(s, name, (key, version))(build)
+    }
+
+  /** Drop `s`'s entries, destroy their broadcasts and free the blocks of
+    * every checkpointed frame among them. `Dataset.unpersist` does not
+    * reach a `localCheckpoint` frame's blocks (they belong to the
+    * checkpointed RDD under the plan's `LogicalRDD` leaf), so the RDD
+    * itself is unpersisted.
     * Checkpoints taken INSIDE a build (megaEdgeJaccard's and
     * componentsWhere's inner pins) are not reachable from the stored
     * frame and stay until the SparkContext ends. A frame still in use
@@ -81,6 +102,7 @@ object SessionArtifacts {
       GraftSqlBridge.logicalPlan(df.toDF())
         .collect { case r: LogicalRDD => r.rdd }
         .foreach(_.unpersist(blocking = true))
+    case b: Broadcast[_] => GraftSqlBridge.destroy(b)
     case (a, b) => release(a); release(b)
     case _ => ()
   }

@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.IpFunctions
 
-/** Event enrichment: GeoIP/ASN range joins + reverse-DNS lookup.
+/** Event enrichment: GeoIP/ASN range lookups + reverse-DNS lookup.
   *
-  * Geo path (`/root/reference/bin/ipinfo.py:309-339`): two left range
-  * joins against broadcast dimension tables, misses defaulting to the
-  * stringly "N/A" sentinel — which must stay a plain string through the
-  * analytics path (it ranks in top-k reports; SURVEY §7.4.6).
+  * Geo path (the reference's `bin/ipinfo.py:217-238,309-339`): one
+  * binary search per dimension over a broadcast sorted table
+  * ([[RangeJoin.lookup]]), built once per session and dim-file identity,
+  * misses defaulting to the stringly "N/A" sentinel — which must stay a
+  * plain string through the analytics path (it ranks in top-k reports;
+  * SURVEY §7.4.6).
   *
   * rDNS path (`/root/reference/lib/maillogsentinel/dns_utils.py`): a
   * side-effecting network lookup — necessarily a UDF, marked
@@ -22,22 +24,20 @@ import graft.functions.IpFunctions
 object Enrich {
 
   /** Country dim schema: lo, hi, country_code (ipinfo.py:149-172).
-    * ASN dim schema: lo, hi, asn, aso (ipinfo.py:173-190). */
+    * ASN dim schema: lo, hi, asn, aso (ipinfo.py:173-190). A dim read
+    * from files is re-read only when a file's identity changes; a refresh
+    * is then seen by the next call (and by the held dim frame). */
   def withGeo(events: DataFrame, country: DataFrame, asn: DataFrame,
-              ipCol: String = "ip"): DataFrame = {
-    val probe = events.withColumn("ip_int", IpFunctions.ipToInt(col(ipCol)))
-    val c = RangeJoin.bucketed(
-        probe, country.select(col("lo"), col("hi"), col("country_code")),
-        "ip_int", "lo", "hi", shift = 16)
-      .drop("lo", "hi")
-    val a = RangeJoin.bucketed(
-        c, asn.select(col("lo"), col("hi"), col("asn"), col("aso")),
-        "ip_int", "lo", "hi", shift = 16)
-      .drop("lo", "hi", "ip_int")
-    a.withColumn("country_code", coalesce(col("country_code"), lit("N/A")))
+              ipCol: String = "ip"): DataFrame =
+    RangeJoin.lookup(
+        events.withColumn("ip_int", IpFunctions.ipToInt(col(ipCol))),
+        col("ip_int"),
+        country.select(col("lo"), col("hi"), col("country_code")),
+        asn.select(col("lo"), col("hi"), col("asn"), col("aso")))
+      .drop("ip_int")
+      .withColumn("country_code", coalesce(col("country_code"), lit("N/A")))
       .withColumn("asn", coalesce(col("asn").cast("string"), lit("N/A")))
       .withColumn("aso", coalesce(col("aso"), lit("N/A")))
-  }
 
   /** Geo columns when no databases are configured — the reference emits
     * the same sentinels when managers are absent (log_utils.py:115-123). */
@@ -84,7 +84,7 @@ object Enrich {
       new java.util.concurrent.Callable[Either[String, String]] {
         def call(): Either[String, String] = resolver(ip)
       })
-    ResolverPool.executor.execute(task)
+    DaemonPool.executor.execute(task)
     try task.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
     catch {
       case _: java.util.concurrent.TimeoutException =>
@@ -132,16 +132,17 @@ object Enrich {
   }
 }
 
-/** Daemon worker pool backing [[Enrich.bounded]] — executor-JVM-local,
-  * shared across tasks (like RdnsCache). Cached pool: idle threads are
-  * reclaimed after 60 s, bursts grow it as needed. */
-private[operators] object ResolverPool {
+/** Daemon worker pool backing [[Enrich.bounded]] (executor-JVM-local,
+  * shared across tasks like RdnsCache) and the driver-side table builds of
+  * [[RangeJoin.lookup]]. Cached pool: idle threads are reclaimed after
+  * 60 s, bursts grow it as needed. */
+private[operators] object DaemonPool {
   val executor: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool(
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger(0)
         def newThread(r: Runnable): Thread = {
-          val t = new Thread(r, s"graft-rdns-${n.incrementAndGet()}")
+          val t = new Thread(r, s"graft-worker-${n.incrementAndGet()}")
           t.setDaemon(true)
           t
         }

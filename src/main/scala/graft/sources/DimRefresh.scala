@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * The fetch itself is an injectable `Path => Unit` (this container is
   * zero-egress; production passes an HTTP downloader for the public
   * sapics/ip-location-db URLs the reference uses, ipinfo.py:18-19).
-  * Loading returns broadcast-ready DataFrames in the lo/hi schema the
-  * RangeJoin/Enrich operators expect; no driver-side sort is needed —
-  * ordering concerns live in the join strategy, not the load
-  * (ipinfo.py:207's sort was for its binary search).
+  * Loading returns lazy DataFrames in the lo/hi schema the
+  * RangeJoin/Enrich operators expect. `RangeJoin.table` collects,
+  * sorts (ipinfo.py:207) and broadcasts each once per file identity;
+  * on a new identity it refreshes the frame's file listing, so a frame
+  * held across a [[refresh]] reads the new file, not the old length.
   */
 object DimRefresh {
 

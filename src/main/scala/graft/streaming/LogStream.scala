@@ -27,7 +27,11 @@ object LogStream {
   /** Streaming extract: raw log lines under `logDir` (glob) → canonical
     * events frame. Same declarative plan as Pipeline.extract — parse and
     * enrichment are stateless/broadcast, so they lift to streaming
-    * unchanged. */
+    * unchanged. The geo tables are built when this is called, so a
+    * streaming query keeps the tables it started with and does not see a
+    * dim refresh (until the one live-tail source of ROADMAP direction 3
+    * replaces this path); a batch run in the same session that sees a
+    * refresh destroys the old tables under it. */
   def events(spark: SparkSession, logDir: String, year: Int,
              geo: Option[Pipeline.GeoDims] = None,
              resolver: Option[Enrich.Resolver] = None): DataFrame = {

@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Enrich, RdnsCache}
+import graft.sources.DimRefresh
 
 class EnrichSpec extends SparkSpec {
   import spark.implicits._
@@ -28,6 +31,37 @@ class EnrichSpec extends SparkSpec {
       ("10.1.2.3", "US", "64500", "EXAMPLE-NET"),
       ("192.168.9.9", "DE", "N/A", "N/A"),
       ("8.8.8.8", "N/A", "N/A", "N/A")))
+  }
+
+  test("a held GeoDims sees a dim refresh: a grow hits new rows, a shrink misses old ones") {
+    val d = Files.createTempDirectory("graft-geo-refresh")
+    val countryCsv = d.resolve("country.csv")
+    val asnCsv = d.resolve("asn.csv")
+    // row i covers [1000 i, 1000 i + 999]
+    def rows(n: Int)(p: Path): Unit = Files.write(p, (0 until n)
+      .map(i => s"${i * 1000L},${i * 1000L + 999},C$i\n").mkString
+      .getBytes(StandardCharsets.UTF_8))
+    DimRefresh.refresh(countryCsv, rows(100))
+    DimRefresh.refresh(asnCsv, p => Files.write(p,
+      "0,999,64500,EX-NET\n".getBytes(StandardCharsets.UTF_8)))
+    val geo = Pipeline.GeoDims(DimRefresh.loadCountry(spark, countryCsv.toString),
+      DimRefresh.loadAsn(spark, asnCsv.toString))
+    def countryOf(row: Int): String = {
+      val v = row * 1000L + 5
+      val ip = Seq(24, 16, 8, 0).map(b => (v >>> b) & 255).mkString(".")
+      Enrich.withGeo(Seq(ip).toDF("ip"), geo.country, geo.asn)
+        .select(col("country_code")).head().getString(0)
+    }
+    assert(countryOf(50) == "C50")
+
+    DimRefresh.refresh(countryCsv, rows(5000))
+    assert(countryOf(4000) == "C4000")
+    assert(geo.country.count() == 5000)
+
+    DimRefresh.refresh(countryCsv, rows(10))
+    assert(countryOf(50) == "N/A")
+    assert(countryOf(9) == "C9")
+    assert(geo.country.count() == 10)
   }
 
   test("rdns: resolver results, failure sentinel, and cache reuse") {

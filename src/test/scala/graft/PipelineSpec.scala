@@ -4,11 +4,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.sources.EventsCsv
+import graft.sources.{DimRefresh, EventsCsv}
 
 /** End-to-end: synthesized log -> full extract -> CSV -> report aggs
   * (the reference's extraction+report integration tests,
@@ -90,6 +91,57 @@ class PipelineSpec extends SparkSpec {
       assert(Pipeline.runIncremental(s, log, d.resolve("offset"),
         d.resolve("events").toString, 2025, Some(sGeo)) == 0)
     } finally s.listenerManager.unregister(listener)
+  }
+
+  test("an unchanged dims file is not re-read: a second run scans no dim CSV") {
+    val d = Files.createTempDirectory("graft-dims-once")
+    val countryCsv = d.resolve("country.csv")
+    val asnCsv = d.resolve("asn.csv")
+    Files.write(countryCsv, "167772160,184549375,US\n".getBytes(StandardCharsets.UTF_8))
+    Files.write(asnCsv,
+      "167772160,184549375,64500,EX-NET\n".getBytes(StandardCharsets.UTF_8))
+    val log = d.resolve("mail.log")
+    // a session of its own, so the run builds its dim tables afresh
+    val s = spark.newSession()
+    val sGeo = Pipeline.GeoDims(DimRefresh.loadCountry(s, countryCsv.toString),
+      DimRefresh.loadAsn(s, asnCsv.toString))
+    // (job group, RDD names of its stages) of every job that starts
+    val jobs = new LinkedBlockingQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put((Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+          .orNull, e.stageInfos.flatMap(_.rddInfos).map(_.name)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup("dims-once", "dims-once")
+    /** Appends the log lines, runs once and returns the row count and the
+      * names of every file-scan RDD among the run's jobs. */
+    def run(): (Long, Seq[String]) = {
+      Files.write(log, (logLines.mkString("\n") + "\n")
+        .getBytes(StandardCharsets.UTF_8), java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
+      val n = Pipeline.runIncremental(s, log, d.resolve("offset"),
+        d.resolve("events").toString, 2025, Some(sGeo))
+      // job starts arrive in order: the marker's comes after the run's
+      spark.sparkContext.parallelize(Seq(1), 1).setName("marker").count()
+      val scans = Iterator.continually(jobs.poll(60, TimeUnit.SECONDS))
+        .takeWhile(j => j != null && !j._2.contains("marker"))
+        .filter(_._1 == "dims-once").flatMap(_._2).filter(_ == "FileScanRDD")
+      (n, scans.toList)
+    }
+    try {
+      val (n1, scans1) = run()
+      assert(n1 == 4)
+      assert(scans1.nonEmpty, "the first run builds the dim tables from the CSVs")
+      val (n2, scans2) = run()
+      assert(n2 == n1)
+      assert(scans2.isEmpty, s"second run scanned files: $scans2")
+      val ev = EventsCsv.read(s, d.resolve("events").toString)
+      assert(ev.filter(col("country_code") === "US").count() == 6)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("report aggregates match hand-computed values on the day filter") {
