@@ -49,8 +49,8 @@ object QueriesDepth {
         .groupBy(col("source"))
         .agg(KmvSketch.lowestK(col("h"), k).as("kmv"))
         .localCheckpoint() // 1 row per source; read by both pair legs
-      // the set-algebra stage is the SHARED kernel — the streaming
-      // twin (StreamingKmvAlgebraSpec) certifies this same code path
+      // the set-algebra stage is the shared KmvSketch.pairEstimates
+      // kernel; the oracle replays the same estimator chain
       val pairs = KmvSketch.pairEstimates(sk, "source", "kmv", k,
         outA = "source_a", outB = "source_b")
       val exact = srcsh.select(col("source").as("source_a"), col("sh"))
@@ -2244,9 +2244,9 @@ object QueriesDepth {
     (s, dir) => {
       // the df-capped ≥2-shared pair derivation rides the shared
       // artifact (SharedWinnow.cappedPairs — also q238's input; the
-      // df-cap is the ONE shared constant with the streaming twin,
-      // StreamingWinnowScreen.DfCap, whose parity spec pins THIS
-      // production screen)
+      // df-cap is the ONE shared constant Dedup.WinnowDfCap, and
+      // DedupSimilaritySpec pins Dedup.winnowFingerprints to THIS
+      // production screen's window-min derivation)
       val wpairs = SharedWinnow.cappedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("in_w"))
       val lpairs = SharedLsh.candidatePairs(s, dir)
@@ -2292,7 +2292,7 @@ object QueriesDepth {
       fd AS (SELECT DISTINCT doc_id, fp FROM sel),
       us AS (SELECT fp FROM fd GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.streaming.StreamingWinnowScreen.DfCap}),
+          graft.operators.Dedup.WinnowDfCap}),
       cap AS (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
       wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
@@ -2342,9 +2342,9 @@ object QueriesDepth {
         .localCheckpoint() // df-cap + both join legs + the doc census
       val usable = idx.groupBy(col("fp"))
         .agg(count(lit(1)).as("nd"), sum(col("is_delta")).as("ndelta"))
-        // same shared df-cap as q226 / the streaming twin
+        // same shared df-cap as q226 (Dedup.WinnowDfCap)
         .filter(col("nd").between(2,
-          graft.streaming.StreamingWinnowScreen.DfCap) &&
+          graft.operators.Dedup.WinnowDfCap) &&
           col("ndelta") >= 1)
         .select(col("fp"))
       val capped = idx.join(usable, "fp")
@@ -2394,7 +2394,7 @@ object QueriesDepth {
       fd AS (SELECT DISTINCT doc_id, fp FROM sel),
       us AS (SELECT fp FROM fd GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.streaming.StreamingWinnowScreen.DfCap}),
+          graft.operators.Dedup.WinnowDfCap}),
       cap AS (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
       wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id

@@ -45,8 +45,7 @@ object QueriesMore {
     * → running sum = session id → per-session stats. The batch shape of
     * the streaming session-window operator — ONE kernel
     * (EventAnalytics.sessionized) shared with the path/transition
-    * censuses (q140/q141) and pinned against the stateful streaming
-    * sessionizer by StatefulSessionsSpec's parity test. */
+    * censuses (q140/q141). */
   private val q30 = Q(
     "q30_sessionize",
     (s, dir) =>

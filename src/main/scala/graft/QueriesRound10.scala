@@ -219,7 +219,7 @@ object QueriesRound10 {
       // pair derivation + component map ride the shared artifacts
       // (one derivation serves q226's calibration, this retention
       // pipeline, and q242's cluster profile); the keep rule is the
-      // factored Retention policy the streaming twin also runs
+      // factored Retention policy q249 also runs
       val comps = SharedWinnow.components(s, dir)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
@@ -259,7 +259,7 @@ object QueriesRound10 {
       fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
       us AS (SELECT fp FROM fd GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.streaming.StreamingWinnowScreen.DfCap}),
+          graft.operators.Dedup.WinnowDfCap}),
       cap AS MATERIALIZED (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
       wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
@@ -615,7 +615,7 @@ object QueriesRound10 {
       fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
       us AS (SELECT fp FROM fd GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.streaming.StreamingWinnowScreen.DfCap}),
+          graft.operators.Dedup.WinnowDfCap}),
       cap AS MATERIALIZED (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
       wpr AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id

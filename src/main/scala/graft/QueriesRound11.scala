@@ -39,7 +39,7 @@ object QueriesRound11 {
       fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
       us AS (SELECT fp FROM fd GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.streaming.StreamingWinnowScreen.DfCap}),
+          graft.operators.Dedup.WinnowDfCap}),
       cap AS MATERIALIZED (SELECT fd.doc_id, fd.fp
         FROM fd JOIN us ON us.fp = fd.fp),
       wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -373,7 +373,7 @@ object QueriesRound11 {
       fd$tag AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel$tag),
       us$tag AS (SELECT fp FROM fd$tag GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.streaming.StreamingWinnowScreen.DfCap}),
+          graft.operators.Dedup.WinnowDfCap}),
       cap$tag AS MATERIALIZED (SELECT f.doc_id, f.fp
         FROM fd$tag f JOIN us$tag u ON u.fp = f.fp),
       wp$tag AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -403,8 +403,7 @@ object QueriesRound11 {
     * previously-dropped doc inherits its fragment's argmax. Retention
     * under growth is NOT monotone, and this census is the monitor a
     * production pipeline runs per crawl before re-publishing a
-    * training set (the batch twin of StreamingWinnowRetention's
-    * per-batch snapshot).
+    * training set.
     *
     * Scale shape: the full-corpus component map rides SharedWinnow;
     * the base-world map pays one extra fenced kernel + df-cap pair

@@ -435,7 +435,7 @@ object QueriesRound9 {
     * copies, truncated text, ids offset by 10¹² (far above any real
     * train id). Screen: ≥2 shared fingerprints in a df-capped
     * universe (corpus-side document frequency ≤
-    * StreamingWinnowScreen.DfCap — boilerplate fingerprints are
+    * Dedup.WinnowDfCap — boilerplate fingerprints are
     * stop-words of this index, and an uncapped hot fingerprint is the
     * fan-out bomb at crawl scale). Confirm: UNCAPPED fingerprint
     * containment of the bench doc in the train doc ≥ 50%, computed
@@ -487,7 +487,7 @@ object QueriesRound9 {
       ${winnowFpSql("bench", "bfp")},
       capped AS (SELECT doc_id AS train_id, fp FROM cfp
         WHERE fp IN (SELECT fp FROM cfp GROUP BY fp
-          HAVING COUNT(*) <= ${graft.streaming.StreamingWinnowScreen.DfCap})),
+          HAVING COUNT(*) <= ${graft.operators.Dedup.WinnowDfCap})),
       cand AS (SELECT train_id, b.doc_id AS bench_id
         FROM capped c JOIN bfp b ON b.fp = c.fp
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
@@ -584,7 +584,7 @@ object QueriesRound9 {
       ${winnowFpSql("bench", "bfp")},
       capped AS (SELECT doc_id AS train_id, fp FROM cfp
         WHERE fp IN (SELECT fp FROM cfp GROUP BY fp
-          HAVING COUNT(*) <= ${graft.streaming.StreamingWinnowScreen.DfCap})),
+          HAVING COUNT(*) <= ${graft.operators.Dedup.WinnowDfCap})),
       wcand AS (SELECT train_id, b.doc_id AS bench_id
         FROM capped c JOIN bfp b ON b.fp = c.fp
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),

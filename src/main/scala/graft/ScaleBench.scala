@@ -287,7 +287,7 @@ object ScaleBench {
       }
       // round-11: the q238/q247 retention-policy chain END TO END —
       // the decision a dedup pipeline actually ships: winnow screen
-      // pairs (fingerprintsNarrow, the STREAMING twin's exact kernel)
+      // pairs (Dedup.winnowFingerprints, SharedWinnow's kernel)
       // → df-cap → ≥2-shared confirm → exact CC fixpoint → the packed
       // quality-argmax keep census (the factored Retention policy).
       // Sizes the whole keep/drop decision per decade, not just the
@@ -296,13 +296,12 @@ object ScaleBench {
       // corpus shuffle-hash on ids (never broadcast — it scales with
       // duplication rate).
       val retentionKept = timedL("retention_policy") {
-        import graft.streaming.StreamingWinnowScreen
-        val fd = StreamingWinnowScreen
-          .fingerprintsNarrow(docs, "doc_id", "text")
+        val fd = Dedup
+          .winnowFingerprints(docs, "doc_id", "text")
           .select(col("docId").as("doc_id"), col("fp")).distinct()
           .localCheckpoint() // df-cap + both self-join legs, one lineage
         val usable = fd.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
-          .filter(col("nd").between(2, StreamingWinnowScreen.DfCap))
+          .filter(col("nd").between(2, Dedup.WinnowDfCap))
           .select(col("fp"))
         val capped = fd.join(usable.hint("shuffle_hash"), "fp")
         val pairs = capped.select(col("fp"), col("doc_id").as("doc_a"))
@@ -330,13 +329,12 @@ object ScaleBench {
       // triangular-join cumulative. Everything after the kernel is
       // census-scale; the decade should track the fingerprint kernel.
       val capSum = timedL("cap_calibration") {
-        import graft.streaming.StreamingWinnowScreen
         val r = docs.agg(count(lit(1)).as("nn"),
           count_distinct(md5(col("text"))).as("mm")).head()
-        val acap = (StreamingWinnowScreen.DfCap * r.getLong(0) +
+        val acap = (Dedup.WinnowDfCap * r.getLong(0) +
           r.getLong(1) - 1L) / r.getLong(1)
-        val fd = StreamingWinnowScreen
-          .fingerprintsNarrow(docs, "doc_id", "text")
+        val fd = Dedup
+          .winnowFingerprints(docs, "doc_id", "text")
           .select(col("docId"), col("fp")).distinct()
         val nd = fd.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
           .filter(col("nd") >= 2)
@@ -697,7 +695,7 @@ object ScaleBench {
       // by a Knuth multiplicative hash — sessions stay bounded, every
       // user partition holds ~1000 events.
       val evWanted = want("session_paths", "transitions", "attribution",
-        "rate_anomaly", "streaming_sessions")
+        "rate_anomaly")
       val ev: DataFrame = if (evWanted) spark.range(n).select(
         col("id").as("event_id"),
         pmod(col("id"), lit(math.max(1L, n / 1000))).as("user_id"),
@@ -741,71 +739,10 @@ object ScaleBench {
           docs.withColumn("source",
             pmod(col("doc_id"), lit(20L)).cast("string"))).count()
       }
-      // streaming throughput point: the same n events through the
-      // flatMapGroupsWithState sessionizer as a real multi-micro-batch
-      // file stream (8 input files, 2 per trigger ⇒ 4 batches), parquet
-      // sink + checkpoint — the fault-tolerant configuration, not a
-      // memory-sink toy. State = one open session per user (n/1000
-      // keys). Reported as wall seconds; rows/s = n / that.
-      val streamClosed = if (ev != null && want("streaming_sessions")) {
-        val sdir = java.nio.file.Files.createTempDirectory("graft-stream")
-        val inDir = sdir.resolve("in").toString
-        val outDir = sdir.resolve("out").toString
-        ev.select(col("user_id").as("user"), col("ms"))
-          .repartition(8).write.parquet(inDir)
-        timed("streaming_sessions", acc) {
-          import spark.implicits._
-          val events = spark.readStream
-            .schema("user LONG, ms LONG")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(inDir)
-            .as[graft.streaming.StatefulSessions.Event]
-          val q = graft.streaming.StatefulSessions
-            .sessionize(events, gapMs = 1800000L)
-            .writeStream.format("parquet")
-            .option("path", outDir)
-            .outputMode("append")
-            .option("checkpointLocation", sdir.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          spark.read.parquet(outDir).count()
-        }
-      } else -1L
       if (ev != null) ev.unpersist()
-      // streaming scale point #2: the corpus through the chunk-dedup
-      // verdict stream (flatMapGroupsWithState keyed by chunk hash) as
-      // a real 4-micro-batch file stream with parquet sink +
-      // checkpoint. State = one long PER DISTINCT CHUNK (~3·n keys on
-      // this corpus) — the state-heavy counterpart to the
-      // one-key-per-user sessionizer above.
-      val streamChunks = if (want("streaming_chunk_dedup")) {
-        val sdir = java.nio.file.Files.createTempDirectory("graft-schunk")
-        val inDir = sdir.resolve("in").toString
-        val outDir = sdir.resolve("out").toString
-        docs.repartition(8).write.parquet(inDir)
-        timed("streaming_chunk_dedup", acc) {
-          val stream = spark.readStream
-            .schema("doc_id LONG, text STRING")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(inDir)
-          val q = graft.streaming.StreamingChunkDedup
-            .verdicts(stream, "doc_id", "text", 20)
-            .writeStream.format("parquet")
-            .option("path", outDir)
-            .outputMode("append")
-            .option("checkpointLocation", sdir.resolve("ckpt").toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          spark.read.parquet(outDir).count()
-        }
-      } else -1L
       acc.append(f""""path_rows":$pathRows,"trans_rows":$transRows,""" +
         f""""attr_rows":$attrRows,"anom_rows":$anomRows,""" +
-        f""""gopher_kept":$gopherKept,"tvd_rows":$tvdRows,""" +
-        f""""stream_closed":$streamClosed,""" +
-        f""""stream_chunk_verdicts":$streamChunks,""")
+        f""""gopher_kept":$gopherKept,"tvd_rows":$tvdRows,""")
       acc.append(f""""bm25_hits":$bm25Hits,"shards":$shardCount,""" +
         f""""dsir_docs":$dsirDocs,"kmeans_rows":$kmeansN,""" +
         f""""semdedup_kept":$semKept,"rp_buckets":$rpBuckets,""" +

@@ -134,7 +134,7 @@ object SharedLsh {
   /** Materialized (doc_id, bk) band table for the documents table —
     * via the NARROW signature path (per-row array min, zero shuffles;
     * identical rows to the groupBy path, spec-asserted in
-    * StreamingNearDupSpec). */
+    * DedupSimilaritySpec). */
   def bandKeys(s: SparkSession, dir: String,
                p: Params = Default): DataFrame =
     memo(s, "SharedLsh.bandKeys", (dir, p))(
@@ -579,13 +579,13 @@ object SharedDecontam {
         .localCheckpoint())
 
   /** Winnow-screened cross pairs: ≥2 shared fingerprints in the
-    * df-capped universe (corpus-side df ≤ StreamingWinnowScreen.DfCap)
+    * df-capped universe (corpus-side df ≤ Dedup.WinnowDfCap)
     * — q234's screen, reused verbatim by q235. No data-dependent
     * broadcast: every leg is a shuffle-hash equi-join (candidate
     * volume scales with contamination rate × corpus size). */
   def winnowCandPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedDecontam.winnowCandPairs", dir) {
-      val DfCap = graft.streaming.StreamingWinnowScreen.DfCap
+      val DfCap = graft.operators.Dedup.WinnowDfCap
       val cfp = corpusFp(s, dir)
       val capped = cfp.join(
         cfp.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
@@ -730,7 +730,7 @@ object SharedWinnow {
     }
 
   /** The DUPLICATION-AWARE screen cap (r11 verdict item 1): the fixed
-    * [[graft.streaming.StreamingWinnowScreen.DfCap]] silently drops
+    * [[graft.operators.Dedup.WinnowDfCap]] silently drops
     * real duplicate families once corpus duplication grows — a
     * fingerprint shared by an f-doc organic family has df ≈ m·f under
     * m-fold duplication, so the boilerplate threshold must scale with
@@ -750,7 +750,7 @@ object SharedWinnow {
           count_distinct(md5(col("text"))).as("m"))
         .head()
       val (n, m) = (r.getLong(0), r.getLong(1))
-      val base = graft.streaming.StreamingWinnowScreen.DfCap.toLong
+      val base = graft.operators.Dedup.WinnowDfCap.toLong
       // empty corpus → the fixed cap (the capFromStore fallback rule)
       if (m == 0L) base else (base * n + m - 1L) / m
     }
@@ -782,7 +782,7 @@ object SharedWinnow {
 
   /** The df-capped ≥2-shared winnow candidate-pair artifact —
     * distinct (doc, fp) from [[selected]], document frequency capped
-    * at [2, StreamingWinnowScreen.DfCap], capped-bucket self-join,
+    * at [2, Dedup.WinnowDfCap], capped-bucket self-join,
     * pairs sharing ≥ 2 fingerprints. Shared by q226 (screen
     * calibration) and q238 (dedup retention): the pair derivation is
     * the expensive stage, both consumers are views over it. Forced
@@ -790,7 +790,7 @@ object SharedWinnow {
     * pin output parallelism). */
   def cappedPairs(s: SparkSession, dir: String): DataFrame =
     cappedPairsAt(s, dir,
-      graft.streaming.StreamingWinnowScreen.DfCap.toLong)
+      graft.operators.Dedup.WinnowDfCap.toLong)
 
   /** [[components]] at an explicit df-cap — cached per cap for the
     * adaptive-screen consumers. */
@@ -804,24 +804,24 @@ object SharedWinnow {
     * retention and q242's cluster profile read the same map). */
   def components(s: SparkSession, dir: String): DataFrame =
     componentsAt(s, dir,
-      graft.streaming.StreamingWinnowScreen.DfCap.toLong)
+      graft.operators.Dedup.WinnowDfCap.toLong)
 
   /** [[components]] over a RESTRICTED document universe (`predSql`
     * filters the documents table) — q249's base-world map, cached per
     * (session, dir, predicate) so the kernel + CC fixpoint run once
     * per session (lesson #8: q249's first bench entry re-paid them
     * every pass, 5.8 s of which ~5.5 s was this derivation). Uses the
-    * streaming twin's `fingerprintsNarrow` kernel — parity with the
+    * narrow `Dedup.winnowFingerprints` kernel — parity with the
     * [[selected]]-based derivation is spec-pinned elsewhere
-    * (StreamingWinnowScreenSpec), and q249's oracle replays the same
+    * (DedupSimilaritySpec), and q249's oracle replays the same
     * rule from scratch, so the cache cannot drift silently. */
   def componentsWhere(s: SparkSession, dir: String,
                       predSql: String): DataFrame =
     memo(s, "SharedWinnow.componentsWhere", (dir, predSql)) {
       import org.apache.spark.sql.functions._
-      val cap = graft.streaming.StreamingWinnowScreen.DfCap
-      val fd = graft.streaming.StreamingWinnowScreen
-        .fingerprintsNarrow(
+      val cap = graft.operators.Dedup.WinnowDfCap
+      val fd = graft.operators.Dedup
+        .winnowFingerprints(
           Tables.documents(s, dir).filter(expr(predSql)),
           "doc_id", "text")
         .select(col("docId").as("doc_id"), col("fp")).distinct()

@@ -527,4 +527,30 @@ object Dedup {
     }.reduce(_ + _)
     sums.select(col(idCol), sim.as("simhash"))
   }
+
+  /** Df-cap of the winnowed-fingerprint screen (q226/q227 and the
+    * SharedWinnow artifacts): a fingerprint shared by more docs is
+    * boilerplate and generates no pairs. */
+  val WinnowDfCap = 16
+
+  /** Per-doc winnowed fingerprints (w = 4 over word-4-gram hash32) as
+    * pure per-row array expressions: one (docId, fp) row per distinct
+    * selected fingerprint; docs with fewer than 4 grams emit none. No
+    * aggregation, so the same plan also runs under `readStream`. The
+    * set equals SharedWinnow's distinct per-window minima
+    * (DedupSimilaritySpec pins the two derivations together). */
+  def winnowFingerprints(docs: DataFrame, idCol: String,
+                         textCol: String): DataFrame =
+    docs
+      .select(col(idCol).cast("long").as("docId"),
+        TextAnalysis.wordNgrams(col(textCol), 4).as("gs"))
+      // FENCED (r10 audit): the ≥4 filter otherwise re-expands the
+      // whole gram+hash chain into the predicate (2× per doc)
+      .withColumn("hs", graft.plans.FenceExpr.fence(
+        transform(col("gs"), g => KmvSketch.hash32(g))))
+      .filter(size(col("hs")) >= 4)
+      .withColumn("fps", array_distinct(transform(
+        sequence(lit(1), size(col("hs")) - 3),
+        j => array_min(slice(col("hs"), j, lit(4))))))
+      .select(col("docId"), explode(col("fps")).as("fp"))
 }

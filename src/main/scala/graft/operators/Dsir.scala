@@ -86,7 +86,7 @@ object Dsir {
   def weightsMap(weights: DataFrame): Map[String, Long] =
     weights.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  /** [[scoreDocs]] as a STATELESS per-row map — the streaming twin:
+  /** [[scoreDocs]] as a STATELESS per-row map — the streaming-safe form:
     * grams derive from the row's own token array (zip with its tail),
     * weights come from the frozen [[weightsMap]] as a map literal, and
     * the integer mean folds inside the row. No explode, no shuffle, no

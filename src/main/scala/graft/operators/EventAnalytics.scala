@@ -133,9 +133,9 @@ object EventAnalytics {
     rateAnomaliesFromHourly(hourlyCounts(ev))
 
   /** [[rateAnomalies]] off a standing hourly rollup (event_type, hr,
-    * n) — e.g. [[graft.streaming.RollupMaintenance.mergedHourly]]'s
-    * merge-on-read: monitoring reads the incrementally-maintained
-    * rollup, never the event stream. */
+    * n), e.g. [[hourlyCounts]] or the same rollup kept by a streaming
+    * aggregation (RollupMaintenanceSpec): the readout needs only the
+    * rollup, never the events. */
   def rateAnomaliesFromHourly(hourly: DataFrame): DataFrame =
     withTrail(hourly)
       .filter(col("trail_buckets") >= 12 &&
@@ -145,9 +145,7 @@ object EventAnalytics {
       .orderBy(col("event_type"), col("hr"))
 
   /** Hourly (event_type, hr, n) counts — the rollup grain shared by
-    * the monitoring readouts and the incremental maintenance
-    * (RollupMaintenance writes per-batch deltas at exactly this
-    * grain, so merged deltas == this by additivity of counts). */
+    * the monitoring readouts. */
   def hourlyCounts(ev: DataFrame): DataFrame =
     ev.withColumn("hr", expr("ms div 3600000"))
       .groupBy(col("event_type"), col("hr"))

@@ -117,8 +117,8 @@ object KmvSketch {
     * two sketches' union IS the union's KMV sketch — the defining
     * closure property), the intersection survivor count K∩, and the
     * intersection estimate K∩ · NDV(A∪B) div k. All column-space
-    * integer arithmetic — the q181 estimator chain, shared verbatim so
-    * the batch query and the streaming twin certify the SAME kernel.
+    * integer arithmetic — the q181 estimator chain, whose oracle
+    * replays it from the same 32-bit hashes.
     *
     * Scale shape: |keys|² sketch ROWS (≤ k longs each), never data —
     * the input frame is sketch-sized, so the self-join is bounded by

@@ -135,7 +135,7 @@ object NgramLm {
   /** Shuffle-free scorer: same integer stupid backoff, evaluated by a
     * fold over each row's token array against the broadcast model — a
     * pure map, so it runs on a STREAM in append mode unchanged (the
-    * streaming twin needs no state store: the model is static, the doc
+    * stream needs no state store: the model is static, the doc
     * is self-contained). This is also the lowest-latency batch path
     * when the model fits: zero shuffles, zero joins. */
   def scoreWithModel(docs: DataFrame, model: Model,

@@ -88,7 +88,7 @@ object QuantileSketch {
   }
 
   /** Lower-rank discrete quantiles from a compressed (sorted) sketch. */
-  private[graft] def quantilesOf(cs: Centroids, qs: Seq[Double]): Seq[Double] = {
+  private def quantilesOf(cs: Centroids, qs: Seq[Double]): Seq[Double] = {
     val total = cs.iterator.map(_._2).sum
     if (total == 0L) qs.map(_ => Double.NaN)
     else qs.map { q =>
@@ -153,42 +153,4 @@ object QuantileSketch {
   /** Aggregate column: array<double> of the requested quantiles. */
   def quantiles(value: Column, qs: Seq[Double], compression: Int): Column =
     udaf(new TDigest(compression, qs)).apply(value)
-
-  /** Variant that finishes with the compressed CENTROIDS instead of
-    * extracted quantiles — the mergeable-summary surface: a downstream
-    * consumer (StreamingQuantiles, a cross-partition rollup) merges
-    * many of these with [[merge]]+[[quantilesOf]]. */
-  final class TDigestSketch(compression: Int)
-      extends Aggregator[Double, Centroids, Centroids] {
-    require(compression > 0)
-    private val bufCap = math.max(64L, 4L * compression)
-    override def zero: Centroids = Vector.empty
-    override def reduce(b: Centroids, v: Double): Centroids = {
-      val nb = b :+ (v, 1L)
-      if (nb.length > bufCap) compress(nb, compression) else nb
-    }
-    override def merge(a: Centroids, b: Centroids): Centroids = {
-      val ab = a ++ b
-      if (ab.length > bufCap) compress(ab, compression) else ab
-    }
-    override def finish(r: Centroids): Centroids = compress(r, compression)
-    override def bufferEncoder: Encoder[Centroids] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Centroids] = ExpressionEncoder()
-  }
-
-  /** Aggregate column: array<struct<mean,weight>> compressed centroids. */
-  def sketch(value: Column, compression: Int): Column =
-    udaf(new TDigestSketch(compression)).apply(value)
-
-  /** Merge already-compressed sketches into one compressed digest —
-    * the reduce side of a sketch-per-batch design (StreamingQuantiles
-    * reads batch sketches into this). */
-  def mergeSketches(sketches: Seq[Centroids], compression: Int): Centroids =
-    compress(sketches.foldLeft(Vector.empty: Centroids)(_ ++ _), compression)
-
-  /** [[mergeSketches]] + quantile extraction. Exact whenever the
-    * exact-regime condition held for the TOTAL weight. */
-  def mergeAndQuantiles(sketches: Seq[Centroids], qs: Seq[Double],
-                        compression: Int): Seq[Double] =
-    quantilesOf(mergeSketches(sketches, compression), qs)
 }

@@ -5,8 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The quality-argmax retention policy (q238's rule), factored out so
-  * the batch query and the streaming twin
-  * ([[graft.streaming.StreamingWinnowRetention]]) run the SAME code:
+  * q238, q249 and ScaleBench's retention_policy leg run the SAME code:
   * within each duplicate component keep exactly the best copy —
   * highest quality score, ties broken to the LOWER doc_id — and keep
   * every unclustered doc.

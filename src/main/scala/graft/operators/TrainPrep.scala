@@ -169,8 +169,8 @@ object TrainPrep {
   }
 
   /** Doc-level posting rows (term, doc_id, tf_doc) — the inverted
-    * index's storage form; [[postings]] summarizes it, StreamingIndex
-    * writes it as per-batch deltas, [[indexLookupAnd]] reads it. */
+    * index's storage form; [[postings]] summarizes it,
+    * [[indexLookupAnd]] reads it. */
   def termDocs(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
@@ -262,22 +262,10 @@ object TrainPrep {
         TextAnalysis.tokenCount(col("text")).cast("long").as("dl")),
       terms, topK)
 
-  /** [[bm25Rank]] over a standing (term, doc_id, tf_doc) posting frame
-    * — a StreamingIndex merge-on-read or a bucketed posting table —
-    * with NO access to the documents: per-doc lengths are Σ tf_doc over
-    * the doc's terms (token counting and posting explosion agree
-    * exactly, including empty-token artifacts), so the entire search
-    * engine runs off the one stored index artifact. */
-  def bm25RankFromPostings(postings: DataFrame, terms: Seq[String],
-                           topK: Int): DataFrame =
-    bm25From(postings,
-      postings.groupBy(col("doc_id")).agg(sum(col("tf_doc")).as("dl")),
-      terms, topK)
-
   /** [[bm25Rank]] over a standing (postings, doc-lengths) PAIR — the
     * artifact path when the lengths side table already exists (e.g.
-    * SharedGrams.postingPair or writeSearchIndex's `_doclens`),
-    * skipping [[bm25RankFromPostings]]' postings-wide length agg. */
+    * SharedGrams.postingPair or writeSearchIndex's `_doclens`): no
+    * access to the documents and no postings-wide length agg. */
   def bm25RankFromPair(postings: DataFrame, lens: DataFrame,
                        terms: Seq[String], topK: Int): DataFrame =
     bm25From(postings, lens, terms, topK)
@@ -286,10 +274,10 @@ object TrainPrep {
     * (`<base>_postings`) plus the doc-length side table
     * (`<base>_doclens`, (doc_id, dl)) — the two artifacts
     * [[bm25RankFromTable]] reads. Splitting lengths into their own
-    * table is what lets a stored-index BM25 query skip the postings
-    * -wide length aggregation [[bm25RankFromPostings]] must run: the
-    * read cost becomes |terms| pruned buckets + one doc-keyed join
-    * against a table 1/avgdl the postings' size. */
+    * table is what lets a stored-index BM25 query skip a postings-wide
+    * length aggregation (Σ tf_doc per doc): the read cost becomes
+    * |terms| pruned buckets + one doc-keyed join against a table
+    * 1/avgdl the postings' size. */
   def writeSearchIndex(docs: DataFrame, baseName: String,
                        buckets: Int): Unit = {
     writePostingsBucketed(docs, s"${baseName}_postings", buckets)
@@ -557,10 +545,10 @@ object TrainPrep {
     * posting frame + doc-length table — the artifact path: four
     * consumers read the postings (feedback rank, feedback df, corpus
     * df, re-rank), so callers hand in a MATERIALIZED frame (a
-    * bucketed posting table, StreamingIndex merge-on-read, or a
-    * session-cached checkpoint as q148 does via SharedGrams) rather
-    * than this method checkpointing per invocation — repeated calls
-    * must not accumulate block-manager copies. */
+    * bucketed posting table or a session-cached checkpoint as q148
+    * does via SharedGrams) rather than this method checkpointing per
+    * invocation — repeated calls must not accumulate block-manager
+    * copies. */
   def prfExpandedRankFrom(post: DataFrame, lens: DataFrame,
                           terms: Seq[String], fbK: Int,
                           nExpand: Int, topK: Int): DataFrame = {
@@ -583,13 +571,10 @@ object TrainPrep {
       .limit(topK)
   }
 
-  def postings(docs: DataFrame): DataFrame = postingsFrom(termDocs(docs))
-
-  /** The index summary over any (term, doc_id, tf_doc) posting frame —
-    * shared with StreamingIndex's merge-on-read so the digest format
-    * lives in exactly one place. */
-  def postingsFrom(termDocFrame: DataFrame): DataFrame =
-    termDocFrame
+  /** The index summary: per term, df, total tf and an md5 digest of
+    * the sorted doc-id list. */
+  def postings(docs: DataFrame): DataFrame =
+    termDocs(docs)
       .groupBy(col("term"))
       .agg(count(lit(1)).as("df"),
         sum(col("tf_doc")).as("tf"),

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * materialized intermediate products array, and their presence breaks
   * the surrounding WholeStageCodegen span. This expression is one fused
   * primitive loop — no allocation, no virtual calls — and participates
-  * in codegen, so an ANN kernel (q34's prefilter, IVF assign/search,
-  * StreamingAnn's buckets via norms) stays inside one codegen stage.
+  * in codegen, so an ANN kernel (q34's prefilter, IVF assign/search)
+  * stays inside one codegen stage.
   *
   * Semantics are EXACTLY the HOF formulation's (DotDoubleExprSpec
   * asserts bit-identical results, same left-to-right fold order):

@@ -198,4 +198,55 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(frames.head.getSeq[Int](
       frames.head.fieldIndex("frame_idx")).forall(_ % 10 == 0))
   }
+
+  test("narrow band keys equal the groupBy band keys on real documents") {
+    val docs = Tables.documents(spark, sf())
+    val viaAgg = Dedup.lshBandKeysPlan(docs, "doc_id", "text", 5, 8, 2)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val viaNarrow = Dedup.lshBandKeysNarrow(docs, "doc_id", "text", 5, 8, 2)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(viaAgg.nonEmpty)
+    assert(viaNarrow == viaAgg)
+  }
+
+  // winnow fixture — 9-word docs with a controlled shared span: pairs
+  // (1,2) and (3,4) each share a full 7+-token span; doc 5 is
+  // unrelated; docs 100+ all open with the same 8-token boilerplate
+  // banner, whose fingerprints exceed Dedup.WinnowDfCap
+  private def words(seed: String, n: Int): String =
+    (0 until n).map(i => s"$seed$i").mkString(" ")
+
+  private val banner = words("legal", 9)
+  private val corpus: Seq[(Long, String)] =
+    Seq(
+      (1L, "alpha " + words("shareA", 8)),
+      (2L, "beta "  + words("shareA", 8)),
+      (3L, words("shareB", 8) + " gamma"),
+      (4L, words("shareB", 8) + " delta"),
+      (5L, words("lonely", 9))) ++
+      (100L to 120L).map(i => (i, banner + s" tail$i"))
+
+  test("narrow fingerprint path equals the batch window-min derivation") {
+    val docs = corpus.toDF("doc_id", "text")
+    val narrow = Dedup.winnowFingerprints(
+      docs, "doc_id", "text")
+      .select(col("docId"), col("fp")).distinct()
+      .as[(Long, Long)].collect().toSet
+    // batch derivation: explode grams with position, window ids,
+    // min per (doc, window), distinct — the SharedWinnow shape
+    val grams = docs.select(col("doc_id"),
+        graft.operators.TextAnalysis.wordNgrams(col("text"), 4).as("gs"))
+      .select(col("doc_id"), size(col("gs")).cast("long").as("ng"),
+        posexplode(col("gs")))
+      .filter(col("ng") >= 4)
+      .select(col("doc_id"), col("ng"), col("pos").cast("long").as("p"),
+        graft.operators.KmvSketch.hash32(col("col")).as("h"))
+    val batch = grams.select(col("doc_id"), col("h"),
+        explode(sequence(greatest(col("p") - 3, lit(0L)),
+          least(col("p"), col("ng") - 4))).as("j"))
+      .groupBy(col("doc_id"), col("j")).agg(min(col("h")).as("fp"))
+      .select(col("doc_id"), col("fp")).distinct()
+      .as[(Long, Long)].collect().toSet
+    assert(narrow == batch)
+  }
 }

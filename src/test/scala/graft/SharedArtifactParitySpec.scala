@@ -40,7 +40,7 @@ class SharedArtifactParitySpec extends SparkSpec {
   }
 
   test("SharedDecontam.winnowCandPairs == inline winnow screen") {
-    val DfCap = graft.streaming.StreamingWinnowScreen.DfCap
+    val DfCap = graft.operators.Dedup.WinnowDfCap
     val corpusFp = SharedWinnow.selected(spark, sf())
       .select(col("doc_id").as("train_id"), col("fp")).distinct()
     val benchFp = SharedWinnow

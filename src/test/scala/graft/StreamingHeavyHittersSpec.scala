@@ -1,62 +1,43 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.streaming.Trigger
+import graft.operators.HeavyHitters
 
-import graft.streaming.StreamingHeavyHitters
-
+/** The Misra–Gries [[HeavyHitters]] aggregator over a stream: the
+  * batch aggregator runs unchanged and Spark's streaming aggregation
+  * merges each micro-batch's summary into the state store. When the
+  * capacity covers every distinct item no counter evicts, so the
+  * merged summary is exact after every micro-batch. */
 class StreamingHeavyHittersSpec extends SparkSpec {
-
-  private def runBatches(capacity: Int,
-                         batches: Seq[Seq[String]]): (String, Map[String, Long]) = {
-    val d = Files.createTempDirectory("graft-shh")
-    val in = d.resolve("in"); Files.createDirectories(in)
-    val dir = d.resolve("sk").toString
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      Files.write(in.resolve(s"b$i.csv"),
-        (rows.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-      val items = spark.readStream.schema("item STRING").csv(in.toString)
-      val q = StreamingHeavyHitters.run(items, "item", capacity, dir,
-        d.resolve("ckpt").toString, _.trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-    }
-    (dir, StreamingHeavyHitters.summary(spark, dir, capacity))
-  }
+  import spark.implicits._
 
   test("exact when capacity >= distinct: merged batches equal global counts") {
+    implicit val sqlCtx = spark.sqlContext
     val batches = Seq(
       Seq.fill(30)("a") ++ Seq.fill(10)("b"),
       Seq.fill(5)("a") ++ Seq.fill(20)("c"),
       Seq.fill(1)("b") ++ Seq.fill(2)("d"))
-    val (dir, got) = runBatches(capacity = 16, batches)
-    assert(got == Map("a" -> 35L, "b" -> 11L, "c" -> 20L, "d" -> 2L))
-    // one sketch artifact per micro-batch (idempotence unit)
-    val batchDirs = new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("batch="))
-    assert(batchDirs >= 1)
-  }
-
-  test("under eviction the merged summary keeps the MG bound") {
-    val rnd = new scala.util.Random(23)
-    val batches = (0 until 4).map { _ =>
-      Seq.fill(2500) {
-        val r = rnd.nextInt(100)
-        if (r < 35) "heavy" else s"cold${rnd.nextInt(400)}"
+    val ms = MemoryStream[String]
+    val q = ms.toDF().toDF("item")
+      .agg(HeavyHitters.sketch(col("item"), 16).as("sk"))
+      .writeStream.format("memory").queryName("shh_exact")
+      .outputMode("complete").start()
+    try {
+      var arrived = Seq.empty[String]
+      for (b <- batches) {
+        ms.addData(b: _*)
+        q.processAllAvailable()
+        arrived ++= b
+        val got = spark.sql("SELECT sk FROM shh_exact").collect()
+          .head.getMap[String, Long](0).toMap
+        val exact = arrived.groupBy(identity)
+          .map { case (k, v) => k -> v.size.toLong }
+        assert(got == exact)
       }
-    }
-    val n = 10000L
-    val capacity = 16
-    val exact = batches.flatten.groupBy(identity)
-      .map { case (k, v) => k -> v.size.toLong }
-    val (_, sk) = runBatches(capacity, batches)
-    val bound = n / (capacity + 1)
-    assert(sk.contains("heavy"))
-    sk.foreach { case (k, est) =>
-      assert(est <= exact(k), s"$k overcounted")
-      assert(exact(k) - est <= bound, s"$k undercount beyond bound")
-    }
-    assert(sk.size <= capacity)
+      assert(arrived.groupBy(identity).map { case (k, v) => k -> v.size } ==
+        Map("a" -> 35, "b" -> 11, "c" -> 20, "d" -> 2))
+    } finally q.stop()
   }
 }

@@ -4,14 +4,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.KmvSketch
-import graft.streaming.StreamingKmv
 
-/** Streaming twin of the KMV SET-ALGEBRA estimators (q181's pair
-  * stage): after any prefix of micro-batches, pair estimates computed
-  * from the per-key stream STATE equal the batch estimates over
-  * everything arrived so far — the same
-  * [[KmvSketch.pairEstimates]] kernel on both sides, so the parity
-  * certifies the estimator chain itself, not a reimplementation. */
+/** The KMV SET-ALGEBRA estimators (q181's pair stage) over a stream:
+  * the per-key sketches are the batch [[KmvSketch.lowestK]] aggregator
+  * kept in Spark's streaming state, and after any prefix of
+  * micro-batches the [[KmvSketch.pairEstimates]] computed from that
+  * state equal the batch estimates over everything arrived so far —
+  * the same kernel on both sides, so the parity certifies the
+  * estimator chain itself. */
 class StreamingKmvAlgebraSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,33 +24,23 @@ class StreamingKmvAlgebraSpec extends SparkSpec {
       (11L to 30L).map(("b", _)) ++
       (1000L to 1019L).map(("c", _))
 
-  private def batchEstimates(rows: Seq[(String, Long)]): Set[(String, String, Long, Long, Long)] = {
-    val sk = rows.toDF("key", "h").groupBy(col("key"))
-      .agg(KmvSketch.lowestK(col("h"), k).as("kmv"))
+  private def estimates(sk: org.apache.spark.sql.DataFrame): Set[(String, String, Long, Long, Long)] =
     KmvSketch.pairEstimates(sk, "key", "kmv", k)
       .select(col("key_a"), col("key_b"), col("est_union"),
         col("k_int"), col("est_inter"))
       .as[(String, String, Long, Long, Long)].collect().toSet
-  }
 
-  /** Latest state per key from the update-mode memory sink: fill is
-    * nondecreasing and, at equal fill, values only get (pointwise)
-    * smaller — so the longest array, ties to the lexicographically
-    * smallest, is the newest. */
-  private def latestState(rows: Seq[(String, Seq[Long])]): Seq[(String, Seq[Long])] = {
-    import Ordering.Implicits._
-    rows.groupBy(_._1).map { case (key, rs) =>
-      key -> rs.map(_._2).minBy(v => (-v.length, v))
-    }.toSeq
-  }
+  private def batchEstimates(rows: Seq[(String, Long)]): Set[(String, String, Long, Long, Long)] =
+    estimates(rows.toDF("key", "h").groupBy(col("key"))
+      .agg(KmvSketch.lowestK(col("h"), k).as("kmv")))
 
   test("pair estimates from stream state equal batch after every slice") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(String, Long)]
-    val out = StreamingKmv.sketchArrays(
-      ms.toDF().toDF("key", "h"), "key", "h", k)
-    val q = out.writeStream.format("memory").queryName("kmv_alg")
-      .outputMode("update").start()
+    val q = ms.toDF().toDF("key", "h").groupBy(col("key"))
+      .agg(KmvSketch.lowestK(col("h"), k).as("kmv"))
+      .writeStream.format("memory").queryName("kmv_alg")
+      .outputMode("complete").start()
     try {
       // interleaved slices: evens then odds, so every source spans
       // both micro-batches and every sketch merges cross-batch
@@ -60,15 +50,12 @@ class StreamingKmvAlgebraSpec extends SparkSpec {
         ms.addData(slice: _*)
         q.processAllAvailable()
         arrived ++= slice
-        val state = latestState(
-          spark.sql("SELECT key, kmv FROM kmv_alg")
-            .as[(String, Seq[Long])].collect().toSeq)
-        val fromStream = KmvSketch.pairEstimates(
-          state.map { case (key, v) => (key, v.toArray) }
-            .toDF("key", "kmv"), "key", "kmv", k)
-          .select(col("key_a"), col("key_b"), col("est_union"),
-            col("k_int"), col("est_inter"))
-          .as[(String, String, Long, Long, Long)].collect().toSet
+        // re-materialize the sink snapshot so the pair self-join runs
+        // over plain rows, not the memory table
+        val state = spark.sql("SELECT key, kmv FROM kmv_alg")
+          .as[(String, Seq[Long])].collect().toSeq
+        val fromStream = estimates(
+          state.map { case (key, v) => (key, v.toArray) }.toDF("key", "kmv"))
         assert(fromStream == batchEstimates(arrived))
       }
       // the disjoint pairs must read as empty intersections

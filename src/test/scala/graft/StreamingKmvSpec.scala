@@ -1,18 +1,30 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.KmvSketch
-import graft.streaming.StreamingKmv
 
-/** Stream == batch for the KMV sketch: after any prefix of
-  * micro-batches, the per-key state (fill, k-th min, estimate) equals
-  * the batch sketch of everything arrived so far. */
+/** Stream == batch for the KMV sketch with no hand-written state: the
+  * batch [[KmvSketch.lowestK]] aggregator runs unchanged under a
+  * stream, and Spark's streaming aggregation keeps its buffer in the
+  * state store. KMV merges are lossless, so after any prefix of
+  * micro-batches the per-key (fill, k-th min, estimate) equals the
+  * batch sketch of everything arrived so far. */
 class StreamingKmvSpec extends SparkSpec {
   import spark.implicits._
 
   private val k = 8
+
+  // the per-key sketch readout — one definition, both modes
+  private def sketches(rows: DataFrame): DataFrame =
+    rows.groupBy(col("key"))
+      .agg(KmvSketch.lowestK(col("h"), k).as("kmv"))
+      .select(col("key"), size(col("kmv")).as("fill"),
+        when(size(col("kmv")) >= k, element_at(col("kmv"), k))
+          .otherwise(lit(-1L)).as("kth"),
+        KmvSketch.estimateNdv("kmv", k).as("est"))
 
   private def expected(rows: Seq[(String, Long)]): Map[String, (Int, Long, Long)] =
     rows.groupBy(_._1).map { case (key, rs) =>
@@ -24,34 +36,30 @@ class StreamingKmvSpec extends SparkSpec {
       key -> ((fill, kth, est))
     }
 
+  private def readout(table: String): Map[String, (Int, Long, Long)] =
+    spark.sql(s"SELECT key, fill, kth, est FROM $table")
+      .as[(String, Int, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+
   test("cross-batch sketch equals the batch sketch of the arrived prefix") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(String, Long)]
-    val out = StreamingKmv.sketches(
-      ms.toDF().toDF("key", "h"), "key", "h", k)
-    val q = out.writeStream.format("memory").queryName("kmv_out")
-      .outputMode("update").start()
+    val q = sketches(ms.toDF().toDF("key", "h"))
+      .writeStream.format("memory").queryName("kmv_out")
+      .outputMode("complete").start()
     try {
       // batch 1: source a gets 6 distinct (< k), b gets 12 (> k, dups)
       val b1 = (1L to 6L).map(("a", _)) ++
         (101L to 112L).map(("b", _)) ++ Seq(("b", 105L), ("b", 101L))
-      ms.addData(b1: _*)
-      q.processAllAvailable()
       // batch 2: a crosses k with smaller values; b gains one new min
       val b2 = (7L to 20L).map(("a", _)) ++ Seq(("b", 50L), ("a", 3L))
-      ms.addData(b2: _*)
-      q.processAllAvailable()
-
-      val rows = spark.sql("SELECT * FROM kmv_out")
-        .as[(String, Int, Long, Long)].collect()
-      // Update mode emits one row per touched key per batch; the
-      // latest state has the max fill, ties broken by the smaller kth
-      // (fill is nondecreasing, kth nonincreasing across batches)
-      val latest = rows.groupBy(_._1).map { case (key, rs) =>
-        val r = rs.maxBy(t => (t._2, -t._3))
-        key -> ((r._2, r._3, r._4))
+      var arrived = Seq.empty[(String, Long)]
+      for (slice <- Seq(b1, b2)) {
+        ms.addData(slice: _*)
+        q.processAllAvailable()
+        arrived ++= slice
+        assert(readout("kmv_out") == expected(arrived))
       }
-      assert(latest == expected(b1 ++ b2))
     } finally q.stop()
   }
 
@@ -59,22 +67,17 @@ class StreamingKmvSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val data = (1L to 300L).map(i => ("s" + (i % 3), i * 37 % 101))
     val ms = MemoryStream[(String, Long)]
-    val out = StreamingKmv.sketches(
-      ms.toDF().toDF("key", "h"), "key", "h", k)
-    val q = out.writeStream.format("memory").queryName("kmv_one")
-      .outputMode("update").start()
+    val q = sketches(ms.toDF().toDF("key", "h"))
+      .writeStream.format("memory").queryName("kmv_one")
+      .outputMode("complete").start()
     try {
       ms.addData(data: _*)
       q.processAllAvailable()
-      val got = spark.sql("SELECT key, fill, kth FROM kmv_one")
-        .as[(String, Int, Long)].collect().map(r => r._1 -> ((r._2, r._3)))
-        .toMap
-      val batch = data.toDF("key", "h").groupBy(col("key"))
-        .agg(KmvSketch.lowestK(col("h"), k).as("kmv"))
-        .as[(String, Array[Long])].collect().map { case (key, sk) =>
-          key -> ((sk.length, if (sk.length >= k) sk(k - 1) else -1L))
-        }.toMap
-      assert(got == batch)
+      val batch = sketches(data.toDF("key", "h"))
+        .as[(String, Int, Long, Long)].collect()
+        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      assert(batch.size == 3)
+      assert(readout("kmv_one") == batch)
     } finally q.stop()
   }
 }

@@ -1,91 +1,45 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.streaming.Trigger
+import graft.operators.QuantileSketch
 
-import graft.streaming.StreamingQuantiles
-
+/** The t-digest [[QuantileSketch]] aggregator over a stream: the batch
+  * aggregator runs unchanged, Spark's streaming aggregation merges each
+  * micro-batch's buffer into the state store, and in the exact regime
+  * (compression ≥ 2n for the whole stream) the merged sketch reads the
+  * same ranks as a global sort, whatever the slicing. */
 class StreamingQuantilesSpec extends SparkSpec {
+  import spark.implicits._
 
-  private def runBatches(compression: Int, qs: Seq[Double],
-                         batches: Seq[Seq[Double]]): Seq[Double] = {
-    val d = Files.createTempDirectory("graft-sq")
-    val in = d.resolve("in"); Files.createDirectories(in)
-    val dir = d.resolve("sk").toString
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      Files.write(in.resolve(s"b$i.csv"),
-        (rows.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-      val vals = spark.readStream.schema("v DOUBLE").csv(in.toString)
-      val q = StreamingQuantiles.run(vals, "v", compression, dir,
-        d.resolve("ckpt").toString, _.trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-    }
-    StreamingQuantiles.summary(spark, dir, qs, compression)
+  private def runSlices(compression: Int, qs: Seq[Double],
+                        slices: Seq[Seq[Double]], name: String): Seq[Double] = {
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[Double]
+    val q = ms.toDF().toDF("v")
+      .agg(QuantileSketch.quantiles(col("v"), qs, compression).as("q"))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("complete").start()
+    try {
+      slices.foreach { sl => ms.addData(sl: _*); q.processAllAvailable() }
+      spark.sql(s"SELECT q FROM $name").collect().head.getSeq[Double](0)
+    } finally q.stop()
   }
 
   test("exact regime: merged batch sketches equal global sorted ranks") {
     val rnd = new scala.util.Random(31)
     val all = (1 to 900).map(_ => (rnd.nextInt(100000) / 10.0))
-    val batches = all.grouped(300).toSeq
     val sorted = all.sorted.toIndexedSeq
     val qs = Seq(0.1, 0.5, 0.99)
     val want = qs.map(q =>
       sorted((math.floor(q * (sorted.length - 1)).toInt + 1) - 1))
     // compression >= 2n for the TOTAL stream: slicing cannot matter
-    val got = runBatches(compression = 2000, qs, batches)
+    val got = runSlices(compression = 2000, qs, all.grouped(300).toSeq,
+      "sq_300")
     assert(got == want)
     // and a different slicing of the same stream gives the same answer
-    val got2 = runBatches(2000, qs, all.grouped(450).toSeq)
+    val got2 = runSlices(2000, qs, all.grouped(450).toSeq, "sq_450")
     assert(got2 == want)
-  }
-
-  test("catalog histogram refresh from stream sketches is exact in the exact regime") {
-    val d = Files.createTempDirectory("graft-sq-cat")
-    val in = d.resolve("in"); Files.createDirectories(in)
-    val sk = d.resolve("sk").toString
-    val catalog = d.resolve("stats").toString
-    val rnd = new scala.util.Random(47)
-    val all = (1 to 800).map(_ => rnd.nextInt(100000) / 10.0)
-    all.grouped(200).zipWithIndex.foreach { case (rows, i) =>
-      Files.write(in.resolve(s"b$i.csv"),
-        (rows.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-      val vals = spark.readStream.schema("v DOUBLE").csv(in.toString)
-      val q = StreamingQuantiles.run(vals, "v", compression = 1600, sk,
-        d.resolve("ckpt").toString, _.trigger(Trigger.AvailableNow()))
-      q.awaitTermination()
-    }
-    StreamingQuantiles.refreshCatalogHistogram(spark, sk, catalog,
-      "events", "v", nBuckets = 4, compression = 1600)
-    val sorted = all.sorted.toIndexedSeq
-    val wantBounds = Seq(0.25, 0.5, 0.75).map(q =>
-      sorted(math.floor(q * (sorted.length - 1)).toInt))
-    // exact regime: boundaries equal the exact sorted ranks, per-bucket
-    // counts sum to the stream total, and the planner-facing reader
-    // returns ascending bounds
-    val hist = graft.operators.StatsCatalog
-      .readHistogram(spark, catalog, "events", "v")
-      .orderBy("bucket").collect()
-    assert(hist.map(_.getLong(1)).sum == all.size.toLong)
-    val bounds = graft.operators.StatsCatalog
-      .histogramBounds(spark, catalog, "events", "v")
-    assert(bounds == bounds.sorted)
-    // the first three buckets' vmax are exactly the quartile boundaries
-    assert(hist.take(3).map(_.getDouble(3)).toSeq == wantBounds)
-  }
-
-  test("approximate regime: rank error within 2% across batches") {
-    val rnd = new scala.util.Random(5)
-    val n = 12000
-    val all = (1 to n).map(_ => rnd.nextDouble())
-    val sorted = all.sorted.toIndexedSeq
-    val qs = Seq(0.05, 0.5, 0.95)
-    val got = runBatches(compression = 100, qs, all.grouped(4000).toSeq)
-    qs.zip(got).foreach { case (q, est) =>
-      val rank = sorted.count(_ <= est)
-      assert(math.abs(rank - q * n) <= 0.02 * n,
-        s"q=$q est=$est rank=$rank")
-    }
   }
 }
