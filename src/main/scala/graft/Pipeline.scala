@@ -50,8 +50,10 @@ object Pipeline {
     * on the append). The offset is written only after the append returns,
     * as the reference writes state only after a successful extraction
     * (bin/maillogsentinel.py:714-746): a crash in between re-reads the
-    * batch, i.e. at-least-once. Streaming mode (graft.streaming.LogStream)
-    * adds the idempotent sink. */
+    * batch, i.e. at-least-once. graft.streaming.LogStream has an
+    * idempotent sink but does not tail: Spark's file source reads each
+    * file once, when it first lists it, so lines appended to the live
+    * `mail.log` after that are never read (ROADMAP direction 3). */
   def runIncremental(spark: SparkSession, logFile: java.nio.file.Path,
                      stateFile: java.nio.file.Path, csvOut: String,
                      year: Int, geo: Option[GeoDims] = None,

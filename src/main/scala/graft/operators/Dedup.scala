@@ -103,11 +103,13 @@ object Dedup {
     withBases.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** (id, band-key) table PLAN: band key = md5(band_idx || sig_slice).
-    * Pure (no materialization) — consumers that reference the band table
-    * more than once (the candidate self-join's two legs, the star-edge
-    * hub agg + join) should materialize it first: see [[lshBandKeys]]
-    * or graft.SharedLsh, which caches one checkpointed copy per
+  /** (id, band-key) table PLAN: band key = md5(band_idx || sig_slice),
+    * over the explode→groupBy-min [[minhashSignatures]]. This is the
+    * spec reference of [[lshBandKeysNarrow]], the form every run's LSH
+    * uses. Pure (no materialization) — consumers that reference the band
+    * table more than once (the candidate self-join's two legs, the
+    * star-edge hub agg + join) should materialize it first, as
+    * graft.SharedLsh does: it caches one checkpointed narrow table per
     * (session, dataset) so q17/q40/q44-style consumers share a single
     * signature computation. At 100 TB this band table is the artifact
     * you'd persist to parquet between pipeline stages. */
@@ -158,15 +160,6 @@ object Dedup {
     }
     withFams.select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
   }
-
-  /** [[lshBandKeysPlan]] + eager `localCheckpoint()`. NOTE: constructing
-    * this frame runs a Spark job immediately and the checkpointed blocks
-    * live until the caller unpersists them (`frame.unpersist()`) or the
-    * session ends — library users who need lifecycle control should
-    * checkpoint [[lshBandKeysPlan]] themselves. */
-  def lshBandKeys(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int, k: Int, bands: Int): DataFrame =
-    lshBandKeysPlan(docs, idCol, textCol, n, k, bands).localCheckpoint()
 
   /** Candidate pairs (idA < idB) from a pre-built (id, bk) band table.
     *
@@ -235,13 +228,6 @@ object Dedup {
     coldPairs.union(hotPairs).distinct()
   }
 
-  /** LSH candidate pairs (idA < idB) from `bands` bands of `k/bands`
-    * signature rows each. Materializes its own band table (see
-    * [[lshBandKeys]] lifecycle note). */
-  def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int, k: Int, bands: Int): DataFrame =
-    lshCandidatePairsFrom(lshBandKeys(docs, idCol, textCol, n, k, bands), idCol)
-
   /** Incremental LSH candidate pairs — the continuous-crawl contract:
     * a NEW batch is deduped against an EXISTING corpus index without
     * re-reading any corpus text. `index` is the stored (id, bk) band
@@ -275,18 +261,14 @@ object Dedup {
     newVsOld.union(newVsNew).distinct()
   }
 
-  /** Star-reduced LSH edges for CLUSTERING: one edge (bucket-min, member)
-    * per band-bucket member instead of the full within-bucket clique.
+  /** Star-reduced LSH edges for CLUSTERING, from a pre-built,
+    * MATERIALIZED (id, bk) band table: one edge (bucket-min, member) per
+    * band-bucket member instead of the full within-bucket clique.
     * Connected components are identical to the clique pair graph (every
     * bucket member is reachable via the hub), but the edge count is
     * O(members) instead of O(members²) and the per-bucket diameter is 2 —
     * the shape that keeps a 100 TB near-dup clustering run linear when a
     * hot bucket holds thousands of near-identical docs. */
-  def lshStarEdges(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, k: Int, bands: Int): DataFrame =
-    lshStarEdgesFrom(lshBandKeys(docs, idCol, textCol, n, k, bands), idCol)
-
-  /** Star edges from a pre-built, MATERIALIZED (id, bk) band table. */
   def lshStarEdgesFrom(banded: DataFrame, idCol: String): DataFrame = {
     val hubs = banded.groupBy(col("bk")).agg(min(col(idCol)).as("hub"))
     banded.join(hubs, "bk")
@@ -294,15 +276,6 @@ object Dedup {
       .select(col("hub").as("doc_a"), col(idCol).as("doc_b"))
       .distinct()
   }
-
-  /** LSH near-dup clusters: star edges → connected components.
-    * Component ids equal those of `connectedComponents(lshCandidatePairs
-    * (...))` (same reachability), at a fraction of the join and
-    * propagation cost. */
-  def lshClusters(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int, k: Int, bands: Int): DataFrame =
-    connectedComponents(
-      lshStarEdges(docs, idCol, textCol, n, k, bands))
 
   /** Exact n-gram Jaccard similarity for all pairs within `docs`
     * (quadratic in candidate-set size — pre-filter the input, e.g. to LSH
@@ -439,7 +412,6 @@ object Dedup {
                                    bCol: String = "doc_b",
                                    maxIter: Int = 50): CcResult = {
     import org.apache.spark.storage.StorageLevel
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     val caller = pairs.sparkSession
     val loopSession = caller.newSession()
     loopSession.conf.set("spark.sql.shuffle.partitions", "8")
@@ -469,7 +441,6 @@ object Dedup {
     var converged = prev._1 == 0L
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       val nextDf = smallStar(largeStar(smallStar(largeStar(edges))))
       val nextRdd = nextDf.rdd.persist(StorageLevel.MEMORY_AND_DISK)
       val next = loopSession.createDataFrame(nextRdd, schema)
@@ -484,8 +455,6 @@ object Dedup {
       rdd = nextRdd
       edges = next
       i += 2 // two contraction rounds per loop pass
-      if (debug) System.err.println(
-        f"CC rounds $i: ${(System.nanoTime() - t0) / 1e9}%.2f s (cs=$cs)")
     }
     // converged state is one star per component: hub = component min,
     // every non-hub node has the hub as its (unique) neighbor

@@ -25,9 +25,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * batch: at-least-once, as the reference's state write after success.
   *
   * The tail is read on the driver and parallelized into a DataFrame, so
-  * everything downstream is distributed. The streaming mode is
-  * graft.streaming.LogStream, where the checkpoint plays the role of the
-  * state file (SURVEY §2.8).
+  * everything downstream is distributed. graft.streaming.LogStream
+  * reads the same logs through Spark's file source, whose checkpoint
+  * plays the role of the state file (SURVEY §2.8), but it is not a
+  * streaming form of this tail: the file source reads each file once,
+  * when it first lists it, so lines appended to the live `mail.log`
+  * after that are never read. One tail source for both modes is ROADMAP
+  * direction 3.
   */
 object LogSource {
 

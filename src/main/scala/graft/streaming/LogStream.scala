@@ -17,7 +17,11 @@ import graft.operators.Enrich
   *    (including crash recovery — strictly stronger than the reference's
   *    write-after-extract ordering, which can double-append on crash);
   *  - rotation is handled by filename tracking (rotated files are new
-  *    files, seen once);
+  *    files, seen once) — and so is the live file: Spark's file source
+  *    reads each file once, when it first lists it, so lines appended to
+  *    the live `mail.log` after that are never read. This is not a tail
+  *    of the live log; one tail source for batch and streaming is
+  *    ROADMAP direction 3;
   *  - the daily report window becomes a watermarked tumbling window that
   *    emits incrementally instead of rescanning the whole CSV
   *    (report.py:92-93's whole-file reread is the anti-pattern at scale).

@@ -43,7 +43,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString).toSeq).toMap
     assert(sig(0L) == sig(1L))
     assert(sig(0L) != sig(3L))
-    val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text", 5, 8, 2)
+    val pairs = Dedup.lshCandidatePairsFrom(
+        Dedup.lshBandKeysNarrow(docs, "doc_id", "text", 5, 8, 2), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
@@ -61,9 +62,11 @@ class DedupSimilaritySpec extends SparkSpec {
       (5L, "another disjoint document qqq www eee rrr"))
       .toDF("doc_id", "text")
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      Dedup.lshCandidatePairs(df, "doc_id", "text", 5, 8, 2)
+      Dedup.lshCandidatePairsFrom(
+          Dedup.lshBandKeysNarrow(df, "doc_id", "text", 5, 8, 2), "doc_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val index = Dedup.lshBandKeys(corpusDocs, "doc_id", "text", 5, 8, 2)
+    val index = Dedup.lshBandKeysPlan(corpusDocs, "doc_id", "text", 5, 8, 2)
+      .localCheckpoint()
     val batchBanded =
       Dedup.lshBandKeysNarrow(batchDocs, "doc_id", "text", 5, 8, 2)
     val delta = Dedup.incrementalCandidatePairs(index, batchBanded, "doc_id")
@@ -145,8 +148,9 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("connected components agree with GraphX on real LSH pairs") {
     import graft.operators.Dedup
-    val pairs = Dedup.lshCandidatePairs(
-      Tables.documents(spark, sf()), "doc_id", "text", 5, 8, 2).cache()
+    val pairs = Dedup.lshCandidatePairsFrom(Dedup.lshBandKeysNarrow(
+      Tables.documents(spark, sf()), "doc_id", "text", 5, 8, 2), "doc_id")
+      .cache()
     val mine = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gx = org.apache.spark.graphx.Graph

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Scratch main for timing/plan inspection of one or more queries.
   *
-  * `runMain graft.QDebug <name>[,<name>...] [sfDir]` — for each named
+  * `Test/runMain graft.QDebug <name>[,<name>...] [sfDir]` — for each named
   * query: the formatted physical plan, then 3 timed `count()` runs
   * (the bench's consume action). A comma-separated list amortizes the
   * 40-90 s sbt+JVM spin-up across queries AND keeps A/B comparisons

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     it impossible by construction, so the exposed hazard is only
   *     ever REAL similarity).
   *
-  * Usage: runMain graft.RepairCert <synthDir> <baseDocCount> [thr]
+  * Usage: Test/runMain graft.RepairCert <synthDir> <baseDocCount> [thr]
   * (base = 5000 for any make_sf1.py output of sf0.1; thr = an
   * edge-Jaccard threshold in ppm, or `auto` to run q252's
   * threshold-pick policy — smallest grid point whose max_sub has

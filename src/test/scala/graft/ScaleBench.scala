@@ -16,7 +16,7 @@ import graft.operators.{BloomDedup, Curation, Dedup}
   * derived pseudo-words; every 97th doc duplicates doc (id-97)'s text
   * exactly, every 89th appends one word to it (near-dup).
   *
-  *   sbt "runMain graft.ScaleBench [nDocs]"
+  *   sbt "Test/runMain graft.ScaleBench [nDocs]"
   *
   * `SPARK_GRAFT_SCALE_ONLY=stage1,stage2` restricts the run to the
   * named stages (skipped stages report -1) — how the 10M-doc decade
