@@ -53,7 +53,7 @@ object Pipeline {
     * batch, i.e. at-least-once. graft.streaming.LogStream has an
     * idempotent sink but does not tail: Spark's file source reads each
     * file once, when it first lists it, so lines appended to the live
-    * `mail.log` after that are never read (ROADMAP direction 3). */
+    * `mail.log` after that are never read (ROADMAP direction 4). */
   def runIncremental(spark: SparkSession, logFile: java.nio.file.Path,
                      stateFile: java.nio.file.Path, csvOut: String,
                      year: Int, geo: Option[GeoDims] = None,

@@ -361,8 +361,7 @@ object QueriesBeyond {
       FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
       ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""))
 
-  /** Multimodal plumbing, metadata leg: opaque binary payload size +
-    * content hash (see operators/Multimodal.scala for the decode path). */
+  /** Binary payload metadata: opaque payload size + content hash. */
   private val q28 = Q(
     "q28_binary_meta",
     (s, dir) =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Declarative data-validation audit — the constraint gate a training
   * pipeline runs before ingesting a new drop (and the ANALYZE
-  * companion to ColumnProfile/StatsCatalog): a set of typed checks
+  * companion to ColumnProfile): a set of typed checks
   * compiles into ONE aggregate pass over the frame, reporting
   * violation counts per check instead of failing row-by-row.
   *

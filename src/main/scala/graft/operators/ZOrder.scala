@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * on ALL of them (the Delta/Iceberg `OPTIMIZE ZORDER BY` idea; Morton
   * 1966). Reference analog: none — MailLogSentinel appends CSV in
   * arrival order (maillogsentinel.py) and every ad-hoc grep scans the
-  * whole file; this is the beyond-reference layout operator for the
-  * corpus-curation write path (CorpusSink).
+  * whole file; this is the beyond-reference layout operator for
+  * corpus writes.
   *
   * The key is built from plain shift/mask column expressions, so it
   * stays inside whole-stage codegen and constant-folds per row — no

@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * streaming form of this tail: the file source reads each file once,
   * when it first lists it, so lines appended to the live `mail.log`
   * after that are never read. One tail source for both modes is ROADMAP
-  * direction 3.
+  * direction 4.
   */
 object LogSource {
 

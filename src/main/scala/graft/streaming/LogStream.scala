@@ -21,7 +21,7 @@ import graft.operators.Enrich
   *    reads each file once, when it first lists it, so lines appended to
   *    the live `mail.log` after that are never read. This is not a tail
   *    of the live log; one tail source for batch and streaming is
-  *    ROADMAP direction 3;
+  *    ROADMAP direction 4;
   *  - the daily report window becomes a watermarked tumbling window that
   *    emits incrementally instead of rescanning the whole CSV
   *    (report.py:92-93's whole-file reread is the anti-pattern at scale).
@@ -33,7 +33,7 @@ object LogStream {
     * enrichment are stateless/broadcast, so they lift to streaming
     * unchanged. The geo tables are built when this is called, so a
     * streaming query keeps the tables it started with and does not see a
-    * dim refresh (until the one live-tail source of ROADMAP direction 3
+    * dim refresh (until the one live-tail source of ROADMAP direction 4
     * replaces this path); a batch run in the same session that sees a
     * refresh destroys the old tables under it. */
   def events(spark: SparkSession, logDir: String, year: Int,

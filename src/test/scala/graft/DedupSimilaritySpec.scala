@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, Similarity}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -186,21 +186,6 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b(0L) == b(1L))
     assert(b(0L) != b(2L))
-  }
-
-  test("multimodal: stub feature extraction is deterministic; metadata prunes payload") {
-    val media = Multimodal.fromDocuments(
-      Seq((7L, "some media payload bytes")).toDF("doc_id", "text"))
-    val f1 = Multimodal.extractFeatures(media, Multimodal.StubCodec, 8).collect()
-    val f2 = Multimodal.extractFeatures(media, Multimodal.StubCodec, 8).collect()
-    assert(f1.head.feature.toSeq == f2.head.feature.toSeq)
-    assert(f1.head.n_bytes == 24L)
-    val meta = Multimodal.metadata(media)
-    assert(!meta.columns.contains("payload"))
-    val frames = Multimodal.sampleFrameIndexes(
-      media.withColumn("kind", lit("video")), 10).collect()
-    assert(frames.head.getSeq[Int](
-      frames.head.fieldIndex("frame_idx")).forall(_ % 10 == 0))
   }
 
   test("narrow band keys equal the groupBy band keys on real documents") {

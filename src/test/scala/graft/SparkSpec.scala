@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicReference
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.util.ShutdownHookManager
+import org.apache.spark.SparkConf
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,36 +29,59 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
-    s.sparkContext.addSparkListener(StopWitness)
+    val witness = new StopWitness(localDirs(s.sparkContext.getConf))
+    s.sparkContext.addSparkListener(witness)
+    // Hadoop runs lower priorities later; Spark's own hooks sit at 40.
+    ShutdownHookManager.get().addShutdownHook(
+      () => System.err.println(witness.report), 1)
     s
   }
 
-  /** Diagnosis for a shared context that stops mid-run: when the
-    * application ends, print to stderr the stack of each thread inside
-    * `SparkContext.stop`, heap used/max and the usage of `/dev/shm`
-    * (where `spark.local.dir` keeps checkpoint blocks). A clean run prints
-    * it once, from the JVM's shutdown hook. */
-  private object StopWitness extends SparkListener {
+  /** The dirs Spark keeps blocks in: `SPARK_LOCAL_DIRS` wins over
+    * `spark.local.dir`, as in Spark's `Utils.getConfiguredLocalDirs`. */
+  private def localDirs(conf: SparkConf): Seq[String] =
+    sys.env.get("SPARK_LOCAL_DIRS").orElse(conf.getOption("spark.local.dir"))
+      .getOrElse(System.getProperty("java.io.tmpdir")).split(",").toSeq
+
+  /** Diagnosis for a shared context that stops mid-run. When the
+    * application ends and no thread inside `SparkContext.stop` is the JVM's
+    * shutdown hook, the first such stop is kept as one compact block: the
+    * stopping thread, its frames from `stop` outwards, heap used/max and the
+    * usage of each local dir's file system. The block is printed then and
+    * again after Spark's shutdown hooks, so it ends the forked JVM's stderr;
+    * without such a stop, one line says so. */
+  private final class StopWitness(dirs: Seq[String]) extends SparkListener {
+    private val first = new AtomicReference[String]()
+
+    def report: String = Option(first.get).getOrElse(
+      "[SparkSpec] no SparkContext stop before JVM exit except the shutdown hook's")
+
     override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
-      val mb = 1L << 20
-      val stops = Thread.getAllStackTraces.asScala.collect {
-        case (t, st) if st.exists(e => e.getMethodName == "stop" &&
-            e.getClassName == "org.apache.spark.SparkContext") =>
-          s"  thread ${t.getName}\n" + st.map("    at " + _).mkString("\n")
+      def isStop(e: StackTraceElement) = e.getMethodName == "stop" &&
+        e.getClassName == "org.apache.spark.SparkContext"
+      val stoppers = Thread.getAllStackTraces.asScala.toSeq.collect {
+        case (t, st) if st.exists(isStop) => t.getName -> st
       }
+      if (stoppers.exists(_._1.startsWith("shutdown-hook-"))) return
+      val (thread, st) = stoppers.headOption
+        .getOrElse("(not found)" -> Array.empty[StackTraceElement])
+      val mb = 1L << 20
       val rt = Runtime.getRuntime
-      val shm = Paths.get("/dev/shm")
-      val shmUse =
-        if (!Files.exists(shm)) "absent"
+      val disks = dirs.map { d =>
+        val p = Paths.get(d)
+        if (!Files.exists(p)) s"$d absent"
         else {
-          val fs = Files.getFileStore(shm)
-          s"${(fs.getTotalSpace - fs.getUsableSpace) / mb}/${fs.getTotalSpace / mb} MB"
+          val fs = Files.getFileStore(p)
+          s"$d ${(fs.getTotalSpace - fs.getUsableSpace) / mb}/${fs.getTotalSpace / mb} MB"
         }
-      System.err.println(
-        s"[SparkSpec] application end at ${end.time}; " +
-          s"heap ${(rt.totalMemory - rt.freeMemory) / mb}/${rt.maxMemory / mb} MB; " +
-          s"/dev/shm $shmUse; SparkContext.stop callers:\n" +
-          (if (stops.isEmpty) "  (none found)" else stops.mkString("\n")))
+      }
+      val frames = st.drop(st.lastIndexWhere(isStop)).take(10).map(e =>
+        s"\n  ${e.getClassName}.${e.getMethodName}(${e.getFileName}:${e.getLineNumber})")
+      val block = (s"[SparkSpec] first SparkContext stop outside the shutdown " +
+        s"hook at ${end.time}: thread $thread; " +
+        s"heap ${(rt.totalMemory - rt.freeMemory) / mb}/${rt.maxMemory / mb} MB; " +
+        s"local dirs ${disks.mkString(", ")}" + frames.mkString).take(1200)
+      if (first.compareAndSet(null, block)) System.err.println(block)
     }
   }
 }

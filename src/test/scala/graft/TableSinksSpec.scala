@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.Anonymize
-import graft.sources.{DimRefresh, EventsTable, MailSink}
+import graft.sources.DimRefresh
 
 class TableSinksSpec extends SparkSpec {
   import spark.implicits._
@@ -17,40 +15,6 @@ class TableSinksSpec extends SparkSpec {
     ("mx1", "02/03/2025 10:00", "2.2.2.2", "b", "null", "OK", "DE", "2", "y"),
     ("mx2", "03/03/2025 10:00", "3.3.3.3", "c", "null", "OK", "FR", "3", "z"))
     .toDF(graft.sources.EventsCsv.schema.fieldNames: _*)
-
-  test("partitioned events table: layout + pruning in the physical plan") {
-    val d = Files.createTempDirectory("graft-table")
-    EventsTable.append(events3days, d.toString)
-    // partition dirs exist
-    assert(Files.exists(d.resolve("day=2025-03-01")))
-    assert(Files.exists(d.resolve("day=2025-03-03")))
-    val slice = EventsTable.day(spark, d.toString, "2025-03-02")
-    assert(slice.count() == 1)
-    assert(slice.collect().head.getAs[String]("user") == "b")
-    // the day filter must be a partition filter, not a data filter
-    val plan = slice.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"))
-    assert(plan.contains("day#") || plan.contains("isnotnull(day"))
-  }
-
-  test("compaction rewrites one day to few files, other days untouched") {
-    val d = Files.createTempDirectory("graft-compact")
-    // simulate many micro-batch appends on one day
-    (1 to 6).foreach { _ => EventsTable.append(events3days, d.toString) }
-    def filesIn(day: String): Seq[java.nio.file.Path] = {
-      val p = d.resolve(s"day=$day")
-      Files.list(p).iterator().asScala.toSeq
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-    }
-    assert(filesIn("2025-03-02").size == 6)
-    val otherBefore = filesIn("2025-03-01").map(_.getFileName.toString).toSet
-    EventsTable.compactDay(spark, d.toString, "2025-03-02")
-    assert(filesIn("2025-03-02").size == 1)
-    assert(filesIn("2025-03-01").map(_.getFileName.toString).toSet == otherBefore)
-    // data intact
-    assert(EventsTable.day(spark, d.toString, "2025-03-02").count() == 6)
-    assert(EventsTable.read(spark, d.toString).count() == 18)
-  }
 
   test("parse rejects channel tags dropped lines with reasons") {
     import graft.operators.LogParse
@@ -65,53 +29,6 @@ class TableSinksSpec extends SparkSpec {
     assert(rej("no_syslog_prefix") == "total garbage")
     assert(LogParse.parse(lines, 2025).count() +
       LogParse.rejects(lines).count() == 3)
-  }
-
-  test("bucketed tables: co-located join plans with zero shuffles") {
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val a = (1 to 1000).map(i => (i.toLong % 50, s"a$i")).toDF("k", "va")
-    val b = (1 to 800).map(i => (i.toLong % 50, s"b$i")).toDF("k", "vb")
-    EventsTable.writeBucketed(a, "graft_bucketed_a", 4, Seq("k"))
-    EventsTable.writeBucketed(b, "graft_bucketed_b", 4, Seq("k"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("graft_bucketed_a")
-        .join(spark.table("graft_bucketed_b"), "k")
-      val shuffles = joined.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
-      }
-      assert(shuffles.isEmpty,
-        s"expected shuffle-free bucketed join, got ${shuffles.size} exchanges")
-      assert(joined.count() == (1 to 1000).map(i => i % 50)
-        .groupBy(identity).map { case (k, as) =>
-          as.size.toLong * (1 to 800).count(_ % 50 == k)
-        }.sum)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_a")
-      spark.sql("DROP TABLE IF EXISTS graft_bucketed_b")
-    }
-  }
-
-  test("mail sink: guard rails + file transport atomic write") {
-    val mem = new MailSink.MemoryTransport
-    assert(MailSink.deliver(mem,
-      MailSink.Message("a@x", "", "s", "b")).isLeft)
-    assert(mem.sent.isEmpty)
-    assert(MailSink.deliver(mem,
-      MailSink.Message("a@x", "ops@x", "daily report", "body")).isRight)
-    assert(mem.sent.map(_.subject).toSeq == Seq("daily report"))
-
-    val d = Files.createTempDirectory("graft-mail")
-    val ft = new MailSink.FileTransport(d)
-    MailSink.deliver(ft, MailSink.Message("a@x", "ops@x", "r", "hello",
-      Some("events.csv"), Some("x;y".getBytes)))
-    val files = Files.list(d).iterator()
-    assert(files.hasNext)
-    val content = new String(Files.readAllBytes(files.next()))
-    assert(content.contains("Subject: r"))
-    assert(content.contains("attachment: events.csv (3 bytes)"))
   }
 
   test("dim refresh: atomic replace; failed fetch leaves current file") {
