@@ -567,7 +567,7 @@ object QueriesMore {
       FROM events GROUP BY 1 ORDER BY day"""))
 
   /** IVF coarse-quantizer assignment census — the oracle check for the
-    * ANN scale path (operators/Similarity.ivfAssign shape): stride-picked
+    * ANN scale path (operators/Similarity.assignL2Decimal): stride-picked
     * centroids (deterministic init), exact-decimal L2 argmin per vector,
     * then per-cell count + min member. Covers the one scale component
     * that previously had spec-only coverage. */

@@ -383,7 +383,7 @@ object SharedGrams {
 
   /** The positional posting table (term, doc_id, pos) — the second
     * stored index artifact next to [[postingPair]] (TrainPrep's
-    * writePositionsBucketed form): q112's phrase intersection and
+    * termPositions rows): q112's phrase intersection and
     * q121's proximity bonus both read it; each invocation otherwise
     * re-tokenized the corpus with positions. */
   def termPositions(s: SparkSession, dir: String): DataFrame =

@@ -52,40 +52,4 @@ object BloomDedup {
     GraftSqlBridge.column(BloomFilterMightContain(
       Literal(filterBytes, BinaryType),
       new XxHash64(Seq(GraftSqlBridge.expression(key)))))
-
-  /** Sharded build for histories beyond one filter's FP budget
-    * (numBits caps at the conf'd 64 MB): keys route to
-    * `pmod(xxhash64(key), shards)` and each shard builds its own filter
-    * in ONE grouped aggregation pass. Shards with no data come back
-    * None (their probe is constant-false). Total filter capacity scales
-    * linearly with `shards` while each stays under the cap. */
-  def buildShardedFilter(corpus: DataFrame, key: Column, shards: Int,
-                         expectedItemsPerShard: Long,
-                         numBitsPerShard: Long): IndexedSeq[Option[Array[Byte]]] = {
-    import org.apache.spark.sql.functions.{col, pmod, xxhash64, lit}
-    val keyed = corpus.select(key.as("_k"),
-      pmod(xxhash64(key), lit(shards)).as("_s"))
-    val hash = new XxHash64(Seq(GraftSqlBridge.expression(col("_k"))))
-    val agg = new BloomFilterAggregate(
-      hash, Literal(expectedItemsPerShard), Literal(numBitsPerShard))
-    val built = keyed.groupBy(col("_s"))
-      .agg(GraftSqlBridge.column(agg.toAggregateExpression()).as("bf"))
-      .collect()
-      .map(r => r.getAs[Long]("_s").toInt -> r.getAs[Array[Byte]]("bf"))
-      .toMap
-    (0 until shards).map(built.get)
-  }
-
-  /** Probe against a sharded filter set: routes by the SAME shard hash
-    * used at build time, then might-contains within the shard. Same
-    * guarantee as [[mightContain]]: no false negatives, confirm FPs. */
-  def mightContainSharded(filters: IndexedSeq[Option[Array[Byte]]],
-                          key: Column): Column = {
-    import org.apache.spark.sql.functions.{lit, pmod, when, xxhash64}
-    val s = pmod(xxhash64(key), lit(filters.size))
-    filters.zipWithIndex.foldLeft(lit(false)) { case (els, (fOpt, i)) =>
-      fOpt.map(bytes =>
-        when(s === i, mightContain(bytes, key)).otherwise(els)).getOrElse(els)
-    }
-  }
 }

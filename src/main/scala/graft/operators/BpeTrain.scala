@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    partially-aggregated groupBy (pair space ≤ total symbols); the
   *    single best pair comes to the driver (one row — the merge table
   *    IS driver-sized index metadata, the same boundary as
-  *    [[Similarity.kmeansCentroids]]); the merge itself is a NARROW
+  *    [[KMeansCluster]]'s centroid collect); the merge itself is a NARROW
   *    per-row fold. `localCheckpoint` cuts the plan ladder per round.
   *
   * Cross-engine determinism (q97): symbol sequences are space-joined

@@ -81,8 +81,7 @@ object Dsir {
       .select(col("doc_id"), col("n_grams"), col("avg_weight_fp"))
 
   /** The weight table as a driver-side map — a ≤ 256-entry broadcast
-    * model (the NgramLm.broadcastModel pattern: a deliberate
-    * bounded-model collect, never data-sized). */
+    * model: a deliberate bounded-model collect, never data-sized. */
   def weightsMap(weights: DataFrame): Map[String, Long] =
     weights.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 

@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distributed Lloyd's k-means over an embedding column — the centroid
-  * trainer the IVF/IVF-PQ machinery (Similarity, ProductQuant) consumes
-  * as an input. Shape per iteration:
+/** Distributed Lloyd's k-means over an embedding column — the one
+  * centroid trainer (the IVF/PQ oracle queries pick data vectors by
+  * stride instead, see SharedIvf). Shape per iteration:
   *   1. ASSIGN — broadcast the k×dims centroid table as literal arrays
   *      into a codegen'd expression; each row computes k squared
   *      distances and takes the argmin. Narrow, no shuffle.
@@ -215,72 +215,4 @@ object KMeansCluster {
   private def normalized(emb: DataFrame): DataFrame =
     emb.select(col("id").cast("long").as("id"),
       col("v").cast("array<double>").as("v"))
-
-  /** Deterministic k-means‖-style seeding (Bahmani et al. 2012,
-    * "Scalable K-Means++", arXiv:1203.6402) with the sampling
-    * derandomized — the LARGE-k init, where [[farthestFirstInit]]'s k
-    * sequential scans would mean k round trips:
-    *
-    *  1. `rounds` oversampling rounds, each adding the TOP-`l` points
-    *     by min distance to the candidate set (the deterministic
-    *     analog of sampling ∝ d²) — one [[assignFrom]] scan +
-    *     TakeOrdered(l) per round, so R·scans total for ~R·l
-    *     candidates instead of k scans;
-    *  2. candidates are weighted by their assigned population (one
-    *     more scan), then reduced to k driver-side by WEIGHTED
-    *     farthest-first (argmax weight·minDist, ties to the earliest
-    *     candidate) over the ≤ 1+R·l candidate vectors — bounded
-    *     model-state work, BigInt products so no overflow at any
-    *     corpus size.
-    *
-    * Returns centroids keyed 0..k−1 in selection order. */
-  def oversampledInit(emb: DataFrame, k: Int, rounds: Int,
-                      l: Int): Seq[(Int, Seq[Double])] = {
-    require(k >= 1 && rounds >= 1 && l >= 1)
-    require(1 + rounds * l >= k,
-      s"candidate pool 1 + $rounds*$l < k=$k — raise rounds or l")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val e = normalized(emb).localCheckpoint()
-    val first = e.orderBy(col("id")).limit(1).collect()
-    require(first.nonEmpty, "need a non-empty embedding frame")
-    var cands = Vector(first(0).getSeq[Double](1).toSeq)
-    def candsDf = cands.zipWithIndex
-      .map { case (v, i) => (i, v) }.toDF("cid", "cv")
-    for (_ <- 1 to rounds) {
-      val far = assignFrom(e, candsDf)
-        .orderBy(col("dist").desc, col("id").asc).limit(l).collect()
-      cands = cands ++ far.map(_.getSeq[Double](1).toSeq)
-    }
-    // population weights under the final candidate set
-    val pops = assignFrom(e, candsDf)
-      .groupBy(col("cluster")).agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val weighted = cands.zipWithIndex.map { case (v, i) =>
-      (v, pops.getOrElse(i, 0L)) }
-    weightedFarthestFirst(weighted, k).zipWithIndex.map(_.swap)
-  }
-
-  /** Weighted farthest-first reduction over a BOUNDED candidate list
-    * (driver-side model state): start from the heaviest candidate
-    * (ties to the earliest), then repeatedly take the argmax of
-    * weight · min-fixed-point-distance to the chosen set. */
-  private[graft] def weightedFarthestFirst(
-      cands: Seq[(Seq[Double], Long)], k: Int): Seq[Seq[Double]] = {
-    if (cands.isEmpty) return Nil
-    def dist(a: Seq[Double], b: Seq[Double]): Long =
-      a.zip(b).map { case (x, y) =>
-        math.floor((x - y) * (x - y) * 1e10).toLong }.sum
-    val firstIdx = cands.zipWithIndex
-      .minBy { case ((_, w), i) => (-w, i) }._2
-    var chosen = Vector(cands(firstIdx)._1)
-    var remaining = cands.zipWithIndex.filter(_._2 != firstIdx)
-    while (chosen.size < k && remaining.nonEmpty) {
-      val next = remaining.minBy { case ((v, w), i) =>
-        (-(BigInt(w) * BigInt(chosen.map(dist(v, _)).min)), BigInt(i)) }
-      chosen = chosen :+ next._1._1
-      remaining = remaining.filter(_._2 != next._2)
-    }
-    chosen
-  }
 }

@@ -29,9 +29,7 @@ import org.apache.spark.sql.functions._
   * token — partial aggregation absorbs the heavy hitters before the
   * shuffle; scoring joins the transition stream to the two count tables
   * by token key (equi-joins; the model tables are vocabulary-sized).
-  * Nothing is quadratic; the one `collect` in this file is
-  * [[broadcastModel]]'s — a deliberate vocabulary-sized broadcast
-  * boundary (the BloomDedup pattern), not a corpus collect.
+  * Nothing is quadratic, and no table is collected.
   */
 object NgramLm {
 
@@ -101,70 +99,5 @@ object NgramLm {
     scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_transitions"),
         expr("sum(s) div count(1)").as("lm_score"))
-  }
-
-  /** A driver-held model for the shuffle-free scoring path: unigram and
-    * bigram count maps plus the token total. The collect here is a
-    * vocabulary-sized broadcast boundary — at 100 TB, `minCount` is the
-    * knob that cuts the long tail to keep the maps in memory (rare
-    * bigrams carry ~no backoff mass; cutting them only reroutes their
-    * transitions through the backoff branch). minCount = 1 keeps
-    * everything and makes [[scoreWithModel]] bit-identical to
-    * [[score]]. Bigrams whose prefix was cut are dropped with it (the
-    * seen-branch needs the prefix denominator). */
-  final case class Model(ug: Map[String, Long],
-                         bg: Map[(String, String), Long],
-                         total: Long)
-
-  def broadcastModel(modelDocs: DataFrame, minCount: Long = 1L,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): Model = {
-    val toks = tokenStream(modelDocs, idCol, textCol)
-    val total = toks.count()
-    val ug = unigrams(toks).filter(col("c1") >= minCount)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val bg = bigrams(modelDocs, idCol, textCol)
-      .filter(col("c2") >= minCount)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .filter { case ((p, _), _) => ug.contains(p) }
-      .toMap
-    Model(ug, bg, total)
-  }
-
-  /** Shuffle-free scorer: same integer stupid backoff, evaluated by a
-    * fold over each row's token array against the broadcast model — a
-    * pure map, so it runs on a STREAM in append mode unchanged (the
-    * stream needs no state store: the model is static, the doc
-    * is self-contained). This is also the lowest-latency batch path
-    * when the model fits: zero shuffles, zero joins. */
-  def scoreWithModel(docs: DataFrame, model: Model,
-                     idCol: String = "doc_id",
-                     textCol: String = "text"): DataFrame = {
-    val m = docs.sparkSession.sparkContext.broadcast(model)
-    val scoreU = udf { ts: Seq[String] =>
-      if (ts == null || ts.length < 2) None
-      else {
-        val mm = m.value
-        var sum = 0L
-        var n = 0L
-        var i = 1
-        while (i < ts.length) {
-          val prev = ts(i - 1); val w = ts(i)
-          val s = mm.bg.get((prev, w)) match {
-            case Some(c2) => Scale * c2 / mm.ug(prev)
-            case None =>
-              BackoffScale * mm.ug.getOrElse(w, 0L) / math.max(1L, mm.total)
-          }
-          sum += s; n += 1; i += 1
-        }
-        Some((n, sum / n))
-      }
-    }
-    docs.select(col(idCol).as("doc_id"),
-        scoreU(split(col(textCol), " ")).as("r"))
-      .filter(col("r").isNotNull)
-      .select(col("doc_id"), col("r._1").as("n_transitions"),
-        col("r._2").as("lm_score"))
   }
 }

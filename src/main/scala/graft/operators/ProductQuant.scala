@@ -19,18 +19,18 @@ import org.apache.spark.sql.functions._
   * never a touch of the original floats.
   *
   * Scale shape:
-  *  - [[encode]]: broadcast the codebook (m·ksub·dsub doubles — KBs),
-  *    explode each vector into its m subvectors (narrow), argmin per
-  *    (id, subspace) via partial-aggregated min_by — the only shuffle
-  *    carries N·m pre-reduced rows, not the N·m·ksub candidate space.
-  *  - [[adcSearch]]: distance tables are built query-side (queries ×
-  *    codebook, both tiny) and broadcast as flat arrays; the scan of
-  *    the code table is a narrow map (one O(m) array-lookup fold per
-  *    row) feeding a per-query top-k — the IVF composition (restrict
-  *    to probed cells first, q47/q48) multiplies on top.
+  *  - [[encodeDecimal]]: broadcast the codebook (m·ksub·dsub doubles —
+  *    KBs), explode each vector into its m subvectors (narrow), argmin
+  *    per (id, subspace) by a window over the subspace's ksub
+  *    candidates.
+  *  - [[adcSearchDecimal]]: distance tables are built query-side
+  *    (queries × codebook, both tiny) and broadcast; the long-form code
+  *    table joins them on (j, code) and sums per candidate, feeding a
+  *    per-query top-k — the IVF composition ([[ivfPqSearchDecimal]]:
+  *    restrict to probed cells first, q47/q48) multiplies on top.
   *
   * Cross-engine determinism (the oracle story, mirrored from
-  * [[Similarity]]): the `*Decimal` twins expand subspace L2 as exact
+  * [[Similarity]]): the kernels expand subspace L2 as exact
   * DECIMAL(18,16) sums of float-origin products — (x−c) is exact in
   * double when both are float-valued (≤ 25 mantissa bits), its square
   * rounds identically under IEEE in any engine, and decimal addition
@@ -51,18 +51,11 @@ object ProductQuant {
       lit(0).cast("decimal(18,16)"),
       (acc, x) => (acc + x).cast("decimal(18,16)"))
 
-  /** Codegen-friendly double twin via the fused dot kernel:
-    * d² = |a|² + |b|² − 2·a·b (norms are precomputed by callers so the
-    * per-candidate cost is ONE fused dot product). */
-  private def dot(a: Column, b: Column): Column =
-    graft.plans.DotDoubleExpr.dotDouble(a, b)
-
   /** (j, code, cv) codebook from stride-picked data vectors: subspace
     * j's centroid `code` is the j-th slice of vector id = code·stride.
-    * Deterministic init for tests/oracles — production codebooks come
-    * from per-subspace [[Similarity.kmeansCentroids]] over the slices
-    * (trained means are arbitrary doubles and fall outside the
-    * float-exactness oracle argument, same caveat as IVF). */
+    * Deterministic init: trained codebooks would be arbitrary doubles
+    * and fall outside the float-exactness oracle argument (same caveat
+    * as IVF's stride centroids). */
   def codebookByStride(vectors: DataFrame, m: Int, dsub: Int,
                        stride: Int): DataFrame =
     vectors.filter(col("id") % stride === 0)
@@ -80,26 +73,9 @@ object ProductQuant {
       .select(col("id"), col("j"),
         slice(col("v"), col("j") * dsub + 1, lit(dsub)).as("sv"))
 
-  /** Production encode: (id, j, code) per subspace, double kernel,
-    * argmin as a partial-aggregated min_by over struct(d², code) —
-    * map-side combine reduces the N·m·ksub candidate rows to N·m
-    * BEFORE the one shuffle. Ties break to the smallest code (the
-    * struct's second field), matching the decimal twin. */
-  def encode(vectors: DataFrame, codebook: DataFrame, m: Int,
-             dsub: Int): DataFrame = {
-    val cb = broadcast(codebook.withColumn("_cc", dot(col("cv"), col("cv"))))
-    subvectors(vectors, m, dsub)
-      .withColumn("_xx", dot(col("sv"), col("sv")))
-      .join(cb, Seq("j"))
-      .withColumn("_d2",
-        col("_xx") + col("_cc") - lit(2.0) * dot(col("sv"), col("cv")))
-      .groupBy(col("id"), col("j"))
-      .agg(min(struct(col("_d2"), col("code"))).getField("code").as("code"))
-  }
-
-  /** Oracle twin of [[encode]]: exact-decimal subspace distances,
-    * ROW_NUMBER argmin (ties by code) — bit-identical to a DuckDB
-    * mirror of the same expansion (q92). */
+  /** PQ encode: (id, j, code) per subspace — exact-decimal subspace
+    * distances, ROW_NUMBER argmin (ties by code) — bit-identical to a
+    * DuckDB mirror of the same expansion (q92). */
   def encodeDecimal(vectors: DataFrame, codebook: DataFrame, m: Int,
                     dsub: Int): DataFrame = {
     val cb = broadcast(codebook)
@@ -113,62 +89,9 @@ object ProductQuant {
       .select(col("id"), col("j"), col("code"))
   }
 
-  /** Long-form codes (id, j, code) → wide (id, codes: array<int>)
-    * ordered by subspace — the at-rest layout ADC scans. */
-  def codesWide(encoded: DataFrame): DataFrame =
-    encoded.groupBy(col("id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("j"), col("code")))),
-        s => s.getField("code").cast("int")).as("codes"))
-
-  /** Production ADC search: top-k nearest codes rows per query row.
-    * `codes` needs (id, codes:array<int>); `queries` (id, v). Distance
-    * tables (one flat array of m·ksub doubles per query, entry
-    * j·ksub+code) are built against the broadcast codebook and then
-    * broadcast themselves; the corpus-side cost is a narrow O(m)
-    * array-lookup fold per row. Returns (q_id, vec_id, adc, rnk). */
-  /** Per-query flat ADC distance table (q_id, tq): entry j·ksub+code
-    * holds the double d² of the query's j-th subvector against
-    * codebook centroid (j, code) — queries × codebook only, both tiny. */
-  private def distanceTables(codebook: DataFrame, queries: DataFrame,
-                             m: Int, dsub: Int, ksub: Int): DataFrame = {
-    val cb = broadcast(codebook.withColumn("_cc", dot(col("cv"), col("cv"))))
-    subvectors(queries, m, dsub)
-      .withColumn("_xx", dot(col("sv"), col("sv")))
-      .join(cb, Seq("j"))
-      .withColumn("_d2",
-        col("_xx") + col("_cc") - lit(2.0) * dot(col("sv"), col("cv")))
-      .groupBy(col("id"))
-      .agg(transform(
-        array_sort(collect_list(
-          struct((col("j") * ksub + col("code")).as("pos"), col("_d2")))),
-        s => s.getField("_d2")).as("tq"))
-      .select(col("id").as("q_id"), col("tq"))
-  }
-
-  /** ADC total of a `codes` array against a `tq` flat table: m array
-    * lookups, one fold — the per-candidate search kernel. */
-  private def adcFromTable(m: Int, ksub: Int): Column = aggregate(
-    zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-      (c, j) => element_at(col("tq"), j * ksub + c + 1)),
-    lit(0.0), (acc, x) => acc + x)
-
-  def adcSearch(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
-                k: Int, m: Int, dsub: Int, ksub: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    codes.select(col("id").as("vec_id"), col("codes"))
-      .crossJoin(broadcast(distanceTables(codebook, queries, m, dsub, ksub)))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("adc", adcFromTable(m, ksub))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("vec_id"), col("adc"), col("rnk"))
-  }
-
-  /** Oracle twin of [[adcSearch]] (q93): decimal distance tables joined
-    * to long-form codes on (j, code), per-pair ADC as an exact decimal
-    * SUM (associative ⇒ partitioning-invariant). Candidates are RANKED
+  /** ADC search (q93): decimal distance tables joined to long-form
+    * codes on (j, code), per-pair ADC as an exact decimal SUM
+    * (associative ⇒ partitioning-invariant). Candidates are RANKED
     * ON THE DECIMAL — the double cast of a 16-digit decimal rounds
     * differently across engines (the q20/q48 divergence), so ranks are
     * the cross-engine-comparable output; `adc` (the double) is exposed
@@ -202,10 +125,8 @@ object ProductQuant {
     * table partitioned by cid (codes co-located with their cell), so
     * the `vec_id` join below disappears into the storage layout; here
     * they are separate frames because q47/q48 and q92/q93 share them.
-    * Production refine step: re-rank the top shortlist with exact
-    * distances over the floats ([[Similarity.cosineTopK]] on the
-    * shortlist) — standard IVF-PQ practice, omitted from the oracle
-    * query to keep it a pure function of the codes. */
+    * The output is a pure function of the codes: no exact re-rank over
+    * the floats follows. */
   def ivfPqSearchDecimal(encoded: DataFrame, assignment: DataFrame,
                          centroids: DataFrame, queries: DataFrame,
                          codebook: DataFrame, nprobe: Int, k: Int,
@@ -241,70 +162,5 @@ object ProductQuant {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("vec_id"), col("rnk"))
-  }
-
-  /** Production IVF-PQ search — [[ivfPqSearchDecimal]]'s structure on
-    * the codegen'd double kernel: L2-probed cells (broadcast
-    * centroids) pick candidates via the inverted-file equi-join, then
-    * production ADC (broadcast per-query distance tables, m lookups
-    * per candidate) ranks them from codes alone. The one
-    * corpus-proportional join (candidates → codes on vec_id)
-    * disappears at scale when codes are stored WITH the assignment,
-    * partitioned by cid (see [[ivfPqSearchDecimal]]'s layout note).
-    * Returns (q_id, vec_id, adc, rnk). */
-  def ivfPqSearch(codes: DataFrame, assignment: DataFrame,
-                  centroids: DataFrame, queries: DataFrame,
-                  codebook: DataFrame, nprobe: Int, k: Int,
-                  m: Int, dsub: Int, ksub: Int): DataFrame = {
-    val c = broadcast(centroids.select(col("cid"), col("cv"),
-      dot(col("cv"), col("cv")).as("_cc")))
-    val probed = queries
-      .select(col("id").as("q_id"), col("v").as("qv"),
-        dot(col("v"), col("v")).as("_qq"))
-      .crossJoin(c)
-      .withColumn("_d2", col("_qq") + col("_cc") -
-        lit(2.0) * dot(col("qv"), col("cv")))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("_d2").asc, col("cid"))))
-      .filter(col("_rk") <= nprobe)
-      .select(col("q_id"), col("cid"))
-    val cand = assignment.join(broadcast(probed), Seq("cid"))
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("id").as("vec_id"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    cand
-      .join(codes.select(col("id").as("vec_id"), col("codes")),
-        Seq("vec_id"))
-      .join(broadcast(distanceTables(codebook, queries, m, dsub, ksub)),
-        Seq("q_id"))
-      .withColumn("adc", adcFromTable(m, ksub))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("vec_id"), col("adc"), col("rnk"))
-  }
-
-  /** Exact re-rank of an ADC shortlist — the standard IVF-PQ refine
-    * step: join the shortlist (q_id, vec_id) back to the FLOAT
-    * vectors and rank by exact cosine. Only shortlist·queries vectors
-    * are ever touched, never the corpus; with shortlist size k' a few
-    * multiples of k, this recovers most of the recall ADC loses to
-    * quantization at negligible cost. Returns (q_id, vec_id, cosim,
-    * rnk ≤ k). */
-  def refine(shortlist: DataFrame, vectors: DataFrame,
-             queries: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosim").desc, col("vec_id"))
-    shortlist.select(col("q_id"), col("vec_id"))
-      .join(vectors.select(col("id").as("vec_id"), col("v").as("dv")),
-        Seq("vec_id"))
-      .join(broadcast(queries.select(col("id").as("q_id"),
-        col("v").as("qv"))), Seq("q_id"))
-      .withColumn("cosim", dot(col("dv"), col("qv")) /
-        (sqrt(dot(col("dv"), col("dv"))) * sqrt(dot(col("qv"), col("qv")))))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("vec_id"), col("cosim"), col("rnk"))
   }
 }

@@ -9,12 +9,12 @@ import org.apache.spark.sql.functions._
   *
   *  - [[dotDouble]]: plain double fold — the fast path (narrow, codegen'd,
   *    no shuffle). Result depends on accumulation order only in the last
-  *    ulp; use for production ANN.
+  *    ulp; use it to prefilter candidates the decimal kernel confirms.
   *  - [[dotDecimal]]: products cast to DECIMAL(38,18) before the fold.
   *    Decimal addition is exact and associative, so the result is
   *    bit-identical regardless of partitioning/order and across engines —
   *    this is what makes cosine top-k oracle-checkable. ~3-4x the cost of
-  *    the double fold; correctness harness only.
+  *    the double fold; the similarity queries rank and confirm by it.
   *
   * Brute-force top-k: probe × broadcast(queries) cross join, per-query
   * row_number window. The probe side never shuffles until the final
@@ -297,48 +297,6 @@ object Similarity {
   // IVF (inverted-file) ANN: coarse quantizer + probed cell search
   // ------------------------------------------------------------------
 
-  /** Assign each vector to its nearest centroid (cell id). Centroids are
-    * broadcast; assignment is a narrow pass (argmax dot against each
-    * centroid — centroids should be L2-normalized so dot ≡ cosine).
-    * Vectors land in an inverted file keyed by cell: at 100 TB this is
-    * the partitioning key, so probing touches only the probed cells'
-    * partitions. */
-  def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = broadcast(centroids.select(col("cid"), col("cv")))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("_score").desc, col("cid"))
-    vectors.crossJoin(c)
-      .withColumn("_score", dotDouble(col("v"), col("cv")))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") === 1)
-      .select(col("id"), col("v"), col("cid"))
-  }
-
-  /** Search: for each query, rank centroids, keep `nprobe` cells, then
-    * exact top-k only within those cells (equi-join on cid — no cross
-    * join against the corpus). */
-  def ivfSearch(index: DataFrame, centroids: DataFrame, queries: DataFrame,
-                nprobe: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = broadcast(centroids.select(col("cid"), col("cv")))
-    val probed = queries.crossJoin(c)
-      .withColumn("_score", dotDouble(col("v"), col("cv")))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("_score").desc, col("cid"))))
-      .filter(col("_rk") <= nprobe)
-      .select(col("id").as("q_id"), col("v").as("qv"), col("cid"))
-    val cand = index.join(broadcast(probed), Seq("cid"))
-      .filter(col("id") =!= col("q_id"))
-    val scored = cand.select(col("q_id"), col("id").as("vec_id"),
-      (dotDouble(col("v"), col("qv")) /
-        (sqrt(dotDouble(col("v"), col("v"))) *
-          sqrt(dotDouble(col("qv"), col("qv"))))).as("cosim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosim").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
-
   /** Recall@k of an ANN candidate set against the exact answer — the
     * index-quality gauge every approximate variant (sign-LSH,
     * multi-probe, IVF, IVF-PQ) gets judged by before it replaces brute
@@ -357,47 +315,19 @@ object Similarity {
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
       .withColumn("recall_permille", expr(s"(1000 * hits) div $k"))
 
-  /** Deterministic centroid pick for tests/bootstrap: every stride-th
-    * vector by id (distributed filter, no global window). */
-  def ivfCentroidsByStride(vectors: DataFrame, stride: Int): DataFrame =
-    vectors.filter(col("id") % stride === 0)
-      .select((col("id") / stride).cast("long").as("cid"), col("v").as("cv"))
-
-  /** Lloyd's k-means over the embedding column, DataFrame-only: assign
-    * (broadcast centroids, narrow) → recompute means (posexplode +
-    * groupBy(cid, dim) — one shuffle of 64×N small rows per iteration)
-    * → repeat. Deterministic given deterministic init (use
-    * [[ivfCentroidsByStride]]); empty cells keep their previous
-    * centroid. This is the trainer for [[ivfAssign]]'s coarse
-    * quantizer; iterations are bounded, not convergence-tested —
-    * coarse quantizers don't need exact convergence. */
-  /** min-L2 assignment (k-means' metric — ivfAssign's max-dot is the
-    * cosine/ANN path and only matches for normalized centroids). */
-  private def assignL2(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val c = broadcast(centroids.select(col("cid"), col("cv")))
-    val d2 = aggregate(
-      zip_with(col("v"), col("cv"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
-    val w = Window.partitionBy(col("id")).orderBy(col("_d2").asc, col("cid"))
-    vectors.crossJoin(c)
-      .withColumn("_d2", d2)
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") === 1)
-      .select(col("id"), col("v"), col("cid"))
-  }
-
-  /** Oracle-deterministic L2 cell assignment (the correctness-harness
-    * twin of [[assignL2]], same broadcast-centroids shape): d² expanded
-    * as |x|² − 2·x·c + |c|² with every dot product in the exact decimal
-    * kernel. Each product multiplies two float-origin doubles (exact in
-    * 48 mantissa bits), so the per-term decimal casts agree across
-    * engines and decimal addition is associative — the resulting argmin
-    * (ties by cid) is bit-identical to any other engine computing the
-    * same expansion, making IVF assignment DuckDB-checkable. Requires
-    * centroids that are themselves data vectors (e.g.
-    * [[ivfCentroidsByStride]]); trained means are arbitrary doubles and
-    * fall outside the float-exactness argument. */
+  /** IVF coarse-quantizer cell assignment: each vector's nearest
+    * centroid by L2 against the broadcast (cid, cv) table — a narrow
+    * pass; the vectors land in an inverted file keyed by cell. d² is
+    * expanded as |x|² − 2·x·c + |c|² with every dot product in the
+    * exact decimal kernel. Each product multiplies two float-origin
+    * doubles (exact in 48 mantissa bits), so the per-term decimal casts
+    * agree across engines and decimal addition is associative — the
+    * resulting argmin (ties by cid) is bit-identical to any other
+    * engine computing the same expansion, making IVF assignment
+    * DuckDB-checkable (q47). Requires centroids that are themselves
+    * data vectors (e.g. SharedIvf's stride pick); trained means are
+    * arbitrary doubles and fall outside the float-exactness argument.
+    * Emits (id, cid). */
   def assignL2Decimal(vectors: DataFrame, centroids: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val c = broadcast(centroids.select(col("cid"), col("cv"),
@@ -413,12 +343,14 @@ object Similarity {
       .select(col("id"), col("cid"))
   }
 
-  /** Oracle-deterministic IVF search (the correctness-harness twin of
-    * [[ivfSearch]], same probed-cell equi-join shape): centroid ranking
-    * and candidate ranking both use the exact-decimal L2 expansion of
-    * [[assignL2Decimal]], ties by cid / vec_id. `index` must carry
-    * (id, v, cid); emits (q_id, vec_id, rnk) — ranks only, since raw
-    * distances would cross the double→decimal divergence noted on q20. */
+  /** IVF probed-cell search: for each query, rank the centroids, keep
+    * the `nprobe` nearest cells, then exact top-k only within those
+    * cells (equi-join on cid — the corpus is never cross-joined).
+    * Centroid ranking and candidate ranking both use the exact-decimal
+    * L2 expansion of [[assignL2Decimal]], ties by cid / vec_id.
+    * `index` must carry (id, v, cid); emits (q_id, vec_id, rnk) — ranks
+    * only, since raw distances would cross the double→decimal
+    * divergence noted on q20. */
   def ivfSearchDecimal(index: DataFrame, centroids: DataFrame,
                        queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -443,35 +375,5 @@ object Similarity {
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("vec_id"), col("rnk"))
-  }
-
-  def kmeansCentroids(vectors: DataFrame, init: DataFrame,
-                      iters: Int): DataFrame = {
-    var cents = init.localCheckpoint()
-    for (_ <- 1 to iters) {
-      val assigned = assignL2(vectors, cents)
-      val means = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("d", "x")))
-        .groupBy(col("cid"), col("d"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
-          s => s.getField("m")).as("cv"))
-      // keep previous centroid for any cell that lost all members
-      val kept = cents.join(means.select(col("cid")), Seq("cid"), "left_anti")
-      cents = means.union(kept).localCheckpoint()
-    }
-    cents
-  }
-
-  /** Mean within-cluster squared distance — the quantity k-means
-    * minimizes; used by specs to check training is actually working. */
-  def inertia(vectors: DataFrame, cents: DataFrame): Double = {
-    val assigned = assignL2(vectors, cents)
-      .join(broadcast(cents), Seq("cid"))
-    val sq = assigned.select(
-      aggregate(zip_with(col("v"), col("cv"), (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x).as("d2"))
-    sq.agg(avg(col("d2"))).collect().head.getDouble(0)
   }
 }

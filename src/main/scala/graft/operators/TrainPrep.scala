@@ -96,8 +96,9 @@ object TrainPrep {
     phraseFrom(termPositions(docs), phrase)
 
   /** The positional intersection over any (term, doc_id, pos) posting
-    * frame — shared by the from-text and from-table phrase searches so
-    * the adjacency semantics live in exactly one place. */
+    * frame — shared by [[phraseSearch]] and the artifact path (q112
+    * over SharedGrams.termPositions) so the adjacency semantics live
+    * in exactly one place. */
   def phraseFrom(p: DataFrame, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "need at least one phrase term")
     val first = p.filter(col("term") === phrase.head)
@@ -111,40 +112,6 @@ object TrainPrep {
       }
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_occurrences"))
-  }
-
-  /** Persist the POSITIONAL posting table bucketed + sorted by term —
-    * the storage form [[phraseSearchFromTable]] reads: each phrase
-    * term's equality filter prunes to ONE bucket, so a phrase query
-    * touches |phrase| buckets of the index and never the corpus text.
-    * Catalog required (bucketing needs saveAsTable). */
-  def writePositionsBucketed(docs: DataFrame, tableName: String,
-                             buckets: Int): Unit =
-    termPositions(docs).write
-      .bucketBy(buckets, "term")
-      .sortBy("term", "doc_id", "pos")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet")
-      .saveAsTable(tableName)
-
-  /** [[phraseSearch]] against a persisted positional table written by
-    * [[writePositionsBucketed]] — reads postings, never documents. Same
-    * child-session bucketed-scan pinning as [[indexLookupAndFromTable]]. */
-  def phraseSearchFromTable(spark: org.apache.spark.sql.SparkSession,
-                            tableName: String,
-                            phrase: Seq[String]): DataFrame =
-    phraseFrom(bucketedReader(spark).table(tableName), phrase)
-
-  /** A child session (shared catalog, isolated conf) with
-    * autoBucketedScan pinned off, so index lookups keep BUCKET PRUNING
-    * even when the downstream join key isn't the bucket column, without
-    * leaking the conf into the caller's other bucketed workloads. */
-  private def bucketedReader(
-      spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    val reader = spark.newSession()
-    reader.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    reader
   }
 
   /** Sliding-window character chunking with overlap — the RAG/context
@@ -189,45 +156,21 @@ object TrainPrep {
     lookupAnd(termDocs(docs), terms)
 
   /** [[indexLookupAnd]] over a standing posting frame (the artifact
-    * path — a session-cached checkpoint or a bucketed table read). */
+    * path — a session-cached checkpoint). */
   def indexLookupAndFromPostings(post: DataFrame,
                                  terms: Seq[String]): DataFrame =
     lookupAnd(post, terms)
 
   /** The conjunctive intersection over any (term, doc_id, tf_doc)
-    * posting frame — shared by the from-text and from-table lookups so
-    * the tf naming / join semantics can't drift between them. */
+    * posting frame — shared by the from-text and standing-frame
+    * lookups so the tf naming / join semantics can't drift between
+    * them. */
   private def lookupAnd(p: DataFrame, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     terms.zipWithIndex.map { case (t, i) =>
       p.filter(col("term") === t)
         .select(col("doc_id"), col("tf_doc").as(s"tf_$i"))
     }.reduce(_.join(_, "doc_id"))
-  }
-
-  /** Persist the posting table bucketed + sorted by term — the storage
-    * form the index read path wants: a term-equality lookup prunes to
-    * ONE bucket (SelectedBucketsCount in the scan), and the per-term
-    * aggregation needs no Exchange because rows are already grouped.
-    * At 100 TB this is the difference between scanning the corpus per
-    * query and touching one bucket of one table. Catalog required
-    * (bucketing needs saveAsTable). */
-  def writePostingsBucketed(docs: DataFrame, tableName: String,
-                            buckets: Int): Unit =
-    termDocs(docs).write
-      .bucketBy(buckets, "term")
-      .sortBy("term", "doc_id")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet")
-      .saveAsTable(tableName)
-
-  /** [[indexLookupAnd]] against a persisted posting table written by
-    * [[writePostingsBucketed]] — reads postings, never documents. */
-  def indexLookupAndFromTable(spark: org.apache.spark.sql.SparkSession,
-                              tableName: String,
-                              terms: Seq[String]): DataFrame = {
-    require(terms.nonEmpty, "need at least one query term")
-    lookupAnd(bucketedReader(spark).table(tableName), terms)
   }
 
   /** BM25 ranked retrieval (disjunctive) over the inverted index —
@@ -263,40 +206,12 @@ object TrainPrep {
       terms, topK)
 
   /** [[bm25Rank]] over a standing (postings, doc-lengths) PAIR — the
-    * artifact path when the lengths side table already exists (e.g.
-    * SharedGrams.postingPair or writeSearchIndex's `_doclens`): no
-    * access to the documents and no postings-wide length agg. */
+    * artifact path when the lengths side table already exists
+    * (SharedGrams.postingPair): no access to the documents and no
+    * postings-wide length agg. */
   def bm25RankFromPair(postings: DataFrame, lens: DataFrame,
                        terms: Seq[String], topK: Int): DataFrame =
     bm25From(postings, lens, terms, topK)
-
-  /** Persist the full search index: the term-bucketed posting table
-    * (`<base>_postings`) plus the doc-length side table
-    * (`<base>_doclens`, (doc_id, dl)) — the two artifacts
-    * [[bm25RankFromTable]] reads. Splitting lengths into their own
-    * table is what lets a stored-index BM25 query skip a postings-wide
-    * length aggregation (Σ tf_doc per doc): the read cost becomes
-    * |terms| pruned buckets + one doc-keyed join against a table
-    * 1/avgdl the postings' size. */
-  def writeSearchIndex(docs: DataFrame, baseName: String,
-                       buckets: Int): Unit = {
-    writePostingsBucketed(docs, s"${baseName}_postings", buckets)
-    docs.select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).cast("long").as("dl"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(s"${baseName}_doclens")
-  }
-
-  /** [[bm25Rank]] against a persisted [[writeSearchIndex]] pair —
-    * touches |terms| buckets of the posting table and the doc-length
-    * table; never the corpus, never a postings-wide aggregation. */
-  def bm25RankFromTable(spark: org.apache.spark.sql.SparkSession,
-                        baseName: String, terms: Seq[String],
-                        topK: Int): DataFrame = {
-    val reader = bucketedReader(spark)
-    bm25From(reader.table(s"${baseName}_postings"),
-      reader.table(s"${baseName}_doclens"), terms, topK)
-  }
 
   private def bm25From(postings: DataFrame, lens: DataFrame,
                        terms: Seq[String], topK: Int): DataFrame =

@@ -26,25 +26,6 @@ class BloomDedupSpec extends SparkSpec {
     assert(viaBloom == exact)
   }
 
-  test("sharded build/probe: no false negatives, empty shards probe false") {
-    val corpus = (1 to 3000).map(i => s"doc-$i").toDF("k")
-    val fs = BloomDedup.buildShardedFilter(corpus, col("k"),
-      shards = 8, expectedItemsPerShard = 1000L, numBitsPerShard = 16384L)
-    assert(fs.size == 8)
-    // every corpus key routes to its shard and passes
-    assert(corpus.filter(!BloomDedup.mightContainSharded(fs, col("k")))
-      .count() == 0)
-    // sharded bloom -> exact confirm == plain semi join
-    val probe = (2500 to 3500).map(i => s"doc-$i").toDF("k")
-    val viaBloom = probe.filter(BloomDedup.mightContainSharded(fs, col("k")))
-      .join(corpus, Seq("k"), "left_semi").count()
-    assert(viaBloom == probe.join(corpus, Seq("k"), "left_semi").count())
-    // an all-empty filter set probes constant-false
-    val empty = IndexedSeq.fill(4)(Option.empty[Array[Byte]])
-    assert(probe.filter(BloomDedup.mightContainSharded(empty, col("k")))
-      .count() == 0)
-  }
-
   test("probe stays codegen'd in the filter (narrow, no shuffle)") {
     val hist = (1 to 100).map(i => s"k$i").toDF("k")
     val bf = BloomDedup.buildFilter(hist, col("k"), 1000L, 8192L)

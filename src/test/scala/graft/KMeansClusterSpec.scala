@@ -90,35 +90,6 @@ class KMeansClusterSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("oversampledInit covers separated blobs and seeds a clean assignment") {
-    // three tight blobs; k=3 via 2 rounds of l=2 oversampling
-    val rows = (0L to 29L).map { i =>
-      val c = i % 3
-      (i, Seq(c * 10.0 + 0.01 * i, c * 5.0))
-    }
-    val init = KMeansCluster.oversampledInit(emb(rows), k = 3,
-      rounds = 2, l = 2)
-    assert(init.size == 3 && init.map(_._1) == Seq(0, 1, 2))
-    // the three seeds must land in three different blobs
-    val blobs = init.map(_._2.head / 10.0).map(math.round).toSet
-    assert(blobs.size == 3, s"seeds collapsed: $init")
-    val got = KMeansCluster.lloydFrom(emb(rows), init, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getInt(2)).toSeq
-    // every blob maps to exactly one cluster id
-    val byBlob = got.groupBy(_._1 % 3).values.map(_.map(_._2).distinct)
-    assert(byBlob.forall(_.size == 1))
-  }
-
-  test("weightedFarthestFirst: heaviest first, then weight x distance argmax") {
-    val cands = Seq(
-      (Seq(0.0), 10L),   // heaviest -> chosen first
-      (Seq(1.0), 1L),    // near, light
-      (Seq(100.0), 2L),  // far, mid-weight: dist 1e14*... wins round 2
-      (Seq(50.0), 1L))
-    val got = KMeansCluster.weightedFarthestFirst(cands, 3)
-    assert(got == Seq(Seq(0.0), Seq(100.0), Seq(50.0)))
-  }
-
   test("lloyd separates two obvious blobs and reaches zero movement") {
     val blobA = (0L to 9L).map(i => i -> Seq(0.01 * i, 0.0))
     val blobB = (10L to 19L).map(i => i -> Seq(5.0 + 0.01 * i, 4.0))

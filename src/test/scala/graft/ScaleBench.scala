@@ -493,14 +493,15 @@ object ScaleBench {
         graft.operators.Similarity
           .cosineNearDupPairs(emb, bits, threshold = 0.8).count()
       }
-      // PQ compression of the same embeddings: production double
-      // kernel, 4 subspaces of 4 dims, 64-centroid stride codebook
+      // PQ compression of the same embeddings: the exact-decimal
+      // kernel q92 runs, 4 subspaces of 4 dims, 64-centroid stride
+      // codebook
       val pqCodes = timedL("pq_encode") {
         val vecs = emb.select(col("vec_id").as("id"),
           col("embedding").cast("array<double>").as("v"))
         val cb = graft.operators.ProductQuant.codebookByStride(
           vecs, m = 4, dsub = 4, stride = math.max(1L, nEmb / 64).toInt)
-        graft.operators.ProductQuant.encode(vecs, cb, m = 4, dsub = 4)
+        graft.operators.ProductQuant.encodeDecimal(vecs, cb, m = 4, dsub = 4)
           .count()
       }
       // BPE on the synthetic corpus's word-frequency table (vocab is

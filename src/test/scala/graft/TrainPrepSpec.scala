@@ -110,22 +110,6 @@ class TrainPrepSpec extends SparkSpec {
     assert(TrainPrep.tokenBalancedShards(empty, 4).count() == 0L)
   }
 
-  test("bucketed posting table: term lookup prunes to one bucket, same rows") {
-    val docs = Tables.documents(spark, sf())
-    TrainPrep.writePostingsBucketed(docs, "graft_test_postings", 8)
-    try {
-      val fromTable = TrainPrep.indexLookupAndFromTable(
-        spark, "graft_test_postings", Seq("query", "scan"))
-      val direct = TrainPrep.indexLookupAnd(docs, Seq("query", "scan"))
-      assert(fromTable.collect().map(_.toSeq).toSet ==
-        direct.collect().map(_.toSeq).toSet)
-      // the term filter must prune buckets at the scan
-      val plan = fromTable.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
-        s"expected bucket pruning:\n$plan")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_test_postings")
-  }
-
   test("bm25Rank: fixed-point scores, disjunctive match, rank order") {
     val docs = Seq(
       (1L, "a b a"), (2L, "a c"), (3L, "b b b c"), (4L, "c c"))
@@ -158,43 +142,6 @@ class TrainPrepSpec extends SparkSpec {
     val got = TrainPrep.bm25Rank(docs, Seq("a"), topK = 2)
       .collect().map(_.getLong(0)).toSeq
     assert(got == Seq(1L, 2L))
-  }
-
-  test("bucketed positional table: phrase search prunes buckets, same rows") {
-    val docs = Tables.documents(spark, sf())
-    TrainPrep.writePositionsBucketed(docs, "graft_test_positions", 8)
-    try {
-      val fromTable = TrainPrep.phraseSearchFromTable(
-        spark, "graft_test_positions", Seq("window", "join"))
-      val direct = TrainPrep.phraseSearch(docs, Seq("window", "join"))
-      assert(fromTable.collect().map(_.toSeq).toSet ==
-        direct.collect().map(_.toSeq).toSet)
-      // each term's equality filter must prune its scan to one bucket
-      val plan = fromTable.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount: 1 out of 8"),
-        s"expected bucket pruning:\n$plan")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_test_positions")
-  }
-
-  test("persisted search index: BM25 from tables matches from docs, prunes buckets") {
-    val docs = Tables.documents(spark, sf())
-    TrainPrep.writeSearchIndex(docs, "graft_test_idx", 8)
-    try {
-      val fromTable = TrainPrep.bm25RankFromTable(
-        spark, "graft_test_idx", Seq("query", "window", "scan"), topK = 20)
-      val direct = TrainPrep.bm25Rank(
-        docs, Seq("query", "window", "scan"), topK = 20)
-      assert(fromTable.collect().map(_.toSeq).toSeq ==
-        direct.collect().map(_.toSeq).toSeq)
-      // a 3-term IN filter prunes to AT MOST 3 of the 8 buckets
-      val plan = fromTable.queryExecution.executedPlan.toString
-      assert("SelectedBucketsCount: [123] out of 8".r
-          .findFirstIn(plan).isDefined,
-        s"expected bucket pruning on the posting scan:\n$plan")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_test_idx_postings")
-      spark.sql("DROP TABLE IF EXISTS graft_test_idx_doclens")
-    }
   }
 
   test("bm25ProximityRank: adjacency bonus by tightest in-order gap") {
