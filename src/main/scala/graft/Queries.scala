@@ -33,7 +33,7 @@ object Queries {
   final case class Q(
       name: String,
       fn: (SparkSession, String) => DataFrame,
-      sql: Option[String])
+      sql: String)
 
   private def dec(c: Column, p: Int = 18, s: Int = 2): Column =
     c.cast(s"decimal($p,$s)")
@@ -59,13 +59,13 @@ object Queries {
             .as("sum_disc_price"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus")),
-    Some("""SELECT l_returnflag, l_linestatus,
+    """SELECT l_returnflag, l_linestatus,
       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS sum_disc_price,
       COUNT(*) AS count_order
       FROM lineitem GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus"""))
+      ORDER BY l_returnflag, l_linestatus""")
 
   /** §2.2 filter + project with parquet pushdown (TPC-H Q6 shape): the
     * predicates and the 3-column read schema must reach the scan. */
@@ -81,13 +81,13 @@ object Queries {
         .agg(
           dsum(col("l_extendedprice") * col("l_discount"), 28, 6).as("revenue"),
           count(lit(1)).as("n")),
-    Some("""SELECT
+    """SELECT
       CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
       COUNT(*) AS n
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1995-01-01'
         AND l_shipdate < TIMESTAMP '1996-01-01'
-        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"""))
+        AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""")
 
   /** §2.5 deterministic top-k (report.py:176-190 analog): the flagship
     * "today's top-10 offenders" shape — TakeOrderedAndProject, no global
@@ -98,9 +98,9 @@ object Queries {
       Report.topK(
         Tables.events(s, dir).filter(col("event_type") === "error"),
         Seq("user_id"), 10),
-    Some("""SELECT user_id, COUNT(*) AS n FROM events
+    """SELECT user_id, COUNT(*) AS n FROM events
       WHERE event_type = 'error'
-      GROUP BY user_id ORDER BY n DESC, user_id ASC LIMIT 10"""))
+      GROUP BY user_id ORDER BY n DESC, user_id ASC LIMIT 10""")
 
   /** §2.4 conditional aggregation (total_rev_dns_failures analog) +
     * per-day grouping on a formatted day string. */
@@ -114,10 +114,10 @@ object Queries {
           Report.countWhere(col("event_type") === "error", "errors"),
           dsum(col("value")).as("sum_value"))
         .orderBy(col("day")),
-    Some("""SELECT strftime(ts, '%Y-%m-%d') AS day, COUNT(*) AS n,
+    """SELECT strftime(ts, '%Y-%m-%d') AS day, COUNT(*) AS n,
       COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS errors,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1 ORDER BY 1"""))
+      FROM events GROUP BY 1 ORDER BY 1""")
 
   /** §2.2 regex parse stage (log_utils.py:36-42 analog): synthesize a
     * syslog-shaped line, then recover ip + sasl_username with the
@@ -141,7 +141,7 @@ object Queries {
         .groupBy(col("username"), col("ip")).agg(count(lit(1)).as("n"))
         .orderBy(col("username"), col("ip"))
     },
-    Some("""WITH lines AS (
+    """WITH lines AS (
       SELECT printf('Jan 15 10:12:13 mail postfix/smtpd[123]: warning: unknown[%d.%d.%d.%d]: SASL LOGIN authentication failed, sasl_username=u%d',
         user_id%256, (user_id*7)%256, (user_id*13)%256, (user_id*29)%256, user_id) AS line
       FROM events)
@@ -151,7 +151,7 @@ object Queries {
       FROM lines
       WHERE regexp_extract(line, '\[(\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3})\]', 1) <> ''
         AND regexp_extract(line, 'sasl_username=([^,]+)', 1) <> ''
-      GROUP BY 1, 2 ORDER BY username, ip"""))
+      GROUP BY 1, 2 ORDER BY username, ip""")
 
   /** §2.3 IP range-join enrichment (ipinfo.py:217-238,309-339 analog):
     * ip→int, broadcast sorted-table lookup against non-overlapping
@@ -178,7 +178,7 @@ object Queries {
         .groupBy(col("country")).agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), col("country"))
     },
-    Some("""WITH probe AS (
+    """WITH probe AS (
       SELECT event_id,
         ((user_id*11)%256)*16777216 + (user_id%256)*65536 +
         ((user_id*7)%256)*256 + ((user_id*13)%256) AS ip_int
@@ -190,7 +190,7 @@ object Queries {
         FROM nation)
       SELECT COALESCE(n_name, 'N/A') AS country, COUNT(*) AS n
       FROM probe LEFT JOIN dim ON ip_int BETWEEN lo AND hi
-      GROUP BY 1 ORDER BY n DESC, country ASC"""))
+      GROUP BY 1 ORDER BY n DESC, country ASC""")
 
   /** §2.3/§2.6 anti join (sql_importer.py:425-441 analog). */
   private val q07 = Q(
@@ -204,11 +204,11 @@ object Queries {
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
         .orderBy(col("o_orderstatus"))
     },
-    Some("""SELECT o_orderstatus, COUNT(*) AS n,
+    """SELECT o_orderstatus, COUNT(*) AS n,
       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       FROM orders
       WHERE o_custkey NOT IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1""")
 
   /** Semi join (EXISTS shape). */
   private val q08 = Q(
@@ -221,9 +221,9 @@ object Queries {
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
         .orderBy(col("s_suppkey"))
     },
-    Some("""SELECT s_suppkey, s_name, s_acctbal FROM supplier
+    """SELECT s_suppkey, s_name, s_acctbal FROM supplier
       WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey AND l_quantity > 45)
-      ORDER BY s_suppkey"""))
+      ORDER BY s_suppkey""")
 
   /** Star-schema join: two large fact tables shuffle-join on the key;
     * nation/region are explicit broadcasts (the 100-TB shape: only the
@@ -245,7 +245,7 @@ object Queries {
             .as("revenue"),
           count(lit(1)).as("n"))
         .orderBy(col("r_name"), col("n_name")),
-    Some("""SELECT r_name, n_name,
+    """SELECT r_name, n_name,
       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
       COUNT(*) AS n
       FROM lineitem
@@ -254,7 +254,7 @@ object Queries {
       JOIN nation ON c_nationkey = n_nationkey
       JOIN region ON n_regionkey = r_regionkey
       WHERE o_orderdate >= TIMESTAMP '1994-01-01'
-      GROUP BY 1, 2 ORDER BY 1, 2"""))
+      GROUP BY 1, 2 ORDER BY 1, 2""")
 
   /** §2.8 tumbling daily window (report.py's "today" window generalized to
     * all days): Spark `window()` ≡ date_trunc at day granularity. */
@@ -268,10 +268,10 @@ object Queries {
           date_format(col("w.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy(col("day"), col("event_type")),
-    Some("""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+    """SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
       event_type, COUNT(*) AS n,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2""")
 
   /** Keyed dedup via window row_number (latest event per user) — the
     * incremental-dedup shape used for CDC-style tables. */
@@ -287,11 +287,11 @@ object Queries {
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
         .orderBy(col("user_id"))
     },
-    Some("""SELECT user_id, event_id, event_type, ts_s FROM (
+    """SELECT user_id, event_id, event_type, ts_s FROM (
       SELECT user_id, event_id, event_type,
              strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
              ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events) t WHERE rn = 1 ORDER BY user_id"""))
+      FROM events) t WHERE rn = 1 ORDER BY user_id""")
 
   /** §2.2 date reconstruction (log_utils.py:21-34,91-96 analog): format a
     * syslog-style token, then rebuild dd/MM/yyyy via the month-abbrev map
@@ -316,7 +316,7 @@ object Queries {
         .groupBy(col("day")).agg(count(lit(1)).as("n"))
         .orderBy(col("day"))
     },
-    Some("""WITH sl AS (SELECT strftime(ts, '%b %d %H:%M:%S') AS sl FROM events)
+    """WITH sl AS (SELECT strftime(ts, '%b %d %H:%M:%S') AS sl FROM events)
       SELECT substr(sl, 5, 2) || '/' ||
         CASE substr(sl, 1, 3)
           WHEN 'Jan' THEN '01' WHEN 'Feb' THEN '02' WHEN 'Mar' THEN '03'
@@ -325,7 +325,7 @@ object Queries {
           WHEN 'Oct' THEN '10' WHEN 'Nov' THEN '11' WHEN 'Dec' THEN '12'
           ELSE '??' END || '/2024' AS day,
         COUNT(*) AS n
-      FROM sl GROUP BY 1 ORDER BY 1"""))
+      FROM sl GROUP BY 1 ORDER BY 1""")
 
   /** §2.2 user-string cleanup (log_utils.py:100-101 analog): strip +
     * CR/LF → space over a synthetically dirtied value. */
@@ -340,10 +340,10 @@ object Queries {
             "[\\r\\n]", " ").as("username"))
         .select(col("username"), length(col("username")).cast("long").as("len"))
         .orderBy(col("username")),
-    Some("""SELECT username, length(username) AS len FROM (
+    """SELECT username, length(username) AS len FROM (
       SELECT regexp_replace(trim('  ' || c_name || chr(13) || chr(10) || c_mktsegment || '  '),
         '[\r\n]', ' ', 'g') AS username
-      FROM customer) t ORDER BY username"""))
+      FROM customer) t ORDER BY username""")
 
   /** §2.1 SQL-file sink formatting (sql_exporter.py:187-257 analog):
     * typed literal rendering with quote-doubling escape. */
@@ -359,10 +359,10 @@ object Queries {
             regexp_replace(rawVal, "'", "''"), lit("');")).as("stmt"))
         .orderBy(col("doc_id")).limit(100)
     },
-    Some("""SELECT doc_id,
+    """SELECT doc_id,
       'INSERT INTO docs (id, val) VALUES (' || doc_id || ', ''' ||
         replace(source || '''s ' || lang, '''', '''''') || ''');' AS stmt
-      FROM documents ORDER BY doc_id LIMIT 100"""))
+      FROM documents ORDER BY doc_id LIMIT 100""")
 
   /** §2.2 null-sentinel normalization (sql_exporter.py:217-226 analog):
     * {'null','na','n/a',''} → NULL, with nulls grouping + explicit null
@@ -381,14 +381,14 @@ object Queries {
         .groupBy(col("norm")).agg(count(lit(1)).as("n"))
         .orderBy(col("norm").asc_nulls_first)
     },
-    Some("""WITH raw AS (
+    """WITH raw AS (
       SELECT CASE user_id % 5
         WHEN 0 THEN 'null' WHEN 1 THEN 'N/A' WHEN 2 THEN '' WHEN 3 THEN 'na'
         ELSE event_type END AS raw
       FROM events)
       SELECT CASE WHEN lower(raw) IN ('null','na','n/a','') THEN NULL ELSE raw END AS norm,
              COUNT(*) AS n
-      FROM raw GROUP BY 1 ORDER BY norm ASC NULLS FIRST"""))
+      FROM raw GROUP BY 1 ORDER BY norm ASC NULLS FIRST""")
 
   // ---------------------------------------------------------------------
 
@@ -404,5 +404,5 @@ object Queries {
     list.map(q => q.name -> q.fn).toMap
 
   def oracle: Map[String, String] =
-    list.flatMap(q => q.sql.map(q.name -> _)).toMap
+    list.map(q => q.name -> q.sql).toMap
 }

@@ -37,7 +37,7 @@ object QueriesAnalytics {
         sum(col("r_wordcount") * col("r_meanwordlen") *
           col("r_stopwords") * col("r_repetition")).as("n_kept"))
     },
-    Some("""WITH tk AS (SELECT doc_id, string_split(text,' ') AS ts,
+    """WITH tk AS (SELECT doc_id, string_split(text,' ') AS ts,
         len(replace(text,' ','')) AS nchars FROM documents),
       m AS (SELECT doc_id, len(ts) AS nw, nchars,
         len(list_filter(list_distinct(ts),
@@ -58,7 +58,7 @@ object QueriesAnalytics {
         CAST(SUM(rstop) AS BIGINT) AS pass_stopwords,
         CAST(SUM(rrep) AS BIGINT) AS pass_repetition,
         CAST(SUM(rwc*rmwl*rstop*rrep) AS BIGINT) AS n_kept
-      FROM f"""))
+      FROM f""")
 
   /** PER-SOURCE UNIGRAM TVD (CorpusStats.sourceUnigramTvd): total
     * -variation distance of each source's token distribution from the
@@ -68,7 +68,7 @@ object QueriesAnalytics {
   private val q139 = Q(
     "q139_source_divergence",
     (s, dir) => CorpusStats.sourceUnigramTvd(Tables.documents(s, dir)),
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT source, UNNEST(string_split(text,' ')) AS term
         FROM documents),
       ost AS (SELECT source, term, COUNT(*) AS o FROM toks GROUP BY 1,2),
@@ -84,7 +84,7 @@ object QueriesAnalytics {
           ON g.source = o.source AND g.term = o.term)
       SELECT source, s AS n_tokens,
         CAST(SUM(ad)*10000 // (2*s*t) AS BIGINT) AS tvd_x1e4
-      FROM j GROUP BY source, s, t ORDER BY source"""))
+      FROM j GROUP BY source, s, t ORDER BY source""")
 
   /** TOP SESSION PATHS (EventAnalytics.sessionPaths): the first 8
     * event types of each 30-min-gap session joined with '>', top 20
@@ -96,7 +96,7 @@ object QueriesAnalytics {
       Tables.events(s, dir).selectExpr(
         "user_id", "event_id", "event_type", "unix_millis(ts) as ms"),
       SessionGapMs, maxLen = 8, topK = 20),
-    Some("""WITH t AS (SELECT user_id, event_id, event_type,
+    """WITH t AS (SELECT user_id, event_id, event_type,
           epoch_ms(ts) AS ms FROM events),
       f AS (SELECT *, CASE
           WHEN ms - LAG(ms,1) OVER (PARTITION BY user_id
@@ -119,7 +119,7 @@ object QueriesAnalytics {
         FROM r WHERE rn <= 8 GROUP BY 1, 2)
       SELECT path, CAST(COUNT(*) AS BIGINT) AS n_sessions
       FROM p GROUP BY 1
-      ORDER BY n_sessions DESC, path LIMIT 20"""))
+      ORDER BY n_sessions DESC, path LIMIT 20""")
 
   /** SESSION TRANSITION MATRIX (EventAnalytics.transitionCensus):
     * first-order Markov (from → to) adjacent-pair counts within
@@ -130,7 +130,7 @@ object QueriesAnalytics {
       Tables.events(s, dir).selectExpr(
         "user_id", "event_id", "event_type", "unix_millis(ts) as ms"),
       SessionGapMs),
-    Some("""WITH t AS (SELECT user_id, event_id, event_type,
+    """WITH t AS (SELECT user_id, event_id, event_type,
           epoch_ms(ts) AS ms FROM events),
       f AS (SELECT *, CASE
           WHEN ms - LAG(ms,1) OVER (PARTITION BY user_id
@@ -153,7 +153,7 @@ object QueriesAnalytics {
       SELECT from_type, to_type, CAST(n AS BIGINT) AS n,
         CAST(n*1000000 // SUM(n) OVER (PARTITION BY from_type)
           AS BIGINT) AS p_ppm
-      FROM c ORDER BY from_type, to_type"""))
+      FROM c ORDER BY from_type, to_type""")
 
   /** LAST-TOUCH ATTRIBUTION (EventAnalytics.lastTouchAttribution):
     * each purchase credited to the latest preceding view/click by the
@@ -168,7 +168,7 @@ object QueriesAnalytics {
         "unix_millis(ts) as ms"),
       touchTypes = Seq("view", "click"), convType = "purchase",
       windowMs = 604800000L),
-    Some("""WITH t AS (SELECT event_id, user_id, event_type, value,
+    """WITH t AS (SELECT event_id, user_id, event_type, value,
           epoch_ms(ts) AS ms FROM events),
       pk AS (SELECT *, CASE
           WHEN event_type = 'view'  THEN ms*3 + 1
@@ -189,7 +189,7 @@ object QueriesAnalytics {
         FROM lp WHERE event_type = 'purchase')
       SELECT touch_type, CAST(COUNT(*) AS BIGINT) AS n_conversions,
         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM conv GROUP BY 1 ORDER BY 1"""))
+      FROM conv GROUP BY 1 ORDER BY 1""")
 
   /** RATE-ANOMALY DETECTION (EventAnalytics.rateAnomalies): hourly
     * (event_type, hour) cells whose count exceeds 1.5× the trailing
@@ -200,7 +200,7 @@ object QueriesAnalytics {
     (s, dir) => EventAnalytics.rateAnomalies(
       Tables.events(s, dir).selectExpr(
         "event_type", "unix_millis(ts) as ms")),
-    Some("""WITH t AS (SELECT event_type,
+    """WITH t AS (SELECT event_type,
           epoch_ms(ts) // 3600000 AS hr FROM events),
       c AS (SELECT event_type, hr, COUNT(*) AS n FROM t GROUP BY 1, 2),
       w AS (SELECT event_type, hr, n,
@@ -214,7 +214,7 @@ object QueriesAnalytics {
         CAST(trail_buckets AS BIGINT) AS trail_buckets
       FROM w
       WHERE trail_buckets >= 12 AND n*trail_buckets*2 > trail_sum*3
-      ORDER BY event_type, hr"""))
+      ORDER BY event_type, hr""")
 
   /** Shared oracle CTE: the rare-gram (df ∈ [2,10]) 8-gram edge list
     * and its degree table — q144/q145 read the same graph. */
@@ -256,7 +256,7 @@ object QueriesAnalytics {
     // census's five consumers AND q145 (the SharedGrams discipline)
     (s, dir) => graft.operators.Graphs.triangleCensus(
       SharedGrams.gramEdges(s, dir)),
-    Some(s"""$GramEdgesSql
+    s"""$GramEdgesSql
       SELECT (SELECT COUNT(*) FROM deg) AS n_nodes,
         (SELECT COUNT(*) FROM pairs) AS n_edges,
         (SELECT CAST(COUNT(*) AS BIGINT) FROM pairs e1
@@ -270,7 +270,7 @@ object QueriesAnalytics {
               JOIN pairs e2 ON e1.y = e2.x
               JOIN pairs e3 ON e1.x = e3.x AND e2.y = e3.y) * 3000000
             // (SELECT SUM(d*(d-1)//2) FROM deg) AS BIGINT)
-          END AS global_cc_ppm"""))
+          END AS global_cc_ppm""")
 
   /** DEGREE-DISTRIBUTION HISTOGRAM of the same shared-gram graph:
     * (degree → node count), the power-law readout that tells a dedup
@@ -282,9 +282,9 @@ object QueriesAnalytics {
       SharedGrams.gramEdges(s, dir))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
       .orderBy(col("degree")),
-    Some(s"""$GramEdgesSql
+    s"""$GramEdgesSql
       SELECT d AS degree, CAST(COUNT(*) AS BIGINT) AS n_nodes
-      FROM deg GROUP BY 1 ORDER BY degree"""))
+      FROM deg GROUP BY 1 ORDER BY degree""")
 
   /** K-CORE PEEL CENSUS of the shared-gram similarity graph
     * (Graphs.kCoreCensus over SharedGrams.gramEdges): three rounds of
@@ -299,7 +299,7 @@ object QueriesAnalytics {
     (s, dir) => graft.operators.Graphs.kCoreCensus(
       SharedGrams.gramEdges(s, dir), k = 2, rounds = 3)
       .orderBy(col("round")),
-    Some(s"""$GramEdgesSql,
+    s"""$GramEdgesSql,
       d0 AS (SELECT v, d FROM deg),
       k0 AS (SELECT v FROM d0 WHERE d >= 2),
       e1 AS (SELECT x, y FROM pairs
@@ -325,7 +325,7 @@ object QueriesAnalytics {
         (SELECT COUNT(*) FROM d2), (SELECT COUNT(*) FROM e2)
       UNION ALL SELECT CAST(3 AS INT),
         (SELECT COUNT(*) FROM d3), (SELECT COUNT(*) FROM e3)
-      ORDER BY round"""))
+      ORDER BY round""")
 
   /** GROUPED PEARSON CORRELATION MATRIX over lineitem
     * (quantity↔extendedprice, quantity↔discount per returnflag):
@@ -356,7 +356,7 @@ object QueriesAnalytics {
             .as("corr_qty_disc_fp"))
         .orderBy(col("l_returnflag"))
     },
-    Some(s"""WITH a AS (SELECT l_returnflag,
+    s"""WITH a AS (SELECT l_returnflag,
         CAST(COUNT(*) AS BIGINT) AS n,
         CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
@@ -375,7 +375,7 @@ object QueriesAnalytics {
       SELECT l_returnflag, n,
         ${CorrExpr("sxy", "sx", "sy", "sxx", "syy")} AS corr_qty_price_fp,
         ${CorrExpr("sxz", "sx", "sz", "sxx", "szz")} AS corr_qty_disc_fp
-      FROM a ORDER BY l_returnflag"""))
+      FROM a ORDER BY l_returnflag""")
 
   /** The Pearson-correlation fixed-point combiner, shared VERBATIM
     * between the Spark expr and the oracle SQL so the IEEE operation
@@ -426,7 +426,7 @@ object QueriesAnalytics {
           col("p90_ms"), col("max_ms"))
         .orderBy(col("step"))
     },
-    Some("""WITH t AS (SELECT user_id AS u, event_type AS et,
+    """WITH t AS (SELECT user_id AS u, event_type AS et,
           epoch_ms(ts) AS ms FROM events),
       s1 AS (SELECT u, MIN(ms) AS t1 FROM t WHERE et = 'view' GROUP BY 1),
       s2 AS (SELECT t.u, MIN(t.ms) AS t2 FROM t JOIN s1 USING (u)
@@ -454,7 +454,7 @@ object QueriesAnalytics {
         WHERE rn = (9*cnt + 9) // 10)
       SELECT step, n, min_ms, median_ms, p90_ms, max_ms
       FROM base JOIN med USING (step) JOIN p90 USING (step)
-      ORDER BY step"""))
+      ORDER BY step""")
 
   /** FORECAST BACKTEST (EventAnalytics.forecastBacktest): naive
     * trailing-24h-mean hourly forecast, absolute-error census per
@@ -465,7 +465,7 @@ object QueriesAnalytics {
     (s, dir) => EventAnalytics.forecastBacktest(
       Tables.events(s, dir).selectExpr(
         "event_type", "unix_millis(ts) as ms")),
-    Some("""WITH t AS (SELECT event_type,
+    """WITH t AS (SELECT event_type,
           epoch_ms(ts) // 3600000 AS hr FROM events),
       c AS (SELECT event_type, hr, COUNT(*) AS n FROM t GROUP BY 1, 2),
       w AS (SELECT event_type, hr, n,
@@ -480,7 +480,7 @@ object QueriesAnalytics {
       SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_cells,
         CAST(SUM(err) AS BIGINT) AS abs_err_sum,
         CAST(SUM(err) * 100 // COUNT(*) AS BIGINT) AS mae_x100
-      FROM e GROUP BY 1 ORDER BY event_type"""))
+      FROM e GROUP BY 1 ORDER BY event_type""")
 
   private def dsum286(c: org.apache.spark.sql.Column) =
     sum(c.cast("decimal(28,6)")).cast("double")
@@ -515,7 +515,7 @@ object QueriesAnalytics {
         .orderBy(col("revenue").desc, col("l_orderkey").asc)
         .limit(10)
     },
-    Some("""SELECT l.l_orderkey,
+    """SELECT l.l_orderkey,
         strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
         o.o_orderpriority,
         CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
@@ -527,7 +527,7 @@ object QueriesAnalytics {
         AND o.o_orderdate < TIMESTAMP '1997-06-01'
         AND l.l_shipdate > TIMESTAMP '1997-06-01'
       GROUP BY 1, 2, 3
-      ORDER BY revenue DESC, l.l_orderkey ASC LIMIT 10"""))
+      ORDER BY revenue DESC, l.l_orderkey ASC LIMIT 10""")
 
   /** REGIONAL REVENUE (the TPC-H Q5 shape, customer-nation form):
     * region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem — two broadcast
@@ -559,7 +559,7 @@ object QueriesAnalytics {
           count(lit(1)).as("n_items"))
         .orderBy(col("revenue").desc, col("n_name"))
     },
-    Some("""SELECT n.n_name,
+    """SELECT n.n_name,
         CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
           AS DECIMAL(28,6))) AS DOUBLE) AS revenue,
         CAST(COUNT(*) AS BIGINT) AS n_items
@@ -571,7 +571,7 @@ object QueriesAnalytics {
       WHERE r.r_name = 'ASIA'
         AND o.o_orderdate >= TIMESTAMP '1996-01-01'
         AND o.o_orderdate < TIMESTAMP '1998-01-01'
-      GROUP BY 1 ORDER BY revenue DESC, n_name"""))
+      GROUP BY 1 ORDER BY revenue DESC, n_name""")
 
   /** LARGE-VOLUME ORDERS (the TPC-H Q18 shape): orders whose total
     * quantity exceeds 180 — the agg-then-semi-join pattern (the
@@ -598,7 +598,7 @@ object QueriesAnalytics {
         .orderBy(col("total_qty").desc, col("l_orderkey").asc)
         .limit(10)
     },
-    Some("""WITH big AS (
+    """WITH big AS (
         SELECT l_orderkey,
           CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
             AS total_qty
@@ -611,7 +611,7 @@ object QueriesAnalytics {
       FROM big b
       JOIN orders o ON b.l_orderkey = o.o_orderkey
       JOIN customer c ON o.o_custkey = c.c_custkey
-      ORDER BY b.total_qty DESC, b.l_orderkey ASC LIMIT 10"""))
+      ORDER BY b.total_qty DESC, b.l_orderkey ASC LIMIT 10""")
 
   /** DAILY ACTIVE / NEW / RETURNING USERS: per UTC day, distinct
     * actives split by whether the day is the user's first — the
@@ -632,7 +632,7 @@ object QueriesAnalytics {
         .withColumn("returning", col("dau") - col("new_users"))
         .orderBy(col("day"))
     },
-    Some("""WITH ud AS (SELECT DISTINCT user_id,
+    """WITH ud AS (SELECT DISTINCT user_id,
           epoch_ms(ts) // 86400000 AS day FROM events),
       fd AS (SELECT user_id, MIN(day) AS fday FROM ud GROUP BY 1)
       SELECT day, CAST(COUNT(*) AS BIGINT) AS dau,
@@ -641,7 +641,7 @@ object QueriesAnalytics {
         CAST(COUNT(*) - SUM(CASE WHEN day = fday THEN 1 ELSE 0 END)
           AS BIGINT) AS returning
       FROM ud JOIN fd USING (user_id)
-      GROUP BY 1 ORDER BY day"""))
+      GROUP BY 1 ORDER BY day""")
 
   /** POWER-USER HISTOGRAM: users bucketed by the BIT LENGTH of their
     * event count (= ⌊log₂ n⌋+1 without a transcendental — `bin()`
@@ -655,12 +655,12 @@ object QueriesAnalytics {
       .groupBy(length(bin(col("n"))).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n_users"), sum(col("n")).as("n_events"))
       .orderBy(col("bucket")),
-    Some("""WITH u AS (SELECT user_id, COUNT(*) AS n FROM events
+    """WITH u AS (SELECT user_id, COUNT(*) AS n FROM events
         GROUP BY 1)
       SELECT CAST(LENGTH(BIN(n)) AS BIGINT) AS bucket,
         CAST(COUNT(*) AS BIGINT) AS n_users,
         CAST(SUM(n) AS BIGINT) AS n_events
-      FROM u GROUP BY 1 ORDER BY bucket"""))
+      FROM u GROUP BY 1 ORDER BY bucket""")
 
   /** HOUR-OF-DAY SEASONALITY: event share per (event_type, UTC
     * hour-of-day) as integer ppm of the type's total — the diurnal
@@ -675,13 +675,13 @@ object QueriesAnalytics {
       .withColumn("share_ppm",
         expr("n * 1000000 div sum(n) over (partition by event_type)"))
       .orderBy(col("event_type"), col("hod")),
-    Some("""WITH c AS (SELECT event_type,
+    """WITH c AS (SELECT event_type,
           (epoch_ms(ts) // 3600000) % 24 AS hod, COUNT(*) AS n
         FROM events GROUP BY 1, 2)
       SELECT event_type, hod, CAST(n AS BIGINT) AS n,
         CAST(n * 1000000 // SUM(n) OVER (PARTITION BY event_type)
           AS BIGINT) AS share_ppm
-      FROM c ORDER BY event_type, hod"""))
+      FROM c ORDER BY event_type, hod""")
 
   /** The two-proportion z-statistic combiner, shared VERBATIM between
     * the Spark expr and the oracle SQL (the CorrExpr discipline):
@@ -725,7 +725,7 @@ object QueriesAnalytics {
             .as("lift_ppm"),
           expr(ZExpr).as("z_x1e6"))
     },
-    Some(s"""WITH u AS (SELECT user_id,
+    s"""WITH u AS (SELECT user_id,
           CASE WHEN substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 1)
             IN ('0','1','2','3','4','5','6','7') THEN 'A' ELSE 'B' END
             AS arm,
@@ -741,7 +741,7 @@ object QueriesAnalytics {
         CAST(cb * 1000000 // ub - ca * 1000000 // ua AS BIGINT)
           AS lift_ppm,
         $ZExpr AS z_x1e6
-      FROM a CROSS JOIN b"""))
+      FROM a CROSS JOIN b""")
 
   /** QUALITY-vs-DUPLICATION CALIBRATION: the q23 quality score
     * bucketed (⌊q·10⌋) against the exact-dup verdict — does the
@@ -764,18 +764,9 @@ object QueriesAnalytics {
         .withColumn("dup_ppm", expr("n_dup * 1000000 div n_docs"))
         .orderBy(col("bucket"))
     },
-    Some {
-      val stopList = TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH scored AS (
+    s"""WITH scored AS (
         SELECT doc_id, md5(text) AS h,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 10) AS BIGINT) AS bucket
+          CAST(FLOOR(${OracleSql.qualityScore} * 10) AS BIGINT) AS bucket
         FROM documents),
       dups AS (SELECT h FROM scored GROUP BY h HAVING COUNT(*) >= 2)
       SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -784,8 +775,7 @@ object QueriesAnalytics {
         CAST(SUM(CASE WHEN dups.h IS NOT NULL THEN 1 ELSE 0 END)
           * 1000000 // COUNT(*) AS BIGINT) AS dup_ppm
       FROM scored LEFT JOIN dups ON scored.h = dups.h
-      GROUP BY 1 ORDER BY bucket"""
-    })
+      GROUP BY 1 ORDER BY bucket""")
 
   /** DECONTAMINATION CROSSTAB: the union report a real
     * decontamination pass ships — every train doc flagged by BOTH
@@ -827,7 +817,7 @@ object QueriesAnalytics {
         .agg(count(lit(1)).as("n_docs"))
         .orderBy(col("exact_hit"), col("ngram_hit"))
     },
-    Some("""WITH d AS (SELECT doc_id,
+    """WITH d AS (SELECT doc_id,
         CASE WHEN doc_id % 13 = 0
              THEN 'the exact duplicated benchmark passage appears verbatim in this corpus'
              WHEN doc_id % 11 = 0
@@ -860,7 +850,7 @@ object QueriesAnalytics {
       SELECT CAST(exact_hit AS BIGINT) AS exact_hit,
         CAST(ngram_hit AS BIGINT) AS ngram_hit,
         CAST(COUNT(*) AS BIGINT) AS n_docs
-      FROM f GROUP BY 1, 2 ORDER BY exact_hit, ngram_hit"""))
+      FROM f GROUP BY 1, 2 ORDER BY exact_hit, ngram_hit""")
 
   /** K-ANONYMITY AUDIT (privacy companion to q43 redaction / q49
     * anonymization): customers grouped by the quasi-identifier pair
@@ -878,7 +868,7 @@ object QueriesAnalytics {
         sum(when(col("sz") < 5, col("sz")).otherwise(0L))
           .as("n_exposed_rows"),
         min(col("sz")).as("min_group"), max(col("sz")).as("max_group")),
-    Some("""WITH g AS (SELECT c_nationkey, c_mktsegment, COUNT(*) AS sz
+    """WITH g AS (SELECT c_nationkey, c_mktsegment, COUNT(*) AS sz
         FROM customer GROUP BY 1, 2)
       SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
         CAST(SUM(CASE WHEN sz < 5 THEN 1 ELSE 0 END) AS BIGINT)
@@ -887,7 +877,7 @@ object QueriesAnalytics {
           AS n_exposed_rows,
         CAST(MIN(sz) AS BIGINT) AS min_group,
         CAST(MAX(sz) AS BIGINT) AS max_group
-      FROM g"""))
+      FROM g""")
 
   /** LABEL-PROPAGATION COMMUNITIES over the shared-gram similarity
     * graph (Graphs.labelPropagation, 2 synchronous rounds,
@@ -904,7 +894,7 @@ object QueriesAnalytics {
         SharedGrams.gramEdges(s, dir), rounds = 2)
       .groupBy(col("label")).agg(count(lit(1)).as("sz"))
       .orderBy(col("label")),
-    Some(s"""$GramEdgesSql,
+    s"""$GramEdgesSql,
       adj AS (SELECT x AS v, y AS u FROM pairs
         UNION ALL SELECT y AS v, x AS u FROM pairs),
       l0 AS (SELECT DISTINCT v, v AS label FROM adj),
@@ -921,7 +911,7 @@ object QueriesAnalytics {
             PARTITION BY v ORDER BY c DESC, label) AS rk FROM c2)
         WHERE rk = 1)
       SELECT label, CAST(COUNT(*) AS BIGINT) AS sz
-      FROM l2 GROUP BY 1 ORDER BY label"""))
+      FROM l2 GROUP BY 1 ORDER BY label""")
 
   /** GRAPH MODULARITY of the q168 label-propagation communities over
     * the shared-gram similarity graph — the standard partition-quality
@@ -966,7 +956,7 @@ object QueriesAnalytics {
               * 1000000 div (4*CAST(m AS DECIMAL(38,0))*m) END""")
             .as("modularity_ppm"))
     },
-    Some(s"""$GramEdgesSql,
+    s"""$GramEdgesSql,
       adj AS (SELECT x AS v, y AS u FROM pairs
         UNION ALL SELECT y AS v, x AS u FROM pairs),
       l0 AS (SELECT DISTINCT v, v AS label FROM adj),
@@ -998,7 +988,7 @@ object QueriesAnalytics {
           ELSE (4*CAST(st.m AS HUGEINT)*ie.intra - ds.sumdsq) * 1000000
             // (4*CAST(st.m AS HUGEINT)*st.m) END AS BIGINT)
           AS modularity_ppm
-      FROM st CROSS JOIN ie CROSS JOIN ds"""))
+      FROM st CROSS JOIN ie CROSS JOIN ds""")
 
   /** L-DIVERSITY AUDIT (the step after q162's k-anonymity: group SIZE
     * alone doesn't protect when everyone in a group shares the same
@@ -1023,7 +1013,7 @@ object QueriesAnalytics {
         sum(when(col("l") < 3, col("sz")).otherwise(0L))
           .as("n_exposed_rows"),
         min(col("l")).as("min_l"), max(col("l")).as("max_l")),
-    Some("""WITH b AS (SELECT c_nationkey, c_mktsegment,
+    """WITH b AS (SELECT c_nationkey, c_mktsegment,
         (CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
           + 100000) // 200000 AS band
         FROM customer),
@@ -1037,7 +1027,7 @@ object QueriesAnalytics {
           AS n_exposed_rows,
         CAST(MIN(l) AS BIGINT) AS min_l,
         CAST(MAX(l) AS BIGINT) AS max_l
-      FROM g"""))
+      FROM g""")
 
   /** RESHARD MOVEMENT CENSUS — modulo vs rendezvous (highest-random-
     * weight) shard assignment when the shard count grows 8 → 9: under
@@ -1075,7 +1065,7 @@ object QueriesAnalytics {
           expr("rm * 1000000 div n")))
         .orderBy(col("scheme"))
     },
-    Some {
+    {
       val l8 = (0 until 8)
         .map(i => s"md5('rv$i:' || CAST(doc_id AS VARCHAR))")
         .mkString("[", ", ", "]")
@@ -1148,7 +1138,7 @@ object QueriesAnalytics {
             WHEN numw < 0 THEN -((-numw) * 1000 div denw)
             ELSE numw * 1000 div denw END AS BIGINT)""").as("r_milli"))
     },
-    Some(s"""$GramEdgesSql,
+    s"""$GramEdgesSql,
       ed AS (SELECT dx.d AS dx, dy.d AS dy FROM pairs p
         JOIN deg dx ON dx.v = p.x JOIN deg dy ON dy.v = p.y),
       mo AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges,
@@ -1167,7 +1157,7 @@ object QueriesAnalytics {
         CAST(CASE WHEN denw = 0 THEN 0
           WHEN numw < 0 THEN -((-numw) * 1000 // denw)
           ELSE numw * 1000 // denw END AS BIGINT) AS r_milli
-      FROM nd"""))
+      FROM nd""")
 
   val list: Seq[Q] = Seq(q138, q139, q140, q141, q142, q143, q144,
     q145, q146, q147, q150, q151, q152, q153, q154, q155, q156,

@@ -14,29 +14,6 @@ import graft.Queries.Q
   */
 object QueriesBeyond {
 
-  /** Shared oracle SQL fragment: (doc_id, sh) char-5-gram shingle rows. */
-  private val ShinglesSql =
-    """sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-      FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i))"""
-
-  /** Shared oracle SQL fragment (follows ShinglesSql): MinHash
-    * signatures and the 2×4 band keys — the mirror of
-    * Dedup.minhashSignatures' slice scheme (component j = MIN of hex
-    * slice j%4 of md5('m{j/4}' || shingle)). Interpolated by BOTH q17
-    * and q82 so the scheme lives in one place. */
-  // shared with QueriesRound9's q235 (the winnow-vs-LSH decontam
-  // calibration bands the SAME way so the comparison is apples-to-apples)
-  private[graft] val MinhashBandsSql = {
-    val mins = (0 until 8)
-      .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-      .mkString(", ")
-    s"""sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig)"""
-  }
-
   /** Exact dedup: hash-groupBy on md5(text) (content hash), keeper = min
     * id. One shuffle on the 16-byte hash — the 100-TB exact-dedup shape. */
   private val q16 = Q(
@@ -46,8 +23,8 @@ object QueriesBeyond {
         .groupBy(md5(col("text")).as("h"))
         .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
         .orderBy(col("h")),
-    Some("""SELECT md5(text) AS h, COUNT(*) AS n, MIN(doc_id) AS keeper
-      FROM documents GROUP BY 1 ORDER BY h"""))
+    """SELECT md5(text) AS h, COUNT(*) AS n, MIN(doc_id) AS keeper
+      FROM documents GROUP BY 1 ORDER BY h""")
 
   /** MinHash(k=8) + LSH(2 bands × 4 rows): shingle → signature →
     * band-key self-join → candidate pairs. Band r=4 targets
@@ -60,11 +37,8 @@ object QueriesBeyond {
       // computation per session+input — the persisted-artifact shape)
       SharedLsh.candidatePairs(s, dir)
         .orderBy(col("doc_a"), col("doc_b")),
-    Some(s"""WITH $ShinglesSql,
-      $MinhashBandsSql
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id
-      ORDER BY doc_a, doc_b"""))
+    s"""WITH ${OracleSql.lshPairs()}
+      SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b""")
 
   /** 16-bit SimHash bucket census. */
   private val q18 = Q(
@@ -74,7 +48,7 @@ object QueriesBeyond {
         .groupBy(col("simhash"))
         .agg(count(lit(1)).as("n"), min(col("doc_id")).as("keeper"))
         .orderBy(col("simhash")),
-    Some {
+    {
       def digit(p: Int) =
         s"(ascii(substr(h4,$p,1)) - CASE WHEN ascii(substr(h4,$p,1)) >= 97 THEN 87 ELSE 48 END)"
       val tok16 =
@@ -105,7 +79,7 @@ object QueriesBeyond {
           Tables.documents(s, dir).filter(col("doc_id") < 100),
           "doc_id", "text", n = 5, threshold = 0.1)
         .orderBy(col("da"), col("db")),
-    Some(s"""WITH $ShinglesSql,
+    s"""WITH ${OracleSql.shingles()},
       sf AS (SELECT * FROM sh WHERE doc_id < 100),
       sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sf GROUP BY 1),
       inter AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i
@@ -117,7 +91,7 @@ object QueriesBeyond {
       JOIN sizes sa ON da = sa.doc_id
       JOIN sizes sb ON db = sb.doc_id
       WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.1
-      ORDER BY da, db"""))
+      ORDER BY da, db""")
 
   /** Exact n-gram CONTAINMENT (Dedup.containmentPairs) — the excerpt
     * detector Jaccard structurally misses: a 60-char excerpt of a long
@@ -140,7 +114,7 @@ object QueriesBeyond {
           n = 5, threshold = 0.9)
         .orderBy(col("da"), col("db"))
     },
-    Some("""WITH corpus AS (
+    """WITH corpus AS (
         SELECT doc_id, text FROM documents WHERE doc_id < 100
         UNION ALL
         SELECT doc_id + 100000, substr(text, 11, 60) FROM documents
@@ -159,7 +133,7 @@ object QueriesBeyond {
       JOIN sizes sa ON da = sa.doc_id
       JOIN sizes sb ON db = sb.doc_id
       WHERE CAST(i AS DOUBLE) / least(sa.sz, sb.sz) >= 0.9
-      ORDER BY da, db"""))
+      ORDER BY da, db""")
 
   /** Brute-force cosine top-5 for 8 query vectors. The decimal dot-product
     * kernel keeps scores deterministic across partitionings; raw cosines
@@ -176,12 +150,7 @@ object QueriesBeyond {
         .select(col("q_id"), col("vec_id"), col("rnk").cast("long").as("rnk"))
         .orderBy(col("q_id"), col("rnk"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      norms AS (SELECT vec_id,
-          SQRT(CAST(SUM(CAST(a*a AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+    s"""WITH ${OracleSql.embeddingNorms},
       q AS (SELECT * FROM ev WHERE vec_id < 8),
       dots AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
           CAST(SUM(CAST(q.a*e.a AS DECIMAL(18,16))) AS DOUBLE) AS dot
@@ -194,7 +163,7 @@ object QueriesBeyond {
       SELECT q_id, vec_id, rnk FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosim DESC, vec_id) AS rnk
         FROM cos) t
-      WHERE rnk <= 5 ORDER BY q_id, rnk"""))
+      WHERE rnk <= 5 ORDER BY q_id, rnk""")
 
   /** Sign-LSH bucketing on the first 8 dimensions: the ANN scale path —
     * candidate generation becomes an equi-join on the bucket id. */
@@ -205,7 +174,7 @@ object QueriesBeyond {
         .groupBy(Similarity.signBucket(col("embedding"), 8).as("bucket"))
         .agg(count(lit(1)).as("n"), min(col("vec_id")).as("min_vec"))
         .orderBy(col("bucket")),
-    Some {
+    {
       val bits = (1 to 8)
         .map(i => s"(CASE WHEN embedding[$i] >= 0 THEN ${1L << (i - 1)} ELSE 0 END)")
         .mkString(" + ")
@@ -221,7 +190,7 @@ object QueriesBeyond {
         .select(col("lang"), TextAnalysis.langGuess(col("text")).as("guess"))
         .groupBy(col("lang"), col("guess")).agg(count(lit(1)).as("n"))
         .orderBy(col("lang"), col("guess")),
-    Some {
+    {
       val stopList = TextAnalysis.EnStopwords
         .map(w => s"t = '$w'").mkString(" OR ")
       s"""WITH scored AS (
@@ -246,20 +215,12 @@ object QueriesBeyond {
           (sum(col("q").cast("decimal(28,12)")).cast("double") /
             count(lit(1))).as("avg_score"))
         .orderBy(col("source")),
-    Some {
-      val stopList = TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH scored AS (
-        SELECT source,
-          LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-          (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-             / len(string_split(text, ' '))) * 0.3 +
-          (1.0 - LEAST(1.0, len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2 AS q
+    s"""WITH scored AS (
+        SELECT source, ${OracleSql.qualityScore} AS q
         FROM documents)
       SELECT source, COUNT(*) AS n_docs,
         CAST(SUM(CAST(q AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS avg_score
-      FROM scored GROUP BY 1 ORDER BY source"""
-    })
+      FROM scored GROUP BY 1 ORDER BY source""")
 
   /** Token statistics per language: whitespace tokens + BPE-ish regex
     * token runs; integer sums are exact, avg is exact-int / count. */
@@ -280,13 +241,13 @@ object QueriesBeyond {
         .orderBy(col("lang")),
     // CAST(SUM(...) AS BIGINT): DuckDB sums BIGINT into HUGEINT, which
     // pandas renders as float — the cast keeps the compared dtype integral.
-    Some("""SELECT lang, COUNT(*) AS docs,
+    """SELECT lang, COUNT(*) AS docs,
       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
       CAST(MIN(len(string_split(text, ' '))) AS BIGINT) AS min_tok,
       CAST(MAX(len(string_split(text, ' '))) AS BIGINT) AS max_tok,
       CAST(SUM(len(regexp_extract_all(text, '[a-z]+|[0-9]+'))) AS BIGINT) AS total_bpe,
       CAST(CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS DOUBLE) / COUNT(*) AS avg_tok
-      FROM documents GROUP BY 1 ORDER BY lang"""))
+      FROM documents GROUP BY 1 ORDER BY lang""")
 
   /** Document fingerprinting, winnowing-style: keep the 1/16 of shingle
     * hashes whose first hex digit is '0' (mod-p selection) — a stable
@@ -320,10 +281,10 @@ object QueriesBeyond {
           array_max(col("fps")).as("fp_max"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH $ShinglesSql,
+    s"""WITH ${OracleSql.shingles()},
       f AS (SELECT doc_id, md5(sh) AS h FROM sh WHERE substr(md5(sh), 1, 1) = '0')
       SELECT doc_id, COUNT(*) AS n_fp, MIN(h) AS fp_min, MAX(h) AS fp_max
-      FROM f GROUP BY 1 ORDER BY doc_id"""))
+      FROM f GROUP BY 1 ORDER BY doc_id""")
 
   /** §2.6 set operations: UNION(distinct) then EXCEPT. */
   private val q26 = Q(
@@ -337,12 +298,12 @@ object QueriesBeyond {
       val sup = Tables.supplier(s, dir).select(col("s_suppkey").as("id"))
       hi.union(sup).distinct().except(bld).orderBy(col("id"))
     },
-    Some("""SELECT id FROM (
+    """SELECT id FROM (
       (SELECT c_custkey AS id FROM customer WHERE c_acctbal > 5000
        UNION SELECT s_suppkey FROM supplier)
       EXCEPT
       SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING') t
-      ORDER BY id"""))
+      ORDER BY id""")
 
   /** Rollup (grouping-sets family) with explicit null ordering. */
   private val q27 = Q(
@@ -355,11 +316,11 @@ object QueriesBeyond {
           count(lit(1)).as("n"))
         .orderBy(col("l_returnflag").asc_nulls_first,
           col("l_linestatus").asc_nulls_first),
-    Some("""SELECT l_returnflag, l_linestatus,
+    """SELECT l_returnflag, l_linestatus,
       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
       COUNT(*) AS n
       FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""))
+      ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""")
 
   /** Binary payload metadata: opaque payload size + content hash. */
   private val q28 = Q(
@@ -369,8 +330,8 @@ object QueriesBeyond {
         .select(col("doc_id"), octet_length(col("text")).as("n_bytes"),
           md5(col("text")).as("h"))
         .orderBy(col("doc_id")),
-    Some("""SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS h
-      FROM documents ORDER BY doc_id"""))
+    """SELECT doc_id, octet_length(encode(text)) AS n_bytes, md5(text) AS h
+      FROM documents ORDER BY doc_id""")
 
   /** Edit-distance verification of the LSH candidates (q17's shared
     * band table): exact Levenshtein over candidate pairs only — the
@@ -387,17 +348,14 @@ object QueriesBeyond {
       Dedup.editVerifiedPairs(SharedLsh.candidatePairs(s, dir),
           Tables.documents(s, dir), "doc_id", "text")
         .orderBy(col("doc_a"), col("doc_b")),
-    Some(s"""WITH $ShinglesSql,
-      $MinhashBandsSql,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id)
+    s"""WITH ${OracleSql.lshPairs("cand")}
       SELECT doc_a, doc_b, levenshtein(ta.text, tb.text) AS dist,
         GREATEST(len(ta.text), len(tb.text)) AS max_len
       FROM cand JOIN documents ta ON doc_a = ta.doc_id
       JOIN documents tb ON doc_b = tb.doc_id
       WHERE levenshtein(ta.text, tb.text) * 4
         <= GREATEST(len(ta.text), len(tb.text))
-      ORDER BY doc_a, doc_b"""))
+      ORDER BY doc_a, doc_b""")
 
   /** Incremental LSH dedup (Dedup.incrementalCandidatePairs): docs
     * with doc_id % 10 == 0 arrive as a NEW crawl batch against the
@@ -417,12 +375,12 @@ object QueriesBeyond {
           banded.filter(col("doc_id") % 10 === 0), "doc_id")
         .orderBy(col("doc_a"), col("doc_b"))
     },
-    Some(s"""WITH $ShinglesSql,
-      $MinhashBandsSql
+    s"""WITH ${OracleSql.shingles()},
+      ${OracleSql.lshBands()}
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id
       WHERE a.doc_id % 10 = 0 OR b.doc_id % 10 = 0
-      ORDER BY doc_a, doc_b"""))
+      ORDER BY doc_a, doc_b""")
 
   /** BENCHMARK DECONTAMINATION SCREEN — near-dup (not just verbatim)
     * leakage of evaluation data into the training corpus, the screen
@@ -476,17 +434,15 @@ object QueriesBeyond {
           sum(col("n_bench_hits")).as("n_links"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH corpus AS (
+    s"""WITH corpus AS (
         SELECT doc_id, text FROM documents
         UNION ALL
         SELECT doc_id + 1000000000000,
           substr(text, 1, greatest(length(text)-40, 50))
         FROM documents WHERE doc_id % 13 = 0),
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM corpus, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      $MinhashBandsSql,
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+      ${OracleSql.shingles(rel = "corpus")},
+      ${OracleSql.lshBands()},
+      ${OracleSql.bandPairs("cand")},
       crs AS (SELECT doc_a AS train_id, doc_b AS bench_id FROM cand
         WHERE doc_a < 1000000000000 AND doc_b >= 1000000000000),
       cdocs AS (SELECT DISTINCT train_id AS doc_id FROM crs
@@ -507,7 +463,7 @@ object QueriesBeyond {
       SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_contaminated,
         CAST(SUM(n_bench_hits) AS BIGINT) AS n_links
       FROM per JOIN documents d ON d.doc_id = per.train_id
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1""")
 
   val list: Seq[Q] = Seq(
     q16, q17, q18, q19, q20, q21, q22, q23, q24, q25, q26, q27, q28, q82,

@@ -66,7 +66,7 @@ object QueriesDepth {
           coalesce(col("xi"), lit(0L)).as("exact_inter"))
         .orderBy(col("source_a"), col("source_b"))
     },
-    Some("""WITH sh AS (SELECT DISTINCT source, substr(text, i, 5) AS s
+    """WITH sh AS (SELECT DISTINCT source, substr(text, i, 5) AS s
         FROM documents,
           UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
       hh AS (SELECT DISTINCT source,
@@ -107,7 +107,7 @@ object QueriesDepth {
         CAST(est.kint * est.eu // 64 AS BIGINT) AS est_inter,
         CAST(COALESCE(ex.xi, 0) AS BIGINT) AS exact_inter
       FROM est LEFT JOIN ex ON ex.sa = est.sa AND ex.sb = est.sb
-      ORDER BY source_a, source_b"""))
+      ORDER BY source_a, source_b""")
 
   /** TRUE MULTI-FIELD BM25F (TrainPrep.bm25MultiFieldRank): ranking
     * over two genuinely distinct fields — a metadata field
@@ -127,7 +127,7 @@ object QueriesDepth {
           .withColumn("meta", concat_ws(" ", col("source"), col("lang"))),
         "doc_id", Seq(("meta", 4L), ("text", 1L)),
         Seq("src7", "scan", "window"), topK = 20),
-    Some("""WITH d AS (SELECT doc_id, source || ' ' || lang AS f0,
+    """WITH d AS (SELECT doc_id, source || ' ' || lang AS f0,
           text AS f1 FROM documents),
       t0 AS (SELECT doc_id, ts[CAST(i AS INT)] AS term
         FROM (SELECT doc_id, string_split(f0, ' ') AS ts FROM d),
@@ -164,7 +164,7 @@ object QueriesDepth {
         FROM m JOIN df USING (term) JOIN l USING (doc_id) CROSS JOIN st)
       SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(s) AS BIGINT) AS score_fp
       FROM sc GROUP BY 1
-      ORDER BY score_fp DESC, doc_id ASC LIMIT 20"""))
+      ORDER BY score_fp DESC, doc_id ASC LIMIT 20""")
 
   /** POWER-ITERATION PRINCIPAL COMPONENT of the embedding second-moment
     * matrix — the spectral member of the analytics family (PCA top
@@ -219,7 +219,7 @@ object QueriesDepth {
           col("mx").as("linf_w2"))
         .orderBy(col("i"))
     },
-    Some("""WITH g AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS i,
+    """WITH g AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS i,
           CAST(FLOOR(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000000)
             AS BIGINT) AS xg
         FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
@@ -240,7 +240,7 @@ object QueriesDepth {
       SELECT w2.i,
         CASE WHEN w < 0 THEN -((-w) // m2.st) ELSE w // m2.st END AS v2_fp,
         CAST(m2.mx AS BIGINT) AS linf_w2
-      FROM w2 CROSS JOIN m2 ORDER BY i"""))
+      FROM w2 CROSS JOIN m2 ORDER BY i""")
 
   /** DUPLICATE PROPENSITY BY LENGTH — exact-duplicate membership rate
     * per 100-char document-length bucket, in ppm: the curation
@@ -265,7 +265,7 @@ object QueriesDepth {
         .withColumn("dup_ppm", expr("n_dup_members * 1000000 div n_docs"))
         .orderBy(col("bucket"))
     },
-    Some("""WITH d AS (SELECT n_chars // 100 AS bucket,
+    """WITH d AS (SELECT n_chars // 100 AS bucket,
           COUNT(*) OVER (PARTITION BY md5(text)) AS grp
         FROM documents)
       SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -273,21 +273,7 @@ object QueriesDepth {
           AS n_dup_members,
         CAST(SUM(CASE WHEN grp > 1 THEN 1 ELSE 0 END) * 1000000
           // COUNT(*) AS BIGINT) AS dup_ppm
-      FROM d GROUP BY 1 ORDER BY bucket"""))
-
-  /** The q172-family LSH oracle chain (5-shingles → k=8 signature),
-    * shared verbatim by the round-7 calibration queries so the
-    * signature recipe cannot drift between them. `def` (not val) —
-    * object-init-order-immune per the recorded q144 gotcha. */
-  private def lshSigSql: String = {
-    val mins = (0 until 8)
-      .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-      .mkString(", ")
-    s"""sh5 AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents,
-          UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh5 GROUP BY doc_id)"""
-  }
+      FROM d GROUP BY 1 ORDER BY bucket""")
 
   private def matchesSql: String = (0 until 8)
     .map(j => s"(CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END)")
@@ -367,7 +353,8 @@ object QueriesDepth {
             .as("capture_ppm"))
         .orderBy(col("bands"))
     },
-    Some(s"""WITH $lshSigSql,
+    s"""WITH ${OracleSql.shingles()},
+      ${OracleSql.minhashSig()},
       b1 AS (SELECT doc_id,
           md5('0' || h0 || h1 || h2 || h3 || h4 || h5 || h6 || h7) AS bk
         FROM sig),
@@ -410,7 +397,7 @@ object QueriesDepth {
         CAST(CAST(n_captured AS HUGEINT) * 1000000
           // greatest(rn.n_ref, 1) AS BIGINT)
           AS capture_ppm
-      FROM rows0 CROSS JOIN rn ORDER BY bands"""))
+      FROM rows0 CROSS JOIN rn ORDER BY bands""")
 
   /** CONTENT-DEFINED CHUNKING vs fixed-width chunking — the storage-
     * dedup primitive (Rabin/FastCDC family): a chunk boundary falls
@@ -469,7 +456,7 @@ object QueriesDepth {
         .union(census(docs, "fixed64", fixedChunks))
         .orderBy(col("scheme"))
     },
-    Some("""WITH d AS (SELECT doc_id, text, CAST(length(text) AS BIGINT)
+    """WITH d AS (SELECT doc_id, text, CAST(length(text) AS BIGINT)
           AS n FROM documents WHERE length(text) >= 1),
       -- exact-HUGEINT degree-7 polynomial of the trailing 8 code
       -- points == CdcCutsExpr's per-step-mod Rabin rolling hash
@@ -508,7 +495,7 @@ object QueriesDepth {
           // n_chunks AS BIGINT)
           AS dup_ppm,
         CAST(total_len * 100 // n_chunks AS BIGINT) AS avg_len_x100
-      FROM cc ORDER BY scheme"""))
+      FROM cc ORDER BY scheme""")
 
   /** DEDUP MIXTURE SHIFT: per-source corpus share BEFORE vs AFTER
     * exact keep-first dedup, in ppm, with the signed delta — the
@@ -542,7 +529,7 @@ object QueriesDepth {
           col("share_after_ppm") - col("share_before_ppm"))
         .orderBy(col("source"))
     },
-    Some("""WITH d AS (SELECT source, doc_id, md5(text) AS h
+    """WITH d AS (SELECT source, doc_id, md5(text) AS h
         FROM documents),
       k AS (SELECT source, doc_id FROM (
           SELECT source, doc_id,
@@ -561,7 +548,7 @@ object QueriesDepth {
         CAST(n_after * 1000000 // tot_a AS BIGINT) AS share_after_ppm,
         CAST(n_after * 1000000 // tot_a
           - n_before * 1000000 // tot_b AS BIGINT) AS shift_ppm
-      FROM m CROSS JOIN tb CROSS JOIN ta ORDER BY source"""))
+      FROM m CROSS JOIN tb CROSS JOIN ta ORDER BY source""")
 
   /** SIMHASH HAMMING-DISTANCE HISTOGRAM over the LSH candidate pairs:
     * the threshold-calibration readout for q18's SimHash dedup — how
@@ -588,7 +575,7 @@ object QueriesDepth {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("hamming"))
     },
-    Some {
+    {
       def digit(p: Int) =
         s"(ascii(substr(h4,$p,1)) - CASE WHEN ascii(substr(h4,$p,1)) >= 97 THEN 87 ELSE 48 END)"
       val tok16 =
@@ -600,13 +587,7 @@ object QueriesDepth {
       val sim = (0 until 16)
         .map(i => s"(CASE WHEN s$i >= 0 THEN ${1L << i} ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH $lshSigSql,
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+      s"""WITH ${OracleSql.lshPairs("cand")},
       tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
         FROM documents),
       h AS (SELECT doc_id, substr(md5(tok), 1, 4) AS h4 FROM tok),
@@ -667,7 +648,7 @@ object QueriesDepth {
           KmvSketch.estimateNdv("m", k).as("est_ndv"))
         .orderBy(col("source"))
     },
-    Some("""WITH sh AS (SELECT DISTINCT source, substr(text, i, 5) AS s
+    """WITH sh AS (SELECT DISTINCT source, substr(text, i, 5) AS s
         FROM documents,
           UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
       hh AS (SELECT DISTINCT source,
@@ -682,7 +663,7 @@ object QueriesDepth {
         CASE WHEN fill < 64 THEN NULL ELSE kth END AS kth,
         CASE WHEN fill < 64 THEN fill
              ELSE 270582939648 // kth END AS est_ndv
-      FROM agg ORDER BY source"""))
+      FROM agg ORDER BY source""")
 
   /** LARGEST-REMAINDER MIXTURE QUOTAS: allocate an exact sample budget
     * of 1000 documents across sources proportionally to their corpus
@@ -718,7 +699,7 @@ object QueriesDepth {
             .as("quota"))
         .orderBy(col("source"))
     },
-    Some("""WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+    """WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
         FROM documents GROUP BY 1),
       t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM c),
       q AS (SELECT source, n_docs,
@@ -732,7 +713,7 @@ object QueriesDepth {
       SELECT source, n_docs,
         CAST(floor_q + CASE WHEN rk <= extra_total THEN 1 ELSE 0 END
           AS BIGINT) AS quota
-      FROM r ORDER BY source"""))
+      FROM r ORDER BY source""")
 
   /** CROSS-SPLIT SUBSTRING LEAKAGE CENSUS: how many exact 20-char
     * grams a NAIVE per-doc-id split (TrainPrep.splitOf on the doc's
@@ -797,7 +778,7 @@ object QueriesDepth {
           AS (eval_split, n_leaking_grams, n_eval_docs, n_train_docs)"""))
         .orderBy(col("eval_split"))
     },
-    Some("""WITH g AS (
+    """WITH g AS (
         SELECT DISTINCT doc_id, substr(text, CAST(i AS INT), 20) AS gram
         FROM documents,
           LATERAL (SELECT UNNEST(range(1, len(text) - 18)) AS i) t
@@ -838,7 +819,7 @@ object QueriesDepth {
       SELECT eval_split, CAST(n_leaking_grams AS BIGINT) AS n_leaking_grams,
         CAST(n_eval_docs AS BIGINT) AS n_eval_docs,
         CAST(n_train_docs AS BIGINT) AS n_train_docs
-      FROM rows0 ORDER BY eval_split"""))
+      FROM rows0 ORDER BY eval_split""")
 
   /** ROBUST LENGTH-OUTLIER CENSUS (median/MAD per source): exact
     * discrete median token count and median absolute deviation per
@@ -882,7 +863,7 @@ object QueriesDepth {
             .as("n_outliers"))
         .orderBy(col("source"))
     },
-    Some("""WITH lens AS (SELECT source, doc_id,
+    """WITH lens AS (SELECT source, doc_id,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS len
         FROM documents),
       med AS (SELECT source, len AS med FROM (
@@ -908,7 +889,7 @@ object QueriesDepth {
         CAST(SUM(CASE WHEN d.dev > 3 * a.mad THEN 1 ELSE 0 END)
           AS BIGINT) AS n_outliers
       FROM dev d JOIN mad a ON d.source = a.source
-      GROUP BY d.source ORDER BY d.source"""))
+      GROUP BY d.source ORDER BY d.source""")
 
   /** LABEL-CENTROID COSINE MATRIX — embedding-space separability of
     * the labeled clusters: per-label mean direction (cosine is scale-
@@ -952,7 +933,7 @@ object QueriesDepth {
               / (SQRT(naa) * SQRT(nbb))) AS BIGINT) END""").as("cos_fp"))
         .orderBy(col("label_a"), col("label_b"))
     },
-    Some("""WITH g AS (SELECT CAST(label AS BIGINT) AS label,
+    """WITH g AS (SELECT CAST(label AS BIGINT) AS label,
           CAST(i - 1 AS BIGINT) AS i,
           CAST(FLOOR(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000000)
             AS BIGINT) AS xg
@@ -972,7 +953,7 @@ object QueriesDepth {
         CASE WHEN naa = 0 OR nbb = 0 THEN 0
           ELSE CAST(FLOOR(1000000 * CAST(dot AS DOUBLE)
             / (SQRT(naa) * SQRT(nbb))) AS BIGINT) END AS cos_fp
-      FROM p ORDER BY label_a, label_b"""))
+      FROM p ORDER BY label_a, label_b""")
 
   /** BOILERPLATE REMOVAL REWRITE — the cleanup counterpart of q55's
     * detector, completing the detect→rewrite pairing the span family
@@ -1037,7 +1018,7 @@ object QueriesDepth {
             p => element_at(col("_t"), p)))).as("new_hash"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH d AS (SELECT doc_id,
+    """WITH d AS (SELECT doc_id,
           CASE WHEN doc_id % 7 = 0 THEN text ||
             ' all rights reserved contact site admin for removal'
           ELSE text END AS txt
@@ -1070,7 +1051,7 @@ object QueriesDepth {
       SELECT a.doc_id, nt.n_tokens, a.n_removed,
         COALESCE(rb.new_hash, md5('')) AS new_hash
       FROM aff a JOIN nt USING (doc_id) LEFT JOIN rb USING (doc_id)
-      ORDER BY doc_id"""))
+      ORDER BY doc_id""")
 
   /** HAPAX-RICHNESS CENSUS per source: distinct terms, hapax legomena
     * (terms occurring exactly once within the source), hapax share
@@ -1103,7 +1084,7 @@ object QueriesDepth {
             div n_tokens AS BIGINT)""").as("ttr_ppm"))
         .orderBy(col("source"))
     },
-    Some("""WITH t AS (SELECT source, ts[CAST(i AS INT)] AS tok
+    """WITH t AS (SELECT source, ts[CAST(i AS INT)] AS tok
         FROM (SELECT source, string_split(text, ' ') AS ts
           FROM documents), UNNEST(range(1, len(ts)+1)) AS u(i)),
       tf AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS tf
@@ -1118,7 +1099,7 @@ object QueriesDepth {
           AS hapax_ppm,
         CAST(CAST(n_distinct AS HUGEINT) * 1000000 // n_tokens AS BIGINT)
           AS ttr_ppm
-      FROM c ORDER BY source"""))
+      FROM c ORDER BY source""")
 
   /** NEAR-DUP CLUSTER COHESION CENSUS — how much of each connected
     * component's merge is backed by PAIRWISE evidence. CC-based dedup
@@ -1152,30 +1133,9 @@ object QueriesDepth {
         .agg(count(lit(1)).as("n_clusters"))
         .orderBy(col("cluster_size"), col("density_decile"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comp AS (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs")},
       ce AS (SELECT c.component, CAST(COUNT(*) AS BIGINT) AS e
         FROM pairs p JOIN comp c ON c.doc_id = p.doc_a GROUP BY 1),
       cn AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n
@@ -1185,40 +1145,7 @@ object QueriesDepth {
       SELECT n AS cluster_size,
         CAST(e * 2 * 10 // (n * (n - 1)) AS BIGINT) AS density_decile,
         CAST(COUNT(*) AS BIGINT) AS n_clusters
-      FROM per GROUP BY 1, 2 ORDER BY cluster_size, density_decile"""
-    })
-
-  /** The q108 k-means replay the silhouette/pruning oracles extend:
-    * ev (unnested doubles), c0 (seed centroids = vectors 0..3), d1/a1
-    * (round-1 fixed-point argmin), c1 (updated means). Declared as a
-    * def ABOVE its users (val-interpolation init-order gotcha). */
-  private def kmeansReplaySql: String =
-    """ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      c0 AS (SELECT vec_id AS cid, i, a AS m FROM ev WHERE vec_id < 4),
-      d1 AS (
-        SELECT e.vec_id, c.cid,
-          SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10) AS BIGINT)) AS d
-        FROM ev e JOIN c0 c ON e.i = c.i GROUP BY 1, 2),
-      a1 AS (
-        SELECT vec_id, cid FROM (
-          SELECT vec_id, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM d1) r WHERE rn = 1),
-      c1 AS (
-        SELECT a1.cid, e.i,
-          CAST(SUM(CAST(FLOOR(e.a * 1e12) AS BIGINT)) AS DOUBLE)
-            / 1e12 / COUNT(*) AS m
-        FROM ev e JOIN a1 ON e.vec_id = a1.vec_id GROUP BY 1, 2),
-      dall AS (
-        SELECT e.vec_id, c.cid,
-          SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10) AS BIGINT)) AS d
-        FROM ev e JOIN c1 c ON e.i = c.i GROUP BY 1, 2),
-      ranked AS (
-        SELECT vec_id, cid, d,
-          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM dall)"""
+      FROM per GROUP BY 1, 2 ORDER BY cluster_size, density_decile""")
 
   /** SIMPLIFIED SILHOUETTE census (centroid-based, on the fixed-point
     * SQUARED distances — a monotone transform of the classic
@@ -1273,7 +1200,7 @@ object QueriesDepth {
           expr("a_sum div n").as("mean_own_dist"))
         .orderBy(col("cluster"))
     },
-    Some(s"""WITH $kmeansReplaySql,
+    s"""WITH ${OracleSql.kmeansReplay},
       ab AS (
         SELECT o.vec_id, o.cid AS cluster, o.d AS a, r.d AS b,
           (r.d - o.d) * 1000 // greatest(r.d, 1) AS s
@@ -1284,7 +1211,7 @@ object QueriesDepth {
         CAST(SUM(s) // COUNT(*) AS BIGINT) AS mean_sil_permille,
         CAST(MIN(s) AS BIGINT) AS min_sil_permille,
         CAST(SUM(a) // COUNT(*) AS BIGINT) AS mean_own_dist
-      FROM ab GROUP BY 1 ORDER BY cluster"""))
+      FROM ab GROUP BY 1 ORDER BY cluster""")
 
   /** PROTOTYPICALITY PRUNING census (the k-means-distance data-pruning
     * rule of Sorscher et al., "Beyond neural scaling laws", NeurIPS
@@ -1333,7 +1260,7 @@ object QueriesDepth {
             .as("drift_ppm"))
         .orderBy(col("label"))
     },
-    Some(s"""WITH $kmeansReplaySql,
+    s"""WITH ${OracleSql.kmeansReplay},
       a2 AS (SELECT vec_id, cid, d FROM ranked WHERE rn = 1),
       pr AS (
         SELECT vec_id, cid, d,
@@ -1356,7 +1283,7 @@ object QueriesDepth {
         CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) * 1000000 // t.t_after
           - COUNT(*) * 1000000 // t.t_before AS BIGINT) AS drift_ppm
       FROM k CROSS JOIN t GROUP BY label, t.t_before, t.t_after
-      ORDER BY label"""))
+      ORDER BY label""")
 
   /** T5-STYLE SPAN CORRUPTION census: tokens partition into
     * consecutive 3-token groups; a group is masked iff
@@ -1411,7 +1338,7 @@ object QueriesDepth {
           col("fingerprint"))
         .orderBy(col("lang"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks
         FROM documents WHERE len(string_split(text, ' ')) >= 1),
       g AS (
@@ -1442,7 +1369,7 @@ object QueriesDepth {
         CAST(SUM(CASE WHEN masked THEN gtok ELSE 0 END) * 1000000
           // SUM(gtok) AS BIGINT) AS masked_ppm,
         CAST(SUM(fp) AS BIGINT) AS fingerprint
-      FROM f GROUP BY 1 ORDER BY lang"""))
+      FROM f GROUP BY 1 ORDER BY lang""")
 
   /** BUCKETED JOIN-SIZE ESTIMATION (the AGMS/sketch family readout an
     * optimizer needs before picking a join strategy): |A ⋈ B| on
@@ -1500,7 +1427,7 @@ object QueriesDepth {
             .as("overest_ppm"))
         .orderBy(col("buckets"))
     },
-    Some("""WITH a AS (SELECT CAST(l_orderkey AS BIGINT) AS k FROM lineitem),
+    """WITH a AS (SELECT CAST(l_orderkey AS BIGINT) AS k FROM lineitem),
       b AS (SELECT CAST(o_orderkey AS BIGINT) AS k FROM orders),
       ha AS (SELECT k, CAST(('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 8))
           AS BIGINT) AS h FROM a),
@@ -1528,7 +1455,7 @@ object QueriesDepth {
       SELECT e.buckets, e.est_rows, ex.exact_rows,
         (e.est_rows - ex.exact_rows) * 1000000 // ex.exact_rows
           AS overest_ppm
-      FROM est e CROSS JOIN ex ORDER BY buckets"""))
+      FROM est e CROSS JOIN ex ORDER BY buckets""")
 
   /** B-BIT MINWISE HASHING agreement census (Li & König, "b-bit
     * minwise hashing", WWW 2010: store only the lowest b bits of each
@@ -1569,17 +1496,11 @@ object QueriesDepth {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("matches_full"), col("matches_b8"))
     },
-    Some {
+    {
       val b8 = (0 until 8)
         .map(j => s"(CASE WHEN substr(a.h$j, 7, 2) = substr(b.h$j, 7, 2) THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH $lshSigSql,
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+      s"""WITH ${OracleSql.lshPairs("cand")},
       m AS (SELECT $matchesSql AS matches_full, $b8 AS matches_b8
         FROM cand c JOIN sig a ON a.doc_id = c.doc_a
                     JOIN sig b ON b.doc_id = c.doc_b)
@@ -1679,7 +1600,7 @@ object QueriesDepth {
           max(col("score")).as("max_score"))
         .orderBy(col("bucket"), col("label_hi"))
     },
-    Some {
+    {
       val stopList = graft.operators.TextAnalysis.EnStopwords
         .map(w => s"t = '$w'").mkString(" OR ")
       s"""WITH d0 AS (SELECT doc_id, string_split(text, ' ') AS t,
@@ -1767,7 +1688,7 @@ object QueriesDepth {
             div tot AS BIGINT)""").as("boost_ppm"))
         .orderBy(col("lang"))
     },
-    Some("""WITH lt AS (SELECT lang, COUNT(*) AS n_docs,
+    """WITH lt AS (SELECT lang, COUNT(*) AS n_docs,
           CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         FROM documents GROUP BY 1),
       sq AS (SELECT lang, n_docs, n_tokens,
@@ -1785,7 +1706,7 @@ object QueriesDepth {
           * 1000000 //
           CAST(CAST(n_tokens AS HUGEINT) * 1000000 // tot AS BIGINT)
           AS boost_ppm
-      FROM sq CROSS JOIN tot ORDER BY lang"""))
+      FROM sq CROSS JOIN tot ORDER BY lang""")
 
   /** MEMORIZATION-MASS CENSUS (Lee et al., "Deduplicating Training
     * Data Makes Language Models Better": the fraction of a document's
@@ -1837,7 +1758,7 @@ object QueriesDepth {
           sum(col("n_pos")).as("total_positions"))
         .orderBy(col("source"), col("decile"))
     },
-    Some("""WITH g AS (SELECT doc_id, substr(text, CAST(i AS INT), 20) AS gr
+    """WITH g AS (SELECT doc_id, substr(text, CAST(i AS INT), 20) AS gr
         FROM documents, UNNEST(range(1, length(text) - 18)) AS t(i)
         WHERE length(text) >= 20),
       dup AS (SELECT gr FROM (
@@ -1856,7 +1777,7 @@ object QueriesDepth {
         COUNT(*) AS n_docs,
         CAST(SUM(n_dup) AS BIGINT) AS dup_positions,
         CAST(SUM(n_pos) AS BIGINT) AS total_positions
-      FROM f GROUP BY 1, 2 ORDER BY source, decile"""))
+      FROM f GROUP BY 1, 2 ORDER BY source, decile""")
 
   /** SPEARMAN RANK CORRELATION between the quality score and the
     * repetition ratio, per language — the filter-redundancy audit a
@@ -1913,7 +1834,7 @@ object QueriesDepth {
             .as("rho_ppm"))
         .orderBy(col("lang"))
     },
-    Some {
+    {
       val stopList = graft.operators.TextAnalysis.EnStopwords
         .map(w => s"t = '$w'").mkString(" OR ")
       s"""WITH d AS (SELECT lang, doc_id, string_split(text, ' ') AS t,
@@ -1975,7 +1896,7 @@ object QueriesDepth {
           sum(col("fp32")).as("fingerprint"))
         .orderBy(col("shard"))
     },
-    Some("""WITH j AS (SELECT doc_id % 8 AS shard,
+    """WITH j AS (SELECT doc_id % 8 AS shard,
           to_json(struct_pack(doc_id := doc_id, lang := lang,
             text := text))::VARCHAR AS line
         FROM documents)
@@ -1983,7 +1904,7 @@ object QueriesDepth {
         CAST(SUM(length(line)) AS BIGINT) AS n_bytes,
         CAST(SUM(CAST(('0x' || substr(md5(line), 1, 8)) AS BIGINT))
           AS BIGINT) AS fingerprint
-      FROM j GROUP BY 1 ORDER BY shard"""))
+      FROM j GROUP BY 1 ORDER BY shard""")
 
   /** INCREMENTAL CONNECTED COMPONENTS — the clustering-stage
     * completion of the incremental family (q96 maintains the PAIR set
@@ -2012,32 +1933,10 @@ object QueriesDepth {
     // an incremental pipeline persists between batches)
     (s, dir) => SharedLsh.incrementalComponents(s, dir)
       .orderBy(col("doc_id")),
-    Some {
-      val mins = (0 until 8)
-        .map(j =>
-          s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node)
-      SELECT node AS doc_id, MIN(label) AS component
-      FROM walk GROUP BY 1 ORDER BY 1"""
-    })
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs")}
+      SELECT doc_id, component FROM comp ORDER BY 1""")
 
   /** SIMPSON DIVERSITY / EFFECTIVE VOCABULARY per source — the
     * second-moment companion to q198's hapax census (first moment:
@@ -2074,7 +1973,7 @@ object QueriesDepth {
             div sum_tf2 AS BIGINT)""").as("eff_vocab"))
         .orderBy(col("source"))
     },
-    Some("""WITH tf AS (SELECT source, tok, COUNT(*) AS tf FROM (
+    """WITH tf AS (SELECT source, tok, COUNT(*) AS tf FROM (
           SELECT source, unnest(string_split(text, ' ')) AS tok
           FROM documents)
         WHERE len(tok) > 0 GROUP BY 1, 2),
@@ -2087,7 +1986,7 @@ object QueriesDepth {
           (CAST(n_tokens AS HUGEINT) * n_tokens) AS BIGINT) AS simpson_ppm,
         CAST(CAST(n_tokens AS HUGEINT) * n_tokens // sum_tf2 AS BIGINT)
           AS eff_vocab
-      FROM ag ORDER BY source"""))
+      FROM ag ORDER BY source""")
 
   /** NEAR-DUP COMPONENT-SIZE HISTOGRAM — the cluster-mass census a
     * dedup run reports before applying keep-one: how many components
@@ -2117,31 +2016,9 @@ object QueriesDepth {
           sum(col("sz") - 1L).as("n_removals"))
         .orderBy(col("size_bucket"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j =>
-          s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comp AS (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs")},
       sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS sz
         FROM comp GROUP BY 1)
       SELECT CASE WHEN sz <= 5 THEN CAST(sz AS VARCHAR)
@@ -2149,8 +2026,7 @@ object QueriesDepth {
         COUNT(*) AS n_components,
         CAST(SUM(sz) AS BIGINT) AS n_docs,
         CAST(SUM(sz - 1) AS BIGINT) AS n_removals
-      FROM sz GROUP BY 1 ORDER BY size_bucket"""
-    })
+      FROM sz GROUP BY 1 ORDER BY size_bucket""")
 
   /** DUPLICATE-PAIR SPACING IN THE TRAINING ORDER — the memorization
     * readout that joins the dedup family to the loader-order family
@@ -2200,13 +2076,7 @@ object QueriesDepth {
             .as("avg_gap_ppm"))
         .orderBy(col("decile"))
     },
-    Some(s"""WITH $lshSigSql,
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+    s"""WITH ${OracleSql.lshPairs("cand")},
       r AS (SELECT doc_id, ROW_NUMBER() OVER (
           ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rk FROM documents),
       t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
@@ -2219,7 +2089,7 @@ object QueriesDepth {
         CAST(COUNT(*) AS BIGINT) AS n_pairs,
         CAST(CAST(SUM(dist) AS HUGEINT) * 1000000
           // (CAST(MAX(n) AS HUGEINT) * COUNT(*)) AS BIGINT) AS avg_gap_ppm
-      FROM d GROUP BY 1 ORDER BY decile"""))
+      FROM d GROUP BY 1 ORDER BY decile""")
 
   /** WINNOWING vs MINHASH-LSH AS A DEDUP SCREEN — the calibration
     * query for q223's fingerprints (the q172/q187/q160 family): pairs
@@ -2268,35 +2138,9 @@ object QueriesDepth {
             div greatest(n_lsh_pairs, 1L) AS BIGINT)""")
             .as("lsh_capture_ppm"))
     },
-    Some(s"""WITH $lshSigSql,
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      lp AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      ts AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, j, MIN(h) AS fp FROM win GROUP BY 1, 2),
-      fd AS (SELECT DISTINCT doc_id, fp FROM sel),
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.operators.Dedup.WinnowDfCap}),
-      cap AS (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
-      wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+    s"""WITH ${OracleSql.lshPairs("lp")},
+      ${OracleSql.winnowFd()},
+      ${OracleSql.winnowPairs()},
       j AS (SELECT COALESCE(wp.doc_a, lp.doc_a) AS doc_a,
           CASE WHEN wp.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_w,
           CASE WHEN lp.doc_a IS NOT NULL THEN 1 ELSE 0 END AS in_l
@@ -2312,7 +2156,7 @@ object QueriesDepth {
         CAST(CAST(SUM(in_w * in_l) AS HUGEINT) * 1000000
           // greatest(CAST(SUM(in_l) AS BIGINT), 1) AS BIGINT)
           AS lsh_capture_ppm
-      FROM j"""))
+      FROM j""")
 
   /** INCREMENTAL WINNOWED-FINGERPRINT SCREEN — the continuous-crawl
     * contract applied to q226's screen (the q96/q173/q191/q212
@@ -2376,29 +2220,8 @@ object QueriesDepth {
           col("n_dh_pairs"), col("n_dd_pairs"),
           col("n_delta_docs_paired"))
     },
-    Some(s"""WITH ts AS (SELECT doc_id, string_split(text, ' ') AS ts
-        FROM documents),
-      g AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, j, MIN(h) AS fp FROM win GROUP BY 1, 2),
-      fd AS (SELECT DISTINCT doc_id, fp FROM sel),
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.operators.Dedup.WinnowDfCap}),
-      cap AS (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
-      wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+    s"""WITH ${OracleSql.winnowFd()},
+      ${OracleSql.winnowPairs()},
       dp AS (SELECT doc_a, doc_b,
           CASE WHEN doc_a % 10 = 0 THEN 1 ELSE 0 END AS da,
           CASE WHEN doc_b % 10 = 0 THEN 1 ELSE 0 END AS db
@@ -2417,7 +2240,7 @@ object QueriesDepth {
         UNION SELECT doc_b AS d FROM dt WHERE db = 1))
       SELECT n_delta_docs, n_new_pairs, n_dh_pairs, n_dd_pairs,
         n_delta_docs_paired
-      FROM ag CROSS JOIN nd CROSS JOIN pd"""))
+      FROM ag CROSS JOIN nd CROSS JOIN pd""")
 
   val list: Seq[Q] = Seq(q181, q183, q184, q185, q187, q188, q189, q190,
     q191, q192, q193, q194, q195, q196, q197, q198, q200, q201, q202,

@@ -33,13 +33,13 @@ object QueriesMore {
         .withColumn("rnk", col("rnk").cast("long"))
         .orderBy(col("user_id"), col("event_id"))
     },
-    Some("""SELECT user_id, event_id, value,
+    """SELECT user_id, event_id, value,
       LAG(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value,
       CAST(RANK() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS BIGINT) AS rnk,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
         PARTITION BY user_id ORDER BY ts, event_id
         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running
-      FROM events ORDER BY user_id, event_id"""))
+      FROM events ORDER BY user_id, event_id""")
 
   /** Gap-based sessionization (30-min inactivity): lag → new-session flag
     * → running sum = session id → per-session stats. The batch shape of
@@ -58,7 +58,7 @@ object QueriesMore {
         .agg(count(lit(1)).as("n_events"),
           (max(col("ms")) - min(col("ms"))).as("dur_ms"))
         .orderBy(col("user_id"), col("session_id")),
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events),
       f AS (
         SELECT user_id, event_id, ms,
@@ -74,7 +74,7 @@ object QueriesMore {
         FROM f)
       SELECT user_id, session_id, COUNT(*) AS n_events,
              MAX(ms) - MIN(ms) AS dur_ms
-      FROM sess GROUP BY 1, 2 ORDER BY user_id, session_id"""))
+      FROM sess GROUP BY 1, 2 ORDER BY user_id, session_id""")
 
   /** Exact distinct aggregation (expand-based in Spark: one extra shuffle
     * for the distinct set — the exact-answer counterpart of q35's HLL). */
@@ -86,8 +86,8 @@ object QueriesMore {
         .agg(countDistinct(col("user_id")).as("users"),
           count(lit(1)).as("n"))
         .orderBy(col("event_type")),
-    Some("""SELECT event_type, COUNT(DISTINCT user_id) AS users, COUNT(*) AS n
-      FROM events GROUP BY 1 ORDER BY 1"""))
+    """SELECT event_type, COUNT(DISTINCT user_id) AS users, COUNT(*) AS n
+      FROM events GROUP BY 1 ORDER BY 1""")
 
   /** Scalar subquery: orders above the (decimal-exact) global average —
     * in Spark a broadcast cross join of a 1-row aggregate, no collect. */
@@ -104,11 +104,11 @@ object QueriesMore {
         .agg(count(lit(1)).as("n"))
         .orderBy(col("o_orderstatus"))
     },
-    Some("""SELECT o_orderstatus, COUNT(*) AS n FROM orders
+    """SELECT o_orderstatus, COUNT(*) AS n FROM orders
       WHERE o_totalprice > (
         SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
         FROM orders)
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1""")
 
   /** Semi-structured field extraction from the JSON-ish props column
     * (regex-based so the oracle needs no JSON extension; Spark users
@@ -123,12 +123,12 @@ object QueriesMore {
         .groupBy((col("k") % 10).as("k_bucket"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
         .orderBy(col("k_bucket")),
-    Some("""SELECT CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT) % 10 AS k_bucket,
+    """SELECT CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT) % 10 AS k_bucket,
       COUNT(*) AS n,
       CAST(SUM(CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS BIGINT)) AS BIGINT) AS sum_k
       FROM events
       WHERE regexp_extract(props, '"k": ([0-9]+)', 1) <> ''
-      GROUP BY 1 ORDER BY 1"""))
+      GROUP BY 1 ORDER BY 1""")
 
   /** Embedding-cosine near-dup candidates: sign-LSH bucket equi-join
     * (the scale path — no cross join anywhere), cheap double-kernel
@@ -144,85 +144,34 @@ object QueriesMore {
         .cosineNearDupPairs(Tables.embeddings(s, dir), bits = 8,
           threshold = 0.3)
         .orderBy(col("va"), col("vb")),
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      meta AS (
-        SELECT vec_id,
-          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END) +
-          (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END) +
-          (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END) +
-          (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END) +
-          (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END) +
-          (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END) +
-          (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END) +
-          (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END) AS b
-        FROM embeddings),
-      norms AS (
-        SELECT vec_id, SQRT(CAST(SUM(CAST(x*x AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
-      cand AS (
-        SELECT ma.vec_id AS va, mb.vec_id AS vb
-        FROM meta ma JOIN meta mb ON ma.b = mb.b AND ma.vec_id < mb.vec_id),
-      dots AS (
-        SELECT c.va, c.vb,
-          CAST(SUM(CAST(ea.x * eb.x AS DECIMAL(18,16))) AS DOUBLE) AS dot
-        FROM cand c
-        JOIN ev ea ON ea.vec_id = c.va
-        JOIN ev eb ON eb.vec_id = c.vb AND eb.i = ea.i
-        GROUP BY 1, 2)
-      SELECT va, vb FROM dots
-      JOIN norms na ON na.vec_id = va
-      JOIN norms nb ON nb.vec_id = vb
-      WHERE dot / (na.nrm * nb.nrm) >= 0.3
-      ORDER BY va, vb"""))
+    s"""WITH ${OracleSql.cosineNearPairs}
+      SELECT doc_a AS va, doc_b AS vb FROM pairs
+      ORDER BY va, vb""")
 
-  /** Per-type summary — users NDV + median of value — in two regimes
-    * (the q73/profileApprox pattern). `exact = true` is the ORACLED
-    * registered query: exact COUNT(DISTINCT) plus the q39 discrete
-    * lower-median kernel (rank filter — no interpolation-formula
-    * divergence between engines). `exact = false` is the production
-    * sketch variant [[sketchApprox]]: HLL (rsd 2%) + percentile_approx
-    * in ONE hash aggregate — no Expand, no Window, the shape that
-    * holds at 100 TB (per-group exact medians serialize on the group
-    * count; sketches don't). PlanShapeSpec pins the approx plan;
-    * SketchTwinSpec bounds its estimates against this exact twin. */
-  private[graft] def sketchSummary(s: SparkSession, dir: String,
-                                   exact: Boolean): DataFrame = {
+  /** Per-type summary — users NDV + median of value: exact
+    * COUNT(DISTINCT) plus the q39 discrete lower-median kernel (rank
+    * filter — no interpolation-formula divergence between engines). */
+  private[graft] def sketchSummary(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("event_type"), col("user_id"), col("value"),
         col("event_id"))
-    if (exact) {
-      val ndv = ev.groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("users"))
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("value"), col("event_id"))
-      val med = ev
-        .withColumn("rn", row_number().over(w))
-        .withColumn("cnt", count(lit(1)).over(
-          Window.partitionBy(col("event_type"))))
-        .filter(col("rn") === floor((col("cnt") + 1) / 2).cast("int"))
-        .select(col("event_type"), col("value").as("median_lo"))
-      ndv.join(med, "event_type").orderBy(col("event_type"))
-    } else
-      ev.groupBy(col("event_type"))
-        .agg(
-          approx_count_distinct(col("user_id"), 0.02).as("users"),
-          percentile_approx(col("value"), lit(0.5), lit(1000))
-            .as("median_lo"))
-        .orderBy(col("event_type"))
+    val ndv = ev.groupBy(col("event_type"))
+      .agg(countDistinct(col("user_id")).as("users"))
+    val w = Window.partitionBy(col("event_type"))
+      .orderBy(col("value"), col("event_id"))
+    val med = ev
+      .withColumn("rn", row_number().over(w))
+      .withColumn("cnt", count(lit(1)).over(
+        Window.partitionBy(col("event_type"))))
+      .filter(col("rn") === floor((col("cnt") + 1) / 2).cast("int"))
+      .select(col("event_type"), col("value").as("median_lo"))
+    ndv.join(med, "event_type").orderBy(col("event_type"))
   }
-
-  /** Production sketch summary: engine-specific estimates, so no SQL
-    * oracle exists BY CONSTRUCTION — q35 is the exact twin whose hash
-    * match anchors the shared scan/grouping skeleton. */
-  private[graft] def sketchApprox(s: SparkSession, dir: String): DataFrame =
-    sketchSummary(s, dir, exact = false)
 
   private val q35 = Q(
     "q35_sketch_exact_twin",
-    (s, dir) => sketchSummary(s, dir, exact = true),
-    Some("""WITH med AS (
+    (s, dir) => sketchSummary(s, dir),
+    """WITH med AS (
         SELECT event_type, value AS median_lo FROM (
           SELECT event_type, value,
             ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
@@ -234,7 +183,7 @@ object QueriesMore {
         FROM events GROUP BY 1)
       SELECT ndv.event_type, users, median_lo
       FROM ndv JOIN med USING (event_type)
-      ORDER BY event_type"""))
+      ORDER BY event_type""")
 
   /** Salted two-stage aggregation — identical results to a plain groupBy
     * (which is exactly what the oracle runs); only the shuffle layout
@@ -245,9 +194,9 @@ object QueriesMore {
       Skew.saltedCountSum(Tables.events(s, dir), "event_type", "value",
           saltBy = "event_id", salts = 16)
         .orderBy(col("event_type")),
-    Some("""SELECT event_type, COUNT(*) AS n,
+    """SELECT event_type, COUNT(*) AS n,
       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1 ORDER BY 1"""))
+      FROM events GROUP BY 1 ORDER BY 1""")
 
   /** As-of join: each event picks up the latest order of the same
     * customer at-or-before the event time (point-in-time feature lookup).
@@ -273,13 +222,13 @@ object QueriesMore {
         .select(col("event_id"), col("user_id"), col("o_orderkey"))
         .orderBy(col("event_id"))
     },
-    Some("""WITH o AS (
+    """WITH o AS (
         SELECT o_custkey, o_orderdate, MAX(o_orderkey) AS o_orderkey
         FROM orders GROUP BY 1, 2)
       SELECT event_id, user_id, o.o_orderkey AS o_orderkey
       FROM events ASOF LEFT JOIN o
         ON events.user_id = o.o_custkey AND events.ts >= o.o_orderdate
-      ORDER BY event_id"""))
+      ORDER BY event_id""")
 
   /** URL canonicalization — the web-corpus dedup-key normalizer: strip
     * tracking params, lowercase host, drop trailing slash, then count
@@ -304,7 +253,7 @@ object QueriesMore {
         .groupBy(col("canon")).agg(count(lit(1)).as("n"))
         .orderBy(col("canon"))
     },
-    Some("""WITH urls AS (
+    """WITH urls AS (
         SELECT 'https://WWW.' || upper(source) || '.Example.com/p/' ||
                CAST(doc_id % 7 AS VARCHAR) || '/?utm_source=feed&id=' ||
                CAST(doc_id AS VARCHAR) || '&utm_campaign=x' AS url
@@ -316,7 +265,7 @@ object QueriesMore {
                  '/$', ''),
                '^www\.', '') AS canon,
              COUNT(*) AS n
-      FROM urls GROUP BY 1 ORDER BY canon"""))
+      FROM urls GROUP BY 1 ORDER BY canon""")
 
   /** Discrete (lower) median per group via exact rank-filter —
     * deterministic exact quantile without interpolation-formula
@@ -342,12 +291,12 @@ object QueriesMore {
         .select(col("event_type"), col("value").as("median_lo"))
         .orderBy(col("event_type"))
     },
-    Some("""SELECT event_type, value AS median_lo FROM (
+    """SELECT event_type, value AS median_lo FROM (
         SELECT event_type, value,
           ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
           COUNT(*) OVER (PARTITION BY event_type) AS cnt
         FROM events) t
-      WHERE rn = CAST(FLOOR((cnt + 1) / 2) AS INT) ORDER BY event_type"""))
+      WHERE rn = CAST(FLOOR((cnt + 1) / 2) AS INT) ORDER BY event_type""")
 
   /** Dedup clusters: LSH candidate pairs → connected components (min
     * member id = canonical keeper). Oracle: recursive-CTE reachability
@@ -361,31 +310,10 @@ object QueriesMore {
       // band table + component map shared with q17/q44 via SharedLsh
       SharedLsh.components(s, dir)
         .orderBy(col("doc_id")),
-    Some {
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node)
-      SELECT node AS doc_id, MIN(label) AS component
-      FROM walk GROUP BY 1 ORDER BY 1"""
-    })
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs")}
+      SELECT doc_id, component FROM comp ORDER BY 1""")
 
   /** Deterministic train/val/test split for training corpora:
     * assignment = md5(id) bucket, so the split is reproducible across
@@ -404,14 +332,14 @@ object QueriesMore {
         .groupBy(col("split"), col("lang")).agg(count(lit(1)).as("n"))
         .orderBy(col("split"), col("lang"))
     },
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT CASE substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1)
           WHEN 'd' THEN 'val'
           WHEN 'e' THEN 'test' WHEN 'f' THEN 'test'
           ELSE 'train' END AS split, lang
         FROM documents)
       SELECT split, lang, COUNT(*) AS n FROM t
-      GROUP BY 1, 2 ORDER BY split, lang"""))
+      GROUP BY 1, 2 ORDER BY split, lang""")
 
   /** Label-balance audit over the embedding table (class skew is the
     * first thing a training pipeline checks): counts + exact share. */
@@ -425,9 +353,9 @@ object QueriesMore {
           col("n").cast("double") /
             sum(col("n")).over(Window.partitionBy()))
         .orderBy(col("label")),
-    Some("""SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n,
+    """SELECT CAST(label AS BIGINT) AS label, COUNT(*) AS n,
       CAST(COUNT(*) AS DOUBLE) / SUM(COUNT(*)) OVER () AS share
-      FROM embeddings GROUP BY 1 ORDER BY 1"""))
+      FROM embeddings GROUP BY 1 ORDER BY 1""")
 
   /** PII scrubbing — redact emails and IPv4s from text before training
     * (synthesized PII over driver data so the redaction paths execute).
@@ -455,7 +383,7 @@ object QueriesMore {
             .as("n_ip_redacted"))
         .orderBy(col("doc_id")).limit(500)
     },
-    Some("""WITH dirty AS (
+    """WITH dirty AS (
         SELECT doc_id,
           text || ' contact: u' || CAST(doc_id AS VARCHAR) ||
           '@example.com from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7' AS dirty
@@ -471,7 +399,7 @@ object QueriesMore {
       SELECT doc_id, n_email, n_ip,
         CAST(len(regexp_extract_all(clean, '<EMAIL>')) AS BIGINT) AS n_email_redacted,
         CAST(len(regexp_extract_all(clean, '<IP>')) AS BIGINT) AS n_ip_redacted
-      FROM scrub ORDER BY doc_id LIMIT 500"""))
+      FROM scrub ORDER BY doc_id LIMIT 500""")
 
   /** Corpus curation endgame: LSH pairs → components → keep only each
     * cluster's canonical doc (min id) → retention stats per lang. The
@@ -492,38 +420,16 @@ object QueriesMore {
           count(when(!col("keep"), 1)).as("dropped"))
         .orderBy(col("lang"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS (SELECT node AS doc_id, MIN(label) AS component
-                FROM walk GROUP BY 1)
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs", "comps")}
       SELECT d.lang, COUNT(*) AS docs,
         COUNT(CASE WHEN c.component IS NULL OR c.component = d.doc_id
               THEN 1 END) AS kept,
         COUNT(CASE WHEN c.component IS NOT NULL AND c.component <> d.doc_id
               THEN 1 END) AS dropped
       FROM documents d LEFT JOIN comps c ON d.doc_id = c.doc_id
-      GROUP BY 1 ORDER BY d.lang"""
-    })
+      GROUP BY 1 ORDER BY d.lang""")
 
   /** Fixed-width histogram — the data-profiling primitive (distribution
     * shape before training). Bin ids via floor division; empty bins
@@ -539,10 +445,10 @@ object QueriesMore {
     // CAST(... AS DOUBLE) on lo: DuckDB's 25.0 literal is DECIMAL(3,1),
     // so BIGINT * 25.0 would come back as DECIMAL, not the double Spark
     // produces from long * 25.0
-    Some("""SELECT CAST(FLOOR(value / 25.0) AS BIGINT) AS bin,
+    """SELECT CAST(FLOOR(value / 25.0) AS BIGINT) AS bin,
       COUNT(*) AS n,
       CAST(CAST(FLOOR(value / 25.0) AS BIGINT) * 25.0 AS DOUBLE) AS lo
-      FROM events GROUP BY 1 ORDER BY bin"""))
+      FROM events GROUP BY 1 ORDER BY bin""")
 
   /** Pivot (wide aggregation): day × event_type count matrix. The value
     * list is EXPLICIT — inferred pivot values cost an extra distinct
@@ -558,13 +464,13 @@ object QueriesMore {
         .agg(count(lit(1)))
         .na.fill(0L)
         .orderBy(col("day")),
-    Some("""SELECT strftime(ts, '%Y-%m-%d') AS day,
+    """SELECT strftime(ts, '%Y-%m-%d') AS day,
       COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
       COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error,
       COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
       COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
       COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view
-      FROM events GROUP BY 1 ORDER BY day"""))
+      FROM events GROUP BY 1 ORDER BY day""")
 
   /** IVF coarse-quantizer assignment census — the oracle check for the
     * ANN scale path (operators/Similarity.assignL2Decimal): stride-picked
@@ -580,9 +486,7 @@ object QueriesMore {
         .groupBy(col("cid"))
         .agg(count(lit(1)).as("n"), min(col("id")).as("min_vec"))
         .orderBy(col("cid")),
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows("x")},
       cents AS (
         SELECT CAST(vec_id // 97 AS BIGINT) AS cid, vec_id AS cvid
         FROM embeddings WHERE vec_id % 97 = 0),
@@ -602,7 +506,7 @@ object QueriesMore {
           FROM d) t
         WHERE rk = 1)
       SELECT cid, COUNT(*) AS n, MIN(vec_id) AS min_vec
-      FROM best GROUP BY 1 ORDER BY cid"""))
+      FROM best GROUP BY 1 ORDER BY cid""")
 
   /** IVF probed-cell search — completes the IVF oracle story (q47 =
     * assignment; q48 = search over the inverted file): 4 query vectors
@@ -620,9 +524,7 @@ object QueriesMore {
         .withColumn("rnk", col("rnk").cast("long"))
         .orderBy(col("q_id"), col("rnk"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows("x")},
       cents AS (
         SELECT CAST(vec_id // 97 AS BIGINT) AS cid, vec_id AS cvid
         FROM embeddings WHERE vec_id % 97 = 0),
@@ -662,7 +564,7 @@ object QueriesMore {
         SELECT q_id, vec_id,
           ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY d2 ASC, vec_id ASC) AS rnk
         FROM cd) t
-      WHERE rnk <= 3 ORDER BY q_id, rnk"""))
+      WHERE rnk <= 3 ORDER BY q_id, rnk""")
 
   /** Log anonymization census — oracle check for BOTH anonymizer modes
     * (operators/Anonymize): dense two-pass aliases (zipWithIndex over
@@ -680,7 +582,7 @@ object QueriesMore {
         .agg(count(lit(1)).as("n"), min(col("doc_id")).as("min_doc"))
         .orderBy(col("source"), col("lang"))
     },
-    Some("""WITH mapping AS (
+    """WITH mapping AS (
         SELECT orig, 'src_' || CAST(ROW_NUMBER() OVER (ORDER BY orig) AS VARCHAR) AS alias
         FROM (SELECT DISTINCT source AS orig FROM documents) t),
       aliased AS (
@@ -689,7 +591,7 @@ object QueriesMore {
                d.doc_id
         FROM documents d JOIN mapping m ON d.source = m.orig)
       SELECT source, lang, COUNT(*) AS n, MIN(doc_id) AS min_doc
-      FROM aliased GROUP BY 1, 2 ORDER BY source, lang"""))
+      FROM aliased GROUP BY 1, 2 ORDER BY source, lang""")
 
   /** Train/test contamination check — the leakage audit every benchmark
     * pipeline needs: reproducible split assignment (q41's md5 buckets) ×
@@ -713,7 +615,7 @@ object QueriesMore {
           count(when(col("ns") >= 2, 1)).as("contaminated"))
         .orderBy(col("split"))
     },
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT CASE substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1)
           WHEN 'd' THEN 'val'
           WHEN 'e' THEN 'test' WHEN 'f' THEN 'test'
@@ -723,7 +625,7 @@ object QueriesMore {
       SELECT split, COUNT(*) AS docs,
         COUNT(CASE WHEN ns >= 2 THEN 1 END) AS contaminated
       FROM t JOIN spread USING (ch)
-      GROUP BY 1 ORDER BY split"""))
+      GROUP BY 1 ORDER BY split""")
 
   /** Repeated-bigram ratio census — the repetition quality signal
     * (duplicated-n-gram filters in large-corpus curation). A tenth of
@@ -745,7 +647,7 @@ object QueriesMore {
           count(when(col("rep") > 0.1, 1)).as("flagged"))
         .orderBy(col("lang"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT lang,
           CASE WHEN doc_id % 10 = 0 THEN text || ' ' || text
                ELSE text END AS txt
@@ -763,7 +665,7 @@ object QueriesMore {
       SELECT lang, COUNT(*) AS docs,
         CAST(SUM(CAST(rep AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS avg_rep,
         COUNT(CASE WHEN rep > 0.1 THEN 1 END) AS flagged
-      FROM rep GROUP BY 1 ORDER BY lang"""))
+      FROM rep GROUP BY 1 ORDER BY lang""")
 
   /** Salted skew JOIN (operators/Skew.saltedJoin) — the join-side
     * counterpart of q36's salted aggregation: large side salted by
@@ -784,10 +686,10 @@ object QueriesMore {
             .as("sum_price"))
         .orderBy(col("c_mktsegment"), col("o_orderstatus"))
     },
-    Some("""SELECT c_mktsegment, o_orderstatus, COUNT(*) AS n,
+    """SELECT c_mktsegment, o_orderstatus, COUNT(*) AS n,
       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       FROM orders JOIN customer ON o_custkey = c_custkey
-      GROUP BY 1, 2 ORDER BY 1, 2"""))
+      GROUP BY 1, 2 ORDER BY 1, 2""")
 
   /** Reproducible stratified sampling — data-mixing for training runs:
     * per-stratum keep rates via md5 buckets (en 8/16, others 4/16), so
@@ -809,7 +711,7 @@ object QueriesMore {
           count(when(col("keep"), 1)).as("sampled"))
         .orderBy(col("lang"))
     },
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT lang,
           CASE WHEN lang = 'en'
                THEN substr(md5('samp:' || CAST(doc_id AS VARCHAR)), 1, 1)
@@ -819,7 +721,7 @@ object QueriesMore {
         FROM documents)
       SELECT lang, COUNT(*) AS docs,
         COUNT(CASE WHEN keep THEN 1 END) AS sampled
-      FROM t GROUP BY 1 ORDER BY lang"""))
+      FROM t GROUP BY 1 ORDER BY lang""")
 
   /** int8 embedding quantization census (operators/Quantize): per-dim
     * min/max stats (64-row broadcast) + narrow encode, then per-dim
@@ -845,7 +747,7 @@ object QueriesMore {
         .orderBy(col("d"))
         .filter(col("d") <= 16)
     },
-    Some("""WITH ev AS (
+    """WITH ev AS (
         SELECT vec_id AS id, i AS d, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
         FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
       stats AS (SELECT d, MIN(x) AS mn, MAX(x) AS mx FROM ev GROUP BY 1),
@@ -860,7 +762,7 @@ object QueriesMore {
         MIN(code) AS min_code, MAX(code) AS max_code,
         COUNT(CASE WHEN code = 0 OR code = 255 THEN 1 END) AS edge_hits
       FROM codes WHERE d <= 16
-      GROUP BY 1 ORDER BY d"""))
+      GROUP BY 1 ORDER BY d""")
 
   /** MINHASH ESTIMATOR CALIBRATION over the LSH candidate pairs: for
     * every banded candidate, the 8-component signature agreement
@@ -941,23 +843,11 @@ object QueriesMore {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("matches"), col("decile"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
+    {
       val matches = (0 until 8)
         .map(j => s"(CASE WHEN a.h$j = b.h$j THEN 1 ELSE 0 END)")
         .mkString(" + ")
-      s"""WITH sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
+      s"""WITH ${OracleSql.lshPairs("cand")},
       est AS (SELECT c.doc_a, c.doc_b, $matches AS matches
         FROM cand c JOIN sig a ON a.doc_id = c.doc_a
                     JOIN sig b ON b.doc_id = c.doc_b),
@@ -1019,40 +909,11 @@ object QueriesMore {
             .as("first_policy_score"))
         .orderBy(col("lang"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      val stopList = graft.operators.TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS (SELECT node AS doc_id, MIN(label) AS component
-                FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs", "comps")},
       scored AS (SELECT doc_id, lang,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) AS score_fp
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp
         FROM documents),
       cl AS (SELECT s.doc_id, s.lang, s.score_fp, c.component,
           s.score_fp * 10000000 + (9999999 - s.doc_id) AS packed
@@ -1066,8 +927,7 @@ object QueriesMore {
           AS quality_policy_score,
         CAST(SUM(CASE WHEN doc_id = component THEN score_fp ELSE 0 END)
           AS BIGINT) AS first_policy_score
-      FROM k GROUP BY 1 ORDER BY lang"""
-    })
+      FROM k GROUP BY 1 ORDER BY lang""")
 
   val list: Seq[Q] = Seq(q29, q30, q31, q32, q33, q34, q35, q36, q37,
     q38, q39, q40, q41, q42, q43, q44, q45, q46, q47, q48, q49, q50, q51,

@@ -48,7 +48,7 @@ object QueriesPipeline {
         .agg(count(lit(1)).as("docs"), count(col("flag")).as("flagged"))
         .orderBy(col("lang"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT doc_id, lang,
           CASE WHEN doc_id % 7 = 0
                THEN text || ' all rights reserved contact site admin for removal'
@@ -66,7 +66,7 @@ object QueriesPipeline {
                   WHERE g IN (SELECT g FROM boiler))
       SELECT lang, COUNT(*) AS docs, COUNT(f.doc_id) AS flagged
       FROM d LEFT JOIN flagged f USING (doc_id)
-      GROUP BY 1 ORDER BY lang"""))
+      GROUP BY 1 ORDER BY lang""")
 
   /** n-gram-level train/test decontamination — the GPT-3-appendix-style
     * leakage audit that exact-hash contamination (q50) misses: a train
@@ -99,7 +99,7 @@ object QueriesPipeline {
         .agg(count(lit(1)).as("train_docs"), count(col("hit")).as("contaminated"))
         .orderBy(col("lang"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT doc_id, lang,
           CASE substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 1)
             WHEN 'd' THEN 'val'
@@ -121,7 +121,7 @@ object QueriesPipeline {
       SELECT lang, COUNT(*) AS train_docs, COUNT(c.doc_id) AS contaminated
       FROM d LEFT JOIN cont c USING (doc_id)
       WHERE d.split = 'train'
-      GROUP BY 1 ORDER BY lang"""))
+      GROUP BY 1 ORDER BY lang""")
 
   /** Vocabulary head — corpus token-frequency statistics (the Zipf-head
     * audit run before tokenizer training): term frequency + document
@@ -139,11 +139,11 @@ object QueriesPipeline {
         .orderBy(col("tf").desc, col("tok").asc)
         .limit(20)
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok FROM documents)
       SELECT tok, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
       FROM toks GROUP BY 1
-      ORDER BY tf DESC, tok ASC LIMIT 20"""))
+      ORDER BY tf DESC, tok ASC LIMIT 20""")
 
   /** Sequence packing — concatenate-and-chop document packing into
     * fixed token-budget training sequences (budget 512): exclusive
@@ -167,7 +167,7 @@ object QueriesPipeline {
           max(col("tokens")).as("max_fill"), min(col("tokens")).as("min_fill"))
         .orderBy(col("source"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT source, doc_id, len(string_split(text, ' ')) AS tok
         FROM documents),
       p AS (SELECT source, doc_id, tok,
@@ -181,7 +181,7 @@ object QueriesPipeline {
             FROM p GROUP BY 1, 2)
       SELECT source, COUNT(*) AS seqs, CAST(SUM(docs) AS BIGINT) AS docs,
         MAX(tokens) AS max_fill, MIN(tokens) AS min_fill
-      FROM b GROUP BY 1 ORDER BY source"""))
+      FROM b GROUP BY 1 ORDER BY source""")
 
   /** TF-IDF keyword extraction per language — the class-keyword audit a
     * curation pipeline runs to sanity-check domain labels: term frequency
@@ -222,7 +222,7 @@ object QueriesPipeline {
         .select(col("lang"), col("rank"), col("tok"), col("tf"), col("df"))
         .orderBy(col("lang"), col("rank"))
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, lang, UNNEST(string_split(text, ' ')) AS tok
         FROM documents),
       perdoc AS (SELECT doc_id, lang, tok, COUNT(*) AS tfd
@@ -239,7 +239,7 @@ object QueriesPipeline {
           PARTITION BY lang ORDER BY score DESC, tok ASC) AS rank
         FROM scored)
       SELECT lang, rank, tok, tf, df FROM ranked
-      WHERE rank <= 5 ORDER BY lang, rank"""))
+      WHERE rank <= 5 ORDER BY lang, rank""")
 
   /** Chunk-level dedup — the line/paragraph-dedup family (the corpus has
     * no newlines, so the unit is the non-overlapping 20-word chunk): a
@@ -273,7 +273,7 @@ object QueriesPipeline {
           countDistinct(when(!col("keep"), col("doc_id"))).as("docs_hit"))
         .orderBy(col("lang"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT doc_id, lang,
           CASE WHEN doc_id % 5 = 0 THEN
             'lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod tempor incididunt ut labore et dolore magna aliqua yes'
@@ -295,7 +295,7 @@ object QueriesPipeline {
       SELECT lang, COUNT(*) AS chunks,
         COUNT(CASE WHEN keep THEN 1 END) AS kept,
         COUNT(DISTINCT CASE WHEN NOT keep THEN doc_id END) AS docs_hit
-      FROM k GROUP BY 1 ORDER BY lang"""))
+      FROM k GROUP BY 1 ORDER BY lang""")
 
   /** Unicode NFC normalization census — [[graft.plans.NfcNormalizeExpr]],
     * the codegen'd native expression (ASCII fast path, JDK Normalizer for
@@ -321,7 +321,7 @@ object QueriesPipeline {
             .as("delta_units"))
         .orderBy(col("lang"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT lang,
           CASE WHEN doc_id % 5 = 0
                THEN text || ' cafe' || chr(769) || ' nai' || chr(776) || 've'
@@ -331,7 +331,7 @@ object QueriesPipeline {
       SELECT lang, COUNT(*) AS docs,
         COUNT(CASE WHEN length(norm) <> length(txt) THEN 1 END) AS changed,
         CAST(SUM(length(txt) - length(norm)) AS BIGINT) AS delta_units
-      FROM n GROUP BY 1 ORDER BY lang"""))
+      FROM n GROUP BY 1 ORDER BY lang""")
 
   /** Quality-filter funnel — the staged Gopher/C4-style retention report:
     * four cumulative per-doc rules (length band → stopword density →
@@ -360,7 +360,7 @@ object QueriesPipeline {
           count(when(col("s4"), 1)).as("pass_all"))
         .orderBy(col("lang"))
     },
-    Some {
+    {
       val stopList = TextAnalysis.EnStopwords
         .map(w => s"t = '$w'").mkString(" OR ")
       s"""WITH d AS (
@@ -426,7 +426,7 @@ object QueriesPipeline {
         .agg(count(lit(1)).as("docs"), count(col("dup")).as("dups"))
         .orderBy(col("lang"))
     },
-    Some("""WITH hist AS (
+    """WITH hist AS (
         SELECT DISTINCT CASE WHEN doc_id % 30 = 0
           THEN 'shared corpus boilerplate body retained for dedup probe'
           ELSE text END AS txt
@@ -438,7 +438,7 @@ object QueriesPipeline {
         FROM documents WHERE doc_id % 3 <> 0)
       SELECT lang, COUNT(*) AS docs,
         COUNT(CASE WHEN txt IN (SELECT txt FROM hist) THEN 1 END) AS dups
-      FROM inc GROUP BY 1 ORDER BY lang"""))
+      FROM inc GROUP BY 1 ORDER BY lang""")
 
   /** CDC snapshot diff — [[graft.operators.SnapshotDiff]]: two simulated
     * snapshots of `orders` (prev drops keys %97=0 and bumps price on
@@ -466,7 +466,7 @@ object QueriesPipeline {
           max(col("o_orderkey")).as("max_key"))
         .orderBy(col("status"))
     },
-    Some("""WITH prev AS (
+    """WITH prev AS (
         SELECT o_orderkey AS k, o_custkey, o_orderstatus, o_orderpriority,
           CASE WHEN o_orderkey % 89 = 0 THEN o_totalprice + 1.0
                ELSE o_totalprice END AS o_totalprice
@@ -486,7 +486,7 @@ object QueriesPipeline {
                THEN 'changed' ELSE 'unchanged' END AS status
         FROM prev p FULL JOIN curr c ON p.k = c.k)
       SELECT status, COUNT(*) AS n, MIN(k) AS min_key, MAX(k) AS max_key
-      FROM d GROUP BY 1 ORDER BY status"""))
+      FROM d GROUP BY 1 ORDER BY status""")
 
   /** Heavy-hitters via the Misra–Gries sketch
     * ([[graft.operators.HeavyHitters]]) — q57's vocabulary head computed
@@ -507,10 +507,10 @@ object QueriesPipeline {
         .orderBy(col("est").desc, col("tok").asc)
         .limit(20)
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT UNNEST(string_split(text, ' ')) AS tok FROM documents)
       SELECT tok, COUNT(*) AS est FROM toks GROUP BY 1
-      ORDER BY est DESC, tok ASC LIMIT 20"""))
+      ORDER BY est DESC, tok ASC LIMIT 20""")
 
   /** q59's per-language TF-IDF top-5 recomputed WINDOW-FREE through
     * [[graft.operators.GroupedTopK]] — partial aggregation keeps ≤ 5
@@ -545,7 +545,7 @@ object QueriesPipeline {
           col("col.b").as("df"))
         .orderBy(col("lang"), col("rank"))
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, lang, UNNEST(string_split(text, ' ')) AS tok
         FROM documents),
       perdoc AS (SELECT doc_id, lang, tok, COUNT(*) AS tfd
@@ -562,7 +562,7 @@ object QueriesPipeline {
           PARTITION BY lang ORDER BY score DESC, tok ASC) AS rank
         FROM scored)
       SELECT lang, rank, tok, tf, df FROM ranked
-      WHERE rank <= 5 ORDER BY lang, rank"""))
+      WHERE rank <= 5 ORDER BY lang, rank""")
 
   /** Vocabulary-coverage (OOV-rate) quality scoring
     * (Curation.coverageScore): reference vocabulary = the corpus's own
@@ -584,7 +584,7 @@ object QueriesPipeline {
       Curation.coverageScore(docs, "doc_id", "text", vocab)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, tok FROM (
           SELECT doc_id, UNNEST(string_split(text, ' ')) AS tok
           FROM documents)
@@ -602,7 +602,7 @@ object QueriesPipeline {
         GROUP BY 1)
       SELECT doc_id, n_tok, n_oov,
         CAST(n_oov AS DOUBLE) / CAST(n_tok AS DOUBLE) AS oov_rate
-      FROM hits ORDER BY doc_id"""))
+      FROM hits ORDER BY doc_id""")
 
   /** CHUNK-DEDUP DOCUMENT REBUILD (Curation.chunkDedupRebuild) — the
     * cleanup step q60's census only counts: every 20-word chunk kept
@@ -629,7 +629,7 @@ object QueriesPipeline {
           md5(col("new_text")).as("new_text_md5"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT doc_id,
           CASE WHEN doc_id % 5 = 0 THEN
             'lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod tempor incididunt ut labore et dolore magna aliqua yes'
@@ -655,7 +655,7 @@ object QueriesPipeline {
             '')) AS new_text_md5
         FROM k GROUP BY 1)
       SELECT doc_id, n_chunks, n_kept, new_text_md5 FROM r
-      WHERE n_kept < n_chunks ORDER BY doc_id"""))
+      WHERE n_kept < n_chunks ORDER BY doc_id""")
 
   /** DEDUP TOKEN-SAVINGS REPORT: what exact dedup (q16's md5 groups,
     * keep-first) is WORTH, denominated in training tokens — per
@@ -688,7 +688,7 @@ object QueriesPipeline {
             div total_tokens AS BIGINT)"""))
         .orderBy(col("lang"))
     },
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT doc_id, lang,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
           md5(text) AS h
@@ -708,7 +708,7 @@ object QueriesPipeline {
       SELECT lang, n_docs, total_tokens, kept_tokens, saved_tokens,
         n_dropped, CAST(CAST(saved_tokens AS HUGEINT) * 1000000
           // total_tokens AS BIGINT) AS saved_ppm
-      FROM g ORDER BY lang"""))
+      FROM g ORDER BY lang""")
 
   /** INCREMENTAL CHUNK DEDUP — the delta-vs-stored-index analog of
     * q96 (LSH) and q127 (SemDeDup) at chunk granularity: the stored
@@ -753,7 +753,7 @@ object QueriesPipeline {
           sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT doc_id,
           CASE WHEN doc_id % 5 = 0 THEN
             'lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod tempor incididunt ut labore et dolore magna aliqua yes'
@@ -775,7 +775,7 @@ object QueriesPipeline {
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
         CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
       FROM k WHERE doc_id % 10 = 0
-      GROUP BY 1 ORDER BY doc_id"""))
+      GROUP BY 1 ORDER BY doc_id""")
 
   /** TERM-FREQUENCY ZIPF CENSUS: vocabulary terms bucketed by the BIT
     * LENGTH of their corpus frequency (the q155 `bin()`-length move —
@@ -800,7 +800,7 @@ object QueriesPipeline {
             lit(0L)))
         .orderBy(col("bucket"))
     },
-    Some("""WITH tf AS (
+    """WITH tf AS (
         SELECT tok, CAST(COUNT(*) AS BIGINT) AS tf FROM (
           SELECT UNNEST(string_split(text, ' ')) AS tok FROM documents)
         WHERE len(tok) > 0 GROUP BY 1),
@@ -811,7 +811,7 @@ object QueriesPipeline {
       SELECT bucket, n_terms, sum_tf,
         COALESCE(n_terms * 1000000 //
           LAG(n_terms, 1) OVER (ORDER BY bucket), 0) AS ratio_prev_ppm
-      FROM b ORDER BY bucket"""))
+      FROM b ORDER BY bucket""")
 
   /** CROSS-SOURCE SYNDICATION MATRIX: for every source pair, the
     * number of distinct document texts they BOTH carry verbatim — the
@@ -837,7 +837,7 @@ object QueriesPipeline {
         .agg(count(lit(1)).as("n_shared"))
         .orderBy(col("src_a"), col("src_b"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT source,
           md5(CASE WHEN doc_id % 13 = 0
             THEN 'syndicated wire story republished verbatim across outlets'
@@ -847,7 +847,7 @@ object QueriesPipeline {
       SELECT a.source AS src_a, b.source AS src_b,
         CAST(COUNT(*) AS BIGINT) AS n_shared
       FROM hs a JOIN hs b ON a.h = b.h AND a.source < b.source
-      GROUP BY 1, 2 ORDER BY src_a, src_b"""))
+      GROUP BY 1, 2 ORDER BY src_a, src_b""")
 
   /** PER-SOURCE QUALITY-THRESHOLD CALIBRATION: exact discrete
     * p25/median/p75 of the quality score (×10⁶ fixed point) per
@@ -878,18 +878,9 @@ object QueriesPipeline {
             col("score_fp"))).as("p75_fp"))
         .orderBy(col("source"))
     },
-    Some {
-      val stopList = TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH scored AS (
+    s"""WITH scored AS (
         SELECT source, doc_id,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) AS score_fp
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp
         FROM documents),
       r AS (SELECT source, score_fp,
           ROW_NUMBER() OVER (PARTITION BY source
@@ -902,8 +893,7 @@ object QueriesPipeline {
         MAX(CASE WHEN rn = (cnt + 1) // 2 THEN score_fp END) AS median_fp,
         MAX(CASE WHEN rn = GREATEST(1, (3 * (cnt + 1)) // 4)
             THEN score_fp END) AS p75_fp
-      FROM r GROUP BY 1 ORDER BY source"""
-    })
+      FROM r GROUP BY 1 ORDER BY source""")
 
   val list: Seq[Q] = Seq(q55, q56, q57, q58, q59, q60, q61, q62, q63, q64,
     q65, q66, q98, q167, q171, q173, q174, q176, q177)

@@ -40,37 +40,12 @@ object QueriesRetrieve {
         .select(col("vec_id").as("doc_id"), col("rnk").cast("long").as("rank"))
       Fusion.rrf(Seq(lex, sem), rrfK = 60, topK = 20)
     },
-    Some("""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt FROM lens),
-      toks AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1),
-      sc AS (
-        SELECT p.doc_id,
-          CAST(FLOOR(
-            (CAST(2*(st.nd - d.df) + 1 AS DOUBLE)
-               / CAST(2*d.df + 1 AS DOUBLE))
-            * (CAST(22*p.tf*st.tt AS DOUBLE)
-               / CAST(10*p.tf*st.tt + 3*st.tt + 9*l.dl*st.nd AS DOUBLE))
-            * 1e6) AS BIGINT) AS s
-        FROM p JOIN d USING (term)
-          JOIN lens l ON p.doc_id = l.doc_id CROSS JOIN st),
-      base AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS score_fp
-        FROM sc GROUP BY 1),
+    s"""WITH ${OracleSql.bm25(QueryTerms, "p", "base")},
       lex AS (SELECT doc_id, rank FROM (
         SELECT doc_id,
           ROW_NUMBER() OVER (ORDER BY score_fp DESC, doc_id ASC) AS rank
         FROM base) t WHERE rank <= 50),
-      ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      norms AS (SELECT vec_id,
-          SQRT(CAST(SUM(CAST(a*a AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+      ${OracleSql.embeddingNorms},
       q AS (SELECT * FROM ev WHERE vec_id = 0),
       dots AS (SELECT e.vec_id,
           CAST(SUM(CAST(q.a*e.a AS DECIMAL(18,16))) AS DOUBLE) AS dot
@@ -90,7 +65,7 @@ object QueriesRetrieve {
         FROM lex FULL JOIN sem ON lex.doc_id = sem.doc_id)
       SELECT doc_id, CAST(n_lists AS BIGINT) AS n_lists,
         CAST(rrf_fp AS BIGINT) AS rrf_fp
-      FROM f ORDER BY rrf_fp DESC, doc_id ASC LIMIT 20"""))
+      FROM f ORDER BY rrf_fp DESC, doc_id ASC LIMIT 20""")
 
   /** FIELDED BM25 (TrainPrep.bm25FieldedRank): title = first 16 tokens
     * at 3× weight, body = the rest — the BM25F early-tf-merge variant
@@ -102,7 +77,7 @@ object QueriesRetrieve {
     (s, dir) =>
       TrainPrep.bm25FieldedRank(Tables.documents(s, dir),
         titleLen = 16, titleBoost = 3, QueryTerms, topK = 20),
-    Some("""WITH tk AS (
+    s"""WITH tk AS (
         SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
       lens AS (SELECT doc_id,
           3*LEAST(len(ts), 16) + GREATEST(len(ts) - 16, 0) AS dl FROM tk),
@@ -113,20 +88,10 @@ object QueriesRetrieve {
       p AS (SELECT term, doc_id,
           CAST(SUM(CASE WHEN i <= 16 THEN 3 ELSE 1 END) AS BIGINT) AS tf
         FROM toks WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1),
-      sc AS (
-        SELECT p.doc_id,
-          CAST(FLOOR(
-            (CAST(2*(st.nd - d.df) + 1 AS DOUBLE)
-               / CAST(2*d.df + 1 AS DOUBLE))
-            * (CAST(22*p.tf*st.tt AS DOUBLE)
-               / CAST(10*p.tf*st.tt + 3*st.tt + 9*l.dl*st.nd AS DOUBLE))
-            * 1e6) AS BIGINT) AS s
-        FROM p JOIN d USING (term)
-          JOIN lens l ON p.doc_id = l.doc_id CROSS JOIN st)
-      SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(s) AS BIGINT) AS score_fp
-      FROM sc GROUP BY 1
-      ORDER BY score_fp DESC, doc_id ASC LIMIT 20"""))
+      d_p AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1),
+      ${OracleSql.bm25Kernel("p", "sc")}
+      SELECT doc_id, n_terms, score_fp FROM sc
+      ORDER BY score_fp DESC, doc_id ASC LIMIT 20""")
 
   /** VOCABULARY GROWTH (Heaps-law census) over the 5-char shingle
     * vocabulary (the dedup family's shingles — the whitespace-token
@@ -169,7 +134,7 @@ object QueriesRetrieve {
         .withColumnRenamed("cum", "vocab_size")
         .orderBy(col("bucket"))
     },
-    Some("""WITH sh AS (
+    """WITH sh AS (
         SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
         FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
       f AS (SELECT sh.sh, MIN(doc_id) AS fd FROM sh GROUP BY 1),
@@ -178,7 +143,7 @@ object QueriesRetrieve {
       SELECT CAST(bucket AS BIGINT) AS bucket, new_shingles,
         CAST(SUM(new_shingles) OVER (ORDER BY bucket
           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size
-      FROM b ORDER BY bucket"""))
+      FROM b ORDER BY bucket""")
 
   /** CROSS-SOURCE VOCABULARY OVERLAP: pairwise Jaccard of the distinct
     * -term sets of every source pair — the corpus-composition diagnostic
@@ -209,7 +174,7 @@ object QueriesRetrieve {
         .orderBy(col("jaccard_fp").desc, col("src_a").asc, col("src_b").asc)
         .limit(15)
     },
-    Some("""WITH st AS (
+    """WITH st AS (
         SELECT DISTINCT source, term FROM (
           SELECT source, UNNEST(string_split(text, ' ')) AS term
           FROM documents)),
@@ -224,7 +189,7 @@ object QueriesRetrieve {
       FROM inter
       JOIN sizes sa ON src_a = sa.source
       JOIN sizes sb ON src_b = sb.source
-      ORDER BY jaccard_fp DESC, src_a ASC, src_b ASC LIMIT 15"""))
+      ORDER BY jaccard_fp DESC, src_a ASC, src_b ASC LIMIT 15""")
 
   /** SIGNED RANDOM PROJECTION (RandomProjection.projectFpInline,
     * 64 → 8 dims): per-output-dim census of the fixed-point projected
@@ -244,9 +209,7 @@ object QueriesRetrieve {
           min(col("proj_fp")).as("min_fp"), max(col("proj_fp")).as("max_fp"))
         .orderBy(col("j"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows()},
       x AS (SELECT vec_id, i, CAST(FLOOR(a * 1e6) AS BIGINT) AS xfp FROM ev),
       sg AS (SELECT i, j,
           CASE WHEN substr(md5('rp:' || CAST(j AS VARCHAR) || ':'
@@ -259,7 +222,7 @@ object QueriesRetrieve {
       SELECT CAST(j AS BIGINT) AS j, COUNT(*) AS n_vecs,
         CAST(SUM(proj_fp) AS BIGINT) AS sum_fp,
         MIN(proj_fp) AS min_fp, MAX(proj_fp) AS max_fp
-      FROM pr GROUP BY 1 ORDER BY j"""))
+      FROM pr GROUP BY 1 ORDER BY j""")
 
   /** MMR DIVERSIFIED RERANK (Fusion.mmrDiversify): the ANN top-10 for
     * query vector 0 reranked for diversity — greedy picks maximize
@@ -284,7 +247,7 @@ object QueriesRetrieve {
       Fusion.mmrDiversify(cands, picks = 5, relW = 4L, distDiv = 1000000L)
         .orderBy(col("pick"))
     },
-    Some {
+    {
       def leastOf(ds: Seq[String]) =
         if (ds.size == 1) ds.head else s"LEAST(${ds.mkString(", ")})"
       // selection round r: candidates joined to the distances toward
@@ -299,12 +262,7 @@ object QueriesRetrieve {
          p$r AS (SELECT doc_id, mmr FROM m$r
            ORDER BY mmr DESC, doc_id ASC LIMIT 1)"""
       }
-      s"""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      norms AS (SELECT vec_id,
-          SQRT(CAST(SUM(CAST(a*a AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+      s"""WITH ${OracleSql.embeddingNorms},
       q AS (SELECT * FROM ev WHERE vec_id = 0),
       dots AS (SELECT e.vec_id,
           CAST(SUM(CAST(q.a*e.a AS DECIMAL(18,16))) AS DOUBLE) AS dot
@@ -357,12 +315,7 @@ object QueriesRetrieve {
           col("rnk").cast("long").as("rnk"), col("vec_id"))
         .orderBy(col("q_id"), col("same_label"), col("rnk"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      norms AS (SELECT vec_id,
-          SQRT(CAST(SUM(CAST(a*a AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+    s"""WITH ${OracleSql.embeddingNorms},
       q AS (SELECT ev.* FROM ev WHERE vec_id < 4),
       dots AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
           CAST(SUM(CAST(q.a*e.a AS DECIMAL(18,16))) AS DOUBLE) AS dot
@@ -383,7 +336,7 @@ object QueriesRetrieve {
       SELECT q_id, CAST(same_label AS BIGINT) AS same_label,
         CAST(rnk AS BIGINT) AS rnk, vec_id
       FROM rk WHERE rnk <= 3
-      ORDER BY q_id, same_label, rnk"""))
+      ORDER BY q_id, same_label, rnk""")
 
   /** kNN LABEL PROPAGATION (5-NN majority vote): vectors 0-49 are the
     * unlabeled probes, 50+ the labeled pool; each probe takes the
@@ -418,12 +371,7 @@ object QueriesRetrieve {
         .agg(count(lit(1)).as("n"))
         .orderBy(col("true_label"), col("pred_label"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      norms AS (SELECT vec_id,
-          SQRT(CAST(SUM(CAST(a*a AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+    s"""WITH ${OracleSql.embeddingNorms},
       q AS (SELECT * FROM ev WHERE vec_id < 50),
       dots AS (SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
           CAST(SUM(CAST(q.a*e.a AS DECIMAL(18,16))) AS DOUBLE) AS dot
@@ -449,7 +397,7 @@ object QueriesRetrieve {
       SELECT CAST(t.label AS BIGINT) AS true_label,
         CAST(pred_label AS BIGINT) AS pred_label, COUNT(*) AS n
       FROM pred JOIN embeddings t ON pred.q_id = t.vec_id
-      GROUP BY 1, 2 ORDER BY true_label, pred_label"""))
+      GROUP BY 1, 2 ORDER BY true_label, pred_label""")
 
   /** K-CENTER COVERAGE (coreset census): the 4 farthest-first seeds
     * (q115's derandomized traversal — the classic k-center
@@ -473,44 +421,10 @@ object QueriesRetrieve {
           sum(col("id")).as("id_sum"))
         .orderBy(col("cluster"))
     },
-    Some {
-      def dist(cte: String) =
-        s"""SELECT e.vec_id, CAST(SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10)
-           AS BIGINT)) AS BIGINT) AS d
-           FROM ev e JOIN $cte c ON e.i = c.i GROUP BY 1"""
-      s"""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      s0 AS (SELECT MIN(vec_id) AS vid FROM embeddings),
-      c0 AS (SELECT 0 AS cid, e.i, e.a AS m FROM ev e JOIN s0 ON e.vec_id = s0.vid),
-      m1 AS (${dist("c0")}),
-      s1 AS (SELECT vec_id FROM m1 ORDER BY d DESC, vec_id LIMIT 1),
-      c1 AS (SELECT 1 AS cid, e.i, e.a AS m FROM ev e JOIN s1 ON e.vec_id = s1.vec_id),
-      m2r AS (${dist("c1")}),
-      m2 AS (SELECT m1.vec_id, LEAST(m1.d, m2r.d) AS d
-        FROM m1 JOIN m2r ON m1.vec_id = m2r.vec_id),
-      s2 AS (SELECT vec_id FROM m2 ORDER BY d DESC, vec_id LIMIT 1),
-      c2 AS (SELECT 2 AS cid, e.i, e.a AS m FROM ev e JOIN s2 ON e.vec_id = s2.vec_id),
-      m3r AS (${dist("c2")}),
-      m3 AS (SELECT m2.vec_id, LEAST(m2.d, m3r.d) AS d
-        FROM m2 JOIN m3r ON m2.vec_id = m3r.vec_id),
-      s3 AS (SELECT vec_id FROM m3 ORDER BY d DESC, vec_id LIMIT 1),
-      c3 AS (SELECT 3 AS cid, e.i, e.a AS m FROM ev e JOIN s3 ON e.vec_id = s3.vec_id),
-      cc AS (SELECT * FROM c0 UNION ALL SELECT * FROM c1
-        UNION ALL SELECT * FROM c2 UNION ALL SELECT * FROM c3),
-      dd AS (
-        SELECT e.vec_id, c.cid, CAST(SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10)
-          AS BIGINT)) AS BIGINT) AS d
-        FROM ev e JOIN cc c ON e.i = c.i GROUP BY 1, 2),
-      aa AS (
-        SELECT vec_id, cid, d FROM (
-          SELECT vec_id, cid, d,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM dd) r WHERE rn = 1)
+    s"""WITH ${OracleSql.farthestFirstAssign}
       SELECT CAST(cid AS BIGINT) AS cluster, COUNT(*) AS n,
         MAX(d) AS radius_fp, CAST(SUM(vec_id) AS BIGINT) AS id_sum
-      FROM aa GROUP BY 1 ORDER BY cluster"""
-    })
+      FROM aa GROUP BY 1 ORDER BY cluster""")
 
   /** EPOCH-BUDGETED REPETITION PLAN (the data-constrained-scaling
     * allocation, Muennighoff et al. 2023): given a token budget of
@@ -539,7 +453,7 @@ object QueriesRetrieve {
           expr("1000 * alloc_tokens div tokens"))
         .orderBy(col("source"))
     },
-    Some("""WITH bysrc AS (
+    """WITH bysrc AS (
         SELECT source,
           CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS tokens
         FROM documents GROUP BY 1),
@@ -551,7 +465,7 @@ object QueriesRetrieve {
         FROM bysrc CROSS JOIN tot)
       SELECT source, tokens, alloc_tokens,
         CAST(1000 * alloc_tokens // tokens AS BIGINT) AS epochs_x1000
-      FROM plan ORDER BY source"""))
+      FROM plan ORDER BY source""")
 
   /** PROJECTED-LSH BUCKETS: q126's 8-dim signed projection closed into
     * its purpose — an LSH family: bucket = the 8 projection SIGNS
@@ -572,9 +486,7 @@ object QueriesRetrieve {
         .agg(count(lit(1)).as("n"), min(col("id")).as("min_vec"))
         .orderBy(col("bucket"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows()},
       x AS (SELECT vec_id, i, CAST(FLOOR(a * 1e6) AS BIGINT) AS xfp FROM ev),
       sg AS (SELECT i, j,
           CASE WHEN substr(md5('rp:' || CAST(j AS VARCHAR) || ':'
@@ -589,7 +501,7 @@ object QueriesRetrieve {
             ELSE 0 END) AS BIGINT) AS bucket
         FROM pr GROUP BY 1)
       SELECT bucket, COUNT(*) AS n, MIN(id) AS min_vec
-      FROM bk GROUP BY 1 ORDER BY bucket"""))
+      FROM bk GROUP BY 1 ORDER BY bucket""")
 
   /** SEARCH-RESULT NEAR-DUP COLLAPSE (SERP dedup): the BM25 top-20
     * with results suppressed when a HIGHER-ranked result is ≥50%
@@ -632,27 +544,7 @@ object QueriesRetrieve {
         .select(col("doc_id"), col("rank"))
         .orderBy(col("rank"))
     },
-    Some("""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt FROM lens),
-      toks AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1),
-      sc AS (
-        SELECT p.doc_id,
-          CAST(FLOOR(
-            (CAST(2*(st.nd - d.df) + 1 AS DOUBLE)
-               / CAST(2*d.df + 1 AS DOUBLE))
-            * (CAST(22*p.tf*st.tt AS DOUBLE)
-               / CAST(10*p.tf*st.tt + 3*st.tt + 9*l.dl*st.nd AS DOUBLE))
-            * 1e6) AS BIGINT) AS s
-        FROM p JOIN d USING (term)
-          JOIN lens l ON p.doc_id = l.doc_id CROSS JOIN st),
-      base AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS score_fp
-        FROM sc GROUP BY 1),
+    s"""WITH ${OracleSql.bm25(QueryTerms, "p", "base")},
       cand AS (SELECT doc_id, rank FROM (
         SELECT doc_id,
           ROW_NUMBER() OVER (ORDER BY score_fp DESC, doc_id ASC) AS rank
@@ -675,7 +567,7 @@ object QueriesRetrieve {
       SELECT c.doc_id, CAST(c.rank AS BIGINT) AS rank
       FROM cand c LEFT JOIN shadowed s ON c.doc_id = s.doc_id
       WHERE s.doc_id IS NULL
-      ORDER BY rank"""))
+      ORDER BY rank""")
 
   /** COHORT RETENTION (events table): users grouped by FIRST-SEEN day,
     * per-cohort count of users active again `day_offset` days later —
@@ -697,7 +589,7 @@ object QueriesRetrieve {
         .agg(count(lit(1)).as("n_users"))
         .orderBy(col("cohort"), col("day_offset"))
     },
-    Some("""WITH act AS (
+    """WITH act AS (
         SELECT DISTINCT user_id,
           CAST(date_trunc('day', ts) AS DATE) AS day
         FROM events),
@@ -707,7 +599,7 @@ object QueriesRetrieve {
           AS day_offset,
         COUNT(*) AS n_users
       FROM act JOIN coh USING (user_id)
-      GROUP BY 1, 2 ORDER BY cohort, day_offset"""))
+      GROUP BY 1, 2 ORDER BY cohort, day_offset""")
 
   /** RFM SEGMENTATION (events table): per-user recency (days since
     * last activity, vs the corpus max day), frequency (event count),
@@ -736,7 +628,7 @@ object QueriesRetrieve {
           sum(col("mon")).cast("double").as("mon_sum"))
         .orderBy(col("r_bucket"), col("f_bucket"))
     },
-    Some("""WITH mx AS (
+    """WITH mx AS (
         SELECT MAX(CAST(date_trunc('day', ts) AS DATE)) AS max_day
         FROM events),
       pu AS (
@@ -753,7 +645,7 @@ object QueriesRetrieve {
         LEAST(GREATEST(freq - 40, 0) // 15, 3) AS f_bucket,
         COUNT(*) AS n_users,
         CAST(SUM(mon) AS DOUBLE) AS mon_sum
-      FROM r GROUP BY 1, 2 ORDER BY r_bucket, f_bucket"""))
+      FROM r GROUP BY 1, 2 ORDER BY r_bucket, f_bucket""")
 
   /** GLOBAL TOP-p% DATA SELECTION (exact, no global sort): keep the
     * top 10% of documents by DSIR score (q118's scorer) using the
@@ -801,7 +693,7 @@ object QueriesRetrieve {
           min(col("cum")).as("best_rank"))
         .orderBy(col("source"))
     },
-    Some("""WITH tr AS (
+    """WITH tr AS (
         SELECT doc_id,
           substr(md5(ts[CAST(i AS INT)] || ' ' || ts[CAST(i AS INT) + 1]),
             1, 2) AS b
@@ -840,7 +732,7 @@ object QueriesRetrieve {
         CAST(SUM(avg_weight_fp) AS BIGINT) AS score_sum,
         CAST(MIN(rnk) AS BIGINT) AS best_rank
       FROM kept JOIN documents d USING (doc_id)
-      GROUP BY 1 ORDER BY source"""))
+      GROUP BY 1 ORDER BY source""")
 
   /** CURRICULUM STAGE ASSIGNMENT: the whole corpus ordered by quality
     * (q23's score, ×10⁶ fixed point; floor of engine-identical doubles
@@ -883,18 +775,9 @@ object QueriesRetrieve {
           max(col("score_fp")).as("max_score_fp"))
         .orderBy(col("stage"))
     },
-    Some {
-      val stopList = TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH scored AS (
+    s"""WITH scored AS (
         SELECT doc_id,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) AS score_fp,
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens
         FROM documents),
       ranked AS (
@@ -907,26 +790,7 @@ object QueriesRetrieve {
         CAST(SUM(tokens) AS BIGINT) AS sum_tokens,
         CAST(MIN(score_fp) AS BIGINT) AS min_score_fp,
         CAST(MAX(score_fp) AS BIGINT) AS max_score_fp
-      FROM ranked GROUP BY 1 ORDER BY stage"""
-    })
-
-  /** The rational BM25 kernel as oracle-SQL text, parameterized on
-    * the posting CTE name — q148 needs it twice (feedback pass +
-    * expanded pass), q149 once; one definition keeps the three
-    * replicas token-identical. Expects CTEs `lens(doc_id, dl)` and
-    * `st(nd, tt)` in scope. */
-  private def Bm25SqlKernel(p: String, out: String): String =
-    s"""$out AS (SELECT $p.doc_id,
-        CAST(COUNT(*) AS BIGINT) AS n_terms,
-        CAST(SUM(CAST(FLOOR(
-          (CAST(2*(st.nd - d_$p.df) + 1 AS DOUBLE)
-             / CAST(2*d_$p.df + 1 AS DOUBLE))
-          * (CAST(22*$p.tf*st.tt AS DOUBLE)
-             / CAST(10*$p.tf*st.tt + 3*st.tt + 9*l.dl*st.nd AS DOUBLE))
-          * 1e6) AS BIGINT)) AS BIGINT) AS score_fp
-      FROM $p JOIN d_$p ON $p.term = d_$p.term
-        JOIN lens l ON $p.doc_id = l.doc_id CROSS JOIN st
-      GROUP BY 1)"""
+      FROM ranked GROUP BY 1 ORDER BY stage""")
 
   /** PSEUDO-RELEVANCE-FEEDBACK EXPANSION (TrainPrep.prfExpandedRank;
     * the Rocchio/RM3 family): BM25 top-10 feedback docs → every term
@@ -946,18 +810,13 @@ object QueriesRetrieve {
       TrainPrep.prfExpandedRankFrom(post, lens,
         QueryTerms, fbK = 10, nExpand = 5, topK = 20)
     },
-    Some(s"""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt
-        FROM lens),
-      toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
+    s"""WITH ${OracleSql.bm25Stats},
       post AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
         GROUP BY 1, 2),
       p1 AS (SELECT * FROM post
         WHERE term IN ('query', 'window', 'scan')),
       d_p1 AS (SELECT term, COUNT(*) AS df FROM p1 GROUP BY 1),
-      ${Bm25SqlKernel("p1", "b1")},
+      ${OracleSql.bm25Kernel("p1", "b1")},
       fb AS (SELECT doc_id FROM (
           SELECT doc_id, ROW_NUMBER() OVER (
             ORDER BY score_fp DESC, doc_id ASC) AS rn FROM b1) t
@@ -975,9 +834,9 @@ object QueriesRetrieve {
         SELECT UNNEST(['query', 'window', 'scan']) AS term),
       p2 AS (SELECT post.* FROM post JOIN qterms USING (term)),
       d_p2 AS (SELECT term, COUNT(*) AS df FROM p2 GROUP BY 1),
-      ${Bm25SqlKernel("p2", "b2")}
+      ${OracleSql.bm25Kernel("p2", "b2")}
       SELECT doc_id, n_terms, score_fp FROM b2
-      ORDER BY score_fp DESC, doc_id ASC LIMIT 20"""))
+      ORDER BY score_fp DESC, doc_id ASC LIMIT 20""")
 
   /** HIT-ANCHORED SNIPPET EXTRACTION (Fusion.snippets): for the BM25
     * top-5, the 10-token window with the most DISTINCT query terms
@@ -995,16 +854,7 @@ object QueriesRetrieve {
           QueryTerms, 5), "score_fp"),
         QueryTerms, width = 10)
     },
-    Some(s"""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt
-        FROM lens),
-      toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p1 AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d_p1 AS (SELECT term, COUNT(*) AS df FROM p1 GROUP BY 1),
-      ${Bm25SqlKernel("p1", "b1")},
+    s"""WITH ${OracleSql.bm25(QueryTerms)},
       top AS (SELECT doc_id, CAST(rn AS BIGINT) AS rank FROM (
           SELECT doc_id, ROW_NUMBER() OVER (
             ORDER BY score_fp DESC, doc_id ASC) AS rn FROM b1) t
@@ -1028,7 +878,7 @@ object QueriesRetrieve {
         array_to_string(list_slice(tk.ts,
           CAST(b.st AS INT), CAST(b.st AS INT) + 9), ' ') AS snippet
       FROM best b JOIN tk ON b.doc_id = tk.doc_id
-      ORDER BY b.rank"""))
+      ORDER BY b.rank""")
 
   /** RETRIEVAL EVALUATION HARNESS: score the BM25 top-10 against
     * conjunctive pseudo-qrels (docs containing EVERY query term =
@@ -1057,16 +907,7 @@ object QueriesRetrieve {
           when(col("hits10") === 0, 0L)
             .otherwise(expr("1000000 div first_rank")).as("mrr_x1e6"))
     },
-    Some(s"""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt
-        FROM lens),
-      toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p1 AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d_p1 AS (SELECT term, COUNT(*) AS df FROM p1 GROUP BY 1),
-      ${Bm25SqlKernel("p1", "b1")},
+    s"""WITH ${OracleSql.bm25(QueryTerms)},
       ranked AS (SELECT doc_id, ROW_NUMBER() OVER (
           ORDER BY score_fp DESC, doc_id ASC) AS rank
         FROM b1 QUALIFY rank <= 10),
@@ -1083,7 +924,7 @@ object QueriesRetrieve {
           AS recall_ppm,
         CAST(CASE WHEN hits10 = 0 THEN 0
           ELSE 1000000 // first_rank END AS BIGINT) AS mrr_x1e6
-      FROM h CROSS JOIN nr"""))
+      FROM h CROSS JOIN nr""")
 
   /** CASCADE RERANKING: the classic two-stage retrieval — cheap
     * lexical BM25 narrows the corpus to 100 candidates, the exact
@@ -1111,16 +952,7 @@ object QueriesRetrieve {
         .select(col("doc_id"), col("lex_rank"), col("sem_rank"))
         .orderBy(col("sem_rank"))
     },
-    Some(s"""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt
-        FROM lens),
-      toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p1 AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d_p1 AS (SELECT term, COUNT(*) AS df FROM p1 GROUP BY 1),
-      ${Bm25SqlKernel("p1", "b1")},
+    s"""WITH ${OracleSql.bm25(QueryTerms)},
       lex AS (SELECT doc_id, ROW_NUMBER() OVER (
           ORDER BY score_fp DESC, doc_id ASC) AS lex_rank
         FROM b1 QUALIFY lex_rank <= 100),
@@ -1152,7 +984,7 @@ object QueriesRetrieve {
       SELECT sem.doc_id, CAST(lex.lex_rank AS BIGINT) AS lex_rank,
         CAST(sem.sem_rank AS BIGINT) AS sem_rank
       FROM sem JOIN lex ON sem.doc_id = lex.doc_id
-      ORDER BY sem_rank"""))
+      ORDER BY sem_rank""")
 
   val list: Seq[Q] = Seq(q122, q123, q124, q125, q126, q128, q129, q130,
     q131, q132, q133, q134, q135, q136, q137, q148, q149, q157, q158,

@@ -65,48 +65,7 @@ object QueriesRound10 {
             .as("n_shared_fp_robust"))
         .orderBy(col("source"))
     },
-    Some("""WITH ts AS (SELECT doc_id, source, string_split(text, ' ') AS ts
-        FROM documents),
-      d AS (SELECT doc_id, source, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          list_transform(range(1, len(ts) - 2), i ->
-            CAST(('0x' || substr(md5(array_to_string(
-              list_slice(ts, CAST(i AS INT), CAST(i AS INT) + 3), ' ')),
-              1, 8)) AS BIGINT)) AS hs
-        FROM ts WHERE len(ts) >= 7),
-      w AS (SELECT doc_id, source, ng - 3 AS nw, hs
-        FROM d WHERE ng >= 4),
-      sel AS (SELECT doc_id, source, hs,
-          list_distinct(list_transform(range(1, nw + 1), j ->
-            CASE WHEN hs[j+3] = least(hs[j],hs[j+1],hs[j+2],hs[j+3])
-                THEN j + 3
-              WHEN hs[j+2] = least(hs[j],hs[j+1],hs[j+2],hs[j+3])
-                THEN j + 2
-              WHEN hs[j+1] = least(hs[j],hs[j+1],hs[j+2],hs[j+3])
-                THEN j + 1
-              ELSE j END)) AS stdsel,
-          list_distinct(list_reduce(
-            list_concat([[CAST(
-              CASE WHEN hs[4] = least(hs[1],hs[2],hs[3],hs[4]) THEN 4
-                WHEN hs[3] = least(hs[1],hs[2],hs[3],hs[4]) THEN 3
-                WHEN hs[2] = least(hs[1],hs[2],hs[3],hs[4]) THEN 2
-                ELSE 1 END AS BIGINT)]],
-              list_transform(range(2, nw + 1), j -> [j])),
-            (acc, e) -> CASE WHEN acc[len(acc)] >= e[1]
-                AND hs[acc[len(acc)]] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-              THEN acc[1:len(acc)]
-              ELSE list_append(acc, CASE
-                WHEN hs[e[1]+3] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-                  THEN e[1] + 3
-                WHEN hs[e[1]+2] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-                  THEN e[1] + 2
-                WHEN hs[e[1]+1] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-                  THEN e[1] + 1
-                ELSE e[1] END) END)) AS robsel
-        FROM w),
+    s"""WITH ${OracleSql.winnowRules},
       vals AS (SELECT doc_id, source,
           list_sort(list_distinct(list_transform(stdsel,
             p -> CAST(hs[CAST(p AS INT)] AS BIGINT)))) AS sv,
@@ -128,7 +87,7 @@ object QueriesRound10 {
         value_diff_docs,
         COALESCE(n_shared_fp_robust, 0) AS n_shared_fp_robust
       FROM cen c LEFT JOIN sh ON sh.source = c.source
-      ORDER BY c.source"""))
+      ORDER BY c.source""")
 
   /** PER-LANGUAGE WINNOW DENSITY — q223's fingerprint census cut by
     * language instead of source: the fertility-style readout
@@ -167,22 +126,7 @@ object QueriesRound10 {
             div n_tokens AS BIGINT)""").as("fp_per_ktok"))
         .orderBy(col("lang"))
     },
-    Some("""WITH ts AS (SELECT doc_id, lang, string_split(text, ' ') AS ts
-        FROM documents),
-      g AS (SELECT doc_id, lang,
-          CAST(len(ts) - 3 AS BIGINT) AS ng, CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, lang, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, lang, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, lang, ng, j, MIN(h) AS fp
-        FROM win GROUP BY 1, 2, 3, 4),
+    s"""WITH ${OracleSql.winnowSel(keep = "lang")},
       pd AS (SELECT doc_id, lang, MAX(ng) AS ngr,
           CAST(COUNT(DISTINCT fp) AS BIGINT) AS nfp
         FROM sel GROUP BY 1, 2)
@@ -194,7 +138,7 @@ object QueriesRound10 {
           // SUM(ngr - 3) AS BIGINT) AS density_ppm,
         CAST(CAST(SUM(nfp) AS HUGEINT) * 1000
           // SUM(ngr + 3) AS BIGINT) AS fp_per_ktok
-      FROM pd GROUP BY 1 ORDER BY lang"""))
+      FROM pd GROUP BY 1 ORDER BY lang""")
 
   /** WINNOW-SCREEN DEDUP SAVINGS — the end-to-end answer to "what
     * does the span-guarantee screen actually buy": winnow candidate
@@ -238,50 +182,10 @@ object QueriesRound10 {
             div tokens_total AS BIGINT)""").as("saved_ppm"))
         .orderBy(col("source"))
     },
-    Some {
-      val stopList = graft.operators.TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH RECURSIVE
-      ts AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, j, MIN(h) AS fp FROM win GROUP BY 1, 2),
-      fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.operators.Dedup.WinnowDfCap}),
-      cap AS MATERIALIZED (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
-      wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM wp
-        UNION SELECT doc_b, doc_a FROM wp),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE ${OracleSql.winnowComps()},
       scored AS (SELECT doc_id, source,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) AS score_fp
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp
         FROM documents),
       cl AS (SELECT s.doc_id, s.source, s.tokens,
           s.score_fp * 10000000 + (9999999 - s.doc_id) AS packed,
@@ -297,8 +201,7 @@ object QueriesRound10 {
           AS tokens_dropped,
         CAST(CAST(SUM(CASE WHEN keep THEN 0 ELSE tokens END) AS HUGEINT)
           * 1000000 // SUM(tokens) AS BIGINT) AS saved_ppm
-      FROM k GROUP BY 1 ORDER BY source"""
-    })
+      FROM k GROUP BY 1 ORDER BY source""")
 
   /** T-CLOSENESS AUDIT — the third leg of the privacy-release family
     * (q162 k-anonymity: group SIZE; q169 l-diversity: sensitive-value
@@ -380,7 +283,7 @@ object QueriesRound10 {
           min(col("t_ppm")).as("min_t_ppm"),
           max(col("t_ppm")).as("max_t_ppm"))
     },
-    Some("""WITH b AS (SELECT c_nationkey AS nat, c_mktsegment AS seg,
+    """WITH b AS (SELECT c_nationkey AS nat, c_mktsegment AS seg,
           GREATEST(0, LEAST(10,
             (CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
               + 100000) // 100000)) AS bin
@@ -417,7 +320,7 @@ object QueriesRound10 {
           AS exposed_rows,
         CAST(MIN(t_ppm) AS BIGINT) AS min_t_ppm,
         CAST(MAX(t_ppm) AS BIGINT) AS max_t_ppm
-      FROM tp"""))
+      FROM tp""")
 
   /** LOCAL CLUSTERING COEFFICIENT histogram over the shared-gram
     * similarity graph — the per-NODE companion to q144's global
@@ -457,7 +360,7 @@ object QueriesRound10 {
           max(col("cc_ppm")).as("max_cc_ppm"))
         .orderBy(col("bucket"))
     },
-    Some(s"""${QueriesAnalytics.GramEdgesSql},
+    s"""${QueriesAnalytics.GramEdgesSql},
       tri AS (SELECT e1.x AS a, e1.y AS b, e2.y AS c
         FROM pairs e1 JOIN pairs e2 ON e1.y = e2.x
         JOIN pairs e3 ON e1.x = e3.x AND e2.y = e3.y),
@@ -471,7 +374,7 @@ object QueriesRound10 {
         CAST(COUNT(*) AS BIGINT) AS n_nodes,
         CAST(MIN(cc_ppm) AS BIGINT) AS min_cc_ppm,
         CAST(MAX(cc_ppm) AS BIGINT) AS max_cc_ppm
-      FROM loc GROUP BY 1 ORDER BY bucket"""))
+      FROM loc GROUP BY 1 ORDER BY bucket""")
 
   /** IVF REASSIGNMENT DRIFT — the index-maintenance census the ANN
     * family (q47/q48/q95 IVF, q233's TTL aging) was missing: after a
@@ -514,9 +417,7 @@ object QueriesRound10 {
             div n AS BIGINT)""").as("moved_ppm"))
         .orderBy(col("cell"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows()},
       c0 AS (SELECT CAST(e.vec_id // 97 AS BIGINT) AS cid, e.i, e.a AS m
         FROM ev e WHERE e.vec_id % 97 = 0),
       d0 AS (SELECT e.vec_id, c.cid,
@@ -543,7 +444,7 @@ object QueriesRound10 {
           AS n_moved,
         CAST(CAST(SUM(CASE WHEN a1.cid <> a0.cid THEN 1 ELSE 0 END)
           AS HUGEINT) * 1000000 // COUNT(*) AS BIGINT) AS moved_ppm
-      FROM a0 JOIN a1 USING (vec_id) GROUP BY 1 ORDER BY cell"""))
+      FROM a0 JOIN a1 USING (vec_id) GROUP BY 1 ORDER BY cell""")
 
   /** SCREEN CLUSTER PROFILE — q215's component-size census run for
     * BOTH candidate screens side by side: the winnow (span-evidence)
@@ -573,62 +474,14 @@ object QueriesRound10 {
         .unionByName(census(SharedLsh.components(s, dir), "lsh"))
         .orderBy(col("screen"), col("size_bucket"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j =>
-          s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS MATERIALIZED (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS MATERIALIZED (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      lpr AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      ledges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM lpr
-        UNION SELECT doc_b, doc_a FROM lpr),
-      lwalk(node, label) AS (
-        SELECT src, src FROM ledges
-        UNION
-        SELECT e.dst, w.label FROM lwalk w JOIN ledges e ON e.src = w.node),
-      lcomp AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM lwalk GROUP BY 1),
-      ts AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, j, MIN(h) AS fp FROM win GROUP BY 1, 2),
-      fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.operators.Dedup.WinnowDfCap}),
-      cap AS MATERIALIZED (SELECT fd.doc_id, fd.fp FROM fd JOIN us ON us.fp = fd.fp),
-      wpr AS MATERIALIZED (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      wedges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM wpr
-        UNION SELECT doc_b, doc_a FROM wpr),
-      wwalk(node, label) AS (
-        SELECT src, src FROM wedges
-        UNION
-        SELECT e.dst, w.label FROM wwalk w JOIN wedges e ON e.src = w.node),
-      wcomp AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM wwalk GROUP BY 1),
+    s"""WITH RECURSIVE
+      ${OracleSql.shingles()},
+      ${OracleSql.lshBands(mat = true)},
+      ${OracleSql.bandPairs("lpr", mat = true)},
+      ${OracleSql.componentWalk("lpr", "lcomp", "l", matEdges = true, matComp = true)},
+      ${OracleSql.winnowFd(mat = true)},
+      ${OracleSql.winnowPairs(wp = "wpr", mat = true, matPairs = true)},
+      ${OracleSql.componentWalk("wpr", "wcomp", "w", matEdges = true, matComp = true)},
       bo AS (
         SELECT 'winnow' AS screen, component, COUNT(*) AS sz
         FROM wcomp GROUP BY 2
@@ -641,8 +494,7 @@ object QueriesRound10 {
         CAST(COUNT(*) AS BIGINT) AS n_components,
         CAST(SUM(sz) AS BIGINT) AS n_docs,
         CAST(SUM(sz - 1) AS BIGINT) AS n_removals
-      FROM bo GROUP BY 1, 2 ORDER BY screen, size_bucket"""
-    })
+      FROM bo GROUP BY 1, 2 ORDER BY screen, size_bucket""")
 
   /** MEGACLUSTER WEAK-LINK DIAGNOSIS — q242 shows the LSH screen
     * chains 11+-member megaclusters; this query answers WHY, per
@@ -674,46 +526,7 @@ object QueriesRound10 {
             .as("n_weak_edges"))
         .orderBy(col("component"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j =>
-          s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh0 AS MATERIALIZED (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS MATERIALIZED (SELECT doc_id, $mins FROM sh0 GROUP BY doc_id),
-      bands AS MATERIALIZED (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
-      big AS MATERIALIZED (SELECT component, COUNT(*) AS csize
-        FROM comps GROUP BY 1 HAVING COUNT(*) >= 11),
-      be AS MATERIALIZED (SELECT p.doc_a, p.doc_b, c.component, b.csize
-        FROM pairs p
-        JOIN comps c ON c.doc_id = p.doc_a
-        JOIN big b ON b.component = c.component),
-      msh AS MATERIALIZED (SELECT s.doc_id, s.sh FROM sh0 s
-        JOIN comps c ON c.doc_id = s.doc_id
-        JOIN big b ON b.component = c.component),
-      szs AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM msh GROUP BY 1),
-      inter AS MATERIALIZED (SELECT e.doc_a, e.doc_b, COUNT(*) AS i
-        FROM be e
-        JOIN msh a ON a.doc_id = e.doc_a
-        JOIN msh b2 ON b2.doc_id = e.doc_b AND b2.sh = a.sh
-        GROUP BY 1, 2),
+    s"""WITH RECURSIVE ${OracleSql.megaChain},
       jf AS (SELECT e.component, e.csize,
           CAST(CAST(COALESCE(i.i, 0) AS HUGEINT) * 1000000
             // (sa.sz + sb.sz - COALESCE(i.i, 0)) AS BIGINT) AS jfp
@@ -726,8 +539,7 @@ object QueriesRound10 {
         CAST(MIN(jfp) AS BIGINT) AS min_jaccard_fp,
         CAST(SUM(CASE WHEN jfp < 500000 THEN 1 ELSE 0 END) AS BIGINT)
           AS n_weak_edges
-      FROM jf GROUP BY 1, 2 ORDER BY component"""
-    })
+      FROM jf GROUP BY 1, 2 ORDER BY component""")
 
   /** MEGACLUSTER REPAIR — the action q243's diagnosis motivates:
     * inside each 11+ LSH megacluster, drop every candidate edge whose
@@ -781,63 +593,11 @@ object QueriesRound10 {
             .as("n_isolated"))
         .orderBy(col("component"))
     },
-    Some {
-      val mins = (0 until 8)
-        .map(j =>
-          s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh0 AS MATERIALIZED (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS MATERIALIZED (SELECT doc_id, $mins FROM sh0 GROUP BY doc_id),
-      bands AS MATERIALIZED (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
-      big AS MATERIALIZED (SELECT component, COUNT(*) AS csize
-        FROM comps GROUP BY 1 HAVING COUNT(*) >= 11),
-      be AS MATERIALIZED (SELECT p.doc_a, p.doc_b, c.component
-        FROM pairs p
-        JOIN comps c ON c.doc_id = p.doc_a
-        JOIN big b ON b.component = c.component),
-      msh AS MATERIALIZED (SELECT s.doc_id, s.sh FROM sh0 s
-        JOIN comps c ON c.doc_id = s.doc_id
-        JOIN big b ON b.component = c.component),
-      szs AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM msh GROUP BY 1),
-      inter AS MATERIALIZED (SELECT e.doc_a, e.doc_b, COUNT(*) AS i
-        FROM be e
-        JOIN msh a ON a.doc_id = e.doc_a
-        JOIN msh b2 ON b2.doc_id = e.doc_b AND b2.sh = a.sh
-        GROUP BY 1, 2),
-      strong AS MATERIALIZED (SELECT e.component, e.doc_a, e.doc_b
-        FROM be e
-        LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-        JOIN szs sa ON sa.doc_id = e.doc_a
-        JOIN szs sb ON sb.doc_id = e.doc_b
-        WHERE CAST(COALESCE(i.i, 0) AS HUGEINT) * 1000000
-          // (sa.sz + sb.sz - COALESCE(i.i, 0)) >= 200000),
-      sedges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM strong
-        UNION SELECT doc_b, doc_a FROM strong),
-      swalk(node, label) AS (
-        SELECT src, src FROM sedges
-        UNION
-        SELECT e.dst, w.label FROM swalk w JOIN sedges e ON e.src = w.node),
-      sub AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS scomp
-        FROM swalk GROUP BY 1),
-      ssz AS (SELECT c.component AS orig, s.scomp, COUNT(*) AS ssz
+    s"""WITH RECURSIVE ${OracleSql.megaChain},
+      ${OracleSql.strongEdges("strong", 200000L)},
+      ${OracleSql.componentWalk("strong", "sub", "s", matEdges = true,
+        matComp = true)},
+      ssz AS (SELECT c.component AS orig, s.component, COUNT(*) AS ssz
         FROM sub s JOIN comps c ON c.doc_id = s.doc_id
         GROUP BY 1, 2),
       scen AS (SELECT orig, CAST(COUNT(*) AS BIGINT) AS n_sub,
@@ -856,8 +616,7 @@ object QueriesRound10 {
       FROM big b
       LEFT JOIN sec ON sec.orig = b.component
       LEFT JOIN scen ON scen.orig = b.component
-      ORDER BY b.component"""
-    })
+      ORDER BY b.component""")
 
   // ---------------------------------------------------------------------
 

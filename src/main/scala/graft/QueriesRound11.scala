@@ -15,46 +15,6 @@ object QueriesRound11 {
 
   import graft.operators.Similarity
 
-  /** The winnow screen → connected-components oracle chain (identical
-    * to q238's CTE prefix): distinct (doc, fp) winnowed fingerprints,
-    * df-cap [2, DfCap], ≥2-shared pairs, recursive min-label walk.
-    * Shared as a `def` (init-order-immune) by q246/q247, whose Spark
-    * sides ride the SAME SharedWinnow.components artifact — one
-    * derivation on each engine, two consumers. */
-  private def winnowCompSql: String = s"""
-      ts AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, j, MIN(h) AS fp FROM win GROUP BY 1, 2),
-      fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.operators.Dedup.WinnowDfCap}),
-      cap AS MATERIALIZED (SELECT fd.doc_id, fd.fp
-        FROM fd JOIN us ON us.fp = fd.fp),
-      wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM cap a JOIN cap b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM wp
-        UNION SELECT doc_b, doc_a FROM wp),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1)"""
-
   /** MATRYOSHKA TRUNCATION AUDIT — how much retrieval quality the
     * first 32 of 64 embedding dimensions keep: for each of 5 query
     * vectors, the exact cosine top-20 under the FULL vectors vs under
@@ -100,9 +60,7 @@ object QueriesRound11 {
           coalesce(col("footrule"), lit(0L)).as("footrule"))
         .orderBy(col("q_id"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows()},
       evt AS (SELECT * FROM ev WHERE i <= 32),
       nf AS (SELECT vec_id,
           SQRT(CAST(SUM(CAST(a*a AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
@@ -144,7 +102,7 @@ object QueriesRound11 {
       FROM (SELECT DISTINCT vec_id AS q_id FROM embeddings
         WHERE vec_id < 5) q
       LEFT JOIN ov ON ov.q_id = q.q_id
-      ORDER BY q.q_id"""))
+      ORDER BY q.q_id""")
 
   /** CROSS-SOURCE NEAR-DUP MATRIX — which source PAIRS share winnowed
     * duplicate components: the span-evidence companion to q176's
@@ -175,14 +133,14 @@ object QueriesRound11 {
         .agg(count(lit(1)).as("n_components"))
         .orderBy(col("src_a"), col("src_b"))
     },
-    Some(s"""WITH RECURSIVE $winnowCompSql,
+    s"""WITH RECURSIVE ${OracleSql.winnowComps()},
       cs AS (SELECT DISTINCT c.component, d.source
         FROM comps c JOIN documents d ON d.doc_id = c.doc_id)
       SELECT a.source AS src_a, b.source AS src_b,
         CAST(COUNT(*) AS BIGINT) AS n_components
       FROM cs a JOIN cs b
         ON a.component = b.component AND a.source < b.source
-      GROUP BY 1, 2 ORDER BY src_a, src_b"""))
+      GROUP BY 1, 2 ORDER BY src_a, src_b""")
 
   /** EFFECTIVE DATASET SIZE — the deduplication discount per source:
     * each doc contributes 1/|its duplicate component| (unclustered
@@ -215,7 +173,7 @@ object QueriesRound11 {
           sum(expr("1000000 div csize")).as("effective_x1e6"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH RECURSIVE $winnowCompSql,
+    s"""WITH RECURSIVE ${OracleSql.winnowComps()},
       sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS csize
         FROM comps GROUP BY 1),
       j AS (SELECT d.source, c.component,
@@ -227,76 +185,7 @@ object QueriesRound11 {
         CAST(SUM(CASE WHEN component IS NOT NULL THEN 1 ELSE 0 END)
           AS BIGINT) AS n_clustered,
         CAST(SUM(1000000 // csize) AS BIGINT) AS effective_x1e6
-      FROM j GROUP BY 1 ORDER BY source"""))
-
-  /** The megacluster edge-Jaccard oracle chain (q243/q244's CTE
-    * prefix, duplicated here because their inline strings are
-    * gate-frozen): 2-band minhash LSH pairs → CC → ≥11-doc
-    * megaclusters → per-candidate-edge exact 5-gram Jaccard. Ends at
-    * `inter`/`szs`/`be` for the threshold legs to consume. */
-  private def megaChainSql: String = {
-    val mins = (0 until 8)
-      .map(j =>
-        s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-      .mkString(", ")
-    s"""
-      sh0 AS MATERIALIZED (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS MATERIALIZED (SELECT doc_id, $mins FROM sh0 GROUP BY doc_id),
-      bands AS MATERIALIZED (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
-      big AS MATERIALIZED (SELECT component, COUNT(*) AS csize
-        FROM comps GROUP BY 1 HAVING COUNT(*) >= 11),
-      be AS MATERIALIZED (SELECT p.doc_a, p.doc_b, c.component
-        FROM pairs p
-        JOIN comps c ON c.doc_id = p.doc_a
-        JOIN big b ON b.component = c.component),
-      msh AS MATERIALIZED (SELECT s.doc_id, s.sh FROM sh0 s
-        JOIN comps c ON c.doc_id = s.doc_id
-        JOIN big b ON b.component = c.component),
-      szs AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM msh GROUP BY 1),
-      inter AS MATERIALIZED (SELECT e.doc_a, e.doc_b, COUNT(*) AS i
-        FROM be e
-        JOIN msh a ON a.doc_id = e.doc_a
-        JOIN msh b2 ON b2.doc_id = e.doc_b AND b2.sh = a.sh
-        GROUP BY 1, 2)"""
-  }
-
-  /** One recursive strong-CC threshold leg for [[q248]]'s oracle. */
-  private def thresholdLegSql(tag: String, t: Long): String = s"""
-      st$tag AS MATERIALIZED (SELECT e.doc_a, e.doc_b
-        FROM be e
-        LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-        JOIN szs sa ON sa.doc_id = e.doc_a
-        JOIN szs sb ON sb.doc_id = e.doc_b
-        WHERE CAST(COALESCE(i.i, 0) AS HUGEINT) * 1000000
-          // (sa.sz + sb.sz - COALESCE(i.i, 0)) >= $t),
-      se$tag AS (SELECT doc_a AS src, doc_b AS dst FROM st$tag
-        UNION SELECT doc_b, doc_a FROM st$tag),
-      sw$tag(node, label) AS (
-        SELECT src, src FROM se$tag
-        UNION
-        SELECT e.dst, w.label FROM sw$tag w JOIN se$tag e ON e.src = w.node),
-      sz$tag AS (SELECT MIN(label) AS scomp, node FROM sw$tag GROUP BY node),
-      zz$tag AS (SELECT scomp, COUNT(*) AS c FROM sz$tag GROUP BY 1),
-      r$tag AS (SELECT CAST($t AS BIGINT) AS thr_ppm,
-        CAST(COUNT(*) AS BIGINT) AS n_subclusters,
-        CAST(COALESCE(MAX(c), 0) AS BIGINT) AS max_sub,
-        CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_connected FROM zz$tag)"""
+      FROM j GROUP BY 1 ORDER BY source""")
 
   /** REPAIR THRESHOLD SWEEP — the tuning curve the q243→q244→
     * RepairCert arc ends on: the ground-truth certification showed a
@@ -339,58 +228,17 @@ object QueriesRound11 {
           (col("n_members") - col("n_connected")).as("n_isolated"))
         .orderBy(col("thr_ppm"))
     },
-    Some(s"""WITH RECURSIVE $megaChainSql,
-      ${thresholdLegSql("a", 200000L)},
-      ${thresholdLegSql("b", 350000L)},
-      ${thresholdLegSql("c", 500000L)},
+    s"""WITH RECURSIVE ${OracleSql.megaChain},
+      ${OracleSql.thresholdLeg("a", 200000L)},
+      ${OracleSql.thresholdLeg("b", 350000L)},
+      ${OracleSql.thresholdLeg("c", 500000L)},
       mem AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_members
         FROM comps c JOIN big b ON b.component = c.component),
       allr AS (SELECT * FROM ra UNION ALL SELECT * FROM rb
         UNION ALL SELECT * FROM rc)
       SELECT thr_ppm, n_subclusters, max_sub, n_connected,
         n_members - n_connected AS n_isolated
-      FROM allr CROSS JOIN mem ORDER BY thr_ppm"""))
-
-  /** [[winnowCompSql]] with every CTE name suffixed by `tag` and the
-    * document universe restricted by `pred` — q249 runs the chain
-    * twice (base corpus vs full) in ONE oracle. */
-  private def winnowCompSqlTagged(tag: String, pred: String): String = s"""
-      ts$tag AS (SELECT doc_id, string_split(text, ' ') AS ts
-        FROM documents WHERE $pred),
-      g$tag AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts$tag, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh$tag AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g$tag WHERE ng >= 4),
-      win$tag AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh$tag, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel$tag AS (SELECT doc_id, j, MIN(h) AS fp FROM win$tag GROUP BY 1, 2),
-      fd$tag AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel$tag),
-      us$tag AS (SELECT fp FROM fd$tag GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND ${
-          graft.operators.Dedup.WinnowDfCap}),
-      cap$tag AS MATERIALIZED (SELECT f.doc_id, f.fp
-        FROM fd$tag f JOIN us$tag u ON u.fp = f.fp),
-      wp$tag AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM cap$tag a JOIN cap$tag b
-          ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      edges$tag AS (
-        SELECT doc_a AS src, doc_b AS dst FROM wp$tag
-        UNION SELECT doc_b, doc_a FROM wp$tag),
-      walk$tag(node, label) AS (
-        SELECT src, src FROM edges$tag
-        UNION
-        SELECT e.dst, w.label
-        FROM walk$tag w JOIN edges$tag e ON e.src = w.node),
-      comps$tag AS MATERIALIZED (
-        SELECT node AS doc_id, MIN(label) AS component
-        FROM walk$tag GROUP BY 1)"""
+      FROM allr CROSS JOIN mem ORDER BY thr_ppm""")
 
   /** RETENTION CHURN UNDER CRAWL GROWTH — re-run q238's keep/drop
     * policy after a crawl batch lands (every 7th doc is "new") and
@@ -442,20 +290,12 @@ object QueriesRound11 {
               * 1000000 div kept_base AS BIGINT)""")).as("churn_ppm"))
         .orderBy(col("source"))
     },
-    Some {
-      val stopList = graft.operators.TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH RECURSIVE
-      ${winnowCompSqlTagged("f", "TRUE")},
-      ${winnowCompSqlTagged("b", "doc_id % 7 <> 0")},
+    s"""WITH RECURSIVE
+      ${OracleSql.winnowComps(tag = "f")},
+      ${OracleSql.winnowComps(
+        "(SELECT * FROM documents WHERE doc_id % 7 <> 0)", "b")},
       scored AS (SELECT doc_id, source,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) * 10000000
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) * 10000000
             + (9999999 - doc_id) AS packed
         FROM documents),
       kb AS (SELECT s.doc_id, s.source,
@@ -480,8 +320,7 @@ object QueriesRound11 {
             // SUM(CASE WHEN b.kb THEN 1 ELSE 0 END) END AS BIGINT)
           AS churn_ppm
       FROM kb b JOIN kf f ON f.doc_id = b.doc_id
-      GROUP BY 1 ORDER BY b.source"""
-    })
+      GROUP BY 1 ORDER BY b.source""")
 
   // ---------------------------------------------------------------------
 

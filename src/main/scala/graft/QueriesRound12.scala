@@ -23,33 +23,6 @@ object QueriesRound12 {
 
   private def fixedCap: Int = graft.operators.Dedup.WinnowDfCap
 
-  /** The winnow fingerprint derivation up to the per-fp document
-    * frequency (the q238/q246 CTE prefix ending at `fd`), plus the
-    * measured-multiplicity CTEs: `meta` (corpus rows, distinct text
-    * hashes) and `acap` (the adaptive cap — ceil(DfCap·n/m), integer
-    * ceil-division so both engines agree bit-for-bit). */
-  private def fdAcapSql: String = s"""
-      ts AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, j, MIN(h) AS fp FROM win GROUP BY 1, 2),
-      fd AS MATERIALIZED (SELECT DISTINCT doc_id, fp FROM sel),
-      meta AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-          CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_distinct_text
-        FROM documents),
-      acap AS (SELECT ($fixedCap * n_docs + n_distinct_text - 1)
-          // n_distinct_text AS cap FROM meta)"""
-
   /** SCREEN-CAP CALIBRATION — the query that PICKS the df-cap from
     * the corpus instead of trusting the fixed constant (r11 verdict
     * item 1): measure the exact-duplicate multiplicity n/m (corpus
@@ -97,7 +70,7 @@ object QueriesRound12 {
           col("n_fp_fixed"), col("n_fp_rescued"), col("n_fp_dropped"),
           col("pairs_rescued"))
     },
-    Some(s"""WITH $fdAcapSql,
+    s"""WITH ${OracleSql.winnowFdAdaptiveCap},
       nd AS (SELECT fp, CAST(COUNT(*) AS BIGINT) AS nd
         FROM fd GROUP BY 1 HAVING COUNT(*) >= 2),
       cens AS (SELECT
@@ -118,7 +91,7 @@ object QueriesRound12 {
         CAST(a.cap AS BIGINT) AS adaptive_cap,
         c.n_fp_ge2, c.n_fp_fixed, c.n_fp_rescued, c.n_fp_dropped,
         c.pairs_rescued
-      FROM meta m CROSS JOIN acap a CROSS JOIN cens c"""))
+      FROM meta m CROSS JOIN acap a CROSS JOIN cens c""")
 
   /** CROSS-SOURCE DUP MATRIX UNDER THE ADAPTIVE CAP — q246 re-run
     * with the calibrated screen (q250's cap) instead of the fixed
@@ -153,96 +126,17 @@ object QueriesRound12 {
         .agg(count(lit(1)).as("n_components"))
         .orderBy(col("src_a"), col("src_b"))
     },
-    Some(s"""WITH RECURSIVE $fdAcapSql,
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND (SELECT cap FROM acap)),
-      capd AS MATERIALIZED (SELECT f.doc_id, f.fp
-        FROM fd f JOIN us u ON u.fp = f.fp),
-      wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM capd a JOIN capd b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM wp
-        UNION SELECT doc_b, doc_a FROM wp),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE ${OracleSql.winnowFdAdaptiveCap},
+      ${OracleSql.winnowPairs(dfCap = "(SELECT cap FROM acap)", mat = true)},
+      ${OracleSql.componentWalk("wp", "comps", matComp = true)},
       cs AS (SELECT DISTINCT c.component, d.source
         FROM comps c JOIN documents d ON d.doc_id = c.doc_id)
       SELECT a.source AS src_a, b.source AS src_b,
         CAST(COUNT(*) AS BIGINT) AS n_components
       FROM cs a JOIN cs b
         ON a.component = b.component AND a.source < b.source
-      GROUP BY 1, 2 ORDER BY src_a, src_b"""))
+      GROUP BY 1, 2 ORDER BY src_a, src_b""")
 
-  /** The q248 megacluster edge-Jaccard chain (its own copy — q248's
-    * inline string is gate-frozen), ending at `inter`/`szs`/`be`. */
-  private def megaChainSql: String = {
-    val mins = (0 until 8)
-      .map(j =>
-        s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-      .mkString(", ")
-    s"""
-      sh0 AS MATERIALIZED (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS MATERIALIZED (SELECT doc_id, $mins FROM sh0 GROUP BY doc_id),
-      bands AS MATERIALIZED (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS MATERIALIZED (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS MATERIALIZED (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
-      big AS MATERIALIZED (SELECT component, COUNT(*) AS csize
-        FROM comps GROUP BY 1 HAVING COUNT(*) >= 11),
-      be AS MATERIALIZED (SELECT p.doc_a, p.doc_b, c.component
-        FROM pairs p
-        JOIN comps c ON c.doc_id = p.doc_a
-        JOIN big b ON b.component = c.component),
-      msh AS MATERIALIZED (SELECT s.doc_id, s.sh FROM sh0 s
-        JOIN comps c ON c.doc_id = s.doc_id
-        JOIN big b ON b.component = c.component),
-      szs AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM msh GROUP BY 1),
-      inter AS MATERIALIZED (SELECT e.doc_a, e.doc_b, COUNT(*) AS i
-        FROM be e
-        JOIN msh a ON a.doc_id = e.doc_a
-        JOIN msh b2 ON b2.doc_id = e.doc_b AND b2.sh = a.sh
-        GROUP BY 1, 2)"""
-  }
-
-  /** One recursive strong-CC threshold leg (q248's, own copy). */
-  private def thresholdLegSql(tag: String, t: Long): String = s"""
-      st$tag AS MATERIALIZED (SELECT e.doc_a, e.doc_b
-        FROM be e
-        LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-        JOIN szs sa ON sa.doc_id = e.doc_a
-        JOIN szs sb ON sb.doc_id = e.doc_b
-        WHERE CAST(COALESCE(i.i, 0) AS HUGEINT) * 1000000
-          // (sa.sz + sb.sz - COALESCE(i.i, 0)) >= $t),
-      se$tag AS (SELECT doc_a AS src, doc_b AS dst FROM st$tag
-        UNION SELECT doc_b, doc_a FROM st$tag),
-      sw$tag(node, label) AS (
-        SELECT src, src FROM se$tag
-        UNION
-        SELECT e.dst, w.label FROM sw$tag w JOIN se$tag e ON e.src = w.node),
-      sz$tag AS (SELECT MIN(label) AS scomp, node FROM sw$tag GROUP BY node),
-      zz$tag AS (SELECT scomp, COUNT(*) AS c FROM sz$tag GROUP BY 1),
-      r$tag AS (SELECT CAST($t AS BIGINT) AS thr_ppm,
-        CAST(COUNT(*) AS BIGINT) AS n_subclusters,
-        CAST(COALESCE(MAX(c), 0) AS BIGINT) AS max_sub,
-        CAST(COALESCE(SUM(c), 0) AS BIGINT) AS n_connected FROM zz$tag)"""
 
   /** REPAIR THRESHOLD AUTO-PICK — q248's sweep turned into a POLICY
     * (r11 verdict item 3): over the same 0.2/0.35/0.5 grid, pick the
@@ -290,10 +184,10 @@ object QueriesRound12 {
         .select(col("thr_ppm").as("picked_thr_ppm"),
           col("n_subclusters"), col("max_sub"), col("n_connected"))
     },
-    Some(s"""WITH RECURSIVE $megaChainSql,
-      ${thresholdLegSql("a", 200000L)},
-      ${thresholdLegSql("b", 350000L)},
-      ${thresholdLegSql("c", 500000L)},
+    s"""WITH RECURSIVE ${OracleSql.megaChain},
+      ${OracleSql.thresholdLeg("a", 200000L)},
+      ${OracleSql.thresholdLeg("b", 350000L)},
+      ${OracleSql.thresholdLeg("c", 500000L)},
       allr AS (SELECT * FROM ra UNION ALL SELECT * FROM rb
         UNION ALL SELECT * FROM rc),
       nx AS (SELECT a.thr_ppm, a.n_subclusters, a.max_sub,
@@ -308,7 +202,7 @@ object QueriesRound12 {
           THEN 0 ELSE 1 END),
         (CASE WHEN next_ms IS NOT NULL AND max_sub = next_ms
           THEN thr_ppm ELSE -thr_ppm END)
-      LIMIT 1"""))
+      LIMIT 1""")
 
   /** DF-SPECTRUM QUANTILE CAP — the OTHER calibration the r11 verdict
     * named (a per-fp document-frequency quantile cut, next to q250's
@@ -350,7 +244,7 @@ object QueriesRound12 {
         .select(col("q999_cap"), col("tot").as("n_fp_ge2"),
           lit(SharedWinnow.adaptiveCap(s, dir)).as("multiplicity_cap"))
     },
-    Some(s"""WITH $fdAcapSql,
+    s"""WITH ${OracleSql.winnowFdAdaptiveCap},
       nd AS (SELECT fp, CAST(COUNT(*) AS BIGINT) AS nd
         FROM fd GROUP BY 1 HAVING COUNT(*) >= 2),
       spec AS (SELECT nd, CAST(COUNT(*) AS BIGINT) AS k
@@ -365,7 +259,7 @@ object QueriesRound12 {
         WHERE c.cum * 1000 >= t.tot * 999)
       SELECT p.q999_cap, t.tot AS n_fp_ge2,
         CAST(a.cap AS BIGINT) AS multiplicity_cap
-      FROM pick p CROSS JOIN tot t CROSS JOIN acap a"""))
+      FROM pick p CROSS JOIN tot t CROSS JOIN acap a""")
 
   /** EFFECTIVE DATASET SIZE UNDER THE ADAPTIVE CAP — q247's twin on
     * the calibrated screen: per-source Σ 1/|component| in exact ppm.
@@ -401,23 +295,9 @@ object QueriesRound12 {
           sum(expr("1000000 div csize")).as("effective_x1e6"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH RECURSIVE $fdAcapSql,
-      us AS (SELECT fp FROM fd GROUP BY fp
-        HAVING COUNT(*) BETWEEN 2 AND (SELECT cap FROM acap)),
-      capd AS MATERIALIZED (SELECT f.doc_id, f.fp
-        FROM fd f JOIN us u ON u.fp = f.fp),
-      wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM capd a JOIN capd b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM wp
-        UNION SELECT doc_b, doc_a FROM wp),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS MATERIALIZED (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE ${OracleSql.winnowFdAdaptiveCap},
+      ${OracleSql.winnowPairs(dfCap = "(SELECT cap FROM acap)", mat = true)},
+      ${OracleSql.componentWalk("wp", "comps", matComp = true)},
       sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS csize
         FROM comps GROUP BY 1),
       j AS (SELECT d.source, c.component,
@@ -429,7 +309,7 @@ object QueriesRound12 {
         CAST(SUM(CASE WHEN component IS NOT NULL THEN 1 ELSE 0 END)
           AS BIGINT) AS n_clustered,
         CAST(SUM(1000000 // csize) AS BIGINT) AS effective_x1e6
-      FROM j GROUP BY 1 ORDER BY source"""))
+      FROM j GROUP BY 1 ORDER BY source""")
 
   // ---------------------------------------------------------------------
 

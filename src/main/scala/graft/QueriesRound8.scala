@@ -64,7 +64,7 @@ object QueriesRound8 {
             .as("pad_ppm"))
         .orderBy(col("budget"), col("source"))
     },
-    Some("""WITH d AS (SELECT source, doc_id,
+    """WITH d AS (SELECT source, doc_id,
           CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
         FROM documents),
       c AS (SELECT source, tok,
@@ -86,7 +86,7 @@ object QueriesRound8 {
         n_seqs * budget - n_tokens AS tail_pad,
         CAST(CAST(n_seqs * budget - n_tokens AS HUGEINT) * 1000000
           // (n_seqs * budget) AS BIGINT) AS pad_ppm
-      FROM g ORDER BY budget, source"""))
+      FROM g ORDER BY budget, source""")
 
   /** PER-SOURCE BYTE-BALANCED JSONL SHARDS — the q211 × q107
     * composition: each source stream is exported as 4 JSONL shards
@@ -122,7 +122,7 @@ object QueriesRound8 {
           sum(col("fp32")).as("fingerprint"))
         .orderBy(col("source"), col("shard"))
     },
-    Some("""WITH j AS (SELECT source, doc_id,
+    """WITH j AS (SELECT source, doc_id,
           md5(CAST(doc_id AS VARCHAR)) AS k,
           to_json(struct_pack(doc_id := doc_id, lang := lang,
             text := text))::VARCHAR AS line
@@ -138,7 +138,7 @@ object QueriesRound8 {
       SELECT source, CAST((cum - nb) * 4 // total AS BIGINT) AS shard,
         COUNT(*) AS n_lines, CAST(SUM(nb) AS BIGINT) AS n_bytes,
         CAST(SUM(fp32) AS BIGINT) AS fingerprint
-      FROM c GROUP BY 1, 2 ORDER BY source, shard"""))
+      FROM c GROUP BY 1, 2 ORDER BY source, shard""")
 
   /** EPOCH-SHUFFLE FAIRNESS AUDIT — every training epoch reshuffles
     * the corpus with a fresh deterministic permutation (order key
@@ -179,7 +179,7 @@ object QueriesRound8 {
             - n_src * 1000000 div n_total""").as("skew_ppm"))
         .orderBy(col("epoch"), col("source"))
     },
-    Some("""WITH e AS (SELECT CAST(b.e AS BIGINT) AS epoch, doc_id, source,
+    """WITH e AS (SELECT CAST(b.e AS BIGINT) AS epoch, doc_id, source,
           md5(CAST(b.e AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS ke
         FROM documents CROSS JOIN (VALUES (0), (1), (2)) b(e)),
       r AS (SELECT epoch, source,
@@ -197,7 +197,7 @@ object QueriesRound8 {
         n_head * 1000000 // head_total
           - n_src * 1000000 // n_total AS skew_ppm
       FROM h JOIN ht USING (epoch) JOIN c USING (source) CROSS JOIN t
-      ORDER BY epoch, source"""))
+      ORDER BY epoch, source""")
 
   /** GRAM-SATURATION CURVE — the df-threshold sweep behind every
     * "df ≥ K" knob in the dedup/boilerplate family (q55/q196 pin
@@ -239,7 +239,7 @@ object QueriesRound8 {
             div n_occ AS BIGINT)""").as("occ_share_ppm"))
         .orderBy(col("k"))
     },
-    Some("""WITH ts AS (SELECT doc_id, string_split(text, ' ') AS ts
+    """WITH ts AS (SELECT doc_id, string_split(text, ' ') AS ts
         FROM documents),
       g AS (SELECT doc_id,
           array_to_string(list_slice(ts, CAST(i AS INT),
@@ -262,7 +262,7 @@ object QueriesRound8 {
           AS gram_share_ppm,
         CAST(CAST(occ_over AS HUGEINT) * 1000000 // n_occ AS BIGINT)
           AS occ_share_ppm
-      FROM a ORDER BY k"""))
+      FROM a ORDER BY k""")
 
   /** DELTA-BATCH NOVELTY SCORING — the crawl-ingest readout that
     * complements the incremental dedup family (q96 pairs / q173
@@ -307,7 +307,7 @@ object QueriesRound8 {
           col("high_novelty_docs"))
         .orderBy(col("source"))
     },
-    Some("""WITH ts AS (SELECT doc_id, source,
+    """WITH ts AS (SELECT doc_id, source,
           string_split(text, ' ') AS ts FROM documents),
       g AS (SELECT doc_id, source,
           array_to_string(list_slice(ts, CAST(i AS INT),
@@ -330,7 +330,7 @@ object QueriesRound8 {
           AS novelty_ppm,
         CAST(SUM(CASE WHEN n_novel * 2 > n_grams THEN 1 ELSE 0 END)
           AS BIGINT) AS high_novelty_docs
-      FROM pd GROUP BY 1 ORDER BY source"""))
+      FROM pd GROUP BY 1 ORDER BY source""")
 
   /** CURRICULUM INTERLEAVE FAIRNESS — the q166 × q218 composition:
     * after the curriculum cut (4 equal-rank quality stages via the
@@ -391,18 +391,9 @@ object QueriesRound8 {
             .as("mean_pos_ppm"))
         .orderBy(col("stage"), col("source"))
     },
-    Some {
-      val stopList = TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH scored AS (
+    s"""WITH scored AS (
         SELECT doc_id, source,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) AS score_fp
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp
         FROM documents),
       ranked AS (
         SELECT doc_id, source,
@@ -425,8 +416,7 @@ object QueriesRound8 {
         n_docs * 1000000 // cnt AS share_ppm,
         CAST(sum_rn * 1000000 // (CAST(n_docs AS HUGEINT) * cnt) AS BIGINT)
           AS mean_pos_ppm
-      FROM g ORDER BY stage, source"""
-    })
+      FROM g ORDER BY stage, source""")
 
   /** PACKING CROSS-SOURCE CONTAMINATION CENSUS — the q216 follow-up
     * question: when the WHOLE corpus is packed into fixed-budget
@@ -467,7 +457,7 @@ object QueriesRound8 {
         .agg(count(lit(1)).as("n_seqs"), sum(col("n_docs")).as("n_docs"))
         .orderBy(col("budget"), col("n_sources"))
     },
-    Some("""WITH d AS (SELECT source,
+    """WITH d AS (SELECT source,
           md5(CAST(doc_id AS VARCHAR)) AS ke,
           GREATEST(CAST(len(string_split(text, ' ')) AS BIGINT), 1) AS w
         FROM documents),
@@ -483,7 +473,7 @@ object QueriesRound8 {
         FROM e GROUP BY 1, 2)
       SELECT budget, n_sources, CAST(COUNT(*) AS BIGINT) AS n_seqs,
         CAST(SUM(n_docs) AS BIGINT) AS n_docs
-      FROM g GROUP BY 1, 2 ORDER BY budget, n_sources"""))
+      FROM g GROUP BY 1, 2 ORDER BY budget, n_sources""")
 
   /** WINNOWING FINGERPRINT CENSUS (Schleimer/Wilkerson/Aiken 2003,
     * the MOSS local fingerprinting scheme) — the guarantee-bearing
@@ -528,22 +518,7 @@ object QueriesRound8 {
           coalesce(col("n_shared_fp"), lit(0L)).as("n_shared_fp"))
         .orderBy(col("source"))
     },
-    Some("""WITH ts AS (SELECT doc_id, source,
-          string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, source,
-          CAST(len(ts) - 3 AS BIGINT) AS ng, CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, source, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, source, ng, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      sel AS (SELECT doc_id, source, ng, j, MIN(h) AS fp
-        FROM win GROUP BY 1, 2, 3, 4),
+    s"""WITH ${OracleSql.winnowSel(keep = "source")},
       pd AS (SELECT doc_id, source, MAX(ng) AS ngr,
           CAST(COUNT(DISTINCT fp) AS BIGINT) AS nfp
         FROM sel GROUP BY 1, 2),
@@ -561,7 +536,7 @@ object QueriesRound8 {
           AS density_ppm,
         COALESCE(sh.n_shared_fp, 0) AS n_shared_fp
       FROM cen LEFT JOIN sh ON sh.source = cen.source
-      ORDER BY cen.source"""))
+      ORDER BY cen.source""")
 
   /** BATCH-PADDING WASTE — the OTHER batching strategy next to q216's
     * concatenate-and-chop packing: pad-to-longest batches of 32. Two
@@ -604,7 +579,7 @@ object QueriesRound8 {
             lpad(col("doc_id").cast("string"), 12, "0"))))
         .orderBy(col("strategy"))
     },
-    Some("""WITH d AS (SELECT doc_id,
+    """WITH d AS (SELECT doc_id,
           GREATEST(CAST(len(string_split(text, ' ')) AS BIGINT), 1)
             AS tok FROM documents),
       ra AS (SELECT tok, (ROW_NUMBER() OVER (
@@ -631,7 +606,7 @@ object QueriesRound8 {
         CAST(CAST(padded_tokens - real_tokens AS HUGEINT) * 1000000
           // padded_tokens AS BIGINT) AS waste_ppm
       FROM (SELECT * FROM sa UNION ALL SELECT * FROM sb)
-      ORDER BY strategy"""))
+      ORDER BY strategy""")
 
   /** CURRICULUM-ORDER PACKING CONTAMINATION — the q221 × q222
     * composition, answering the question the two leave open: does
@@ -694,19 +669,10 @@ object QueriesRound8 {
       hist("curriculum", curriculum).unionAll(hist("shuffled", shuffled))
         .orderBy(col("strategy"), col("n_sources"))
     },
-    Some {
-      val stopList = TextAnalysis.EnStopwords
-        .map(w => s"t = '$w'").mkString(" OR ")
-      s"""WITH scored AS (
+    s"""WITH scored AS (
         SELECT doc_id, source,
           GREATEST(CAST(len(string_split(text, ' ')) AS BIGINT), 1) AS w,
-          CAST(FLOOR((
-            LEAST(1.0, len(string_split(text, ' ')) / 100.0) * 0.5 +
-            (len(list_filter(string_split(text, ' '), t -> ($stopList)))
-               / len(string_split(text, ' '))) * 0.3 +
-            (1.0 - LEAST(1.0,
-              len(regexp_extract_all(text, '[.,!?;:]')) / 20.0)) * 0.2
-          ) * 1000000) AS BIGINT) AS score_fp
+          CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp
         FROM documents),
       ranked AS (
         SELECT doc_id, source, w,
@@ -747,8 +713,7 @@ object QueriesRound8 {
         FROM gs GROUP BY 2)
       SELECT strategy, n_sources, n_seqs, n_docs
       FROM (SELECT * FROM hc UNION ALL SELECT * FROM hs)
-      ORDER BY strategy, n_sources"""
-    })
+      ORDER BY strategy, n_sources""")
 
   /** WINNOWING POSITION CENSUS — the STORAGE-cost readout q223's
     * value census can't give: Schleimer et al.'s density theorem
@@ -779,24 +744,9 @@ object QueriesRound8 {
             div n_windows AS BIGINT)""").as("pos_density_ppm"))
         .orderBy(col("source"))
     },
-    Some("""WITH ts AS (SELECT doc_id, source,
-          string_split(text, ' ') AS ts FROM documents),
-      g AS (SELECT doc_id, source,
-          CAST(len(ts) - 3 AS BIGINT) AS ng, CAST(i AS BIGINT) AS p,
-          array_to_string(list_slice(ts, CAST(i AS INT),
-            CAST(i AS INT) + 3), ' ') AS g
-        FROM ts, UNNEST(range(1, len(ts) - 2)) AS u(i)
-        WHERE len(ts) >= 4),
-      gh AS (SELECT doc_id, source, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM g WHERE ng >= 4),
-      win AS (SELECT doc_id, source, ng, p, h, CAST(j AS BIGINT) AS j
-        FROM gh, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      mins AS (SELECT doc_id, source, ng, j, MIN(h) AS fp
-        FROM win GROUP BY 1, 2, 3, 4),
+    s"""WITH ${OracleSql.winnowSel(keep = "source")},
       sp AS (SELECT w.doc_id, w.source, w.ng, w.j, MAX(w.p) AS spos
-        FROM win w JOIN mins m
+        FROM win w JOIN sel m
           ON m.doc_id = w.doc_id AND m.j = w.j AND w.h = m.fp
         GROUP BY 1, 2, 3, 4),
       pd AS (SELECT doc_id, source, MAX(ng) AS ng,
@@ -807,7 +757,7 @@ object QueriesRound8 {
         CAST(SUM(n_pos) AS BIGINT) AS n_positions,
         CAST(CAST(SUM(n_pos) AS HUGEINT) * 1000000
           // SUM(ng - 3) AS BIGINT) AS pos_density_ppm
-      FROM pd GROUP BY 1 ORDER BY source"""))
+      FROM pd GROUP BY 1 ORDER BY source""")
 
   val list: Seq[Q] = Seq(q216, q217, q218, q219, q220, q221, q222,
     q223, q224, q228, q229)

@@ -61,7 +61,7 @@ object QueriesRound9 {
             END AS BIGINT)""").as("boost_ppm"))
         .orderBy(col("lang"))
     },
-    Some("""WITH lt AS (SELECT lang, COUNT(*) AS n_docs,
+    """WITH lt AS (SELECT lang, COUNT(*) AS n_docs,
           CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         FROM documents GROUP BY 1),
       sq AS (SELECT lang, n_docs, n_tokens,
@@ -79,7 +79,7 @@ object QueriesRound9 {
           ELSE CAST(sqrt_fp AS HUGEINT) * tot * 1000000
             // (CAST(ssum AS HUGEINT) * n_tokens)
           END AS BIGINT) AS boost_ppm
-      FROM sq CROSS JOIN tot ORDER BY lang"""))
+      FROM sq CROSS JOIN tot ORDER BY lang""")
 
   /** The window-minimum / rightmost-minimum-position SQL fragments the
     * robust-winnowing fold needs at a window index `j` (1-based gram
@@ -177,48 +177,7 @@ object QueriesRound9 {
             div std_positions AS BIGINT)""").as("saved_ppm"))
         .orderBy(col("source"))
     },
-    Some("""WITH ts AS (SELECT doc_id, source, string_split(text, ' ') AS ts
-        FROM documents),
-      d AS (SELECT doc_id, source, CAST(len(ts) - 3 AS BIGINT) AS ng,
-          list_transform(range(1, len(ts) - 2), i ->
-            CAST(('0x' || substr(md5(array_to_string(
-              list_slice(ts, CAST(i AS INT), CAST(i AS INT) + 3), ' ')),
-              1, 8)) AS BIGINT)) AS hs
-        FROM ts WHERE len(ts) >= 7),
-      w AS (SELECT doc_id, source, ng - 3 AS nw, hs
-        FROM d WHERE ng >= 4),
-      sel AS (SELECT doc_id, source, nw,
-          list_distinct(list_transform(range(1, nw + 1), j ->
-            CASE WHEN hs[j+3] = least(hs[j],hs[j+1],hs[j+2],hs[j+3])
-                THEN j + 3
-              WHEN hs[j+2] = least(hs[j],hs[j+1],hs[j+2],hs[j+3])
-                THEN j + 2
-              WHEN hs[j+1] = least(hs[j],hs[j+1],hs[j+2],hs[j+3])
-                THEN j + 1
-              ELSE j END)) AS stdsel,
-          list_distinct(list_reduce(
-            list_concat([[CAST(
-              CASE WHEN hs[4] = least(hs[1],hs[2],hs[3],hs[4]) THEN 4
-                WHEN hs[3] = least(hs[1],hs[2],hs[3],hs[4]) THEN 3
-                WHEN hs[2] = least(hs[1],hs[2],hs[3],hs[4]) THEN 2
-                ELSE 1 END AS BIGINT)]],
-              list_transform(range(2, nw + 1), j -> [j])),
-            (acc, e) -> CASE WHEN acc[len(acc)] >= e[1]
-                AND hs[acc[len(acc)]] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-              THEN acc[1:len(acc)]
-              ELSE list_append(acc, CASE
-                WHEN hs[e[1]+3] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-                  THEN e[1] + 3
-                WHEN hs[e[1]+2] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-                  THEN e[1] + 2
-                WHEN hs[e[1]+1] =
-                  least(hs[e[1]],hs[e[1]+1],hs[e[1]+2],hs[e[1]+3])
-                  THEN e[1] + 1
-                ELSE e[1] END) END)) AS robsel
-        FROM w),
+    s"""WITH ${OracleSql.winnowRules},
       per AS (SELECT source, nw,
           CAST(len(stdsel) AS BIGINT) AS n_std,
           CAST(len(robsel) AS BIGINT) AS n_rob
@@ -231,7 +190,7 @@ object QueriesRound9 {
           // SUM(nw) AS BIGINT) AS robust_density_ppm,
         CAST(CAST(SUM(n_std) - SUM(n_rob) AS HUGEINT) * 1000000
           // SUM(n_std) AS BIGINT) AS saved_ppm
-      FROM per GROUP BY 1 ORDER BY source"""))
+      FROM per GROUP BY 1 ORDER BY source""")
 
   /** LENGTH-BUCKETED BATCH PADDING — the production middle ground
     * q224 motivates but doesn't measure: q224 showed md5-shuffled
@@ -288,7 +247,7 @@ object QueriesRound9 {
             .as("waste_ppm"))
         .orderBy(col("l"))
     },
-    Some("""WITH d AS (SELECT doc_id,
+    """WITH d AS (SELECT doc_id,
           GREATEST(CAST(len(string_split(text, ' ')) AS BIGINT), 1)
             AS tok FROM documents),
       r AS (SELECT doc_id, tok,
@@ -314,7 +273,7 @@ object QueriesRound9 {
         CAST(SUM(st) AS BIGINT) AS real_tokens,
         CAST(CAST(SUM(nb * mx) - SUM(st) AS HUGEINT) * 1000000
           // SUM(nb * mx) AS BIGINT) AS waste_ppm
-      FROM g GROUP BY 1 ORDER BY l"""))
+      FROM g GROUP BY 1 ORDER BY l""")
 
   /** GRAM-INDEX EVICTION (TTL aging) — the incremental family's
     * missing lifecycle stage: q96/q173/q191/q212/q227 all GROW their
@@ -370,7 +329,7 @@ object QueriesRound9 {
             * 1000000 div idx_full AS BIGINT)""").as("evicted_ppm"))
         .orderBy(col("source"))
     },
-    Some("""WITH ts AS (SELECT doc_id, source,
+    """WITH ts AS (SELECT doc_id, source,
           string_split(text, ' ') AS ts FROM documents),
       g AS (SELECT doc_id, source,
           md5(array_to_string(list_slice(ts, CAST(i AS INT),
@@ -396,30 +355,7 @@ object QueriesRound9 {
         CAST(idx_aged AS BIGINT) AS idx_aged,
         CAST(CAST(idx_full - idx_aged AS HUGEINT) * 1000000 // idx_full
           AS BIGINT) AS evicted_ppm
-      FROM sc CROSS JOIN sz ORDER BY source"""))
-
-  /** The winnowed-fingerprint selection as a DuckDB CTE chain —
-    * parameterized over the input relation (must provide doc_id,
-    * text) so q234's two sides (full corpus, truncated benchmark)
-    * winnow with token-identical SQL. Emits `$out` = DISTINCT
-    * (doc_id, fp). Mirrors SharedWinnow.fingerprintsOf exactly
-    * (q223's proven oracle fragment). */
-  private def winnowFpSql(in: String, out: String): String =
-    s"""${out}_g AS (SELECT doc_id,
-        CAST(len(ts) - 3 AS BIGINT) AS ng, CAST(i AS BIGINT) AS p,
-        array_to_string(list_slice(ts, CAST(i AS INT),
-          CAST(i AS INT) + 3), ' ') AS g
-      FROM (SELECT doc_id, string_split(text, ' ') AS ts FROM $in) t,
-        UNNEST(range(1, len(ts) - 2)) AS u(i)
-      WHERE len(ts) >= 4),
-      ${out}_h AS (SELECT doc_id, ng, p,
-          CAST(('0x' || substr(md5(g), 1, 8)) AS BIGINT) AS h
-        FROM ${out}_g WHERE ng >= 4),
-      ${out}_w AS (SELECT doc_id, h, CAST(j AS BIGINT) AS j
-        FROM ${out}_h, UNNEST(range(greatest(1, p - 3),
-          least(p, ng - 3) + 1)) v(j)),
-      $out AS (SELECT DISTINCT doc_id, fp FROM (
-        SELECT doc_id, j, MIN(h) AS fp FROM ${out}_w GROUP BY 1, 2))"""
+      FROM sc CROSS JOIN sz ORDER BY source""")
 
   /** WINNOW-BASED BENCHMARK DECONTAMINATION — q199's two-stage
     * architecture (screen → exact confirm on candidates only) rebuilt
@@ -480,24 +416,24 @@ object QueriesRound9 {
             .as("precision_ppm"))
         .orderBy(col("source"))
     },
-    Some(s"""WITH bench AS (SELECT doc_id + 1000000000000 AS doc_id,
+    s"""WITH bench AS (SELECT doc_id + 1000000000000 AS doc_id,
           substr(text, 1, greatest(length(text)-40, 50)) AS text
         FROM documents WHERE doc_id % 13 = 0),
-      ${winnowFpSql("documents", "cfp")},
-      ${winnowFpSql("bench", "bfp")},
-      capped AS (SELECT doc_id AS train_id, fp FROM cfp
-        WHERE fp IN (SELECT fp FROM cfp GROUP BY fp
+      ${OracleSql.winnowFd(tag = "c")},
+      ${OracleSql.winnowFd("bench", "b")},
+      capped AS (SELECT doc_id AS train_id, fp FROM fdc
+        WHERE fp IN (SELECT fp FROM fdc GROUP BY fp
           HAVING COUNT(*) <= ${graft.operators.Dedup.WinnowDfCap})),
       cand AS (SELECT train_id, b.doc_id AS bench_id
-        FROM capped c JOIN bfp b ON b.fp = c.fp
+        FROM capped c JOIN fdb b ON b.fp = c.fp
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
       inter AS (SELECT c.train_id, c.bench_id, COUNT(*) AS i
         FROM cand c
-        JOIN cfp t ON t.doc_id = c.train_id
-        JOIN bfp b ON b.doc_id = c.bench_id AND b.fp = t.fp
+        JOIN fdc t ON t.doc_id = c.train_id
+        JOIN fdb b ON b.doc_id = c.bench_id AND b.fp = t.fp
         GROUP BY 1, 2),
       szb AS (SELECT doc_id AS bench_id, COUNT(*) AS szb
-        FROM bfp GROUP BY 1),
+        FROM fdb GROUP BY 1),
       confirmed AS (SELECT train_id, i.bench_id FROM inter i
         JOIN szb ON szb.bench_id = i.bench_id
         WHERE i * 1000000 // szb >= 500000),
@@ -516,7 +452,7 @@ object QueriesRound9 {
         CAST(CAST(COALESCE(n_links, 0) AS HUGEINT) * 1000000
           // n_cand_pairs AS BIGINT) AS precision_ppm
       FROM candcen LEFT JOIN confcen ON confcen.source = candcen.source
-      ORDER BY candcen.source"""))
+      ORDER BY candcen.source""")
 
   /** WINNOW-vs-LSH DECONTAMINATION CALIBRATION — q226's screen
     * comparison transplanted to the decontamination task: the SAME
@@ -577,22 +513,21 @@ object QueriesRound9 {
               * 1000000 div n_confirmed END AS BIGINT)""")
             .as("lsh_recall_ppm"))
     },
-    Some(s"""WITH bench AS (SELECT doc_id + 1000000000000 AS doc_id,
+    s"""WITH bench AS (SELECT doc_id + 1000000000000 AS doc_id,
           substr(text, 1, greatest(length(text)-40, 50)) AS text
         FROM documents WHERE doc_id % 13 = 0),
-      ${winnowFpSql("documents", "cfp")},
-      ${winnowFpSql("bench", "bfp")},
-      capped AS (SELECT doc_id AS train_id, fp FROM cfp
-        WHERE fp IN (SELECT fp FROM cfp GROUP BY fp
+      ${OracleSql.winnowFd(tag = "c")},
+      ${OracleSql.winnowFd("bench", "b")},
+      capped AS (SELECT doc_id AS train_id, fp FROM fdc
+        WHERE fp IN (SELECT fp FROM fdc GROUP BY fp
           HAVING COUNT(*) <= ${graft.operators.Dedup.WinnowDfCap})),
       wcand AS (SELECT train_id, b.doc_id AS bench_id
-        FROM capped c JOIN bfp b ON b.fp = c.fp
+        FROM capped c JOIN fdb b ON b.fp = c.fp
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
       corpus AS (SELECT doc_id, text FROM documents
         UNION ALL SELECT doc_id, text FROM bench),
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM corpus, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      ${QueriesBeyond.MinhashBandsSql},
+      ${OracleSql.shingles(rel = "corpus")},
+      ${OracleSql.lshBands()},
       lcand AS (SELECT DISTINCT a.doc_id AS train_id,
           b.doc_id AS bench_id
         FROM bands a JOIN bands b ON a.bk = b.bk
@@ -604,11 +539,11 @@ object QueriesRound9 {
         GROUP BY 1, 2),
       inter AS (SELECT c.train_id, c.bench_id, COUNT(*) AS i
         FROM cand c
-        JOIN cfp t ON t.doc_id = c.train_id
-        JOIN bfp b ON b.doc_id = c.bench_id AND b.fp = t.fp
+        JOIN fdc t ON t.doc_id = c.train_id
+        JOIN fdb b ON b.doc_id = c.bench_id AND b.fp = t.fp
         GROUP BY 1, 2),
       szb AS (SELECT doc_id AS bench_id, COUNT(*) AS szb
-        FROM bfp GROUP BY 1),
+        FROM fdb GROUP BY 1),
       conf AS (SELECT train_id, i.bench_id, 1 AS c FROM inter i
         JOIN szb ON szb.bench_id = i.bench_id
         WHERE i * 1000000 // szb >= 500000),
@@ -635,7 +570,7 @@ object QueriesRound9 {
         CAST(CASE WHEN n_confirmed > 0
           THEN CAST(n_both_conf + n_lsh_only_conf AS HUGEINT)
             * 1000000 // n_confirmed END AS BIGINT) AS lsh_recall_ppm
-      FROM agg"""))
+      FROM agg""")
 
   val list: Seq[Q] = Seq(q230, q231, q232, q233, q234, q235)
 }

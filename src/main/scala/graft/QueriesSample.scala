@@ -44,7 +44,7 @@ object QueriesSample {
           element_at(col("qs"), 3).as("p99"))
         .orderBy(col("event_type"))
     },
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT event_type, value,
           ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value) AS rn,
           COUNT(*) OVER (PARTITION BY event_type) AS cnt
@@ -53,7 +53,7 @@ object QueriesSample {
         MAX(CASE WHEN rn = CAST(FLOOR(0.5*(cnt-1)) AS BIGINT)+1 THEN value END) AS p50,
         MAX(CASE WHEN rn = CAST(FLOOR(0.9*(cnt-1)) AS BIGINT)+1 THEN value END) AS p90,
         MAX(CASE WHEN rn = CAST(FLOOR(0.99*(cnt-1)) AS BIGINT)+1 THEN value END) AS p99
-      FROM t GROUP BY event_type ORDER BY event_type"""))
+      FROM t GROUP BY event_type ORDER BY event_type""")
 
   /** Systematic probability-proportional-to-size sample: exactly 37
     * docs, inclusion probability ∝ n_chars, deterministic in pure
@@ -68,7 +68,7 @@ object QueriesSample {
       WeightedSample.systematicPps(docs, "doc_id", "n_chars", k = 37)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH c AS (
+    """WITH c AS (
         SELECT doc_id, n_chars,
           SUM(n_chars) OVER (ORDER BY doc_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -76,7 +76,7 @@ object QueriesSample {
         FROM documents)
       SELECT doc_id, n_chars FROM c
       WHERE FLOOR(cum * 37 / total) > FLOOR((cum - n_chars) * 37 / total)
-      ORDER BY doc_id"""))
+      ORDER BY doc_id""")
 
   /** Independent Bernoulli weighted sample (P(in) = n_chars / max):
     * the narrow no-shuffle mixing filter
@@ -96,13 +96,13 @@ object QueriesSample {
           sum(col("n_chars")).as("chars_sel"))
         .orderBy(col("lang"))
     },
-    Some("""SELECT lang, COUNT(*) AS n_sel,
+    """SELECT lang, COUNT(*) AS n_sel,
         CAST(SUM(n_chars) AS BIGINT) AS chars_sel
       FROM documents
       WHERE CAST(('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
               * (SELECT MAX(n_chars) FROM documents)
             < n_chars * 4294967296
-      GROUP BY lang ORDER BY lang"""))
+      GROUP BY lang ORDER BY lang""")
 
   /** Z-order key census: Morton-interleave two 8-bit event coordinates
     * (operators/ZOrder.zkey — pure shift/mask expressions, stays in
@@ -123,7 +123,7 @@ object QueriesSample {
           min(col("zkey")).as("zmin"), max(col("zkey")).as("zmax"))
         .orderBy(col("bucket"))
     },
-    Some {
+    {
       val parts = (0 until 8).flatMap { i =>
         Seq(s"((((user_id % 256) >> $i) & 1) << ${2 * i + 1})",
           s"((((event_id % 256) >> $i) & 1) << ${2 * i})")
@@ -152,12 +152,12 @@ object QueriesSample {
         .orderBy(col("gid"), col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first)
     },
-    Some("""SELECT o_orderstatus, o_orderpriority,
+    """SELECT o_orderstatus, o_orderpriority,
         CAST(GROUPING(o_orderstatus) + 2*GROUPING(o_orderpriority) AS INT) AS gid,
         COUNT(*) AS n,
         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
       FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-      ORDER BY gid, o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""))
+      ORDER BY gid, o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""")
 
   /** Fixed-iteration PageRank over a derived interaction graph
     * (operators/PageRank.scala — scaled integer arithmetic, so ANY
@@ -175,7 +175,7 @@ object QueriesSample {
         .select(col("n").as("node"), col("rank"))
         .orderBy(col("rank").desc, col("node"))
     },
-    Some("""WITH e AS (
+    """WITH e AS (
         SELECT DISTINCT user_id % 50 AS src, (user_id + event_id) % 50 AS dst
         FROM events WHERE user_id % 50 <> (user_id + event_id) % 50),
       nodes AS (SELECT DISTINCT n FROM
@@ -197,10 +197,9 @@ object QueriesSample {
       r3 AS (SELECT nodes.n,
                CAST(150000000000 + (85 * COALESCE(c3.c, 0)) // 100 AS BIGINT) AS r
              FROM nodes LEFT JOIN c3 ON nodes.n = c3.n)
-      SELECT n AS node, r AS rank FROM r3 ORDER BY rank DESC, node"""))
+      SELECT n AS node, r AS rank FROM r3 ORDER BY rank DESC, node""")
 
-  /** Column spec shared by q73 (exact twin) and the production approx
-    * profile (PlanShapeSpec pins NEITHER plan carries an Expand). */
+  /** q73's column spec (PlanShapeSpec pins its plan free of Expand). */
   private[graft] val profileCols = Seq(
     ColumnProfile.ProfCol("event_id", numeric = true),
     ColumnProfile.ProfCol("user_id", numeric = true),
@@ -213,27 +212,16 @@ object QueriesSample {
                                     dir: String) =
     Tables.events(s, dir).withColumn("ts_ms", unix_millis(col("ts")))
 
-  /** The production profile: same single scan, HLL NDV, no Expand. Not
-    * oracled (HLL estimates are engine-specific); q73 is the exact twin
-    * whose hash match proves the shared scan/stack skeleton. */
-  private[graft] def profileApprox(s: org.apache.spark.sql.SparkSession,
-                                   dir: String) =
-    ColumnProfile.profile(eventsWithTsMs(s, dir), profileCols, exact = false)
-      .orderBy(col("col_name"))
-
-  /** Column profiling (operators/ColumnProfile.scala) in the
-    * exact-NDV regime — one column-pruned scan per exact distinct
-    * (hash agg, no Expand, no string sort; the r12 reshape of the
-    * r11-flagged tail cost), values identical to the old single-pass
-    * Expand form; the production twin [[profileApprox]] keeps the
-    * true single scan via approx_count_distinct (PlanShapeSpec). */
+  /** Column profiling (operators/ColumnProfile.scala) — one
+    * column-pruned scan per exact distinct (hash agg, no Expand, no
+    * string sort; the r12 reshape of the r11-flagged tail cost), values
+    * identical to the old single-pass Expand form. */
   private val q73 = Q(
     "q73_profile",
     (s, dir) =>
-      ColumnProfile.profile(eventsWithTsMs(s, dir), profileCols,
-          exact = true)
+      ColumnProfile.profile(eventsWithTsMs(s, dir), profileCols)
         .orderBy(col("col_name")),
-    Some("""SELECT 'event_id' AS col_name, COUNT(*) AS n,
+    """SELECT 'event_id' AS col_name, COUNT(*) AS n,
         CAST(SUM(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
         COUNT(DISTINCT event_id) AS n_distinct,
         CAST(MIN(event_id) AS DOUBLE) AS vmin_num, CAST(MAX(event_id) AS DOUBLE) AS vmax_num,
@@ -258,7 +246,7 @@ object QueriesSample {
       SELECT 'props', COUNT(*), CAST(SUM(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS BIGINT),
         COUNT(DISTINCT props), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
         MIN(props), MAX(props) FROM events
-      ORDER BY col_name"""))
+      ORDER BY col_name""")
 
   /** Windowed sequential funnel (operators/Funnel.scala):
     * view → click → purchase with a 24 h conversion window per step —
@@ -272,7 +260,7 @@ object QueriesSample {
       Funnel.counts(ev, "user_id", "event_type", "ms",
         Seq("view", "click", "purchase"), maxGapMs = Some(86400000L))
     },
-    Some("""WITH t AS (
+    """WITH t AS (
         SELECT user_id AS u, event_type AS et, epoch_ms(ts) AS ms FROM events),
       s1 AS (SELECT u, MIN(ms) AS t1 FROM t WHERE et = 'view' GROUP BY 1),
       s2 AS (SELECT t.u, MIN(t.ms) AS t2 FROM t JOIN s1 USING (u)
@@ -283,7 +271,7 @@ object QueriesSample {
                AND t.ms <= s2.t2 + 86400000 GROUP BY 1)
       SELECT (SELECT COUNT(*) FROM s1) AS n1,
              (SELECT COUNT(*) FROM s2) AS n2,
-             (SELECT COUNT(*) FROM s3) AS n3"""))
+             (SELECT COUNT(*) FROM s3) AS n3""")
 
   /** Repeated-span coverage per language (operators/DupSpans.scala):
     * how many characters of each doc are 20-gram-exact text shared
@@ -306,7 +294,7 @@ object QueriesSample {
           sum(col("n_chars")).as("total_chars"))
         .orderBy(col("lang"))
     },
-    Some("""WITH g AS (
+    """WITH g AS (
         SELECT doc_id, lang, n_chars, i AS pos,
           substr(text, CAST(i AS INT), 20) AS gram
         FROM documents, LATERAL (SELECT UNNEST(range(1, len(text) - 18)) AS i) t
@@ -337,7 +325,7 @@ object QueriesSample {
       SELECT lang, COUNT(*) AS n_docs_dup,
         CAST(SUM(covered) AS BIGINT) AS covered_chars,
         CAST(SUM(n_chars) AS BIGINT) AS total_chars
-      FROM perdoc GROUP BY lang ORDER BY lang"""))
+      FROM perdoc GROUP BY lang ORDER BY lang""")
 
   /** Equi-depth histogram by COMPOSITION: boundaries from the t-digest
     * in its exact regime (q67's kernel, global this time), bucket
@@ -362,7 +350,7 @@ object QueriesSample {
           min(col("value")).as("vmin"), max(col("value")).as("vmax"))
         .orderBy(col("bucket"))
     },
-    Some {
+    {
       val bexprs = (1 to 7).map(i =>
         s"MAX(CASE WHEN rn = CAST(FLOOR($i.0/8*(cnt-1)) AS BIGINT)+1 THEN value END) AS b$i")
         .mkString(",\n          ")
@@ -402,7 +390,7 @@ object QueriesSample {
           count(lit(1)).as("n_docs"))
         .orderBy(col("lang"))
     },
-    Some("""WITH w AS (SELECT lang, doc_id, n_chars,
+    """WITH w AS (SELECT lang, doc_id, n_chars,
         SUM(n_chars) OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
         SUM(n_chars) OVER (PARTITION BY lang) AS total FROM documents)
@@ -410,7 +398,7 @@ object QueriesSample {
         CAST(SUM(CASE WHEN 2*cum <= total THEN 1 ELSE 0 END) AS BIGINT) AS kept_docs,
         CAST(SUM(CASE WHEN 2*cum <= total THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars,
         COUNT(*) AS n_docs
-      FROM w GROUP BY lang ORDER BY lang"""))
+      FROM w GROUP BY lang ORDER BY lang""")
 
   /** Reciprocal nearest neighbors: pairs where EACH vector is in the
     * other's cosine top-5 — the high-precision semantic-dedup verdict
@@ -439,7 +427,7 @@ object QueriesSample {
         .select(col("id_a"), col("id_b"), col("rnk_ab"), col("rnk_ba"))
         .orderBy(col("id_a"), col("id_b"))
     },
-    Some("""WITH ev AS (
+    """WITH ev AS (
         SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
         FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)
         WHERE vec_id < 120),
@@ -461,7 +449,7 @@ object QueriesSample {
         a.rnk AS rnk_ab, b.rnk AS rnk_ba
       FROM t a JOIN t b ON a.q_id = b.vec_id AND a.vec_id = b.q_id
         AND a.q_id < a.vec_id
-      ORDER BY id_a, id_b"""))
+      ORDER BY id_a, id_b""")
 
   /** Multi-probe sign-LSH audit (operators/Similarity
     * .multiProbeCandidates): per query, candidate-set size and how
@@ -490,7 +478,7 @@ object QueriesSample {
           coalesce(col("hits"), lit(0L)).as("hits"))
         .orderBy(col("q_id"))
     },
-    Some {
+    {
       val bitsExpr = (1 to 8)
         .map(i => s"(CASE WHEN embedding[$i] >= 0 THEN ${1L << (i - 1)} ELSE 0 END)")
         .mkString(" + ")
@@ -559,7 +547,7 @@ object QueriesSample {
         .groupBy(col("score")).agg(count(lit(1)).as("n"))
         .orderBy(col("score"))
     },
-    Some("""WITH l AS (
+    """WITH l AS (
         SELECT c_custkey AS id_l, c_nationkey AS blk, c_name AS nm,
           c_mktsegment AS seg, CAST(FLOOR(c_acctbal / 100) AS BIGINT) AS bb
         FROM customer),
@@ -576,7 +564,7 @@ object QueriesSample {
            + CASE WHEN l.bb = r.bb THEN 1 ELSE 0 END) AS score
         FROM l JOIN r USING (blk))
       SELECT CAST(score AS BIGINT) AS score, COUNT(*) AS n
-      FROM p GROUP BY 1 ORDER BY score"""))
+      FROM p GROUP BY 1 ORDER BY score""")
 
   /** Same-day event-type co-occurrence (market-basket support counts
     * at day granularity): distinct (user, day, type) then a within-
@@ -600,14 +588,14 @@ object QueriesSample {
         .groupBy(col("ta"), col("tb")).agg(count(lit(1)).as("n"))
         .orderBy(col("ta"), col("tb"))
     },
-    Some("""WITH d AS (
+    """WITH d AS (
         SELECT DISTINCT user_id,
           CAST(FLOOR(epoch_ms(ts) / 86400000) AS BIGINT) AS day, event_type
         FROM events)
       SELECT a.event_type AS ta, b.event_type AS tb, COUNT(*) AS n
       FROM d a JOIN d b ON a.user_id = b.user_id AND a.day = b.day
         AND a.event_type < b.event_type
-      GROUP BY 1, 2 ORDER BY 1, 2"""))
+      GROUP BY 1, 2 ORDER BY 1, 2""")
 
   /** Multi-source BFS distances (operators/Bfs.scala) over the q72
     * interaction graph from seeds {0,1,2}, 4 relaxation rounds —
@@ -623,7 +611,7 @@ object QueriesSample {
         .select(col("n").as("node"), col("d").as("dist"))
         .orderBy(col("node"))
     },
-    Some {
+    {
       val rounds = (1 to 4).map { k =>
         val p = k - 1
         s"""u$k AS (SELECT e.dst AS n, MIN(d$p.d + 1) AS nd
@@ -666,12 +654,12 @@ object QueriesSample {
             .cast("long").as("occupied"))
         .orderBy(col("event_type"))
     },
-    Some("""SELECT event_type,
+    """SELECT event_type,
         COUNT(DISTINCT
           CAST(('0x' || substr(md5(CAST(props AS VARCHAR)), 1, 8)) AS BIGINT)
             & 4095) AS occupied
       FROM events WHERE props IS NOT NULL
-      GROUP BY event_type ORDER BY event_type"""))
+      GROUP BY event_type ORDER BY event_type""")
 
   /** SCD2 point-in-time resolution (operators/Scd2.scala): signup
     * events are the dimension's change stream (validity intervals via
@@ -697,7 +685,7 @@ object QueriesSample {
             .as("attr_sum"))
         .orderBy(col("user_id"))
     },
-    Some("""WITH upd AS (
+    """WITH upd AS (
         SELECT user_id, epoch_ms(ts) AS ms, event_id, value FROM events
         WHERE event_type = 'signup'),
       v AS (
@@ -711,7 +699,7 @@ object QueriesSample {
               AND f.ms >= v.vfrom AND (v.vto IS NULL OR f.ms < v.vto))
       SELECT user_id, COUNT(*) AS n_matched,
         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS attr_sum
-      FROM j GROUP BY user_id ORDER BY user_id"""))
+      FROM j GROUP BY user_id ORDER BY user_id""")
 
   /** EXACT duplicated-substring spans (operators/ExactSubstring.scala):
     * maximal per-doc character ranges covered by a substring of length
@@ -726,7 +714,7 @@ object QueriesSample {
         .dupSpansFromGrams(SharedGrams.grams(s, dir),
           Tables.documents(s, dir), "doc_id", "text", minLen = 20)
         .orderBy(col("doc_id"), col("span_start")),
-    Some("""WITH g AS (
+    """WITH g AS (
         SELECT doc_id, CAST(i AS INT) AS pos,
           substr(text, CAST(i AS INT), 20) AS gram
         FROM documents, LATERAL (SELECT UNNEST(range(1, len(text) - 18)) AS i) t
@@ -746,7 +734,7 @@ object QueriesSample {
       SELECT doc_id, MIN(pos) AS span_start,
         CAST(MAX(pos) + 20 - MIN(pos) AS BIGINT) AS span_len
       FROM isl GROUP BY doc_id, island
-      ORDER BY doc_id, span_start"""))
+      ORDER BY doc_id, span_start""")
 
   /** DUPLICATED-SPAN REMOVAL (ExactSubstring.removeSpans ∘ dupSpans):
     * the cleaned-corpus rewrite — q86's maximal duplicated spans
@@ -769,7 +757,7 @@ object QueriesSample {
           col("removed_chars"), col("n_spans"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH g AS (
+    """WITH g AS (
         SELECT doc_id, CAST(i AS INT) AS pos,
           substr(text, CAST(i AS INT), 20) AS gram
         FROM documents, LATERAL (SELECT UNNEST(range(1, len(text) - 18)) AS i) t
@@ -814,7 +802,7 @@ object QueriesSample {
           AS clean_len,
         h.removed_chars, h.n_spans
       FROM heads h JOIN documents d USING (doc_id)
-      ORDER BY h.doc_id"""))
+      ORDER BY h.doc_id""")
 
   /** Distributed suffix-array ranks (operators/SuffixArray.scala):
     * prefix-doubling dense ranks of every 32-bounded suffix, on a
@@ -840,7 +828,7 @@ object QueriesSample {
           max(col("rank")).as("rank_max"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH p AS (
+    """WITH p AS (
         SELECT doc_id, substr(text, CAST(i AS INT), 32) AS sfx
         FROM documents, LATERAL (SELECT UNNEST(range(1, len(text)+1)) AS i) t
         WHERE doc_id % 10 = 0),
@@ -849,7 +837,7 @@ object QueriesSample {
         CAST(SUM(rk) AS BIGINT) AS rank_sum,
         CAST(MIN(rk) AS BIGINT) AS rank_min,
         CAST(MAX(rk) AS BIGINT) AS rank_max
-      FROM r GROUP BY doc_id ORDER BY doc_id"""))
+      FROM r GROUP BY doc_id ORDER BY doc_id""")
 
   /** Constraint audit (operators/Validate.scala): null / domain /
     * range / regex checks fused into ONE scan + a per-key hash agg for
@@ -867,7 +855,7 @@ object QueriesSample {
         graft.operators.Validate.Matches("props", "^\\{"),
         graft.operators.Validate.Unique(Seq("event_id"))))
         .orderBy(col("check_name")),
-    Some("""SELECT 'not_null(user_id)' AS check_name,
+    """SELECT 'not_null(user_id)' AS check_name,
         CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS violations,
         COUNT(*) AS n_rows FROM events
       UNION ALL
@@ -893,7 +881,7 @@ object QueriesSample {
         CAST(COUNT(*) - (SELECT COUNT(*) FROM
           (SELECT DISTINCT event_id FROM events) d) AS BIGINT),
         COUNT(*) FROM events
-      ORDER BY check_name"""))
+      ORDER BY check_name""")
 
   /** Per-doc longest repeated substring (SuffixArray.longestRepeatPerDoc,
     * capped at 16): rank ties give the full bounded-suffix length,
@@ -913,7 +901,7 @@ object QueriesSample {
         .longestRepeatPerDocDirect(docs, "doc_id", "text", maxLen = 16)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH p AS (
+    """WITH p AS (
         SELECT doc_id, CAST(i AS INT) AS pos,
           substr(text, CAST(i AS INT), 16) AS sfx
         FROM documents, LATERAL (SELECT UNNEST(range(1, len(text)+1)) AS i) t
@@ -932,7 +920,7 @@ object QueriesSample {
                 AND L <= len(sfx)), 0)) AS rep
         FROM o)
       SELECT doc_id, CAST(MAX(rep) AS BIGINT) AS max_repeat_len
-      FROM l GROUP BY doc_id ORDER BY doc_id"""))
+      FROM l GROUP BY doc_id ORDER BY doc_id""")
 
   /** Incremental SCD2 maintenance (Scd2.applyChanges): the dimension
     * is built from HALF the signup stream, then the other half is
@@ -953,12 +941,12 @@ object QueriesSample {
         .select(col("user_id"), col("value"), col("vfrom"), col("vto"))
         .orderBy(col("user_id"), col("vfrom"), col("vto"))
     },
-    Some("""WITH upd AS (
+    """WITH upd AS (
         SELECT user_id, value, epoch_ms(ts) AS ms, event_id FROM events
         WHERE event_type = 'signup')
       SELECT user_id, value, ms AS vfrom,
         LEAD(ms) OVER (PARTITION BY user_id ORDER BY ms, event_id) AS vto
-      FROM upd ORDER BY user_id, vfrom, vto"""))
+      FROM upd ORDER BY user_id, vfrom, vto""")
 
   /** END-TO-END semantic dedup: embedding near-dup pairs (q34's
     * bucketed double-prefilter/decimal-confirm operator) → connected
@@ -984,51 +972,13 @@ object QueriesSample {
         .select(col("n_vectors"), col("n_clustered"), col("n_clusters"),
           col("n_dropped"))
     },
-    Some("""WITH RECURSIVE ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      meta AS (
-        SELECT vec_id,
-          (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END) +
-          (CASE WHEN embedding[2] >= 0 THEN 2 ELSE 0 END) +
-          (CASE WHEN embedding[3] >= 0 THEN 4 ELSE 0 END) +
-          (CASE WHEN embedding[4] >= 0 THEN 8 ELSE 0 END) +
-          (CASE WHEN embedding[5] >= 0 THEN 16 ELSE 0 END) +
-          (CASE WHEN embedding[6] >= 0 THEN 32 ELSE 0 END) +
-          (CASE WHEN embedding[7] >= 0 THEN 64 ELSE 0 END) +
-          (CASE WHEN embedding[8] >= 0 THEN 128 ELSE 0 END) AS b
-        FROM embeddings),
-      norms AS (
-        SELECT vec_id, SQRT(CAST(SUM(CAST(x*x AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
-      cand AS (
-        SELECT ma.vec_id AS va, mb.vec_id AS vb
-        FROM meta ma JOIN meta mb ON ma.b = mb.b AND ma.vec_id < mb.vec_id),
-      dots AS (
-        SELECT c.va, c.vb,
-          CAST(SUM(CAST(ea.x * eb.x AS DECIMAL(18,16))) AS DOUBLE) AS dot
-        FROM cand c
-        JOIN ev ea ON ea.vec_id = c.va
-        JOIN ev eb ON eb.vec_id = c.vb AND eb.i = ea.i
-        GROUP BY 1, 2),
-      pairs AS (
-        SELECT va, vb FROM dots
-        JOIN norms na ON na.vec_id = va
-        JOIN norms nb ON nb.vec_id = vb
-        WHERE dot / (na.nrm * nb.nrm) >= 0.3),
-      edges AS (
-        SELECT va AS src, vb AS dst FROM pairs
-        UNION SELECT vb, va FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comp AS (SELECT node, MIN(label) AS component FROM walk GROUP BY 1)
+    s"""WITH RECURSIVE ${OracleSql.cosineNearPairs},
+      ${OracleSql.componentWalk("pairs")}
       SELECT (SELECT COUNT(*) FROM embeddings) AS n_vectors,
         COUNT(*) AS n_clustered,
         COUNT(DISTINCT component) AS n_clusters,
         COUNT(*) - COUNT(DISTINCT component) AS n_dropped
-      FROM comp"""))
+      FROM comp""")
 
   /** Product-quantization encode census (operators/ProductQuant):
     * stride-picked per-subspace codebook (m=4 subspaces of 16 dims),
@@ -1045,9 +995,7 @@ object QueriesSample {
         .groupBy(col("j").cast("long").as("j"), col("code"))
         .agg(count(lit(1)).as("n"), min(col("id")).as("min_vec"))
         .orderBy(col("j"), col("code")),
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows("x")},
       sub AS (
         SELECT vec_id, CAST((i-1)//16 AS BIGINT) AS j, (i-1)%16 AS si, x
         FROM ev),
@@ -1067,7 +1015,7 @@ object QueriesSample {
           FROM d) t
         WHERE rk = 1)
       SELECT j, code, COUNT(*) AS n, MIN(vec_id) AS min_vec
-      FROM best GROUP BY 1, 2 ORDER BY j, code"""))
+      FROM best GROUP BY 1, 2 ORDER BY j, code""")
 
   /** PQ asymmetric-distance (ADC) search: 4 query vectors against the
     * CODES, never the floats — per query a tiny m×ksub decimal
@@ -1087,9 +1035,7 @@ object QueriesSample {
         .select(col("q_id"), col("vec_id"), col("rnk").cast("long").as("rnk"))
         .orderBy(col("q_id"), col("rnk"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows("x")},
       sub AS (
         SELECT vec_id, CAST((i-1)//16 AS BIGINT) AS j, (i-1)%16 AS si, x
         FROM ev),
@@ -1118,7 +1064,7 @@ object QueriesSample {
                              ORDER BY adcd ASC, vec_id ASC) AS rnk
         FROM adc)
       SELECT q_id, vec_id, rnk FROM ranked
-      WHERE rnk <= 3 ORDER BY q_id, rnk"""))
+      WHERE rnk <= 3 ORDER BY q_id, rnk""")
 
   /** IVF-PQ search — the COMPOSITION of the q47/q48 inverted file and
     * the q92/q93 code table, and the shape of the standard
@@ -1137,9 +1083,7 @@ object QueriesSample {
         .select(col("q_id"), col("vec_id"), col("rnk").cast("long").as("rnk"))
         .orderBy(col("q_id"), col("rnk"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+    s"""WITH ${OracleSql.embeddingRows("x")},
       icents AS (
         SELECT CAST(vec_id // 97 AS BIGINT) AS cid, vec_id AS cvid
         FROM embeddings WHERE vec_id % 97 = 0),
@@ -1198,7 +1142,7 @@ object QueriesSample {
                              ORDER BY adcd ASC, vec_id ASC) AS rnk
         FROM adc)
       SELECT q_id, vec_id, rnk FROM ranked
-      WHERE rnk <= 3 ORDER BY q_id, rnk"""))
+      WHERE rnk <= 3 ORDER BY q_id, rnk""")
 
   /** Temperature-weighted domain mixture (operators/MixtureSample):
     * rebalance the corpus by language with α = 0.5 — the multilingual
@@ -1218,7 +1162,7 @@ object QueriesSample {
         .na.fill(0L, Seq("n_kept"))
         .orderBy(col("lang"))
     },
-    Some("""WITH stats AS (
+    """WITH stats AS (
         SELECT lang, COUNT(*) AS n,
           CAST(FLOOR(SQRT(CAST(COUNT(*) AS DOUBLE)) * 1000000) AS BIGINT) AS w
         FROM documents GROUP BY 1),
@@ -1234,7 +1178,7 @@ object QueriesSample {
       FROM stats s
       LEFT JOIN (SELECT lang, COUNT(*) AS n_kept FROM kept GROUP BY 1) k
         ON k.lang = s.lang
-      ORDER BY s.lang"""))
+      ORDER BY s.lang""")
 
   /** DuckDB mirror of `rounds` BPE training rounds: per round, pair
     * counts via a lateral UNNEST over the split symbol sequence, the
@@ -1307,7 +1251,7 @@ object QueriesSample {
           col("cnt"))
         .orderBy(col("rnd"))
     },
-    Some(bpeOracleSql(4)))
+    bpeOracleSql(4))
 
   /** Corpus encode under the q97-learned merges — real subword token
     * counts per document (the production replacement for the BPE-ish
@@ -1332,7 +1276,7 @@ object QueriesSample {
         .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_subwords"))
         .orderBy(col("doc_id"))
     },
-    Some {
+    {
       val encodeCtes = (1 to 4).map { k =>
         s"""u$k AS (SELECT word, ${bpeFoldSql("string_split(seq, ' ')", "b.l", "b.r")} AS seq
           FROM u${k - 1} CROSS JOIN b$k b)"""
@@ -1379,7 +1323,7 @@ object QueriesSample {
           min(col("sqn")).as("min_sqn"), max(col("sqn")).as("max_sqn"))
         .orderBy(col("label"))
     },
-    Some("""WITH xq AS (
+    """WITH xq AS (
         SELECT vec_id, CAST(label AS BIGINT) AS label,
           CAST(FLOOR(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000000)
             AS BIGINT) AS xfp
@@ -1393,7 +1337,7 @@ object QueriesSample {
           AS n_low_norm,
         CAST(MIN(sqn) AS BIGINT) AS min_sqn,
         CAST(MAX(sqn) AS BIGINT) AS max_sqn
-      FROM sq GROUP BY 1 ORDER BY label"""))
+      FROM sq GROUP BY 1 ORDER BY label""")
 
   /** DEAD-DIMENSION CENSUS — q178's per-dimension companion: for each
     * embedding dimension, the zero count, distinct-value count, and
@@ -1414,7 +1358,7 @@ object QueriesSample {
         countDistinct(col("xfp")).as("n_distinct"),
         min(col("xfp")).as("min_fp"), max(col("xfp")).as("max_fp"))
       .orderBy(col("j")),
-    Some("""WITH xq AS (
+    """WITH xq AS (
         SELECT CAST(i - 1 AS BIGINT) AS j,
           CAST(FLOOR(CAST(embedding[CAST(i AS INT)] AS DOUBLE) * 1000000)
             AS BIGINT) AS xfp
@@ -1424,7 +1368,7 @@ object QueriesSample {
         CAST(COUNT(DISTINCT xfp) AS BIGINT) AS n_distinct,
         CAST(MIN(xfp) AS BIGINT) AS min_fp,
         CAST(MAX(xfp) AS BIGINT) AS max_fp
-      FROM xq GROUP BY 1 ORDER BY j"""))
+      FROM xq GROUP BY 1 ORDER BY j""")
 
   /** HILBERT-CURVE LAYOUT KEY (ZOrder.withHilbert) — q70's Morton key
     * upgraded to the curve with the adjacency GUARANTEE: consecutive
@@ -1449,7 +1393,7 @@ object QueriesSample {
           min(col("hd")).as("min_hd"), max(col("hd")).as("max_hd"))
         .orderBy(col("bucket"))
     },
-    Some(s"""WITH src AS (SELECT
+    s"""WITH src AS (SELECT
         user_id % 256 AS hx,
         (epoch_ms(ts) // 3600000) % 256 AS hy
       FROM events),
@@ -1457,7 +1401,7 @@ object QueriesSample {
       SELECT hd // 2048 AS bucket, CAST(COUNT(*) AS BIGINT) AS n,
         CAST(MIN(hd) AS BIGINT) AS min_hd,
         CAST(MAX(hd) AS BIGINT) AS max_hd
-      FROM hilbert GROUP BY 1 ORDER BY bucket"""))
+      FROM hilbert GROUP BY 1 ORDER BY bucket""")
 
   /** TOKENIZER FERTILITY BY LANGUAGE (the XLM-R / mC4 tokenizer-equity
     * metric: subwords per word, and its inverse chars per subword, per
@@ -1500,7 +1444,7 @@ object QueriesSample {
             .as("chars_per_tok_ppm"))
         .orderBy(col("lang"))
     },
-    Some {
+    {
       val encodeCtes = (1 to 4).map { k =>
         s"""u$k AS (SELECT word, ${bpeFoldSql("string_split(seq, ' ')", "b.l", "b.r")} AS seq
           FROM u${k - 1} CROSS JOIN b$k b)"""
@@ -1572,7 +1516,7 @@ object QueriesSample {
             .as("correction_ppm"))
         .orderBy(col("lang"))
     },
-    Some {
+    {
       val encodeCtes = (1 to 4).map { k =>
         s"""u$k AS (SELECT word, ${bpeFoldSql("string_split(seq, ' ')", "b.l", "b.r")} AS seq
           FROM u${k - 1} CROSS JOIN b$k b)"""

@@ -13,13 +13,6 @@ import Queries.Q
   */
 object QueriesScore {
 
-  /** The oracle's 8-bit sign-bucket expression (q91's formulation —
-    * bit i set iff embedding[i+1] >= 0). */
-  private def signBucketSql(col: String): String =
-    (0 until 8).map { i =>
-      s"(CASE WHEN $col[${i + 1}] >= 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
-
   /** EMBEDDING-SPACE CONTAMINATION SCREEN: which corpus vectors are
     * near-duplicates (cosine ≥ 0.3) of ANY benchmark vector? The
     * semantic twin of q50's n-gram decontamination — n-grams catch
@@ -45,15 +38,10 @@ object QueriesScore {
       Similarity.crossSetNearPairs(corpus, bench, bits = 8, threshold = 0.3)
         .orderBy(col("vec_id"), col("bench_id"))
     },
-    Some(s"""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      meta AS (SELECT vec_id, ${signBucketSql("embedding")} AS b
+    s"""WITH ${OracleSql.embeddingRows("x")},
+      meta AS (SELECT vec_id, ${OracleSql.signBucket("embedding")} AS b
         FROM embeddings),
-      norms AS (
-        SELECT vec_id,
-          SQRT(CAST(SUM(CAST(x*x AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+      ${OracleSql.l2Norms("x")},
       probes AS (
         SELECT m.vec_id AS bench_id, xor(m.b, f.flip) AS pb
         FROM meta m,
@@ -75,7 +63,7 @@ object QueriesScore {
       JOIN norms na ON na.vec_id = d.vec_id
       JOIN norms nb ON nb.vec_id = d.bench_id
       WHERE d.dot / (na.nrm * nb.nrm) >= 0.3
-      ORDER BY d.vec_id, d.bench_id"""))
+      ORDER BY d.vec_id, d.bench_id""")
 
   /** BIGRAM-LM QUALITY SCORE (stupid backoff, CCNet-style perplexity
     * proxy): train unigram/bigram counts on the WHOLE corpus, score a
@@ -92,7 +80,7 @@ object QueriesScore {
       NgramLm.score(docs.filter(col("doc_id") % 20 === 0), docs)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id,
           UNNEST(range(1, len(string_split(text,' '))+1)) AS pos,
           UNNEST(string_split(text,' ')) AS w
@@ -116,7 +104,7 @@ object QueriesScore {
         WHERE t.doc_id % 20 = 0)
       SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_transitions,
         CAST(SUM(s) // COUNT(*) AS BIGINT) AS lm_score
-      FROM s GROUP BY 1 ORDER BY doc_id"""))
+      FROM s GROUP BY 1 ORDER BY doc_id""")
 
   /** ANN RECALL@K EVAL ([[Similarity.annRecall]]): score the
     * multi-probe sign-LSH candidate set against the exact decimal
@@ -140,14 +128,10 @@ object QueriesScore {
       Similarity.annRecall(exact, cand, k = 10)
         .orderBy(col("q_id"))
     },
-    Some(s"""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS x
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      meta AS (SELECT vec_id, ${signBucketSql("embedding")} AS b
+    s"""WITH ${OracleSql.embeddingRows("x")},
+      meta AS (SELECT vec_id, ${OracleSql.signBucket("embedding")} AS b
         FROM embeddings),
-      norms AS (SELECT vec_id,
-          SQRT(CAST(SUM(CAST(x*x AS DECIMAL(18,16))) AS DOUBLE)) AS nrm
-        FROM ev GROUP BY 1),
+      ${OracleSql.l2Norms("x")},
       dots AS (
         SELECT qq.vec_id AS q_id, cc.vec_id,
           CAST(SUM(CAST(ea.x * eb.x AS DECIMAL(18,16))) AS DOUBLE) AS dot
@@ -179,7 +163,7 @@ object QueriesScore {
         LEFT JOIN cand c ON c.q_id = t.q_id AND c.vec_id = t.vec_id
         GROUP BY 1)
       SELECT q_id, hits, (1000 * hits) // 10 AS recall_permille
-      FROM h ORDER BY q_id"""))
+      FROM h ORDER BY q_id""")
 
   /** CCNET HEAD/MIDDLE/TAIL BUCKETS: score every document under the
     * corpus-trained LM (q101's operator, unfiltered), then tercile the
@@ -236,7 +220,7 @@ object QueriesScore {
           expr("sum(lm_score) div count(1)").as("avg_score"))
         .orderBy(col("bucket"))
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id,
           UNNEST(range(1, len(string_split(text,' '))+1)) AS pos,
           UNNEST(string_split(text,' ')) AS w
@@ -267,42 +251,7 @@ object QueriesScore {
       SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_docs,
         MIN(lm_score) AS min_score, MAX(lm_score) AS max_score,
         CAST(SUM(lm_score) // COUNT(*) AS BIGINT) AS avg_score
-      FROM bucketed GROUP BY 1 ORDER BY bucket"""))
-
-  /** The PRODUCTION tercile cut (q35/q73's plan-guarded approx-twin
-    * pattern, closing the r8-verdict "documented, not implemented"
-    * note): two t-digest thresholds + ONE broadcast + a narrow
-    * bucket-assignment filter — no rank at all, not even the two-phase
-    * kernel the exact q103 rides. At 100 TB this is the shape a CCNet
-    * pipeline ships: the sketch is mergeable executor state, the
-    * threshold frame is 1 row, and the scoring scan is read once for
-    * thresholds (sketch agg) and once for assignment. Approximation
-    * contract: bucket boundaries land on sketch quantiles, so bucket
-    * SIZES drift by the t-digest error plus score-tie mass (ties all
-    * fall on one side of a threshold, where exact NTILE splits them);
-    * CcnetApproxSpec bounds that drift against the exact twin and
-    * pins the plan window-free. */
-  private[graft] def ccnetBucketsApprox(s: SparkSession,
-                                        dir: String): DataFrame = {
-    import graft.operators.QuantileSketch
-    // thresholds + assignment read the checkpointed session artifact
-    val scored = SharedLm.scored(s, dir)
-    val th = scored.agg(QuantileSketch.quantiles(
-      col("lm_score").cast("double"), Seq(1.0 / 3, 2.0 / 3), 100).as("qs"))
-    scored.crossJoin(broadcast(th))
-      .select(col("lm_score"),
-        when(col("lm_score").cast("double") > element_at(col("qs"), 2),
-          lit(1))
-          .when(col("lm_score").cast("double") > element_at(col("qs"), 1),
-            lit(2))
-          .otherwise(lit(3)).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_docs"),
-        min(col("lm_score")).as("min_score"),
-        max(col("lm_score")).as("max_score"),
-        expr("sum(lm_score) div count(1)").as("avg_score"))
-      .orderBy(col("bucket"))
-  }
+      FROM bucketed GROUP BY 1 ORDER BY bucket""")
 
   /** QUALITY-AWARE DEDUP RETENTION: q44 keeps each LSH cluster's
     * min-id doc; real curation pipelines keep the BEST member — here
@@ -330,33 +279,13 @@ object QueriesScore {
           expr(s"key div ${B}L").as("keeper_chars"))
         .orderBy(col("component"))
     },
-    Some {
+    {
       // same signature/band/component CTEs as q44's oracle (SharedLsh's
       // parameters: 5-char shingles, 8 minhash slices, 2 bands of 4)
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
       val b = 1L << 40
       s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comps AS (SELECT node AS doc_id, MIN(label) AS component
-                FROM walk GROUP BY 1),
+      ${OracleSql.lshPairs()},
+      ${OracleSql.componentWalk("pairs", "comps")},
       packed AS (
         SELECT c.component, COUNT(*) AS members,
           MAX(d.n_chars * $b + ($b - 1 - d.doc_id)) AS key
@@ -391,7 +320,7 @@ object QueriesScore {
           (col("est") - col("tf")).as("inflation"))
         .orderBy(col("tf").desc, col("tok").asc)
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT UNNEST(string_split(text,' ')) AS tok FROM documents),
       cells AS (
         SELECT js.j,
@@ -412,7 +341,7 @@ object QueriesScore {
         FROM pc LEFT JOIN sk ON sk.j = pc.j AND sk.pos = pc.pos
         GROUP BY 1, 2)
       SELECT tok, tf, est, est - tf AS inflation
-      FROM est ORDER BY tf DESC, tok ASC"""))
+      FROM est ORDER BY tf DESC, tok ASC""")
 
   val list: Seq[Q] = Seq(q100, q101, q102, q103, q104, q105)
 }

@@ -27,7 +27,7 @@ object QueriesTrain {
           countDistinct(col("cluster_id")).as("n_clusters"),
           sum(col("doc_id")).as("docid_sum"))
         .orderBy(col("split")),
-    Some("""WITH u AS (
+    """WITH u AS (
         SELECT doc_id, MIN(doc_id) OVER (PARTITION BY md5(text)) AS cluster_id
         FROM documents),
       t AS (
@@ -39,7 +39,7 @@ object QueriesTrain {
       SELECT split, COUNT(*) AS n_docs,
         COUNT(DISTINCT cluster_id) AS n_clusters,
         CAST(SUM(doc_id) AS BIGINT) AS docid_sum
-      FROM t GROUP BY 1 ORDER BY split"""))
+      FROM t GROUP BY 1 ORDER BY split""")
 
   /** TOKEN-BALANCED SHARDS (TrainPrep.tokenBalancedShards): md5-keyed
     * deterministic shuffle, two-phase range-scan prefix sums (never a
@@ -55,7 +55,7 @@ object QueriesTrain {
           sum(col("tokens")).as("shard_tokens"),
           sum(col("doc_id")).as("docid_sum"))
         .orderBy(col("shard")),
-    Some("""WITH k AS (
+    """WITH k AS (
         SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS k,
           len(string_split(text, ' ')) AS tokens
         FROM documents),
@@ -67,7 +67,7 @@ object QueriesTrain {
       SELECT CAST(FLOOR((cum - tokens) * 8 / total) AS BIGINT) AS shard,
         COUNT(*) AS n_docs, CAST(SUM(tokens) AS BIGINT) AS shard_tokens,
         CAST(SUM(doc_id) AS BIGINT) AS docid_sum
-      FROM c GROUP BY 1 ORDER BY shard"""))
+      FROM c GROUP BY 1 ORDER BY shard""")
 
   /** DISTRIBUTED K-MEANS (KMeansCluster.lloyd, k=4, 2 Lloyd rounds,
     * seeds = vectors 0..3): per-iteration plan is a narrow broadcast
@@ -90,37 +90,11 @@ object QueriesTrain {
           sum(col("dist")).as("inertia"))
         .orderBy(col("cluster"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      c0 AS (SELECT vec_id AS cid, i, a AS m FROM ev WHERE vec_id < 4),
-      d1 AS (
-        SELECT e.vec_id, c.cid,
-          SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10) AS BIGINT)) AS d
-        FROM ev e JOIN c0 c ON e.i = c.i GROUP BY 1, 2),
-      a1 AS (
-        SELECT vec_id, cid FROM (
-          SELECT vec_id, cid,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM d1) r WHERE rn = 1),
-      c1 AS (
-        SELECT a1.cid, e.i,
-          CAST(SUM(CAST(FLOOR(e.a * 1e12) AS BIGINT)) AS DOUBLE)
-            / 1e12 / COUNT(*) AS m
-        FROM ev e JOIN a1 ON e.vec_id = a1.vec_id GROUP BY 1, 2),
-      d2 AS (
-        SELECT e.vec_id, c.cid,
-          SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10) AS BIGINT)) AS d
-        FROM ev e JOIN c1 c ON e.i = c.i GROUP BY 1, 2),
-      a2 AS (
-        SELECT vec_id, cid, d FROM (
-          SELECT vec_id, cid, d,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM d2) r WHERE rn = 1)
+    s"""WITH ${OracleSql.kmeansReplay}
       SELECT CAST(cid AS BIGINT) AS cluster, COUNT(*) AS n,
         CAST(SUM(vec_id) AS BIGINT) AS id_sum,
         CAST(SUM(d) AS BIGINT) AS inertia
-      FROM a2 GROUP BY 1 ORDER BY cluster"""))
+      FROM ranked WHERE rn = 1 GROUP BY 1 ORDER BY cluster""")
 
   /** OVERLAP CHUNKING (TrainPrep.chunks, width 128, step 64): the
     * RAG/context-window fan-out as a pure narrow explode; per-doc
@@ -135,7 +109,7 @@ object QueriesTrain {
           sum(length(col("chunk"))).as("chunk_chars"),
           max(col("start")).cast("long").as("last_start"))
         .orderBy(col("doc_id")),
-    Some("""WITH ch AS (
+    """WITH ch AS (
         SELECT doc_id, CAST(s AS INT) AS start,
           substr(text, CAST(s AS INT), 128) AS chunk
         FROM documents, UNNEST(range(1, len(text)+1, 64)) AS t(s)
@@ -143,7 +117,7 @@ object QueriesTrain {
       SELECT doc_id, COUNT(*) AS n_chunks,
         CAST(SUM(length(chunk)) AS BIGINT) AS chunk_chars,
         CAST(MAX(start) AS BIGINT) AS last_start
-      FROM ch GROUP BY 1 ORDER BY doc_id"""))
+      FROM ch GROUP BY 1 ORDER BY doc_id""")
 
   /** INVERTED INDEX (TrainPrep.postings): term → document frequency,
     * corpus term frequency, and an md5 digest of the sorted posting
@@ -155,7 +129,7 @@ object QueriesTrain {
       TrainPrep.postings(Tables.documents(s, dir))
         .orderBy(col("df").desc, col("term").asc)
         .limit(25),
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
         FROM documents),
       p AS (SELECT term, doc_id, COUNT(*) AS tf_doc FROM toks GROUP BY 1, 2)
@@ -163,7 +137,7 @@ object QueriesTrain {
         md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
           AS postings_md5
       FROM p GROUP BY 1
-      ORDER BY df DESC, term ASC LIMIT 25"""))
+      ORDER BY df DESC, term ASC LIMIT 25""")
 
   /** CONJUNCTIVE INDEX LOOKUP (TrainPrep.indexLookupAnd): documents
     * containing every query term, with per-term frequencies — the
@@ -178,7 +152,7 @@ object QueriesTrain {
       TrainPrep.indexLookupAnd(Tables.documents(s, dir),
           Seq("query", "window", "scan"))
         .orderBy(col("doc_id")),
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
         FROM documents),
       t0 AS (SELECT doc_id, COUNT(*) AS tf_0 FROM toks
@@ -189,7 +163,7 @@ object QueriesTrain {
         WHERE term = 'scan' GROUP BY 1)
       SELECT doc_id, tf_0, tf_1, tf_2
       FROM t0 JOIN t1 USING (doc_id) JOIN t2 USING (doc_id)
-      ORDER BY doc_id"""))
+      ORDER BY doc_id""")
 
   /** PHRASE SEARCH (TrainPrep.phraseSearch): exact token-sequence
     * match via the positional index — per-term posting filters plus
@@ -204,7 +178,7 @@ object QueriesTrain {
       TrainPrep.phraseFrom(SharedGrams.termPositions(s, dir),
           Seq("window", "join"))
         .orderBy(col("doc_id")),
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, CAST(i AS BIGINT) AS pos,
           string_split(text, ' ')[CAST(i AS INT)] AS term
         FROM documents,
@@ -213,7 +187,7 @@ object QueriesTrain {
       b AS (SELECT doc_id, pos FROM toks WHERE term = 'join')
       SELECT a.doc_id AS doc_id, COUNT(*) AS n_occurrences
       FROM a JOIN b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-      GROUP BY 1 ORDER BY a.doc_id"""))
+      GROUP BY 1 ORDER BY a.doc_id""")
 
   /** NEAR-DUP LEAKAGE-GUARDED SPLIT (TrainPrep.clusterAwareSplitBy ∘
     * SharedLsh.components): q106's guard upgraded from exact-content
@@ -232,30 +206,9 @@ object QueriesTrain {
           countDistinct(col("cluster_id")).as("n_clusters"),
           sum(col("doc_id")).as("docid_sum"))
         .orderBy(col("split")),
-    Some {
-      val mins = (0 until 8)
-        .map(j => s"MIN(substr(md5('m${j / 4}' || sh), ${(j % 4) * 8 + 1}, 8)) AS h$j")
-        .mkString(", ")
-      s"""WITH RECURSIVE
-      sh AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS sh
-        FROM documents, UNNEST(range(1, greatest(length(text)-4, 1)+1)) AS t(i)),
-      sig AS (SELECT doc_id, $mins FROM sh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, md5('0' || h0 || h1 || h2 || h3) AS bk FROM sig
-        UNION ALL
-        SELECT doc_id, md5('1' || h4 || h5 || h6 || h7) AS bk FROM sig),
-      prs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.bk = b.bk AND a.doc_id < b.doc_id),
-      edges AS (
-        SELECT doc_a AS src, doc_b AS dst FROM prs
-        UNION SELECT doc_b, doc_a FROM prs),
-      walk(node, label) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node),
-      comp AS (SELECT node AS doc_id, MIN(label) AS component
-        FROM walk GROUP BY 1),
+    s"""WITH RECURSIVE
+      ${OracleSql.lshPairs("prs")},
+      ${OracleSql.componentWalk("prs")},
       u AS (
         SELECT d.doc_id,
           COALESCE(c.component, d.doc_id) AS cluster_id
@@ -269,8 +222,7 @@ object QueriesTrain {
       SELECT split, COUNT(*) AS n_docs,
         COUNT(DISTINCT cluster_id) AS n_clusters,
         CAST(SUM(doc_id) AS BIGINT) AS docid_sum
-      FROM t GROUP BY 1 ORDER BY split"""
-    })
+      FROM t GROUP BY 1 ORDER BY split""")
 
   /** BM25 RANKED RETRIEVAL (TrainPrep.bm25Rank): q110's index turned
     * into a search engine — disjunctive term match ranked by a fixed
@@ -291,28 +243,9 @@ object QueriesTrain {
       TrainPrep.bm25RankFromPair(post, lens,
         Seq("query", "window", "scan"), topK = 20)
     },
-    Some("""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt FROM lens),
-      toks AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1),
-      sc AS (
-        SELECT p.doc_id,
-          CAST(FLOOR(
-            (CAST(2*(st.nd - d.df) + 1 AS DOUBLE)
-               / CAST(2*d.df + 1 AS DOUBLE))
-            * (CAST(22*p.tf*st.tt AS DOUBLE)
-               / CAST(10*p.tf*st.tt + 3*st.tt + 9*l.dl*st.nd AS DOUBLE))
-            * 1e6) AS BIGINT) AS s
-        FROM p JOIN d USING (term)
-          JOIN lens l ON p.doc_id = l.doc_id CROSS JOIN st)
-      SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(s) AS BIGINT) AS score_fp
-      FROM sc GROUP BY 1
-      ORDER BY score_fp DESC, doc_id ASC LIMIT 20"""))
+    s"""WITH ${OracleSql.bm25(Seq("query", "window", "scan"), "p", "sc")}
+      SELECT doc_id, n_terms, score_fp FROM sc
+      ORDER BY score_fp DESC, doc_id ASC LIMIT 20""")
 
   /** K-MEANS++ SEEDING (KMeansCluster.farthestFirstInit, k=4): the
     * derandomized maxmin traversal — c₀ = lowest id, each next seed
@@ -335,45 +268,11 @@ object QueriesTrain {
           sum(col("dist")).as("inertia"))
         .orderBy(col("cluster"))
     },
-    Some {
-      def dist(cte: String) =
-        s"""SELECT e.vec_id, CAST(SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10)
-           AS BIGINT)) AS BIGINT) AS d
-           FROM ev e JOIN $cte c ON e.i = c.i GROUP BY 1"""
-      s"""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
-      s0 AS (SELECT MIN(vec_id) AS vid FROM embeddings),
-      c0 AS (SELECT 0 AS cid, e.i, e.a AS m FROM ev e JOIN s0 ON e.vec_id = s0.vid),
-      m1 AS (${dist("c0")}),
-      s1 AS (SELECT vec_id FROM m1 ORDER BY d DESC, vec_id LIMIT 1),
-      c1 AS (SELECT 1 AS cid, e.i, e.a AS m FROM ev e JOIN s1 ON e.vec_id = s1.vec_id),
-      m2r AS (${dist("c1")}),
-      m2 AS (SELECT m1.vec_id, LEAST(m1.d, m2r.d) AS d
-        FROM m1 JOIN m2r ON m1.vec_id = m2r.vec_id),
-      s2 AS (SELECT vec_id FROM m2 ORDER BY d DESC, vec_id LIMIT 1),
-      c2 AS (SELECT 2 AS cid, e.i, e.a AS m FROM ev e JOIN s2 ON e.vec_id = s2.vec_id),
-      m3r AS (${dist("c2")}),
-      m3 AS (SELECT m2.vec_id, LEAST(m2.d, m3r.d) AS d
-        FROM m2 JOIN m3r ON m2.vec_id = m3r.vec_id),
-      s3 AS (SELECT vec_id FROM m3 ORDER BY d DESC, vec_id LIMIT 1),
-      c3 AS (SELECT 3 AS cid, e.i, e.a AS m FROM ev e JOIN s3 ON e.vec_id = s3.vec_id),
-      cc AS (SELECT * FROM c0 UNION ALL SELECT * FROM c1
-        UNION ALL SELECT * FROM c2 UNION ALL SELECT * FROM c3),
-      dd AS (
-        SELECT e.vec_id, c.cid, CAST(SUM(CAST(FLOOR(((e.a - c.m)*(e.a - c.m)) * 1e10)
-          AS BIGINT)) AS BIGINT) AS d
-        FROM ev e JOIN cc c ON e.i = c.i GROUP BY 1, 2),
-      aa AS (
-        SELECT vec_id, cid, d FROM (
-          SELECT vec_id, cid, d,
-            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-          FROM dd) r WHERE rn = 1)
+    s"""WITH ${OracleSql.farthestFirstAssign}
       SELECT CAST(cid AS BIGINT) AS cluster, COUNT(*) AS n,
         CAST(SUM(vec_id) AS BIGINT) AS id_sum,
         CAST(SUM(d) AS BIGINT) AS inertia
-      FROM aa GROUP BY 1 ORDER BY cluster"""
-    })
+      FROM aa GROUP BY 1 ORDER BY cluster""")
 
   /** PER-DOCUMENT TF-IDF KEYWORDS: top-3 terms per document by fixed
     * -point tf·idf (rational RSJ idf again — no ln) — the doc-level
@@ -407,7 +306,7 @@ object QueriesTrain {
           col("t.key").as("term"), col("t.a").as("score_fp"))
         .orderBy(col("doc_id"), col("rank"))
     },
-    Some("""WITH toks AS (
+    """WITH toks AS (
         SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
         FROM documents),
       p AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
@@ -424,7 +323,7 @@ object QueriesTrain {
             AS rank
         FROM sc)
       SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, s AS score_fp
-      FROM rk WHERE rank <= 3 ORDER BY doc_id, rank"""))
+      FROM rk WHERE rank <= 3 ORDER BY doc_id, rank""")
 
   /** The Spark side shared by q117/q120: trained k-means (the variant
     * under test) → keepFirst(τ) → per-cluster retention census. One
@@ -454,15 +353,13 @@ object QueriesTrain {
   private val q117 = Q(
     "q117_semdedup",
     semdedupCensus(KMeansCluster.lloyd(_, k = 4, iters = 2)),
-    Some(semdedupSql(k = 4)))
+    semdedupSql(k = 4))
 
   /** The k-parameterized SQL twin shared by q117 (k=4) and q120 (k=8):
     * seeds → two Lloyd rounds → intra-cluster pair distances →
     * keep-first verdicts → census. ONE template, so a fix to the
     * chain can never apply to one query and silently miss the other. */
-  private def semdedupSql(k: Int): String = s"""WITH ev AS (
-        SELECT vec_id, i, CAST(embedding[CAST(i AS INT)] AS DOUBLE) AS a
-        FROM embeddings, UNNEST(range(1, len(embedding)+1)) AS t(i)),
+  private def semdedupSql(k: Int): String = s"""WITH ${OracleSql.embeddingRows()},
       c0 AS (SELECT vec_id AS cid, i, a AS m FROM ev WHERE vec_id < $k),
       d1 AS (
         SELECT e.vec_id, c.cid,
@@ -518,7 +415,7 @@ object QueriesTrain {
       SharedDsir.scored(s, dir)
         .orderBy(col("avg_weight_fp").desc, col("doc_id").asc)
         .limit(25),
-    Some("""WITH tr AS (
+    """WITH tr AS (
         SELECT doc_id,
           substr(md5(ts[CAST(i AS INT)] || ' ' || ts[CAST(i AS INT) + 1]),
             1, 2) AS b
@@ -543,7 +440,7 @@ object QueriesTrain {
           SUM(COALESCE(w.wfp, 1000000)) AS s
         FROM tr LEFT JOIN w ON tr.b = w.b GROUP BY 1)
       SELECT doc_id, n_grams, CAST(s // n_grams AS BIGINT) AS avg_weight_fp
-      FROM sc2 ORDER BY avg_weight_fp DESC, doc_id ASC LIMIT 25"""))
+      FROM sc2 ORDER BY avg_weight_fp DESC, doc_id ASC LIMIT 25""")
 
   /** END-TO-END TRAINING-DATA PIPELINE: exact dedup (keep each content
     * group's min-id canonical) → leakage split (canonical ids hash to
@@ -572,7 +469,7 @@ object QueriesTrain {
           sum(col("doc_id")).as("docid_sum"))
         .orderBy(col("shard"))
     },
-    Some("""WITH u AS (
+    """WITH u AS (
         SELECT doc_id, text,
           MIN(doc_id) OVER (PARTITION BY md5(text)) AS canon
         FROM documents),
@@ -593,7 +490,7 @@ object QueriesTrain {
       SELECT CAST(FLOOR((cum - tokens) * 8 / total) AS BIGINT) AS shard,
         COUNT(*) AS n_docs, CAST(SUM(tokens) AS BIGINT) AS shard_tokens,
         CAST(SUM(doc_id) AS BIGINT) AS docid_sum
-      FROM c GROUP BY 1 ORDER BY shard"""))
+      FROM c GROUP BY 1 ORDER BY shard""")
 
   /** LARGE-k SEMDEDUP (SemDedup.keepFirst ∘ KMeansCluster.lloydLargeK,
     * k=8): q117's pipeline on the BROADCAST-TABLE assignment path —
@@ -605,7 +502,7 @@ object QueriesTrain {
   private val q120 = Q(
     "q120_semdedup_largek",
     semdedupCensus(KMeansCluster.lloydLargeK(_, k = 8, iters = 2)),
-    Some(semdedupSql(k = 8)))
+    semdedupSql(k = 8))
 
   /** SEMDEDUP AT k=32 — the cluster count a production SemDeDup run
     * actually uses grows with the corpus (Abbas et al. use thousands);
@@ -620,7 +517,7 @@ object QueriesTrain {
   private val q182 = Q(
     "q182_semdedup_k32",
     semdedupCensus(KMeansCluster.lloydLargeK(_, k = 32, iters = 2)),
-    Some(semdedupSql(k = 32)))
+    semdedupSql(k = 32))
 
   /** PROXIMITY-BOOSTED BM25 (TrainPrep.bm25ProximityRank): q114's
     * ranking made phrase-aware with q112's positional index — each
@@ -640,28 +537,7 @@ object QueriesTrain {
         SharedGrams.termPositions(s, dir),
         Seq("query", "window", "scan"), topK = 20)
     },
-    Some("""WITH lens AS (
-        SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
-      st AS (SELECT COUNT(*) AS nd, CAST(SUM(dl) AS BIGINT) AS tt FROM lens),
-      toks AS (
-        SELECT doc_id, UNNEST(string_split(text, ' ')) AS term
-        FROM documents),
-      p AS (SELECT term, doc_id, COUNT(*) AS tf FROM toks
-        WHERE term IN ('query', 'window', 'scan') GROUP BY 1, 2),
-      d AS (SELECT term, COUNT(*) AS df FROM p GROUP BY 1),
-      sc AS (
-        SELECT p.doc_id,
-          CAST(FLOOR(
-            (CAST(2*(st.nd - d.df) + 1 AS DOUBLE)
-               / CAST(2*d.df + 1 AS DOUBLE))
-            * (CAST(22*p.tf*st.tt AS DOUBLE)
-               / CAST(10*p.tf*st.tt + 3*st.tt + 9*l.dl*st.nd AS DOUBLE))
-            * 1e6) AS BIGINT) AS s
-        FROM p JOIN d USING (term)
-          JOIN lens l ON p.doc_id = l.doc_id CROSS JOIN st),
-      base AS (
-        SELECT doc_id, COUNT(*) AS n_terms, CAST(SUM(s) AS BIGINT) AS score_fp
-        FROM sc GROUP BY 1),
+    s"""WITH ${OracleSql.bm25(Seq("query", "window", "scan"), "p", "base")},
       pos AS (
         SELECT doc_id, CAST(i AS BIGINT) AS pos,
           string_split(text, ' ')[CAST(i AS INT)] AS term
@@ -683,7 +559,7 @@ object QueriesTrain {
       FROM base
         LEFT JOIN b0 ON base.doc_id = b0.doc_id
         LEFT JOIN b1 ON base.doc_id = b1.doc_id
-      ORDER BY total_fp DESC, base.doc_id ASC LIMIT 20"""))
+      ORDER BY total_fp DESC, base.doc_id ASC LIMIT 20""")
 
   /** INCREMENTAL SEMDEDUP (SemDedup.keepFirstIncremental): q117's
     * corpus split at id 400 into STORED + DELTA (crawl order); the
@@ -716,7 +592,7 @@ object QueriesTrain {
           sum(when(col("kept"), col("id"))).as("kept_id_sum"))
         .orderBy(col("cluster"))
     },
-    Some(semdedupSql(k = 4)))
+    semdedupSql(k = 4))
 
   val list: Seq[Q] = Seq(q106, q107, q108, q109, q110, q111, q112, q113,
     q114, q115, q116, q117, q118, q119, q120, q121, q127, q182)

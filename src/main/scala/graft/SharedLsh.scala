@@ -470,12 +470,11 @@ object SharedPq {
 
 /** Corpus-trained bigram-LM score column — the CCNet-style quality
   * signal: (doc_id, lm_score) for EVERY document under the LM trained
-  * on the corpus itself. Shared by q103 (exact tercile buckets) and
-  * the t-digest approximate twin (`ccnetBucketsApprox`, the
-  * CcnetApproxSpec / scale surface); the scoring pass (unigram +
-  * bigram corpus aggregations joined per token occurrence) dominates
-  * both, and the score column is precisely what a CCNet pipeline
-  * materializes once and filters/buckets many ways. Deterministic
+  * on the corpus itself, read by q103 (exact tercile buckets). The
+  * scoring pass (unigram + bigram corpus aggregations joined per token
+  * occurrence) dominates q103, and the score column is precisely what
+  * a CCNet pipeline materializes once and filters/buckets many ways.
+  * Deterministic
   * (integer fixed-point), so a cached read equals a recompute. */
 object SharedLm {
 
@@ -757,7 +756,7 @@ object SharedWinnow {
 
   /** [[cappedPairs]] at an explicit df-cap — the parameterized screen
     * variant the adaptive cap plugs into; cached per (session, dir,
-    * cap) so the fixed-cap consumers (q226/q238, gate-frozen) and the
+    * cap) so the fixed-cap consumers (q226/q238) and the
     * adaptive consumers (q251) each pay their pair join once while
     * sharing ONE [[fpDoc]] kernel pass. */
   def cappedPairsAt(s: SparkSession, dir: String, cap: Long): DataFrame =

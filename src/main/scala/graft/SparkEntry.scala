@@ -10,13 +10,9 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables.
-    *
-    * EVERY registered query carries oracle SQL. Engine-specific
-    * estimators (HLL NDV, percentile_approx, t-digest) follow the
-    * exact-twin pattern: the registered query is an exact oracled
-    * variant sharing the scan/grouping skeleton (q35, q73), and the
-    * approx production variant is plan-guarded in PlanShapeSpec plus
-    * error-bounded against the twin in its spec. */
+    * the same parquet tables. Every registered query carries its oracle
+    * SQL (`Queries.Q.sql` is not optional), so the two maps have the
+    * same keys; every registered query is an exact kernel, so DuckDB
+    * can reproduce its result hash. */
   def oracleSql: Map[String, String] = Queries.oracle
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - [[dotDouble]]: plain double fold — the fast path (narrow, codegen'd,
   *    no shuffle). Result depends on accumulation order only in the last
   *    ulp; use it to prefilter candidates the decimal kernel confirms.
-  *  - [[dotDecimal]]: products cast to DECIMAL(38,18) before the fold.
+  *  - [[dotDecimal]]: products cast to DECIMAL(18,16) before the fold.
   *    Decimal addition is exact and associative, so the result is
   *    bit-identical regardless of partitioning/order and across engines —
   *    this is what makes cosine top-k oracle-checkable. ~3-4x the cost of

@@ -233,7 +233,7 @@ object TrainPrep {
     * literal-list path ([[bm25Scores]]) and the terms-frame path
     * ([[bm25ScoresByFrame]]), so a constant tweak cannot diverge the
     * two (the oracle side has the same single definition in
-    * QueriesRetrieve.Bm25SqlKernel). */
+    * OracleSql.bm25Kernel). */
   private def bm25KernelFrom(p: DataFrame, lens: DataFrame): DataFrame = {
     val stats = lens.agg(count(lit(1)).as("nd"), sum(col("dl")).as("tt"))
     val dfs = p.groupBy(col("term")).agg(count(lit(1)).as("df"))

@@ -163,24 +163,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("ObjectHashAggregate"), p)
   }
 
-  test("production sketch summary: one scan, no Expand, no Window") {
-    // q35's oracled exact twin pays exact-NDV + a per-group rank
-    // window; the production path must be a single hash aggregate of
-    // mergeable sketches (the 100 TB shape)
-    val p = planOf(QueriesMore.sketchApprox(spark, sf()))
-    assert(!p.contains("Expand"), s"HLL summary must not Expand:\n$p")
-    assert(!p.contains("Window"), s"sketch summary must not Window:\n$p")
-    assert("Scan parquet".r.findAllIn(p).length == 1, s"expected one scan:\n$p")
-  }
-
-  test("production profile (approx NDV) plans with ONE scan and NO Expand") {
-    // the q73 oracle twin needs exact NDV and pays the Expand ×6 row
-    // blowup; the production ColumnProfile path must not
-    val p = planOf(QueriesSample.profileApprox(spark, sf()))
-    assert(!p.contains("Expand"), s"HLL profile must not Expand:\n$p")
-    assert("Scan parquet".r.findAllIn(p).length == 1, s"expected one scan:\n$p")
-  }
-
   test("cosine near-dup pairs join on the sign bucket, never a cross join") {
     val p = planOf(Queries.all("q34_cosine_neardup")(spark, sf()))
     assert(!p.contains("CartesianProduct") &&

@@ -22,11 +22,20 @@ and SparkEntry.entry, the entry point that programs outside this repository
 call by name. A def's lines run from its `def` line to its closing line; the
 figure printed is their count.
 
+Third section: lines of src/main/scala that repeat a verbatim block
+written elsewhere. Each line is stripped. A window is 6 consecutive
+lines, each longer than 3 characters and not starting with `*`, `/**` or
+`//`. A line counts when it lies in a window whose text also occurs
+elsewhere and is not part of that window's first occurrence (first by
+path, then by line). The lines inside a triple-quoted string and those
+outside are counted separately.
+
 Usage: python3 tools/reach.py   (from the root of a checkout)
 """
+import bisect
 import pathlib
 import re
-from collections import Counter
+from collections import Counter, defaultdict
 
 TOKEN = re.compile(r'//[^\n]*|/\*|\*/|"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"'
                    r"|'(?:\\.|[^'\\\n])'|[A-Za-z_]\w*|.|\n")
@@ -126,3 +135,32 @@ print()
 for p, line, name, n in unused:
     print(f"{n:6d}  {p}:{line}  {name}")
 print(f"{sum(u[3] for u in unused):6d}  total ({len(unused)} defs)")
+
+windows = defaultdict(list)
+in_string = {}
+for p in sorted(pathlib.Path("src/main/scala").rglob("*.scala")):
+    text = p.read_text(encoding="utf-8")
+    lines = text.split("\n")
+    starts = [0]
+    for line in lines:
+        starts.append(starts[-1] + len(line) + 1)
+    inside = [False] * len(lines)
+    for m in re.finditer(r'"""(?:.|\n)*?"""', text):
+        first = bisect.bisect_right(starts, m.start()) - 1
+        last = bisect.bisect_right(starts, m.end() - 1) - 1
+        for i in range(first, last + 1):
+            inside[i] = True
+    in_string[str(p)] = inside
+    stripped = [line.strip() for line in lines]
+    ok = [len(x) > 3 and not x.startswith(("*", "/**", "//")) for x in stripped]
+    for i in range(len(lines) - 5):
+        if all(ok[i:i + 6]):
+            windows["\n".join(stripped[i:i + 6])].append((str(p), i))
+repeated = set()
+for occurrences in windows.values():
+    for p, i in sorted(occurrences)[1:]:
+        repeated.update((p, j) for j in range(i, i + 6))
+inside = sum(in_string[p][j] for p, j in repeated)
+print()
+print(f'{inside:6d}  repeated lines inside """ strings')
+print(f"{len(repeated) - inside:6d}  repeated lines outside them")
