@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.Winnow
 
 /** DuckDB oracle fragments: the CTE text of each recipe that more than
   * one query's oracle runs, written once.
@@ -11,7 +11,7 @@ import graft.operators.Dedup
   * literals, and `MATERIALIZED` hints (a hint changes how DuckDB
   * evaluates the chain, never its result). The MinHash scheme comes
   * from [[SharedLsh.Default]] and the winnow df-cap from
-  * [[Dedup.WinnowDfCap]], the values the Spark kernels run with. All
+  * [[Winnow.DfCap]], the values the Spark kernels run with. All
   * are `def`s: a `val` fragment interpolated into a `val Q(...)` of an
   * object that initialises first would read as "null".
   */
@@ -85,7 +85,9 @@ object OracleSql {
     * `keep`…), every CTE name suffixed by `tag`: ts, g (the grams), gh
     * (their hashes), win(doc_id, keep…, ng, p, h, j) — each hash once
     * per window j it falls in — and sel(doc_id, keep…, ng, j, fp), the
-    * per-window minimum. Mirrors SharedWinnow.fingerprintsOf. */
+    * per-window minimum. An explode/group-by derivation independent of
+    * Spark's per-row [[Winnow.windows]]: the two meet only in the
+    * checked results. */
   def winnowSel(rel: String = "documents", tag: String = "",
                 keep: String = ""): String = {
     val k = if (keep.isEmpty) "" else s"$keep, "
@@ -121,14 +123,14 @@ object OracleSql {
       meta AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
           CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_distinct_text
         FROM documents),
-      acap AS (SELECT (${Dedup.WinnowDfCap} * n_docs + n_distinct_text - 1)
+      acap AS (SELECT (${Winnow.DfCap} * n_docs + n_distinct_text - 1)
           // n_distinct_text AS cap FROM meta)"""
 
   /** The winnow screen over fd`tag`: us (the fingerprints held by 2 to
     * `dfCap` docs), cap (their (doc_id, fp) rows) and `wp`(doc_a <
     * doc_b), the pairs sharing at least 2 of them. */
   def winnowPairs(tag: String = "", wp: String = "wp",
-                  dfCap: String = Dedup.WinnowDfCap.toString,
+                  dfCap: String = Winnow.DfCap.toString,
                   mat: Boolean = false, matPairs: Boolean = false): String =
     s"""us$tag AS (SELECT fp FROM fd$tag GROUP BY fp
         HAVING COUNT(*) BETWEEN 2 AND $dfCap),

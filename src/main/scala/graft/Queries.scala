@@ -301,14 +301,8 @@ object Queries {
     "q12_date_reconstruct",
     (s, dir) => {
       val sl = date_format(col("ts"), "MMM dd HH:mm:ss")
-      val mon = substring(col("sl"), 1, 3)
-      val monthNum = Seq(
-        "Feb" -> "02", "Mar" -> "03", "Apr" -> "04", "May" -> "05",
-        "Jun" -> "06", "Jul" -> "07", "Aug" -> "08", "Sep" -> "09",
-        "Oct" -> "10", "Nov" -> "11", "Dec" -> "12")
-        .foldLeft(when(mon === "Jan", "01")) { case (acc, (m, n)) =>
-          acc.when(mon === m, n)
-        }.otherwise("??")
+      val monthNum = graft.operators.LogParse
+        .monthNum(substring(col("sl"), 1, 3)).otherwise("??")
       Tables.events(s, dir)
         .select(sl.as("sl"))
         .select(concat(substring(col("sl"), 5, 2), lit("/"), monthNum,

@@ -1134,8 +1134,8 @@ object QueriesDepth {
         .orderBy(col("cluster_size"), col("density_decile"))
     },
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
-      ${OracleSql.componentWalk("pairs")},
+      ${OracleSql.lshPairs(mat = true)},
+      ${OracleSql.componentWalk("pairs", matEdges = true, matComp = true)},
       ce AS (SELECT c.component, CAST(COUNT(*) AS BIGINT) AS e
         FROM pairs p JOIN comp c ON c.doc_id = p.doc_a GROUP BY 1),
       cn AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n
@@ -1934,7 +1934,7 @@ object QueriesDepth {
     (s, dir) => SharedLsh.incrementalComponents(s, dir)
       .orderBy(col("doc_id")),
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
+      ${OracleSql.lshPairs(mat = true)},
       ${OracleSql.componentWalk("pairs")}
       SELECT doc_id, component FROM comp ORDER BY 1""")
 
@@ -2017,8 +2017,8 @@ object QueriesDepth {
         .orderBy(col("size_bucket"))
     },
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
-      ${OracleSql.componentWalk("pairs")},
+      ${OracleSql.lshPairs(mat = true)},
+      ${OracleSql.componentWalk("pairs", matEdges = true, matComp = true)},
       sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS sz
         FROM comp GROUP BY 1)
       SELECT CASE WHEN sz <= 5 THEN CAST(sz AS VARCHAR)
@@ -2114,9 +2114,7 @@ object QueriesDepth {
     (s, dir) => {
       // the df-capped ≥2-shared pair derivation rides the shared
       // artifact (SharedWinnow.cappedPairs — also q238's input; the
-      // df-cap is the ONE shared constant Dedup.WinnowDfCap, and
-      // DedupSimilaritySpec pins Dedup.winnowFingerprints to THIS
-      // production screen's window-min derivation)
+      // screen and its df-cap are Winnow.cappedPairs and Winnow.DfCap)
       val wpairs = SharedWinnow.cappedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("in_w"))
       val lpairs = SharedLsh.candidatePairs(s, dir)
@@ -2186,9 +2184,9 @@ object QueriesDepth {
         .localCheckpoint() // df-cap + both join legs + the doc census
       val usable = idx.groupBy(col("fp"))
         .agg(count(lit(1)).as("nd"), sum(col("is_delta")).as("ndelta"))
-        // same shared df-cap as q226 (Dedup.WinnowDfCap)
+        // same shared df-cap as q226 (Winnow.DfCap)
         .filter(col("nd").between(2,
-          graft.operators.Dedup.WinnowDfCap) &&
+          graft.operators.Winnow.DfCap) &&
           col("ndelta") >= 1)
         .select(col("fp"))
       val capped = idx.join(usable, "fp")

@@ -311,7 +311,7 @@ object QueriesMore {
       SharedLsh.components(s, dir)
         .orderBy(col("doc_id")),
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
+      ${OracleSql.lshPairs(mat = true)},
       ${OracleSql.componentWalk("pairs")}
       SELECT doc_id, component FROM comp ORDER BY 1""")
 
@@ -421,8 +421,8 @@ object QueriesMore {
         .orderBy(col("lang"))
     },
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
-      ${OracleSql.componentWalk("pairs", "comps")}
+      ${OracleSql.lshPairs(mat = true)},
+      ${OracleSql.componentWalk("pairs", "comps", matEdges = true, matComp = true)}
       SELECT d.lang, COUNT(*) AS docs,
         COUNT(CASE WHEN c.component IS NULL OR c.component = d.doc_id
               THEN 1 END) AS kept,
@@ -910,8 +910,8 @@ object QueriesMore {
         .orderBy(col("lang"))
     },
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
-      ${OracleSql.componentWalk("pairs", "comps")},
+      ${OracleSql.lshPairs(mat = true)},
+      ${OracleSql.componentWalk("pairs", "comps", matEdges = true, matComp = true)},
       scored AS (SELECT doc_id, lang,
           CAST(FLOOR(${OracleSql.qualityScore} * 1000000) AS BIGINT) AS score_fp
         FROM documents),

@@ -7,7 +7,7 @@ import Queries.Q
 /** Round-12 depth queries — closing the df-cap loop the round-10/11
   * censuses opened (q235 calibration drift, q246's vanishing
   * cross-source components at 10×, q249's cap-driven gained_keep
-  * flips): the fixed `Dedup.WinnowDfCap = 16` silently
+  * flips): the fixed `Winnow.DfCap = 16` silently
   * drops real duplicate families as corpus duplication grows, so the
   * cap becomes a MEASURED policy — `SharedWinnow.adaptiveCap` scales
   * it by the exact-duplicate multiplicity — with a calibration census
@@ -21,7 +21,7 @@ import Queries.Q
   */
 object QueriesRound12 {
 
-  private def fixedCap: Int = graft.operators.Dedup.WinnowDfCap
+  private def fixedCap: Int = graft.operators.Winnow.DfCap
 
   /** SCREEN-CAP CALIBRATION — the query that PICKS the df-cap from
     * the corpus instead of trusting the fixed constant (r11 verdict

@@ -488,10 +488,11 @@ object QueriesRound8 {
     * source (the local-copy signal). Docs with fewer than w grams
     * (< 7 tokens) carry no windows and are excluded on BOTH sides.
     *
-    * Scale shape: grams never shuffle as strings — the hash is
-    * computed map-side and the window fan-out (4×) explodes integer
-    * (doc, j, h) rows only; everything aggregates by (doc, window)
-    * then (source, fp) hash keys. All-integer arithmetic. */
+    * Scale shape: the selected rows (SharedWinnow.selected) are a
+    * per-row expression of Winnow.windows — the gram hashes, each
+    * window's minimum and its position come from one fenced hash array
+    * per doc, with no shuffle; only the census aggregates, by doc then
+    * by (source, fp) hash keys. All-integer arithmetic. */
   private val q223 = Q(
     "q223_winnowing",
     (s, dir) => {

@@ -81,59 +81,6 @@ object QueriesRound9 {
           END AS BIGINT) AS boost_ppm
       FROM sq CROSS JOIN tot ORDER BY lang""")
 
-  /** The window-minimum / rightmost-minimum-position SQL fragments the
-    * robust-winnowing fold needs at a window index `j` (1-based gram
-    * positions, w = 4) — generated once so the Spark expr and every
-    * CASE arm stay token-identical. */
-  private def winMinSql(j: String): String =
-    s"""least(element_at(hs, CAST(($j) AS INT)),
-      element_at(hs, CAST(($j) + 1 AS INT)),
-      element_at(hs, CAST(($j) + 2 AS INT)),
-      element_at(hs, CAST(($j) + 3 AS INT)))"""
-
-  private def rightmostMinSql(j: String): String =
-    s"""CASE WHEN element_at(hs, CAST(($j) + 3 AS INT)) = ${winMinSql(j)}
-        THEN ($j) + 3
-      WHEN element_at(hs, CAST(($j) + 2 AS INT)) = ${winMinSql(j)}
-        THEN ($j) + 2
-      WHEN element_at(hs, CAST(($j) + 1 AS INT)) = ${winMinSql(j)}
-        THEN ($j) + 1
-      ELSE ($j) END"""
-
-  /** The standard (rightmost-min) and robust (Schleimer §5) winnow
-    * POSITION selections as Column exprs over a frame carrying
-    * (hs: array<int hash>, nw: long) — factored so q231's census and
-    * q236's index certificate fold token-identical expressions. */
-  private[graft] def stdSelCol: org.apache.spark.sql.Column =
-    expr(s"""array_distinct(transform(
-      sequence(1L, nw), j -> CAST(${rightmostMinSql("j")} AS BIGINT)))""")
-
-  private[graft] def robSelCol: org.apache.spark.sql.Column =
-    expr(s"""array_distinct(aggregate(
-      CASE WHEN nw >= 2 THEN sequence(2L, nw)
-        ELSE CAST(array() AS ARRAY<BIGINT>) END,
-      array(CAST(${rightmostMinSql("1")} AS BIGINT)),
-      (acc, j) -> CASE WHEN element_at(acc, -1) >= j
-          AND element_at(hs, CAST(element_at(acc, -1) AS INT))
-            = ${winMinSql("j")}
-        THEN acc
-        ELSE concat(acc, array(CAST(${rightmostMinSql("j")} AS BIGINT)))
-        END))""")
-
-  /** The (doc_id, source, hs, nw) winnow-input frame q231/q236 share:
-    * fenced gram+hash32 kernel, ≥4-gram docs only. */
-  private[graft] def winnowInput(s: org.apache.spark.sql.SparkSession,
-                                 dir: String): org.apache.spark.sql.DataFrame = {
-    import graft.operators.KmvSketch
-    Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        graft.plans.FenceExpr.fence(
-          transform(TextAnalysis.wordNgrams(col("text"), 4),
-            g => KmvSketch.hash32(g))).as("hs"))
-      .filter(size(col("hs")) >= 4)
-      .withColumn("nw", (size(col("hs")) - 3).cast("long"))
-  }
-
   /** ROBUST WINNOWING (Schleimer et al., §5) vs the standard rightmost
     * -min rule — the exact twin the q223/q229 family was missing: on a
     * TIE for the window minimum, keep the PREVIOUS window's selection
@@ -371,7 +318,7 @@ object QueriesRound9 {
     * copies, truncated text, ids offset by 10¹² (far above any real
     * train id). Screen: ≥2 shared fingerprints in a df-capped
     * universe (corpus-side document frequency ≤
-    * Dedup.WinnowDfCap — boilerplate fingerprints are
+    * Winnow.DfCap — boilerplate fingerprints are
     * stop-words of this index, and an uncapped hot fingerprint is the
     * fan-out bomb at crawl scale). Confirm: UNCAPPED fingerprint
     * containment of the bench doc in the train doc ≥ 50%, computed
@@ -423,7 +370,7 @@ object QueriesRound9 {
       ${OracleSql.winnowFd("bench", "b")},
       capped AS (SELECT doc_id AS train_id, fp FROM fdc
         WHERE fp IN (SELECT fp FROM fdc GROUP BY fp
-          HAVING COUNT(*) <= ${graft.operators.Dedup.WinnowDfCap})),
+          HAVING COUNT(*) <= ${graft.operators.Winnow.DfCap})),
       cand AS (SELECT train_id, b.doc_id AS bench_id
         FROM capped c JOIN fdb b ON b.fp = c.fp
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),
@@ -520,7 +467,7 @@ object QueriesRound9 {
       ${OracleSql.winnowFd("bench", "b")},
       capped AS (SELECT doc_id AS train_id, fp FROM fdc
         WHERE fp IN (SELECT fp FROM fdc GROUP BY fp
-          HAVING COUNT(*) <= ${graft.operators.Dedup.WinnowDfCap})),
+          HAVING COUNT(*) <= ${graft.operators.Winnow.DfCap})),
       wcand AS (SELECT train_id, b.doc_id AS bench_id
         FROM capped c JOIN fdb b ON b.fp = c.fp
         GROUP BY 1, 2 HAVING COUNT(*) >= 2),

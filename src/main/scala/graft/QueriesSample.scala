@@ -973,7 +973,7 @@ object QueriesSample {
           col("n_dropped"))
     },
     s"""WITH RECURSIVE ${OracleSql.cosineNearPairs},
-      ${OracleSql.componentWalk("pairs")}
+      ${OracleSql.componentWalk("pairs", matEdges = true)}
       SELECT (SELECT COUNT(*) FROM embeddings) AS n_vectors,
         COUNT(*) AS n_clustered,
         COUNT(DISTINCT component) AS n_clusters,

@@ -284,8 +284,8 @@ object QueriesScore {
       // parameters: 5-char shingles, 8 minhash slices, 2 bands of 4)
       val b = 1L << 40
       s"""WITH RECURSIVE
-      ${OracleSql.lshPairs()},
-      ${OracleSql.componentWalk("pairs", "comps")},
+      ${OracleSql.lshPairs(mat = true)},
+      ${OracleSql.componentWalk("pairs", "comps", matEdges = true, matComp = true)},
       packed AS (
         SELECT c.component, COUNT(*) AS members,
           MAX(d.n_chars * $b + ($b - 1 - d.doc_id)) AS key

@@ -207,8 +207,8 @@ object QueriesTrain {
           sum(col("doc_id")).as("docid_sum"))
         .orderBy(col("split")),
     s"""WITH RECURSIVE
-      ${OracleSql.lshPairs("prs")},
-      ${OracleSql.componentWalk("prs")},
+      ${OracleSql.lshPairs("prs", mat = true)},
+      ${OracleSql.componentWalk("prs", matEdges = true, matComp = true)},
       u AS (
         SELECT d.doc_id,
           COALESCE(c.component, d.doc_id) AS cluster_id
@@ -400,13 +400,13 @@ object QueriesTrain {
         CAST(SUM(CASE WHEN kept THEN vec_id END) AS BIGINT) AS kept_id_sum
       FROM r GROUP BY 1 ORDER BY cluster"""
 
-  /** DSIR DATA SELECTION (Dsir.scoreDocs ∘ importanceWeights): rank
+  /** DSIR DATA SELECTION (Dsir.scoreWithWeights ∘ importanceWeights): rank
     * corpus documents by resemblance to a target domain (here: docs
     * mentioning 'spark') via hashed-bigram importance weights — the
     * Xie et al. 2023 recipe with the log-ratio made a fixed-point
     * rational and the doc score an integer mean, so the whole chain is
-    * engine-exact. 256 constant-size bucket tables broadcast; two
-    * narrow corpus scans; one doc-keyed aggregation. */
+    * engine-exact. 256 constant-size bucket tables; the corpus bigram
+    * census; a per-row scoring map with the weights as an array literal. */
   private val q118 = Q(
     "q118_dsir_select",
     (s, dir) =>

@@ -489,11 +489,12 @@ object SharedLm {
   * and q137 (global top-p% cut): both score EVERY document with the
   * identical hashed-bigram importance-weight model (target = docs
   * containing 'spark'), and the scoring pass — two corpus-wide bigram
-  * aggregations plus a per-occurrence weight join — is the dominant
-  * cost of both. The (doc_id, avg_weight_fp) frame is precisely the
-  * score column a DSIR selection pipeline materializes once and then
-  * ranks/cuts many ways. Deterministic (md5 bucket hashing, integer
-  * fixed-point), so a cached read equals a recompute bit-for-bit. */
+  * aggregations plus a per-row weight lookup over every document — is
+  * the dominant cost of both. The (doc_id, avg_weight_fp) frame is
+  * precisely the score column a DSIR selection pipeline materializes
+  * once and then ranks/cuts many ways. Deterministic (md5 bucket
+  * hashing, integer fixed-point), so a cached read equals a recompute
+  * bit-for-bit. */
 object SharedDsir {
 
   def scored(s: SparkSession, dir: String): DataFrame =
@@ -501,8 +502,8 @@ object SharedDsir {
       import org.apache.spark.sql.functions.col
       val docs = Tables.documents(s, dir)
       val target = docs.filter(col("text").contains("spark"))
-      operators.Dsir.scoreDocs(docs,
-        operators.Dsir.importanceWeights(docs, target))
+      operators.Dsir.scoreWithWeights(docs, operators.Dsir.weightsMap(
+        operators.Dsir.importanceWeights(docs, target)))
         .localCheckpoint()
     }
 }
@@ -553,8 +554,8 @@ object SharedDecontam {
     * — the bench-side index a decontamination service stores. */
   def benchFp(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedDecontam.benchFp", dir)(
-      SharedWinnow.fingerprintsOf(benchDocs(s, dir))
-        .select(col("doc_id").as("bench_id"), col("fp")).distinct()
+      graft.operators.Winnow.fingerprints(benchDocs(s, dir))
+        .select(col("doc_id").as("bench_id"), col("fp"))
         .localCheckpoint())
 
   /** (bench_id, bk) LSH band keys of the benchmark set (q17's
@@ -578,13 +579,13 @@ object SharedDecontam {
         .localCheckpoint())
 
   /** Winnow-screened cross pairs: ≥2 shared fingerprints in the
-    * df-capped universe (corpus-side df ≤ Dedup.WinnowDfCap)
+    * df-capped universe (corpus-side df ≤ Winnow.DfCap)
     * — q234's screen, reused verbatim by q235. No data-dependent
     * broadcast: every leg is a shuffle-hash equi-join (candidate
     * volume scales with contamination rate × corpus size). */
   def winnowCandPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedDecontam.winnowCandPairs", dir) {
-      val DfCap = graft.operators.Dedup.WinnowDfCap
+      val DfCap = graft.operators.Winnow.DfCap
       val cfp = corpusFp(s, dir)
       val capped = cfp.join(
         cfp.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
@@ -665,56 +666,23 @@ object SharedBpe {
 /** Winnowed-fingerprint artifact shared by q223 (density census) and
   * q226 (screen calibration): the SELECTED rows — per (doc, window)
   * the minimum word-4-gram hash32, with the doc's source and gram
-  * count carried for the census consumers. The gram pass + 4× window
-  * fan-out + (doc, window) min-agg is the expensive stage (the suite
-  * tail before this cache: 4.4 s + 5.6 s each re-deriving it at
-  * sf0.1); both consumers are cheap views over the selected rows —
-  * the same move as SharedLsh's band table. Deterministic (md5
+  * count carried for the census consumers. Every winnow product is a
+  * per-row expression of [[graft.operators.Winnow]]; the memo spares
+  * the consumers the gram hashing (the suite tail before this cache:
+  * 4.4 s + 5.6 s each re-deriving it at sf0.1). Deterministic (md5
   * hashes, exact min), so a cached read equals a recompute. */
 object SharedWinnow {
 
-  /** (doc_id, source, ng, j, fp, spos) — winnowing window w = 4 over
-    * word 4-grams; `fp` is the window's minimum hash, `spos` the
-    * RIGHTMOST gram position carrying it (Schleimer et al.'s tie
-    * rule — the position census q229 needs; value-set consumers
-    * ignore it). Docs with fewer than 4 grams carry no rows. */
+  import graft.operators.Winnow
+
+  /** (doc_id, source, ng, j, fp, spos) — [[Winnow.windows]] over the
+    * documents table; `spos` is the RIGHTMOST gram position carrying
+    * the window minimum (the position census q229 needs; value-set
+    * consumers ignore it). Docs with fewer than 4 grams carry no rows. */
   def selected(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedWinnow.selected", dir)(
-      fingerprintsOf(Tables.documents(s, dir), Seq("source"))
+      Winnow.windows(Tables.documents(s, dir), "source")
         .localCheckpoint())
-
-  /** The winnowing selection kernel over any (doc_id, text, extras…)
-    * frame — factored out so ad-hoc sides (q234's truncated benchmark
-    * set) winnow with the EXACT expressions the cached corpus artifact
-    * uses; a drifted copy would silently break the shared-span
-    * guarantee between the two sides of a screen. Returns
-    * (doc_id, extras…, ng, j, fp, spos); not cached. */
-  def fingerprintsOf(docs: DataFrame, extras: Seq[String] = Nil)
-      : DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.{KmvSketch, TextAnalysis}
-    val w = 4
-    val ex = extras.map(col)
-    val win = docs
-      .select(col("doc_id") +: ex :+
-        TextAnalysis.wordNgrams(col("text"), 4).as("gs"): _*)
-      .select(col("doc_id") +: ex :+
-        size(col("gs")).cast("long").as("ng") :+ posexplode(col("gs")): _*)
-      .filter(col("ng") >= w)
-      .select(col("doc_id") +: ex :+ col("ng") :+
-        col("pos").cast("long").as("p") :+
-        KmvSketch.hash32(col("col")).as("h"): _*)
-      .select(col("doc_id") +: ex :+ col("ng") :+ col("h") :+ col("p") :+
-        explode(sequence(greatest(col("p") - 3, lit(0L)),
-          least(col("p"), col("ng") - w))).as("j"): _*)
-    win
-      .groupBy(col("doc_id") +: ex :+ col("ng") :+ col("j"): _*)
-      .agg(min(col("h")).as("fp"),
-        // rightmost minimal: max p among rows tying the window min
-        // — min_by on (h asc, -p asc) picks exactly that row's p
-        min_by(col("p"), struct(col("h"), (-col("p")).as("np")))
-          .as("spos"))
-  }
 
   /** Distinct (doc_id, fp) winnowed fingerprints, checkpointed —
     * ONE kernel pass feeding every cap variant's df filter and both
@@ -729,7 +697,7 @@ object SharedWinnow {
     }
 
   /** The DUPLICATION-AWARE screen cap (r11 verdict item 1): the fixed
-    * [[graft.operators.Dedup.WinnowDfCap]] silently drops
+    * [[Winnow.DfCap]] silently drops
     * real duplicate families once corpus duplication grows — a
     * fingerprint shared by an f-doc organic family has df ≈ m·f under
     * m-fold duplication, so the boilerplate threshold must scale with
@@ -749,7 +717,7 @@ object SharedWinnow {
           count_distinct(md5(col("text"))).as("m"))
         .head()
       val (n, m) = (r.getLong(0), r.getLong(1))
-      val base = graft.operators.Dedup.WinnowDfCap.toLong
+      val base = Winnow.DfCap.toLong
       // empty corpus → the fixed cap (the capFromStore fallback rule)
       if (m == 0L) base else (base * n + m - 1L) / m
     }
@@ -760,36 +728,16 @@ object SharedWinnow {
     * adaptive consumers (q251) each pay their pair join once while
     * sharing ONE [[fpDoc]] kernel pass. */
   def cappedPairsAt(s: SparkSession, dir: String, cap: Long): DataFrame =
-    memo(s, "SharedWinnow.cappedPairsAt", (dir, cap)) {
-      import org.apache.spark.sql.functions._
-      val fpdoc = fpDoc(s, dir)
-      val usable = fpdoc.groupBy(col("fp"))
-        .agg(count(lit(1)).as("nd"))
-        .filter(col("nd").between(2L, cap))
-        .select(col("fp"))
-      val capped = fpdoc.join(usable.hint("shuffle_hash"), "fp")
-      capped.select(col("fp"), col("doc_id").as("doc_a"))
-        .join(capped.select(col("fp"), col("doc_id").as("doc_b"))
-          .hint("shuffle_hash"), Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b"))
-        .agg(count(lit(1)).as("nshared"))
-        .filter(col("nshared") >= 2)
-        .select(col("doc_a"), col("doc_b"))
-        .localCheckpoint()
-    }
+    memo(s, "SharedWinnow.cappedPairsAt", (dir, cap))(
+      Winnow.cappedPairs(fpDoc(s, dir), cap).localCheckpoint())
 
   /** The df-capped ≥2-shared winnow candidate-pair artifact —
-    * distinct (doc, fp) from [[selected]], document frequency capped
-    * at [2, Dedup.WinnowDfCap], capped-bucket self-join,
-    * pairs sharing ≥ 2 fingerprints. Shared by q226 (screen
-    * calibration) and q238 (dedup retention): the pair derivation is
-    * the expensive stage, both consumers are views over it. Forced
-    * shuffle on the self-join legs (scale lesson #4 — broadcast would
-    * pin output parallelism). */
+    * [[Winnow.cappedPairs]] over [[fpDoc]] at [[Winnow.DfCap]]. Shared
+    * by q226 (screen calibration) and q238 (dedup retention): the pair
+    * derivation is the expensive stage, both consumers are views over
+    * it. */
   def cappedPairs(s: SparkSession, dir: String): DataFrame =
-    cappedPairsAt(s, dir,
-      graft.operators.Dedup.WinnowDfCap.toLong)
+    cappedPairsAt(s, dir, Winnow.DfCap.toLong)
 
   /** [[components]] at an explicit df-cap — cached per cap for the
     * adaptive-screen consumers. */
@@ -802,42 +750,24 @@ object SharedWinnow {
     * screen's cluster map, cached like SharedLsh.components (q238's
     * retention and q242's cluster profile read the same map). */
   def components(s: SparkSession, dir: String): DataFrame =
-    componentsAt(s, dir,
-      graft.operators.Dedup.WinnowDfCap.toLong)
+    componentsAt(s, dir, Winnow.DfCap.toLong)
 
   /** [[components]] over a RESTRICTED document universe (`predSql`
     * filters the documents table) — q249's base-world map, cached per
     * (session, dir, predicate) so the kernel + CC fixpoint run once
     * per session (lesson #8: q249's first bench entry re-paid them
-    * every pass, 5.8 s of which ~5.5 s was this derivation). Uses the
-    * narrow `Dedup.winnowFingerprints` kernel — parity with the
-    * [[selected]]-based derivation is spec-pinned elsewhere
-    * (DedupSimilaritySpec), and q249's oracle replays the same
-    * rule from scratch, so the cache cannot drift silently. */
+    * every pass, 5.8 s of which ~5.5 s was this derivation). q249's
+    * oracle replays the same rule from scratch, so the cache cannot
+    * drift silently. */
   def componentsWhere(s: SparkSession, dir: String,
                       predSql: String): DataFrame =
     memo(s, "SharedWinnow.componentsWhere", (dir, predSql)) {
-      import org.apache.spark.sql.functions._
-      val cap = graft.operators.Dedup.WinnowDfCap
-      val fd = graft.operators.Dedup
-        .winnowFingerprints(
-          Tables.documents(s, dir).filter(expr(predSql)),
-          "doc_id", "text")
-        .select(col("docId").as("doc_id"), col("fp")).distinct()
+      import org.apache.spark.sql.functions.expr
+      val fd = Winnow
+        .fingerprints(Tables.documents(s, dir).filter(expr(predSql)))
         .localCheckpoint() // df-cap + both self-join legs, one lineage
-      val usable = fd.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
-        .filter(col("nd").between(2, cap))
-        .select(col("fp"))
-      val capped = fd.join(usable.hint("shuffle_hash"), "fp")
       graft.operators.Dedup.connectedComponents(
-        capped.select(col("fp"), col("doc_id").as("doc_a"))
-          .join(capped.select(col("fp"), col("doc_id").as("doc_b"))
-            .hint("shuffle_hash"), Seq("fp"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("nsh"))
-          .filter(col("nsh") >= 2)
-          .select(col("doc_a"), col("doc_b")))
+        Winnow.cappedPairs(fd, Winnow.DfCap.toLong))
         .localCheckpoint()
     }
 
@@ -845,23 +775,23 @@ object SharedWinnow {
     * nw, n_std, n_rob, sv, rv): distinct position counts and sorted
     * distinct VALUE arrays under the standard (rightmost-min) and
     * robust (Schleimer §5) rules, from ONE pass of the fenced
-    * winnowInput kernel. q231 (position census) and q236 (value-index
-    * certificate + shared-fp screen) previously each paid the full
-    * gram+hash+double-fold kernel (~1.3 s each materialized at
-    * sf0.1); the artifact is the per-doc fp VALUE index a production
-    * screen stores anyway, so sharing it is the storage reality, not
-    * just a cache. */
+    * [[Winnow.hashes]] kernel. q231 (position census) and q236
+    * (value-index certificate + shared-fp screen) previously each paid
+    * the full gram+hash+double-fold kernel (~1.3 s each materialized
+    * at sf0.1); the artifact is the per-doc fp VALUE index a
+    * production screen stores anyway, so sharing it is the storage
+    * reality, not just a cache. */
   def ruleCompare(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedWinnow.ruleCompare", dir) {
       import org.apache.spark.sql.functions._
-      QueriesRound9.winnowInput(s, dir)
+      Winnow.hashes(Tables.documents(s, dir), "source")
         .select(col("doc_id"), col("source"), col("nw"),
-          size(QueriesRound9.stdSelCol).cast("long").as("n_std"),
-          size(QueriesRound9.robSelCol).cast("long").as("n_rob"),
-          array_sort(array_distinct(transform(QueriesRound9.stdSelCol,
+          size(Winnow.stdSelCol).cast("long").as("n_std"),
+          size(Winnow.robSelCol).cast("long").as("n_rob"),
+          array_sort(array_distinct(transform(Winnow.stdSelCol,
             p => element_at(col("hs"), p.cast("int")).cast("long"))))
             .as("sv"),
-          array_sort(array_distinct(transform(QueriesRound9.robSelCol,
+          array_sort(array_distinct(transform(Winnow.robSelCol,
             p => element_at(col("hs"), p.cast("int")).cast("long"))))
             .as("rv"))
         .localCheckpoint()

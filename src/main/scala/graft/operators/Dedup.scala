@@ -339,56 +339,7 @@ object Dedup {
     * silently fails to converge on). Each half-step is one groupBy-min
     * plus one join over the current edge list; per-round RDD
     * materialization truncates lineage so plans don't grow across
-    * iterations. Throws if maxIter is hit before the exact fixpoint
-    * (see [[connectedComponentsWithStats]] for the non-throwing form
-    * and the isolation/convergence details).
-    */
-  /** Result of a component computation: the (doc_id, component) frame
-    * plus loop telemetry (contraction rounds run, converged flag). */
-  final case class CcResult(components: DataFrame, rounds: Int,
-                            converged: Boolean)
-
-  def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
-                          bCol: String = "doc_b",
-                          maxIter: Int = 50): DataFrame = {
-    val r = connectedComponentsWithStats(pairs, aCol, bCol, maxIter)
-    // a cutoff here would silently return per-node min-neighbor labels
-    // that need not equal the component minimum — refuse to hand
-    // wrong cluster ids to a data-correctness pipeline
-    if (!r.converged) throw new IllegalStateException(
-      s"connectedComponents: not converged after $maxIter rounds — " +
-        "raise maxIter (O(log^2 n) rounds suffice for any graph)")
-    r.components
-  }
-
-  /** Large-star: every node u rewires its LARGER neighbors to
-    * m(u) = min(Γ(u) ∪ {u}). Input/output edges are canonical
-    * (u > v, i.e. big end first). */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val nbrs = e.select(col("u"), col("v"))
-      .union(e.select(col("v").as("u"), col("u").as("v")))
-    val m = nbrs.groupBy(col("u"))
-      .agg(min(col("v")).as("mv"))
-      .select(col("u"), least(col("u"), col("mv")).as("m"))
-    nbrs.join(m, "u")
-      .filter(col("v") > col("u")) // rewire only larger neighbors
-      .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m ⇒ canonical
-      .distinct()
-  }
-
-  /** Small-star: every node u rewires its SMALLER neighbors (and itself)
-    * to m(u) = min of those neighbors. Canonical edges in and out. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val m = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-    val rewired = e.join(m, "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v")) // v > m ⇒ canonical
-    rewired.union(m.select(col("u"), col("m").as("v"))).distinct()
-  }
-
-  /** [[connectedComponents]] returning loop telemetry instead of
-    * throwing on cutoff (components are then NOT trustworthy unless
-    * `converged`).
+    * iterations.
     *
     * Isolation: the loop's shuffles run in a dedicated child session
     * (`spark.newSession()`) with `shuffle.partitions=8` and AQE off —
@@ -407,10 +358,14 @@ object Dedup {
     * extra pass), candidate fixpoint detected by a (count, Σu, Σv,
     * Σ(u%p·v%p)) checksum and then CONFIRMED by an exact set comparison
     * (counts equal + exceptAll empty), so a checksum collision cannot
-    * terminate the loop early with intermediate labels. */
-  def connectedComponentsWithStats(pairs: DataFrame, aCol: String = "doc_a",
-                                   bCol: String = "doc_b",
-                                   maxIter: Int = 50): CcResult = {
+    * terminate the loop early with intermediate labels. Throws if
+    * `maxIter` contraction rounds pass before the exact fixpoint: a
+    * cutoff would return per-node min-neighbor labels that need not
+    * equal the component minimum.
+    */
+  def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
+                          bCol: String = "doc_b",
+                          maxIter: Int = 50): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val caller = pairs.sparkSession
     val loopSession = caller.newSession()
@@ -456,6 +411,12 @@ object Dedup {
       edges = next
       i += 2 // two contraction rounds per loop pass
     }
+    if (!converged) {
+      rdd.unpersist(blocking = false)
+      throw new IllegalStateException(
+        s"connectedComponents: not converged after $maxIter rounds — " +
+          "raise maxIter (O(log^2 n) rounds suffice for any graph)")
+    }
     // converged state is one star per component: hub = component min,
     // every non-hub node has the hub as its (unique) neighbor
     val nonHub = edges.groupBy(col("u")).agg(min(col("v")).as("component"))
@@ -468,8 +429,32 @@ object Dedup {
     // hand the result back in the caller's session (so callers can join
     // it with their own frames without mixing session states); the plan
     // reads the final persisted edge RDD, which stays cached
-    CcResult(
-      caller.createDataFrame(result.rdd, result.schema), i, converged)
+    caller.createDataFrame(result.rdd, result.schema)
+  }
+
+  /** Large-star: every node u rewires its LARGER neighbors to
+    * m(u) = min(Γ(u) ∪ {u}). Input/output edges are canonical
+    * (u > v, i.e. big end first). */
+  private def largeStar(e: DataFrame): DataFrame = {
+    val nbrs = e.select(col("u"), col("v"))
+      .union(e.select(col("v").as("u"), col("u").as("v")))
+    val m = nbrs.groupBy(col("u"))
+      .agg(min(col("v")).as("mv"))
+      .select(col("u"), least(col("u"), col("mv")).as("m"))
+    nbrs.join(m, "u")
+      .filter(col("v") > col("u")) // rewire only larger neighbors
+      .select(col("v").as("u"), col("m").as("v")) // v > u ≥ m ⇒ canonical
+      .distinct()
+  }
+
+  /** Small-star: every node u rewires its SMALLER neighbors (and itself)
+    * to m(u) = min of those neighbors. Canonical edges in and out. */
+  private def smallStar(e: DataFrame): DataFrame = {
+    val m = e.groupBy(col("u")).agg(min(col("v")).as("m"))
+    val rewired = e.join(m, "u")
+      .filter(col("v") =!= col("m"))
+      .select(col("v").as("u"), col("m").as("v")) // v > m ⇒ canonical
+    rewired.union(m.select(col("u"), col("m").as("v"))).distinct()
   }
 
   /** 16-bit SimHash per doc from whitespace tokens: single groupBy with 16
@@ -496,30 +481,4 @@ object Dedup {
     }.reduce(_ + _)
     sums.select(col(idCol), sim.as("simhash"))
   }
-
-  /** Df-cap of the winnowed-fingerprint screen (q226/q227 and the
-    * SharedWinnow artifacts): a fingerprint shared by more docs is
-    * boilerplate and generates no pairs. */
-  val WinnowDfCap = 16
-
-  /** Per-doc winnowed fingerprints (w = 4 over word-4-gram hash32) as
-    * pure per-row array expressions: one (docId, fp) row per distinct
-    * selected fingerprint; docs with fewer than 4 grams emit none. No
-    * aggregation, so the same plan also runs under `readStream`. The
-    * set equals SharedWinnow's distinct per-window minima
-    * (DedupSimilaritySpec pins the two derivations together). */
-  def winnowFingerprints(docs: DataFrame, idCol: String,
-                         textCol: String): DataFrame =
-    docs
-      .select(col(idCol).cast("long").as("docId"),
-        TextAnalysis.wordNgrams(col(textCol), 4).as("gs"))
-      // FENCED (r10 audit): the ≥4 filter otherwise re-expands the
-      // whole gram+hash chain into the predicate (2× per doc)
-      .withColumn("hs", graft.plans.FenceExpr.fence(
-        transform(col("gs"), g => KmvSketch.hash32(g))))
-      .filter(size(col("hs")) >= 4)
-      .withColumn("fps", array_distinct(transform(
-        sequence(lit(1), size(col("hs")) - 3),
-        j => array_min(slice(col("hs"), j, lit(4))))))
-      .select(col("docId"), explode(col("fps")).as("fp"))
 }

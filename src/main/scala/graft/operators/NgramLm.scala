@@ -75,7 +75,7 @@ object NgramLm {
     * Emits (doc_id, n_transitions, lm_score); documents with fewer
     * than 2 tokens have no transitions and are dropped (a zero-signal
     * doc has no LM opinion — route it via the length filter instead). */
-  def score(scoreDocs: DataFrame, modelDocs: DataFrame,
+  def score(docs: DataFrame, modelDocs: DataFrame,
             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val ug = unigrams(tokenStream(modelDocs, idCol, textCol))
     val bg = bigrams(modelDocs, idCol, textCol)
@@ -84,7 +84,7 @@ object NgramLm {
 
     // equi-joins on the token key; ug joins twice (prev leg feeds the
     // seen-bigram denominator, w leg feeds the backoff numerator)
-    val scored = transitions(scoreDocs, idCol, textCol)
+    val scored = transitions(docs, idCol, textCol)
       .join(bg, Seq("prev", "w"), "left")
       .join(ug.select(col("w").as("prev"), col("c1").as("c1_prev")),
         Seq("prev"), "left")

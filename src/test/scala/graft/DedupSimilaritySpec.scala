@@ -133,14 +133,13 @@ class DedupSimilaritySpec extends SparkSpec {
     import graft.operators.Dedup
     // diameter-255 path: plain min-label propagation would need ~255
     // rounds; the large/small-star contraction must land well inside
-    // the default maxIter=50 budget (Kiveris SoCC'14 bound)
+    // the default maxIter=50 budget (Kiveris SoCC'14 bound) — within
+    // 20 rounds, or connectedComponents throws
     val n = 256
     val pairs = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
       .toDF("doc_a", "doc_b")
-    val r = Dedup.connectedComponentsWithStats(pairs)
-    assert(r.converged, s"did not converge (rounds=${r.rounds})")
-    assert(r.rounds <= 20, s"took ${r.rounds} contraction rounds on a $n-chain")
-    val comps = r.components.collect().map(x => (x.getLong(0), x.getLong(1)))
+    val comps = Dedup.connectedComponents(pairs, maxIter = 20)
+      .collect().map(x => (x.getLong(0), x.getLong(1)))
     assert(comps.length == n)
     assert(comps.forall(_._2 == 0L),
       s"all nodes must land in component 0: ${comps.filter(_._2 != 0L).take(5).toSeq}")
@@ -201,7 +200,7 @@ class DedupSimilaritySpec extends SparkSpec {
   // winnow fixture — 9-word docs with a controlled shared span: pairs
   // (1,2) and (3,4) each share a full 7+-token span; doc 5 is
   // unrelated; docs 100+ all open with the same 8-token boilerplate
-  // banner, whose fingerprints exceed Dedup.WinnowDfCap
+  // banner, whose fingerprints exceed Winnow.DfCap
   private def words(seed: String, n: Int): String =
     (0 until n).map(i => s"$seed$i").mkString(" ")
 
@@ -216,26 +215,37 @@ class DedupSimilaritySpec extends SparkSpec {
       (100L to 120L).map(i => (i, banner + s" tail$i"))
 
   test("narrow fingerprint path equals the batch window-min derivation") {
-    val docs = corpus.toDF("doc_id", "text")
-    val narrow = Dedup.winnowFingerprints(
-      docs, "doc_id", "text")
-      .select(col("docId"), col("fp")).distinct()
-      .as[(Long, Long)].collect().toSet
-    // batch derivation: explode grams with position, window ids,
-    // min per (doc, window), distinct — the SharedWinnow shape
-    val grams = docs.select(col("doc_id"),
+    import graft.operators.Winnow
+    // doc 200 repeats one word: every window is an all-tie, where only
+    // the rightmost tie rule fixes spos
+    val docs = (corpus :+ (200L -> ("rep " * 12).trim)).toDF("doc_id", "text")
+      .withColumn("source", concat(lit("s"), (col("doc_id") % 3).cast("string")))
+    // batch derivation: explode grams with position, each hash once per
+    // window it falls in, min and rightmost-min position per (doc,
+    // window) — the explode/group-by shape the DuckDB oracle replays
+    val grams = docs.select(col("doc_id"), col("source"),
         graft.operators.TextAnalysis.wordNgrams(col("text"), 4).as("gs"))
-      .select(col("doc_id"), size(col("gs")).cast("long").as("ng"),
-        posexplode(col("gs")))
+      .select(col("doc_id"), col("source"),
+        size(col("gs")).cast("long").as("ng"), posexplode(col("gs")))
       .filter(col("ng") >= 4)
-      .select(col("doc_id"), col("ng"), col("pos").cast("long").as("p"),
+      .select(col("doc_id"), col("source"), col("ng"),
+        col("pos").cast("long").as("p"),
         graft.operators.KmvSketch.hash32(col("col")).as("h"))
-    val batch = grams.select(col("doc_id"), col("h"),
+    val batch = grams.select(col("doc_id"), col("source"), col("ng"),
+        col("h"), col("p"),
         explode(sequence(greatest(col("p") - 3, lit(0L)),
           least(col("p"), col("ng") - 4))).as("j"))
-      .groupBy(col("doc_id"), col("j")).agg(min(col("h")).as("fp"))
-      .select(col("doc_id"), col("fp")).distinct()
-      .as[(Long, Long)].collect().toSet
-    assert(narrow == batch)
+      .groupBy(col("doc_id"), col("source"), col("ng"), col("j"))
+      .agg(min(col("h")).as("fp"),
+        min_by(col("p"), struct(col("h"), (-col("p")).as("np"))).as("spos"))
+    val win = Winnow.windows(docs, "source")
+    assert(win.columns.toSeq == batch.columns.toSeq)
+    assert(win.exceptAll(batch).isEmpty && batch.exceptAll(win).isEmpty,
+      "Winnow.windows must equal the explode/group-by rows, j and spos included")
+    assert(!win.isEmpty)
+    val fps = Winnow.fingerprints(docs).as[(Long, Long)].collect()
+    assert(fps.length == fps.toSet.size, "fingerprints are distinct per doc")
+    assert(fps.toSet == batch.select(col("doc_id"), col("fp")).distinct()
+      .as[(Long, Long)].collect().toSet)
   }
 }

@@ -12,6 +12,21 @@ class DsirSpec extends SparkSpec {
       .mkString.substring(0, 2)
   }
 
+  /** The join-and-aggregate derivation of the DSIR score: every gram
+    * joins its bucket's weight (10⁶ when absent), then Σw div n per doc
+    * — an independent check on the per-row scorer. */
+  private def joinScored(docs: org.apache.spark.sql.DataFrame,
+                         weights: org.apache.spark.sql.DataFrame) =
+    Dsir.bucketedGrams(docs)
+      .join(weights, Seq("b"), "left")
+      .select(col("doc_id"),
+        coalesce(col("w_fp"), lit(1000000L)).as("w_fp"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_grams"), sum(col("w_fp")).as("s"))
+      .select(col("doc_id"), col("n_grams"),
+        expr("s div n_grams").as("avg_weight_fp"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
   test("bucketedGrams: adjacent pairs, md5-prefix buckets, short docs drop") {
     val docs = Seq((1L, "a b c"), (2L, "x"), (3L, "")).toDF("doc_id", "text")
     val got = Dsir.bucketedGrams(docs)
@@ -31,14 +46,13 @@ class DsirSpec extends SparkSpec {
     assert(got == Map(md5b("a b") -> w(1, 2), md5b("b c") -> w(0, 1)))
   }
 
-  test("scoreDocs: integer mean of per-gram weights; unseen bucket = 1e6") {
-    val weights = Seq((md5b("a b"), 3000000L), (md5b("b c"), 500000L))
-      .toDF("b", "w_fp")
+  test("scoreWithWeights: integer mean of per-gram weights; unseen bucket = 1e6") {
+    val weights = Map(md5b("a b") -> 3000000L, md5b("b c") -> 500000L)
     val docs = Seq(
       (1L, "a b c"),   // (3000000 + 500000) div 2 = 1750000
       (2L, "z z"))     // bucket unseen -> 1000000
       .toDF("doc_id", "text")
-    val got = Dsir.scoreDocs(docs, weights)
+    val got = Dsir.scoreWithWeights(docs, weights)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(got == Map(1L -> ((2L, 1750000L)), 2L -> ((1L, 1000000L))))
@@ -48,8 +62,7 @@ class DsirSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf())
     val target = docs.filter(col("text").contains("spark"))
     val w = Dsir.importanceWeights(docs, target)
-    val a = Dsir.scoreDocs(docs, w)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val a = joinScored(docs, w)
     val b = Dsir.scoreWithWeights(docs, Dsir.weightsMap(w))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(a == b && a.nonEmpty)
@@ -84,9 +97,8 @@ class DsirSpec extends SparkSpec {
     q.awaitTermination()
     val got = spark.read.parquet(out).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = Dsir.scoreDocs(batch, Dsir.importanceWeights(
+    val want = joinScored(batch, Dsir.importanceWeights(
         batch, batch.filter(col("text").contains("a"))))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want && got.nonEmpty)
   }
 
@@ -97,7 +109,7 @@ class DsirSpec extends SparkSpec {
     }.toDF("doc_id", "text")
     val target = Seq((99L, "alpha beta alpha")).toDF("doc_id", "text")
     val w = Dsir.importanceWeights(corpus, target)
-    val top = Dsir.scoreDocs(corpus, w)
+    val top = Dsir.scoreWithWeights(corpus, Dsir.weightsMap(w))
       .orderBy(col("avg_weight_fp").desc, col("doc_id").asc)
       .limit(4).collect().map(_.getLong(0)).toSet
     assert(top == Set(5L, 10L, 15L, 20L))

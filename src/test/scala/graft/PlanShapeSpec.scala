@@ -242,19 +242,20 @@ class PlanShapeSpec extends SparkSpec {
       s"pair generation must stay an equi-join on cluster:\n$p")
   }
 
-  test("dsir scoring joins the weight table by broadcast, no cartesian") {
+  test("dsir scoring is a per-row map: no exchange, no join, no cartesian") {
     // pins the INLINE operator shape (q118's query path reads the
     // eager SharedDsir.scored artifact, whose plan is a bare
-    // Scan ExistingRDD — asserting on it is vacuous; the r12 verdict's
-    // red-test finding). The ≤256-row weight table must ride a
-    // broadcast into the per-gram join, never a shuffle or product.
+    // Scan ExistingRDD — asserting on it is vacuous). The ≤256-entry
+    // weight table rides in as a 256-slot array literal, so scoring the corpus
+    // moves no rows between tasks.
     val docs = Tables.documents(spark, sf())
     val target = docs.filter(col("text").contains("spark"))
-    val p = planOf(graft.operators.Dsir.scoreDocs(docs,
-      graft.operators.Dsir.importanceWeights(docs, target)))
-    assert(p.contains("BroadcastHashJoin"),
-      s"bucket-weight join must broadcast:\n$p")
-    assert(!p.contains("CartesianProduct"), s"cartesian crept in:\n$p")
+    val p = planOf(graft.operators.Dsir.scoreWithWeights(docs,
+      graft.operators.Dsir.weightsMap(
+        graft.operators.Dsir.importanceWeights(docs, target))))
+    assert(exchanges(p) == 0, s"scoring must not shuffle:\n$p")
+    assert(!p.contains("Join") && !p.contains("CartesianProduct"),
+      s"scoring must not join:\n$p")
   }
 
   test("rrf fusion never touches the corpus in the fuse stage: no cartesian, top-k via TakeOrdered") {

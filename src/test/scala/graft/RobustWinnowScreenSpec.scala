@@ -19,18 +19,14 @@ class RobustWinnowScreenSpec extends SparkSpec {
   /** Per doc: position counts under both rules plus the sorted
     * distinct fp VALUE sets. */
   private def valsOf(df: DataFrame) = {
-    import graft.operators.KmvSketch
-    df.select(col("doc_id"),
-        transform(graft.operators.TextAnalysis.wordNgrams(col("text"), 4),
-          g => KmvSketch.hash32(g)).as("hs"))
-      .filter(size(col("hs")) >= 4)
-      .withColumn("nw", (size(col("hs")) - 3).cast("long"))
+    import graft.operators.Winnow
+    Winnow.hashes(df)
       .select(col("doc_id"),
-        size(QueriesRound9.stdSelCol).as("n_std"),
-        size(QueriesRound9.robSelCol).as("n_rob"),
-        array_sort(array_distinct(transform(QueriesRound9.stdSelCol,
+        size(Winnow.stdSelCol).as("n_std"),
+        size(Winnow.robSelCol).as("n_rob"),
+        array_sort(array_distinct(transform(Winnow.stdSelCol,
           p => element_at(col("hs"), p.cast("int"))))).as("sv"),
-        array_sort(array_distinct(transform(QueriesRound9.robSelCol,
+        array_sort(array_distinct(transform(Winnow.robSelCol,
           p => element_at(col("hs"), p.cast("int"))))).as("rv"))
   }
 

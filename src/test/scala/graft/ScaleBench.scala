@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BloomDedup, Curation, Dedup}
+import graft.operators.{BloomDedup, Curation, Dedup, Winnow}
 
 /** Dev micro-bench (NOT part of the Verify/Bench contract): drives the
   * dedup/curation scale path on a SYNTHETIC 1M-document corpus — 200×
@@ -201,29 +201,11 @@ object ScaleBench {
         grams.unpersist()
         out
       }
-      // round-8 second half: the q223 winnowing kernel — word-4-gram
-      // hash, 4× window fan-out of INTEGER (doc, j, h) rows, min per
-      // window, per-doc distinct-fingerprint census. The fan-out is
-      // the new cost class this stage sizes: 4 rows per gram, ~240
-      // per doc, all integer-keyed.
+      // round-8 second half: the q223 winnowing kernel — per-row window
+      // minima of the word-4-gram hash32 array (Winnow.windows, no
+      // shuffle), then the per-doc distinct-fingerprint census.
       val winnowDocs = timedL("winnowing") {
-        import graft.operators.KmvSketch
-        val w = 4
-        val grams = docs
-          .select(col("doc_id"),
-            graft.operators.TextAnalysis.wordNgrams(col("text"), 4).as("gs"))
-          .select(col("doc_id"), size(col("gs")).cast("long").as("ng"),
-            posexplode(col("gs")))
-          .filter(col("ng") >= w)
-          .select(col("doc_id"), col("ng"),
-            col("pos").cast("long").as("p"),
-            KmvSketch.hash32(col("col")).as("h"))
-        grams
-          .select(col("doc_id"), col("h"),
-            explode(sequence(greatest(col("p") - 3, lit(0L)),
-              least(col("p"), col("ng") - w))).as("j"))
-          .groupBy(col("doc_id"), col("j"))
-          .agg(min(col("h")).as("fp"))
+        Winnow.windows(docs)
           .groupBy(col("doc_id"))
           .agg(countDistinct(col("fp")).as("nfp"))
           .count()
@@ -255,39 +237,14 @@ object ScaleBench {
       // lesson #4: broadcast would pin output parallelism). Sizes the
       // candidate-pair stage a fingerprint dedup/decontam screen pays.
       val winnowPairs = timedL("winnow_screen") {
-        import graft.operators.KmvSketch
-        val w = 4
-        val fd = docs
-          .select(col("doc_id"),
-            graft.operators.TextAnalysis.wordNgrams(col("text"), 4).as("gs"))
-          .select(col("doc_id"), size(col("gs")).cast("long").as("ng"),
-            posexplode(col("gs")))
-          .filter(col("ng") >= w)
-          .select(col("doc_id"), col("ng"),
-            col("pos").cast("long").as("p"),
-            KmvSketch.hash32(col("col")).as("h"))
-          .select(col("doc_id"), col("h"),
-            explode(sequence(greatest(col("p") - 3, lit(0L)),
-              least(col("p"), col("ng") - w))).as("j"))
-          .groupBy(col("doc_id"), col("j"))
-          .agg(min(col("h")).as("fp"))
+        val fd = Winnow.windows(docs)
           .select(col("doc_id"), col("fp")).distinct()
           .localCheckpoint()
-        val capped = fd.join(
-          fd.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
-            .filter(col("nd").between(2, 16)).select(col("fp"))
-            .hint("shuffle_hash"), "fp")
-        capped.select(col("fp"), col("doc_id").as("a"))
-          .join(capped.select(col("fp"), col("doc_id").as("b"))
-            .hint("shuffle_hash"), Seq("fp"))
-          .filter(col("a") < col("b"))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("nsh"))
-          .filter(col("nsh") >= 2)
-          .count()
+        Winnow.cappedPairs(fd, Winnow.DfCap.toLong).count()
       }
       // round-11: the q238/q247 retention-policy chain END TO END —
       // the decision a dedup pipeline actually ships: winnow screen
-      // pairs (Dedup.winnowFingerprints, SharedWinnow's kernel)
+      // pairs (Winnow.fingerprints, Winnow.cappedPairs)
       // → df-cap → ≥2-shared confirm → exact CC fixpoint → the packed
       // quality-argmax keep census (the factored Retention policy).
       // Sizes the whole keep/drop decision per decade, not just the
@@ -296,22 +253,9 @@ object ScaleBench {
       // corpus shuffle-hash on ids (never broadcast — it scales with
       // duplication rate).
       val retentionKept = timedL("retention_policy") {
-        val fd = Dedup
-          .winnowFingerprints(docs, "doc_id", "text")
-          .select(col("docId").as("doc_id"), col("fp")).distinct()
+        val fd = Winnow.fingerprints(docs)
           .localCheckpoint() // df-cap + both self-join legs, one lineage
-        val usable = fd.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
-          .filter(col("nd").between(2, Dedup.WinnowDfCap))
-          .select(col("fp"))
-        val capped = fd.join(usable.hint("shuffle_hash"), "fp")
-        val pairs = capped.select(col("fp"), col("doc_id").as("doc_a"))
-          .join(capped.select(col("fp"), col("doc_id").as("doc_b"))
-            .hint("shuffle_hash"), Seq("fp"))
-          .filter(col("doc_a") < col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("nsh"))
-          .filter(col("nsh") >= 2)
-          .select(col("doc_a"), col("doc_b"))
+        val pairs = Winnow.cappedPairs(fd, Winnow.DfCap.toLong)
           .localCheckpoint() // the CC fixpoint iterates over this frame
         val comps = Dedup.connectedComponents(pairs)
         val scored = docs.select(col("doc_id"),
@@ -331,11 +275,9 @@ object ScaleBench {
       val capSum = timedL("cap_calibration") {
         val r = docs.agg(count(lit(1)).as("nn"),
           count_distinct(md5(col("text"))).as("mm")).head()
-        val acap = (Dedup.WinnowDfCap * r.getLong(0) +
+        val acap = (Winnow.DfCap * r.getLong(0) +
           r.getLong(1) - 1L) / r.getLong(1)
-        val fd = Dedup
-          .winnowFingerprints(docs, "doc_id", "text")
-          .select(col("docId"), col("fp")).distinct()
+        val fd = Winnow.fingerprints(docs)
         val nd = fd.groupBy(col("fp")).agg(count(lit(1)).as("nd"))
           .filter(col("nd") >= 2)
         val spec = nd.groupBy(col("nd")).agg(count(lit(1)).as("k"))
@@ -560,7 +502,8 @@ object ScaleBench {
       val dsirDocs = timedL("dsir_score") {
         val w = graft.operators.Dsir.importanceWeights(
           docs, docs.filter(col("doc_id") % 101 === 0))
-        graft.operators.Dsir.scoreDocs(docs, w).count()
+        graft.operators.Dsir.scoreWithWeights(docs,
+          graft.operators.Dsir.weightsMap(w)).count()
       }
       val emb2 = emb.select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("v"))

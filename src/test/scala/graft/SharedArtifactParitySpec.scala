@@ -40,11 +40,12 @@ class SharedArtifactParitySpec extends SparkSpec {
   }
 
   test("SharedDecontam.winnowCandPairs == inline winnow screen") {
-    val DfCap = graft.operators.Dedup.WinnowDfCap
+    val DfCap = graft.operators.Winnow.DfCap
     val corpusFp = SharedWinnow.selected(spark, sf())
       .select(col("doc_id").as("train_id"), col("fp")).distinct()
-    val benchFp = SharedWinnow
-      .fingerprintsOf(SharedDecontam.benchDocs(spark, sf()))
+    // the window rows here, the per-row fingerprint sets in the artifact
+    val benchFp = graft.operators.Winnow
+      .windows(SharedDecontam.benchDocs(spark, sf()))
       .select(col("doc_id").as("bench_id"), col("fp")).distinct()
     val capped = corpusFp.join(
       corpusFp.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
