@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity, TextAnalysis}
+import graft.operators.{Dedup, KeyPairs, Similarity, TextAnalysis}
 import graft.Queries.Q
 
 /** Beyond-reference operators: the training-data-pipeline suite
@@ -357,11 +357,11 @@ object QueriesBeyond {
         <= GREATEST(len(ta.text), len(tb.text))
       ORDER BY doc_a, doc_b""")
 
-  /** Incremental LSH dedup (Dedup.incrementalCandidatePairs): docs
+  /** Incremental LSH dedup (KeyPairs.delta): docs
     * with doc_id % 10 == 0 arrive as a NEW crawl batch against the
     * index of the other 90% — candidate pairs touching the batch come
-    * from ONE probe of the stored band table plus the batch self-join,
-    * never a corpus recompute (both sides here are filtered views of
+    * from the band keys the batch holds (batch × index plus batch ×
+    * batch), never a corpus recompute (both sides here are filtered views of
     * the SharedLsh band table, which IS the persisted index artifact).
     * Oracle = the full-corpus LSH pair set restricted to pairs with a
     * new member: exactly the incremental contract, as a set equality
@@ -370,9 +370,9 @@ object QueriesBeyond {
     "q96_incremental_lsh",
     (s, dir) => {
       val banded = SharedLsh.bandKeys(s, dir)
-      Dedup.incrementalCandidatePairs(
-          banded.filter(col("doc_id") % 10 =!= 0),
-          banded.filter(col("doc_id") % 10 === 0), "doc_id")
+      KeyPairs.delta(banded.filter(col("doc_id") % 10 =!= 0),
+          banded.filter(col("doc_id") % 10 === 0))
+        .select(col("doc_a"), col("doc_b"))
         .orderBy(col("doc_a"), col("doc_b"))
     },
     s"""WITH ${OracleSql.shingles()},

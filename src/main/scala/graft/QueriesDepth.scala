@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
-import graft.operators.{Dedup, KmvSketch, TrainPrep}
+import graft.operators.{Dedup, KeyPairs, KmvSketch, TrainPrep}
 
 /** Round-7 depth queries (q181+): the KMV set-algebra sketch that
   * completes the sketch family, and the true multi-field BM25F ranker.
@@ -313,8 +313,9 @@ object QueriesDepth {
             (0 until 2).map(r => col(s"h${b * 2 + r}")): _*))
         }
         sig.select(col("doc_id"), explode(array(keys: _*)).as("bk"))
+          .localCheckpoint()
       }
-      val cand4 = Dedup.lshCandidatePairsFrom(bandKeys4, "doc_id")
+      val cand4 = KeyPairs.same(bandKeys4).select(col("doc_a"), col("doc_b"))
       val sa = sig.select(col("doc_id").as("doc_a") +:
         (0 until 8).map(j => col(s"h$j").as(s"a$j")): _*)
       val sb = sig.select(col("doc_id").as("doc_b") +:
@@ -2113,8 +2114,8 @@ object QueriesDepth {
     "q226_winnow_screen",
     (s, dir) => {
       // the df-capped ≥2-shared pair derivation rides the shared
-      // artifact (SharedWinnow.cappedPairs — also q238's input; the
-      // screen and its df-cap are Winnow.cappedPairs and Winnow.DfCap)
+      // artifact (SharedWinnow.cappedPairs — also q238's input: the
+      // KeyPairs same-set screen at df-cap Winnow.DfCap)
       val wpairs = SharedWinnow.cappedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"), lit(1L).as("in_w"))
       val lpairs = SharedLsh.candidatePairs(s, dir)
@@ -2170,42 +2171,29 @@ object QueriesDepth {
     * index, new delta-touching pairs, delta×history vs delta×delta
     * split, and how many delta docs found a partner.
     *
-    * The ndelta ≥ 1 bucket prefilter is a pure optimization: a
-    * delta-touching pair shares every fp through a bucket that
-    * contains its delta endpoint, so dropping delta-free buckets
-    * changes nothing (set-equality argued in the oracle's
-    * from-scratch replay). */
+    * The pairs are KeyPairs.delta's: it pairs only through fp
+    * buckets the delta holds, and a delta-touching pair shares every
+    * fp through a bucket that contains its delta endpoint, so
+    * skipping delta-free buckets changes nothing (set-equality argued
+    * in the oracle's from-scratch replay). */
   private val q227 = Q(
     "q227_incr_winnow",
     (s, dir) => {
-      val idx = SharedWinnow.selected(s, dir)
-        .select(col("doc_id"), col("fp")).distinct()
-        .withColumn("is_delta", (col("doc_id") % 10 === 0).cast("long"))
-        .localCheckpoint() // df-cap + both join legs + the doc census
-      val usable = idx.groupBy(col("fp"))
-        .agg(count(lit(1)).as("nd"), sum(col("is_delta")).as("ndelta"))
-        // same shared df-cap as q226 (Winnow.DfCap)
-        .filter(col("nd").between(2,
-          graft.operators.Winnow.DfCap) &&
-          col("ndelta") >= 1)
-        .select(col("fp"))
-      val capped = idx.join(usable, "fp")
-      val dp = capped
-        .select(col("fp"), col("doc_id").as("doc_a"),
-          col("is_delta").as("da"))
-        .join(capped.select(col("fp"), col("doc_id").as("doc_b"),
-          col("is_delta").as("db")), Seq("fp"))
-        .filter(col("doc_a") < col("doc_b"))
-        .filter(col("da") + col("db") >= 1)
-        .groupBy(col("doc_a"), col("doc_b"), col("da"), col("db"))
-        .agg(count(lit(1)).as("nshared"))
-        .filter(col("nshared") >= 2)
+      val fd = SharedWinnow.fpDoc(s, dir)
+      val isDelta = (c: String) => (col(c) % 10 === 0).cast("long")
+      // same shared df-cap as q226 (Winnow.DfCap), counted over the
+      // merged index
+      val dp = KeyPairs.delta(fd.filter(col("doc_id") % 10 =!= 0),
+          fd.filter(col("doc_id") % 10 === 0), minShared = 2,
+          maxDf = Some(graft.operators.Winnow.DfCap.toLong))
+        .select(col("doc_a"), col("doc_b"), isDelta("doc_a").as("da"),
+          isDelta("doc_b").as("db"))
         .localCheckpoint() // census + endpoint distinct read it twice
       val ag = dp.agg(count(lit(1)).as("n_new_pairs"),
         sum(col("da") * col("db")).as("n_dd_pairs"),
         sum(when(col("da") + col("db") === 1, 1L).otherwise(0L))
           .as("n_dh_pairs"))
-      val nd = idx.filter(col("is_delta") === 1)
+      val nd = fd.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id")).distinct()
         .agg(count(lit(1)).as("n_delta_docs"))
       val pd = dp.select(col("doc_a").as("d"), col("da").as("f"))

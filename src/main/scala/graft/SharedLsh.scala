@@ -151,17 +151,17 @@ object SharedLsh {
       Dedup.minhashSignatures(Tables.documents(s, dir), "doc_id", "text",
         p.n, p.k).localCheckpoint())
 
-  /** Materialized candidate pairs (doc_a < doc_b) from the shared band
-    * table. Cached like the band table itself: the bk self-join +
-    * distinct is re-derived by every candidate-bounded consumer
-    * (q17/q82/q172/…), and the result is the small screened pair set —
-    * exactly the artifact a pipeline persists between the banding and
-    * verification stages. */
+  /** Materialized candidate pairs (doc_a < doc_b): the docs sharing a
+    * band key of the shared band table ([[operators.KeyPairs.same]]).
+    * Cached like the band table itself: every candidate-bounded
+    * consumer (q17/q82/q172/…) reads it, and the result is the small
+    * screened pair set — exactly the artifact a pipeline persists
+    * between the banding and verification stages. */
   def candidatePairs(s: SparkSession, dir: String,
                      p: Params = Default): DataFrame =
     memo(s, "SharedLsh.candidatePairs", (dir, p))(
-      Dedup.lshCandidatePairsFrom(bandKeys(s, dir, p), "doc_id")
-        .localCheckpoint())
+      operators.KeyPairs.same(bandKeys(s, dir, p))
+        .select("doc_a", "doc_b").localCheckpoint())
 
   /** Materialized distinct (doc_id, sh) n-shingle rows for CANDIDATE
     * docs only — the verification-stage artifact every exact-overlap
@@ -193,8 +193,9 @@ object SharedLsh {
 
   /** Materialized INCREMENTALLY-maintained component map (q212): the
     * history docs' (doc_id % 10 ≠ 0) map is the stored artifact, a
-    * delta batch contributes only [[Dedup.incrementalCandidatePairs]],
-    * and CC runs over stored-map star edges ∪ delta pairs — the merge
+    * delta batch contributes only its delta-touching band pairs
+    * ([[operators.KeyPairs.delta]], the q96 call), and CC runs over
+    * stored-map star edges ∪ delta pairs — the merge
     * graph is |history map| + |delta pairs| edges, independent of
     * history PAIR volume. Cached like [[components]]: both CC loops
     * are deterministic exact fixpoints, and the merged map is
@@ -212,8 +213,8 @@ object SharedLsh {
       val storedEdges = stored
         .filter(col("doc_id") =!= col("component"))
         .select(col("component").as("doc_a"), col("doc_id").as("doc_b"))
-      val deltaPairs = Dedup.incrementalCandidatePairs(
-        hist, delta, "doc_id")
+      val deltaPairs = operators.KeyPairs.delta(hist, delta)
+        .select("doc_a", "doc_b")
       Dedup.connectedComponents(storedEdges.union(deltaPairs).distinct())
         .localCheckpoint()
     }
@@ -568,37 +569,26 @@ object SharedDecontam {
         .localCheckpoint())
 
   /** LSH-screened cross pairs (train_id, bench_id): corpus band table
-    * (session artifact) ⋈ broadcast bench band index, distinct. The
-    * intra-corpus candidate pairs are never generated. */
+    * (session artifact) × bench band index ([[operators.KeyPairs.cross]]).
+    * The intra-corpus candidate pairs are never generated. */
   def lshCrossPairs(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedDecontam.lshCrossPairs", dir)(
-      SharedLsh.bandKeys(s, dir)
-        .select(col("doc_id").as("train_id"), col("bk"))
-        .join(broadcast(benchBands(s, dir)), "bk")
-        .select(col("train_id"), col("bench_id")).distinct()
-        .localCheckpoint())
+      crossPairs(SharedLsh.bandKeys(s, dir), benchBands(s, dir), 1, None))
+
+  private def crossPairs(train: DataFrame, bench: DataFrame,
+                         minShared: Int, maxDf: Option[Long]): DataFrame =
+    operators.KeyPairs.cross(train, bench, minShared, maxDf)
+      .select(col("doc_a").as("train_id"), col("doc_b").as("bench_id"))
+      .localCheckpoint()
 
   /** Winnow-screened cross pairs: ≥2 shared fingerprints in the
-    * df-capped universe (corpus-side df ≤ Winnow.DfCap)
-    * — q234's screen, reused verbatim by q235. No data-dependent
-    * broadcast: every leg is a shuffle-hash equi-join (candidate
-    * volume scales with contamination rate × corpus size). */
+    * df-capped universe (corpus-side df ≤ Winnow.DfCap,
+    * [[operators.KeyPairs.cross]]) — q234's screen, reused verbatim by
+    * q235. */
   def winnowCandPairs(s: SparkSession, dir: String): DataFrame =
-    memo(s, "SharedDecontam.winnowCandPairs", dir) {
-      val DfCap = graft.operators.Winnow.DfCap
-      val cfp = corpusFp(s, dir)
-      val capped = cfp.join(
-        cfp.groupBy(col("fp")).agg(count(lit(1)).as("dfc"))
-          .filter(col("dfc") <= DfCap).select(col("fp"))
-          .hint("shuffle_hash"), "fp")
-      capped
-        .join(benchFp(s, dir).hint("shuffle_hash"), "fp")
-        .groupBy(col("train_id"), col("bench_id"))
-        .agg(count(lit(1)).as("nsh"))
-        .filter(col("nsh") >= 2)
-        .select(col("train_id"), col("bench_id"))
-        .localCheckpoint()
-    }
+    memo(s, "SharedDecontam.winnowCandPairs", dir)(
+      crossPairs(SharedWinnow.fpDoc(s, dir), benchFp(s, dir), 2,
+        Some(graft.operators.Winnow.DfCap.toLong)))
 
   /** Containment-confirmed pairs (uncapped winnow-fingerprint
     * containment of the bench doc in the train doc ≥ 50%, integer
@@ -729,10 +719,17 @@ object SharedWinnow {
     * sharing ONE [[fpDoc]] kernel pass. */
   def cappedPairsAt(s: SparkSession, dir: String, cap: Long): DataFrame =
     memo(s, "SharedWinnow.cappedPairsAt", (dir, cap))(
-      Winnow.cappedPairs(fpDoc(s, dir), cap).localCheckpoint())
+      screen(fpDoc(s, dir), cap).localCheckpoint())
 
-  /** The df-capped ≥2-shared winnow candidate-pair artifact —
-    * [[Winnow.cappedPairs]] over [[fpDoc]] at [[Winnow.DfCap]]. Shared
+  /** The winnow screen over distinct (doc_id, fp) rows: the pairs
+    * (doc_a < doc_b) sharing at least 2 fingerprints held by at most
+    * `cap` docs. */
+  private def screen(fd: DataFrame, cap: Long): DataFrame =
+    graft.operators.KeyPairs.same(fd, minShared = 2, maxDf = Some(cap))
+      .select("doc_a", "doc_b")
+
+  /** The df-capped ≥2-shared winnow candidate-pair artifact — the
+    * winnow screen over [[fpDoc]] at [[Winnow.DfCap]]. Shared
     * by q226 (screen calibration) and q238 (dedup retention): the pair
     * derivation is the expensive stage, both consumers are views over
     * it. */
@@ -767,7 +764,7 @@ object SharedWinnow {
         .fingerprints(Tables.documents(s, dir).filter(expr(predSql)))
         .localCheckpoint() // df-cap + both self-join legs, one lineage
       graft.operators.Dedup.connectedComponents(
-        Winnow.cappedPairs(fd, Winnow.DfCap.toLong))
+        screen(fd, Winnow.DfCap.toLong))
         .localCheckpoint()
     }
 

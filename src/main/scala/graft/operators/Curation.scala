@@ -55,23 +55,11 @@ object Curation {
     * (16-byte hash, id) rows. */
   def sharedGramEdges(docs: DataFrame, idCol: String, textCol: String,
                       n: Int, maxDf: Int): DataFrame =
-    edgesFromGrams(gramHashes(docs, idCol, textCol, n), idCol, maxDf)
+    edges(gramHashes(docs, idCol, textCol, n), maxDf)
 
-  /** The df-filter + bounded self-join shared by the one-shot and
-    * sharded edge builders, over any (idCol, gh) gram frame. */
-  private def edgesFromGrams(grams: DataFrame, idCol: String,
-                             maxDf: Int): DataFrame = {
-    val rare = grams.groupBy(col("gh"))
-      .agg(count(lit(1)).as("d"))
-      .filter(col("d") >= 2 && col("d") <= maxDf)
-      .select(col("gh"))
-    val g = grams.join(rare, Seq("gh"))
-    g.select(col("gh"), col(idCol).as("x"))
-      .join(g.select(col("gh"), col(idCol).as("y")), Seq("gh"))
-      .where(col("x") < col("y"))
-      .select(col("x"), col("y"))
-      .distinct()
-  }
+  private def edges(grams: DataFrame, maxDf: Int): DataFrame =
+    KeyPairs.same(grams, maxDf = Some(maxDf.toLong))
+      .select(col("doc_a").as("x"), col("doc_b").as("y"))
 
   /** Scratch-bounded sharded execution of [[sharedGramEdges]] — the
     * `ExactSubstring.dupSpansSharded` move applied to the similarity
@@ -96,7 +84,7 @@ object Curation {
     val slices = (0 until passes).map { p =>
       val grams = gramHashes(docs, idCol, textCol, n)
         .filter(pmod(hash(col("gh")), lit(passes)) === p)
-      val e = edgesFromGrams(grams, idCol, maxDf).localCheckpoint()
+      val e = edges(grams, maxDf).localCheckpoint()
       if (passes > 1) System.gc() // let the cleaner reap this pass's shuffle
       e
     }

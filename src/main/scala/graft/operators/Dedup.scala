@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   *    applies. One groupBy(doc) computes all k components (k agg columns,
   *    no k-fold row blowup).
   *  - LSH banding: band key = md5(band_idx || sig_slice); candidate pairs
-  *    come from a self equi-join on the band key — a shuffle join keyed by
-  *    band, which is exactly the partitioning you want at 100 TB (each
-  *    band bucket lands on one reducer; no O(n²) anywhere).
+  *    are the docs sharing a band key ([[KeyPairs]]: a shuffle join keyed
+  *    by band, hot buckets split into slices; no O(n²) anywhere).
   *  - SimHash: 16-bit signature from per-token md5 bits, computed as 16
   *    conditional-sum agg columns in a single groupBy(doc) pass (no
   *    per-bit row explosion).
@@ -161,106 +160,6 @@ object Dedup {
     withFams.select(col(idCol), explode(array(bandKeys: _*)).as("bk"))
   }
 
-  /** Candidate pairs (idA < idB) from a pre-built (id, bk) band table.
-    *
-    * A plain self equi-join on the band key puts EVERY row of a band
-    * bucket into one join partition, so a hot bucket of B docs
-    * generates its full C(B,2) pair set inside a single task — the
-    * measured sf1-synth pathology (round 8): a coarse 2-hash band
-    * configuration emitted 272.8M candidate pairs with one task
-    * grinding 23 minutes while 15 cores idled. The skew fix is the
-    * classic triangle split, applied SIZE-AWARE so the common path
-    * pays nothing:
-    *
-    *   - buckets with ≤ `hotBucket` rows: the plain self-join;
-    *   - hotter buckets: each doc gets slice s = pmod(hash(id), S);
-    *     the left leg replicates a doc to every target slice t ≥ s,
-    *     the right leg to every source slice s' ≤ its own — joining
-    *     on (bk, s, t) spreads C(B,2) comparisons over S(S+1)/2
-    *     tasks of (B/S)² work at an S× inflation of hot-bucket rows
-    *     only. least/greatest + the trailing distinct restore the
-    *     exact unordered pair set (same-slice pairs arrive twice,
-    *     normalized to one row).
-    *
-    * Output set is IDENTICAL to the naive join (spec-asserted), so
-    * every LSH consumer inherits the fix. The band table is
-    * checkpointed here because three plans read it (sizes + two
-    * legs). */
-  def lshCandidatePairsFrom(banded: DataFrame, idCol: String,
-                            hotBucket: Int = 1024,
-                            slices: Int = 16): DataFrame = {
-    val bt = banded.select(col(idCol).as("_id"), col("bk"))
-      .localCheckpoint()
-    val hot = bt.groupBy(col("bk")).agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > hotBucket).select(col("bk"))
-    // no broadcast hint: `hot` is usually empty/tiny and AQE will
-    // broadcast it at runtime, but its size is data-dependent (the
-    // q199 lesson) so the strategy choice stays the planner's
-    // shuffle_hash on the pair-generating self-joins, never broadcast:
-    // a band table is often small enough for AQE to broadcast, and a
-    // broadcast join pins OUTPUT parallelism to the probe side's
-    // partition count (1-2 partitions off a narrow parquet chain) —
-    // the optimizer sizes joins by INPUT, but pair generation explodes
-    // on output, so the exchange must be forced to spread the
-    // explosion across the shuffle partitioning (measured: the sf1
-    // single-task 23-minute stage was exactly this)
-    val cold = bt.join(hot, Seq("bk"), "left_anti")
-    val coldPairs = cold.select(col("_id").as("doc_a"), col("bk"))
-      .hint("shuffle_hash")
-      .join(cold.select(col("_id").as("doc_b"), col("bk").as("bk2"))
-          .hint("shuffle_hash"),
-        col("bk") === col("bk2") && col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"))
-    val sliced = bt.join(hot, Seq("bk"), "left_semi")
-      .select(col("_id"), col("bk"),
-        pmod(hash(col("_id")), lit(slices)).as("_s"))
-    val left = sliced.select(col("_id").as("_ida"), col("bk"),
-      col("_s").as("_sa"),
-      explode(sequence(col("_s"), lit(slices - 1))).as("_t"))
-    val right = sliced.select(col("_id").as("_idb"),
-      col("bk").as("_bk2"), col("_s").as("_tb"),
-      explode(sequence(lit(0), col("_s"))).as("_sb"))
-    val hotPairs = left.hint("shuffle_hash").join(right.hint("shuffle_hash"),
-        col("bk") === col("_bk2") && col("_sa") === col("_sb") &&
-          col("_t") === col("_tb") && col("_ida") =!= col("_idb"))
-      .select(least(col("_ida"), col("_idb")).as("doc_a"),
-        greatest(col("_ida"), col("_idb")).as("doc_b"))
-    coldPairs.union(hotPairs).distinct()
-  }
-
-  /** Incremental LSH candidate pairs — the continuous-crawl contract:
-    * a NEW batch is deduped against an EXISTING corpus index without
-    * re-reading any corpus text. `index` is the stored (id, bk) band
-    * table of the already-ingested corpus (the artifact a 100 TB
-    * pipeline persists between crawls; stored bucketed by bk, the
-    * probe below is a co-located join touching only matching buckets);
-    * `newBanded` is the batch's band keys (computed via
-    * [[lshBandKeysNarrow]] over the batch alone — batch-sized work).
-    * Returns every candidate pair (doc_a < doc_b) with at least one
-    * NEW member: batch-vs-corpus from one equi-join probe of the
-    * index, batch-vs-batch from a self-join of the (small) batch
-    * table. Contract (spec-asserted):
-    *
-    *   incrementalCandidatePairs(bands(C), bands(B)) ∪ pairs(C)
-    *     == pairs(C ∪ B)                 for disjoint ids of C and B
-    *
-    * so repeated batches maintain exactly the from-scratch pair set,
-    * and the updated index is the plain union of the two band tables —
-    * no signature is ever recomputed. */
-  def incrementalCandidatePairs(index: DataFrame, newBanded: DataFrame,
-                                idCol: String): DataFrame = {
-    val nw = newBanded.select(col(idCol).as("_n"), col("bk"))
-    val newVsOld = nw
-      .join(index.select(col(idCol).as("_o"), col("bk")), "bk")
-      .select(least(col("_n"), col("_o")).as("doc_a"),
-        greatest(col("_n"), col("_o")).as("doc_b"))
-    val newVsNew = nw
-      .join(nw.select(col("_n").as("_n2"), col("bk")), "bk")
-      .filter(col("_n") < col("_n2"))
-      .select(col("_n").as("doc_a"), col("_n2").as("doc_b"))
-    newVsOld.union(newVsNew).distinct()
-  }
-
   /** Star-reduced LSH edges for CLUSTERING, from a pre-built,
     * MATERIALIZED (id, bk) band table: one edge (bucket-min, member) per
     * band-bucket member instead of the full within-bucket clique.
@@ -277,25 +176,31 @@ object Dedup {
       .distinct()
   }
 
+  /** (da, db, i, sza, szb) for every pair within `docs` sharing
+    * distinct character n-gram shingles: `i` the shared count, `sza`
+    * and `szb` the shingle-set sizes. The exact-overlap kernel under
+    * [[jaccardPairs]] and [[containmentPairs]]. */
+  private def shingleOverlaps(docs: DataFrame, idCol: String,
+                              textCol: String, n: Int): DataFrame = {
+    val sh = shingleRows(docs, idCol, textCol, n)
+    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
+    KeyPairs.same(sh)
+      .select(col("doc_a").as("da"), col("doc_b").as("db"),
+        col("nshared").as("i"))
+      .join(sizes.select(col(idCol).as("da"), col("sz").as("sza")), "da")
+      .join(sizes.select(col(idCol).as("db"), col("sz").as("szb")), "db")
+  }
+
   /** Exact n-gram Jaccard similarity for all pairs within `docs`
     * (quadratic in candidate-set size — pre-filter the input, e.g. to LSH
     * candidates or a bounded sample, before calling at scale). */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, threshold: Double): DataFrame = {
-    val sh = shingleRows(docs, idCol, textCol, n)
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val a = sh.select(col(idCol).as("da"), col("sh"))
-    val b = sh.select(col(idCol).as("db"), col("sh").as("sh2"))
-    val inter = a.join(b, col("sh") === col("sh2") && col("da") < col("db"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.select(col(idCol).as("da"), col("sz").as("sza")), "da")
-      .join(sizes.select(col(idCol).as("db"), col("sz").as("szb")), "db")
+                   n: Int, threshold: Double): DataFrame =
+    shingleOverlaps(docs, idCol, textCol, n)
       .select(col("da"), col("db"), col("i"),
         (col("sza") + col("szb") - col("i")).as("un"),
         (col("i") / (col("sza") + col("szb") - col("i"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   /** Exact n-gram CONTAINMENT for all pairs within `docs` (same
     * quadratic caveat as [[jaccardPairs]] — feed a bounded candidate
@@ -308,22 +213,13 @@ object Dedup {
     * overlap. All divisions are single IEEE divides of exact integers
     * — correctly rounded in any engine, so the scores hash-match. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, threshold: Double): DataFrame = {
-    val sh = shingleRows(docs, idCol, textCol, n)
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val a = sh.select(col(idCol).as("da"), col("sh"))
-    val b = sh.select(col(idCol).as("db"), col("sh").as("sh2"))
-    val inter = a.join(b, col("sh") === col("sh2") && col("da") < col("db"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.select(col(idCol).as("da"), col("sz").as("sza")), "da")
-      .join(sizes.select(col(idCol).as("db"), col("sz").as("szb")), "db")
+                       n: Int, threshold: Double): DataFrame =
+    shingleOverlaps(docs, idCol, textCol, n)
       .select(col("da"), col("db"), col("i"),
         (col("i") / col("sza")).as("cont_ab"),
         (col("i") / col("szb")).as("cont_ba"),
         (col("i") / least(col("sza"), col("szb"))).as("overlap"))
       .filter(col("overlap") >= threshold)
-  }
 
   /** Connected components over an undirected pair list (a,b) — turns
     * near-dup candidate PAIRS into dedup CLUSTERS (component id = min

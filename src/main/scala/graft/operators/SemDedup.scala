@@ -60,7 +60,7 @@ object SemDedup {
   }
 
   /** Incremental keep-first — the semantic-dedup analog of
-    * Dedup.incrementalCandidatePairs: decide `kept` for a DELTA of
+    * KeyPairs.delta: decide `kept` for a DELTA of
     * newly crawled rows against a STORED assignment without
     * re-deciding (or even re-reading the verdicts of) the stored
     * rows. A delta row is shadowed by ANY same-cluster stored member

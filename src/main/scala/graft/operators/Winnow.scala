@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   */
 object Winnow {
 
-  /** Df-cap of the winnow screen: a fingerprint shared by more docs is
-    * boilerplate and generates no pairs. */
+  /** Df-cap of the winnow screen (the [[KeyPairs]] `maxDf` of its
+    * ≥2-shared pairs): a fingerprint shared by more docs is boilerplate
+    * and generates no pairs. */
   val DfCap = 16
 
   /** (doc_id, keep…, hs, nw): `hs` the word-4-gram hash32 array of
@@ -95,24 +96,4 @@ object Winnow {
   def fingerprints(docs: DataFrame): DataFrame =
     hashes(docs).select(col("doc_id"), explode(array_distinct(
       expr(s"transform(sequence(1L, nw), j -> ${winMinSql("j")})"))).as("fp"))
-
-  /** The df-capped screen over distinct (doc_id, fp) rows: the pairs
-    * (doc_a < doc_b) sharing at least 2 fingerprints held by 2 to `cap`
-    * docs. Both self-join legs shuffle (a broadcast would pin the
-    * output parallelism). */
-  def cappedPairs(fpDoc: DataFrame, cap: Long): DataFrame = {
-    val usable = fpDoc.groupBy(col("fp"))
-      .agg(count(lit(1)).as("nd"))
-      .filter(col("nd").between(2L, cap))
-      .select(col("fp"))
-    val capped = fpDoc.join(usable.hint("shuffle_hash"), "fp")
-    capped.select(col("fp"), col("doc_id").as("doc_a"))
-      .join(capped.select(col("fp"), col("doc_id").as("doc_b"))
-        .hint("shuffle_hash"), Seq("fp"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("nshared"))
-      .filter(col("nshared") >= 2)
-      .select(col("doc_a"), col("doc_b"))
-  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, KeyPairs, Similarity}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -17,8 +17,9 @@ class DedupSimilaritySpec extends SparkSpec {
   test("hot-bucket triangle split emits exactly the naive pair set") {
     // band table with one HOT bucket (64 docs — every unordered pair),
     // one warm bucket (5 docs), singletons, and a doc in two buckets
-    // (pair deduped across bands). hotBucket=8 forces the split path
-    // for the big bucket while the warm one stays on the plain join.
+    // (pair counted once per shared band). hotKey=8 forces the split
+    // path for the big bucket while the warm one stays on the plain
+    // join; hotKey=0 splits every bucket.
     val banded = spark.range(64)
         .select(col("id").as("doc_id"), lit("HOT").as("bk"))
       .union(spark.range(100, 105)
@@ -28,14 +29,14 @@ class DedupSimilaritySpec extends SparkSpec {
           concat(lit("S"), col("id")).as("bk")))
       .union(spark.range(63, 64) // doc 63 also in WARM: cross-band dup
         .select(col("id").as("doc_id"), lit("WARM").as("bk")))
-    def pairSet(hotBucket: Int, slices: Int) =
-      Dedup.lshCandidatePairsFrom(banded, "doc_id", hotBucket, slices)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val naive = pairSet(hotBucket = 1 << 20, slices = 4) // all-cold
+    def pairSet(hotKey: Long) =
+      KeyPairs.pairs(KeyPairs.Same, banded, banded, 1, None, hotKey)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val naive = pairSet(hotKey = 1L << 20) // all-cold
     assert(naive.size == 64 * 63 / 2 + 6 * 5 / 2 &&
-      naive.contains((62L, 63L)) && naive.contains((63L, 104L)))
-    for ((hb, s) <- Seq((8, 4), (8, 16), (2, 3), (2, 64)))
-      assert(pairSet(hb, s) == naive, s"hotBucket=$hb slices=$s")
+      naive.contains((62L, 63L, 1L)) && naive.contains((63L, 104L, 1L)))
+    for (hk <- Seq(8L, 2L, 0L))
+      assert(pairSet(hk) == naive, s"hotKey=$hk")
   }
 
   test("identical docs get identical minhash signatures; LSH pairs them") {
@@ -43,8 +44,8 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getString).toSeq).toMap
     assert(sig(0L) == sig(1L))
     assert(sig(0L) != sig(3L))
-    val pairs = Dedup.lshCandidatePairsFrom(
-        Dedup.lshBandKeysNarrow(docs, "doc_id", "text", 5, 8, 2), "doc_id")
+    val pairs = KeyPairs.same(
+        Dedup.lshBandKeysNarrow(docs, "doc_id", "text", 5, 8, 2))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
@@ -62,14 +63,13 @@ class DedupSimilaritySpec extends SparkSpec {
       (5L, "another disjoint document qqq www eee rrr"))
       .toDF("doc_id", "text")
     def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      Dedup.lshCandidatePairsFrom(
-          Dedup.lshBandKeysNarrow(df, "doc_id", "text", 5, 8, 2), "doc_id")
+      KeyPairs.same(Dedup.lshBandKeysNarrow(df, "doc_id", "text", 5, 8, 2))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val index = Dedup.lshBandKeysPlan(corpusDocs, "doc_id", "text", 5, 8, 2)
       .localCheckpoint()
     val batchBanded =
       Dedup.lshBandKeysNarrow(batchDocs, "doc_id", "text", 5, 8, 2)
-    val delta = Dedup.incrementalCandidatePairs(index, batchBanded, "doc_id")
+    val delta = KeyPairs.delta(index, batchBanded)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batchIds = Set(2L, 4L, 5L)
     // only pairs touching the batch, and the contract:
@@ -147,9 +147,9 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("connected components agree with GraphX on real LSH pairs") {
     import graft.operators.Dedup
-    val pairs = Dedup.lshCandidatePairsFrom(Dedup.lshBandKeysNarrow(
-      Tables.documents(spark, sf()), "doc_id", "text", 5, 8, 2), "doc_id")
-      .cache()
+    val pairs = KeyPairs.same(Dedup.lshBandKeysNarrow(
+      Tables.documents(spark, sf()), "doc_id", "text", 5, 8, 2))
+      .select("doc_a", "doc_b").cache()
     val mine = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val gx = org.apache.spark.graphx.Graph

@@ -606,6 +606,38 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("KeyPairs: pair legs shuffle-hash; the same form aggregates keys once and pairs once") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
+    import graft.operators.KeyPairs
+    // keys 0..6 stay under the hot threshold (50); key 99, held by every
+    // doc, goes through the slice split — both pair joins run
+    val rows = spark.range(200).select(col("id"), (col("id") % 7).as("k"))
+      .union(spark.range(200).select(col("id"), lit(99L).as("k")))
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((form, b) <- Seq(KeyPairs.Same -> rows,
+        KeyPairs.Delta -> rows.filter(col("id") % 10 === 0))) {
+      val a = if (form == KeyPairs.Same) rows else rows.filter(col("id") % 10 =!= 0)
+      val df = KeyPairs.pairs(form, a, b, 1, None, 50L)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val pairJoins = helper.collect(plan) {
+        case j: BaseJoinExec if j.left.output.exists(_.name == "a") &&
+          j.right.output.exists(_.name == "b") => j
+      }
+      assert(pairJoins.size == 2, s"$form: expected the cold and hot joins:\n$plan")
+      assert(pairJoins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+        s"$form: a pair-generating join broadcast or sorted:\n$plan")
+    }
+    val aggs = KeyPairs.same(rows).queryExecution.optimizedPlan
+      .collect { case g: Aggregate => g }
+    assert(aggs.map(_.canonicalized).distinct.size == 2 &&
+      aggs.map(_.groupingExpressions.flatMap(_.references.map(_.name))
+        .mkString(",")).toSet ==
+        Set("_k", "doc_a,doc_b"), s"expected one key and one pair aggregate:\n$aggs")
+  }
+
   test("q234: screen/confirm legs shuffle-hash only — no data-dependent broadcast") {
     // cand/inter/census frames all scale with contamination rate ×
     // corpus size (the q199 r7 lesson): a BroadcastExchange anywhere

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BloomDedup, Curation, Dedup, Winnow}
+import graft.operators.{BloomDedup, Curation, Dedup, KeyPairs, Winnow}
 
 /** Dev micro-bench (NOT part of the Verify/Bench contract): drives the
   * dedup/curation scale path on a SYNTHETIC 1M-document corpus — 200×
@@ -40,6 +40,12 @@ object ScaleBench {
       concat(body, lit(" neardupmark"))).otherwise(body)
     base.select(col("doc_id"), txt.as("text"))
   }
+
+  /** The winnow screen SharedWinnow.cappedPairs runs: pairs sharing ≥2
+    * fingerprints held by at most Winnow.DfCap docs. */
+  private def winnowScreen(fd: DataFrame): DataFrame =
+    KeyPairs.same(fd, minShared = 2, maxDf = Some(Winnow.DfCap.toLong))
+      .select("doc_a", "doc_b")
 
   private def timed[A](name: String, acc: StringBuilder)(f: => A): A = {
     val t0 = System.nanoTime()
@@ -137,12 +143,12 @@ object ScaleBench {
         } else -1L
       // incremental crawl: 10% arrives as a new batch against the
       // stored index (filtered views of the one band table — the
-      // probe cost, not the signature cost, is what's measured)
+      // probe cost, not the signature cost, is what's measured); the
+      // call q96 runs
       val incPairs = if (banded != null && want("incremental_lsh"))
         timed("incremental_lsh", acc) {
-          Dedup.incrementalCandidatePairs(
-            banded.filter(col("doc_id") % 10 =!= 0),
-            banded.filter(col("doc_id") % 10 === 0), "doc_id").count()
+          KeyPairs.delta(banded.filter(col("doc_id") % 10 =!= 0),
+            banded.filter(col("doc_id") % 10 === 0)).count()
         } else -1L
       if (banded != null) banded.unpersist()
       val chunkKept = timedL("chunk_dedup") {
@@ -240,11 +246,11 @@ object ScaleBench {
         val fd = Winnow.windows(docs)
           .select(col("doc_id"), col("fp")).distinct()
           .localCheckpoint()
-        Winnow.cappedPairs(fd, Winnow.DfCap.toLong).count()
+        winnowScreen(fd).count()
       }
       // round-11: the q238/q247 retention-policy chain END TO END —
       // the decision a dedup pipeline actually ships: winnow screen
-      // pairs (Winnow.fingerprints, Winnow.cappedPairs)
+      // pairs (Winnow.fingerprints, the KeyPairs winnow screen)
       // → df-cap → ≥2-shared confirm → exact CC fixpoint → the packed
       // quality-argmax keep census (the factored Retention policy).
       // Sizes the whole keep/drop decision per decade, not just the
@@ -255,7 +261,7 @@ object ScaleBench {
       val retentionKept = timedL("retention_policy") {
         val fd = Winnow.fingerprints(docs)
           .localCheckpoint() // df-cap + both self-join legs, one lineage
-        val pairs = Winnow.cappedPairs(fd, Winnow.DfCap.toLong)
+        val pairs = winnowScreen(fd)
           .localCheckpoint() // the CC fixpoint iterates over this frame
         val comps = Dedup.connectedComponents(pairs)
         val scored = docs.select(col("doc_id"),
@@ -410,12 +416,16 @@ object ScaleBench {
       // exact parity spec'd in CurationSpec
       val edgePasses =
         sys.env.getOrElse("SPARK_GRAFT_SCALE_EDGE_PASSES", "1").toInt
+      // one pass builds the edges q144/q145 read (SharedGrams.gramEdges)
       val lpaComms = timedL("lpa_communities") {
-        graft.operators.Graphs.labelPropagation(
-          graft.operators.Curation
-            .sharedGramEdgesSharded(docs, "doc_id", "text", 8, 10,
+        val edges =
+          if (edgePasses == 1)
+            Curation.sharedGramEdges(docs, "doc_id", "text", 8, 10)
+          else
+            Curation.sharedGramEdgesSharded(docs, "doc_id", "text", 8, 10,
               edgePasses)
-            .localCheckpoint(), rounds = 2)
+        graft.operators.Graphs.labelPropagation(edges.localCheckpoint(),
+          rounds = 2)
           .select(col("label")).distinct().count()
       }
       val audited = timedL("validate_audit") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, TrainPrep}
+import graft.operators.{Dedup, KeyPairs, TrainPrep}
 
 /** Round-12-opt parity pins: every query rewired onto a shared
   * session artifact must compute EXACTLY what its inline derivation
@@ -89,7 +89,7 @@ class SharedArtifactParitySpec extends SparkSpec {
       sig.select(col("doc_id"), explode(array(keys: _*)).as("bk"))
     }
     def candFor(bands: Int) =
-      rows(Dedup.lshCandidatePairsFrom(bandKeysFor(bands), "doc_id"))
+      rows(KeyPairs.same(bandKeysFor(bands)).select("doc_a", "doc_b"))
     val sa = sig.select(col("doc_id").as("doc_a") +:
       (0 until 8).map(j => col(s"h$j").as(s"a$j")): _*)
     val sb = sig.select(col("doc_id").as("doc_b") +:
@@ -97,8 +97,7 @@ class SharedArtifactParitySpec extends SparkSpec {
     def allEq(from: Int, until: Int) =
       (from until until).map(j => col(s"a$j") === col(s"b$j"))
         .reduce(_ && _)
-    val annotated = Dedup
-      .lshCandidatePairsFrom(bandKeysFor(4), "doc_id")
+    val annotated = KeyPairs.same(bandKeysFor(4))
       .join(sa, "doc_a").join(sb, "doc_b")
       .select(col("doc_a"), col("doc_b"),
         allEq(0, 4).as("b2lo"), allEq(4, 8).as("b2hi"))
