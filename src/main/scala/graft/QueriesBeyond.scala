@@ -403,9 +403,8 @@ object QueriesBeyond {
     (s, dir) => {
       // Screen + verification-stage inputs are the SharedDecontam
       // session artifacts (r12 opt): the LSH cross pairs (corpus band
-      // table ⋈ broadcast bench band index — the bench-side index is
-      // the only broadcast, benchmark-sized by construction) and the
-      // candidate docs' distinct shingle rows. Per-invocation work is
+      // table ⋈ bench band index, KeyPairs.cross's shuffled key join)
+      // and the candidate docs' distinct shingle rows. Per-invocation work is
       // the exact-confirm joins + census only. The confirm stage
       // carries NO data-dependent broadcast: cross / sizes scale with
       // contamination rate × corpus size, so every leg below is a

@@ -418,9 +418,8 @@ object QueriesRound9 {
     *
     * Scale shape: corpus band table and corpus fingerprints BOTH ride
     * session artifacts (SharedLsh / SharedWinnow); only the
-    * benchmark-sized side is banded/winnowed fresh, and the only
-    * broadcast is the bench band index (benchmark-sized by
-    * construction, q199's rule). Candidate-scaled frames are
+    * benchmark-sized side is banded/winnowed fresh. Both screens are
+    * KeyPairs.cross key joins and candidate-scaled frames are
     * shuffle-hash joined throughout. */
   private val q235 = Q(
     "q235_decontam_calibration",

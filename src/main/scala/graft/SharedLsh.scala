@@ -560,8 +560,8 @@ object SharedDecontam {
         .localCheckpoint())
 
   /** (bench_id, bk) LSH band keys of the benchmark set (q17's
-    * n=5/k=8/2-band scheme) — benchmark-sized by construction, the
-    * only broadcastable frame in this family (the q199 rule). */
+    * n=5/k=8/2-band scheme) — benchmark-sized by construction; the
+    * right side of [[lshCrossPairs]]' shuffled key join. */
   def benchBands(s: SparkSession, dir: String): DataFrame =
     memo(s, "SharedDecontam.benchBands", dir)(
       Dedup.lshBandKeysNarrow(benchDocs(s, dir), "doc_id", "text", 5, 8, 2)

@@ -606,36 +606,60 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("KeyPairs: pair legs shuffle-hash; the same form aggregates keys once and pairs once") {
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+  test("KeyPairs: one shuffle-hash pair join; each call runs one key aggregate and one pair aggregate") {
+    import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
     import graft.operators.KeyPairs
-    // keys 0..6 stay under the hot threshold (50); key 99, held by every
-    // doc, goes through the slice split — both pair joins run
-    val rows = spark.range(200).select(col("id"), (col("id") % 7).as("k"))
-      .union(spark.range(200).select(col("id"), lit(99L).as("k")))
+    val s = spark.newSession()
+    // keys 0..6 stay under a hot threshold of 50; key 99, held by every
+    // doc, goes through the slice split inside the same pair join
+    val rows = s.range(200).select(col("id"), (col("id") % 7).as("k"))
+      .union(s.range(200).select(col("id"), lit(99L).as("k")))
     val helper = new AdaptiveSparkPlanHelper {}
     for ((form, b) <- Seq(KeyPairs.Same -> rows,
-        KeyPairs.Delta -> rows.filter(col("id") % 10 === 0))) {
+        KeyPairs.Delta -> rows.filter(col("id") % 10 === 0));
+         hot <- Seq(50L, KeyPairs.HotKey)) {
       val a = if (form == KeyPairs.Same) rows else rows.filter(col("id") % 10 =!= 0)
-      val df = KeyPairs.pairs(form, a, b, 1, None, 50L)
+      val df = KeyPairs.pairs(form, a, b, 1, None, hot)
       df.collect()
       val plan = df.queryExecution.executedPlan
-      val pairJoins = helper.collect(plan) {
-        case j: BaseJoinExec if j.left.output.exists(_.name == "a") &&
-          j.right.output.exists(_.name == "b") => j
-      }
-      assert(pairJoins.size == 2, s"$form: expected the cold and hot joins:\n$plan")
-      assert(pairJoins.forall(_.isInstanceOf[ShuffledHashJoinExec]),
-        s"$form: a pair-generating join broadcast or sorted:\n$plan")
+      val joins = helper.collect(plan) { case j: BaseJoinExec => j }
+      assert(joins.size == 1 && joins.head.isInstanceOf[ShuffledHashJoinExec],
+        s"$form hot=$hot: expected one shuffle-hash pair join:\n$plan")
+      assert(!plan.toString.contains("BroadcastExchange"),
+        s"$form hot=$hot: a pair leg broadcast:\n$plan")
     }
-    val aggs = KeyPairs.same(rows).queryExecution.optimizedPlan
-      .collect { case g: Aggregate => g }
-    assert(aggs.map(_.canonicalized).distinct.size == 2 &&
-      aggs.map(_.groupingExpressions.flatMap(_.references.map(_.name))
-        .mkString(",")).toSet ==
-        Set("_k", "doc_a,doc_b"), s"expected one key and one pair aggregate:\n$aggs")
+    // every query a call runs (the hot-key lookup included) is seen by
+    // the listener; a marker count ends each call's list
+    val seen = new LinkedBlockingQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put((f, qe.executedPlan))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.put((f, qe.executedPlan))
+    }
+    s.listenerManager.register(listener)
+    try {
+      val table = rows.localCheckpoint()
+      // a cap of 40 keeps keys 0..6 (df 28-29) and drops key 99
+      for (maxDf <- Seq(None, Some(40L))) {
+        assert(KeyPairs.same(table, maxDf = maxDf).collect().nonEmpty)
+        s.range(1).count()
+        val plans = Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+          .takeWhile(e => e != null && e._1 != "count").map(_._2).toList
+        // final aggregates that run; a reused exchange is not descended
+        val finals = plans.flatMap(p => helper.collect(p) {
+          case g: BaseAggregateExec if g.aggregateExpressions.exists(_.mode == Final) =>
+            g.groupingExpressions.flatMap(_.references.map(_.name)).toSet })
+        assert(finals.count(_ == Set("_k")) == 1 && finals.size == 2,
+          s"maxDf=$maxDf: expected one key and one pair aggregate: $finals\n${plans.mkString("\n")}")
+      }
+    } finally s.listenerManager.unregister(listener)
   }
 
   test("q234: screen/confirm legs shuffle-hash only — no data-dependent broadcast") {

@@ -416,16 +416,13 @@ object ScaleBench {
       // exact parity spec'd in CurationSpec
       val edgePasses =
         sys.env.getOrElse("SPARK_GRAFT_SCALE_EDGE_PASSES", "1").toInt
-      // one pass builds the edges q144/q145 read (SharedGrams.gramEdges)
+      // at one pass this is the call SharedGrams.gramEdges (q144/q145) runs
       val lpaComms = timedL("lpa_communities") {
-        val edges =
-          if (edgePasses == 1)
-            Curation.sharedGramEdges(docs, "doc_id", "text", 8, 10)
-          else
-            Curation.sharedGramEdgesSharded(docs, "doc_id", "text", 8, 10,
+        graft.operators.Graphs.labelPropagation(
+          graft.operators.Curation
+            .sharedGramEdgesSharded(docs, "doc_id", "text", 8, 10,
               edgePasses)
-        graft.operators.Graphs.labelPropagation(edges.localCheckpoint(),
-          rounds = 2)
+            .localCheckpoint(), rounds = 2)
           .select(col("label")).distinct().count()
       }
       val audited = timedL("validate_audit") {
